@@ -29,32 +29,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming parity harnesses use implicit temp checkpoints; without
-      // this they survive q.stop() and accrete across iterations
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation",
-        "true")
-      // Whole-stage-codegen class cache (static conf, default 100
-      // entries): this fleet compiles a few THOUSAND distinct codegen
-      // stages per pass, so by the time a query repeats, the LRU has
-      // evicted its classes and every iteration re-janino-compiles the
-      // whole fleet — measured 0.3-2 s of driver-serial compile per
-      // heavy query per pass (ProfileQuery, r17). 10k entries holds one
-      // fleet's worth of generated classes (~tens of KB each) — the
-      // steady state any long-lived production driver re-running query
-      // shapes reaches; scale-independent (compile cost does not grow
-      // with data). Override: SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val wall0 = System.nanoTime()
     def wallNow: Double = (System.nanoTime() - wall0) / 1e9
     val deadlineSec =
@@ -83,19 +59,9 @@ object Bench {
             System.err.println(s"BENCH FAILURE in query '$name': $e")
             throw e
         } finally { killer.cancel(); sc.clearJobGroup() }
-      // localCheckpoint blocks accumulate across the ~280-query fleet
-      // (every pair family materializes its fan-out point); at sf1 the
-      // leftover storage filled the old gen and unrelated queries later
-      // in the fleet spiked 10-30x over their isolated times. Dropping
-      // persisted RDDs after each query is outside the timed section.
+      // cleanup stays outside the timed section
       val c0 = System.nanoTime()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // under persistDisk this also empties Materialize's pin registry
-      // (the clearCache below would drop the cache entries anyway, but
-      // the registry would keep growing across the fleet)
-      pipeline.Materialize.release(spark)
-      spark.sharedState.cacheManager.clearCache()
+      GraftSession.reset(spark)
       val over = (System.nanoTime() - c0) / 1e9
       System.err.println(f"BENCH PROGRESS $tag%s $name%s sec=$dt%.3f " +
         f"over=$over%.3f wall=$wallNow%.1f")

@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy events data carried TIMESTAMP(NANOS) (read as long ns
-      // under this flag); current data is TIMESTAMP(MICROS) → NTZ, and
-      // Events.tsNanos adapts to either — the flag stays for old files
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming parity harnesses use implicit temp checkpoints; without
-      // this they survive q.stop() and accrete across iterations
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation",
-        "true")
-      // codegen class cache sized to the fleet (see Bench.scala): the
-      // 100-entry default recompiles every stage once the 283-query
-      // dump cycles past it
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_VERIFY_ONLY=q1,q2 dumps a subset;
     // SPARK_GRAFT_VERIFY_RESUME=1 skips queries already dumped (their

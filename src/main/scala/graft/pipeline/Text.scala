@@ -282,7 +282,8 @@ object Text {
     // condition and the otherwise, and codegen does NOT share
     // subexpressions across when branches), re-evaluating the
     // intersect votes ~2^(langs-1) times per row — measured 8x the
-    // cost of evaluating them once (tools/LangIdAb decomposition).
+    // cost of evaluating them once (noop-sink decomposition, r18);
+    // PipelineSpec pins this against the fold row for row.
     val best = array_max(array(
       struct(lit(0).as("s"), lit(1).as("r"), lit("und").as("l")) +:
         scores.zipWithIndex.map { case ((lang, s), i) =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the benchmark corpus: reads the driver's
@@ -31,15 +31,7 @@ object GenScale {
     val out = sys.env.getOrElse("SPARK_GRAFT_GEN_OUT",
       "/root/repo/.bench-data/sf1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_GEN_REPS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$in/$t.parquet")
     def wr(df: DataFrame, t: String, parts: Int): Unit =

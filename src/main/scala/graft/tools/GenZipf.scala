@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Zipfian-vocabulary documents corpus for the similarity-join scaling
@@ -80,13 +79,7 @@ object GenZipf {
     val out = sys.env.getOrElse("SPARK_GRAFT_GEN_OUT",
       "/root/repo/.bench-data/zipf_sf01")
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_GEN_DOCS", "5000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     // Heaps' law vocabulary: V = 30·sqrt(expected corpus word count);
     // linear mode: V = 3·nDocs (see scaladoc — same V at 5k docs)
     val vocabMode = sys.env.getOrElse("SPARK_GRAFT_GEN_VOCAB", "sqrt")

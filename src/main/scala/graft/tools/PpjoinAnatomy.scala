@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage-mass anatomy for `prefixFilterJaccardPairs` (round-15 verdict
@@ -28,15 +28,9 @@ object PpjoinAnatomy {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/repo/.bench-data/zipf_sf01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
     val n = 8
     val threshold = 0.8
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     import org.apache.spark.sql.expressions.Window
 
     val core = graft.pipeline.PpjoinCore

@@ -19,4 +19,10 @@ object GraftBridge {
       c.sharedState.cacheManager.numCachedEntries
     case _ => 0
   }
+
+  /** Block until every event posted so far has reached the listeners
+    * (the bus is `private[spark]`), so counters read after a query are
+    * complete without a guessed sleep. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -309,6 +309,46 @@ class PipelineSpec extends SparkSpec {
     assert(got(3L) === "zh")
   }
 
+  /** The `when`-fold langId that Text.langId's array_max argmax
+    * replaced, kept verbatim as the reference the rewrite must match. */
+  private def refLangId(text: org.apache.spark.sql.Column) = {
+    val stops: Seq[(String, Seq[String])] = Seq(
+      "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "with"),
+      "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit"),
+      "fr" -> Seq("le", "la", "les", "et", "est", "une", "dans", "pour"),
+      "es" -> Seq("el", "los", "las", "es", "una", "que", "por", "como"))
+    val w = split(lower(text), " +")
+    val scores = stops.map { case (lang, ws) =>
+      lang -> size(array_intersect(w, array(ws.map(lit): _*)))
+    }
+    val best = scores.tail.foldLeft[org.apache.spark.sql.Column](
+      struct(scores.head._2.as("s"), lit(scores.head._1).as("l"))) {
+      case (acc, (lang, s)) =>
+        when(s > acc("s"), struct(s.as("s"), lit(lang).as("l")))
+          .otherwise(acc)
+    }
+    when(length(regexp_replace(text, "[^\\x{4E00}-\\x{9FFF}]", "")) >
+        length(text) * 0.2, "zh")
+      .otherwise(when(best("s") > 0, best("l")).otherwise("und"))
+  }
+
+  test("langId's argmax matches the when-fold reference row for row") {
+    val edge = docs((-1L, "the der"), (-2L, "zebra quokka tapir"),
+      (-3L, null: String))
+    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text")).unionByName(edge)
+    val got = corpus.select(col("doc_id"), Text.langId(col("text")),
+      refLangId(col("text"))).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2)))
+    assert(got.length > 3) // the corpus rows plus the three edge rows
+    got.foreach { case (id, (now, ref)) =>
+      assert(now === ref, s"doc $id")
+    }
+    val byId = got.toMap
+    assert(byId(-1L)._1 === "en") // tie: earlier language in stops order
+    assert(byId(-2L)._1 === "und") // no stopwords
+  }
+
   test("ivfTopK: full probe equals brute force; partial probe recalls") {
     import graft.pipeline.Similarity
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -6,25 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fan-out materialization strategy under test (pipeline
-      // operators read it per call): GRAFT_MATERIALIZE=persistDisk
-      // re-runs every spec under the lineage-retaining mode
-      .config("spark.graft.materialize",
-        sys.env.getOrElse("GRAFT_MATERIALIZE", "localCheckpoint"))
-      // fleet-sized codegen class cache (see Bench.scala): the suite
-      // compiles thousands of stages; the 100-entry default recompiles
-      // repeated shapes. Conf-only — every compile still happens at
-      // least once, so codegen-correctness specs are unaffected.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
+    val s = GraftSession.build(cpus = 4)
+    // fan-out materialization strategy under test (pipeline operators
+    // read it per call): GRAFT_MATERIALIZE=persistDisk re-runs every
+    // spec under the lineage-retaining mode
+    s.conf.set("spark.graft.materialize",
+      sys.env.getOrElse("GRAFT_MATERIALIZE", "localCheckpoint"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

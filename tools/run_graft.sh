@@ -1,10 +1,13 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains (Bench / Verify / ProfileQuery /
-# ExplainDump): same JVM options as build.sbt's forked run, without the
-# ~90 s sbt startup per invocation. Usage:
+# ExplainDump / GenScale / GenZipf / PpjoinAnatomy): same JVM options as
+# build.sbt's forked run, without the ~90 s sbt startup per invocation.
+# Session confs live in graft.GraftSession, not here. Usage:
 #   tools/run_graft.sh graft.Bench [args...]
-# Env contract identical to the sbt path (SPARK_GRAFT_*). Requires a
-# prior `sbt -batch compile` (classes under target/scala-2.13/classes).
+# Env contract identical to the sbt path (SPARK_GRAFT_*; SPARK_DRIVER_MEM
+# overrides the heap, which defaults to half of RAM clamped to 2-8 GiB).
+# Requires a prior `sbt -batch compile` (classes under
+# target/scala-2.13/classes).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -14,8 +17,10 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null \
+  || echo 2g)"
 exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" -XX:ReservedCodeCacheSize=512m \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Xmx"${SPARK_DRIVER_MEM:-$HEAP}" -XX:ReservedCodeCacheSize=512m \
   ${SPARK_GRAFT_JAVA_OPTS:-} \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -164,8 +164,8 @@ object Events {
     val sink: (org.apache.spark.sql.Dataset[T], Long) => Unit =
       (batch, _) => batch.write.mode("append").parquet(out)
     // the checkpoint below is rmTree'd right after the drain — skip the
-    // double-checksum file ops (withReplayCheckpointConf scaladoc)
-    withReplayCheckpointConf(spark) {
+    // double-checksum file ops (withReplayConf scaladoc)
+    withReplayConf(spark) {
       val q = ds.writeStream
         .foreachBatch(sink)
         .option("checkpointLocation", root + "/chk")
@@ -212,6 +212,17 @@ object Events {
     else spark.read.parquet(out)
   }
 
+  /** The rows a stopped query left in its `memory` sink, with the sink's
+    * temp view dropped. The view would otherwise keep the rows alive
+    * until the session ends; the returned frame is already analyzed, so
+    * it holds the sink's `MemoryPlan` without the view. */
+  private[streaming] def takeMemorySink(spark: SparkSession,
+      sinkName: String): DataFrame = {
+    val df = spark.table(sinkName)
+    spark.catalog.dropTempView(sinkName)
+    df
+  }
+
   /** The file stream source wants a DIRECTORY: stage a single file
     * behind a symlink in a temp dir (no copy); directories pass
     * through. Shared by every streaming parity runner. */
@@ -246,10 +257,13 @@ object Events {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName)
+    takeMemorySink(spark, sinkName)
   }
 
-  /** Replay-harness checkpoint conf: the parity runners' checkpoints
+  /** Replay-harness session conf, scoped around each replay query's
+    * start; every key restores on exit.
+    *
+    * Checkpoint integrity: the parity runners' checkpoints
     * are TEMPORARY (memory/parquet-drain sinks, temp dirs force-deleted
     * on stop), yet every checkpoint file was written under TWO
     * integrity layers — Spark 4.1's per-file checksum
@@ -261,18 +275,36 @@ object Events {
     * Both layers are pure cost for a checkpoint that is deleted
     * seconds later; a production deployment with durable checkpoints
     * on HDFS/S3 keeps its own integrity machinery and never takes this
-    * path. Keys restore on exit; each streaming query resolves its
-    * checkpoint FS from the session conf at start. */
-  private[streaming] def withReplayCheckpointConf[A](spark: SparkSession)
+    * path. Each streaming query resolves its checkpoint FS from the
+    * session conf at start.
+    *
+    * Codegen cache: Structured Streaming runs every query in
+    * `sparkSession.cloneSession()`, a new session with its own UUID.
+    * Under artifact isolation (on by default in Spark 4.1) the clone's
+    * tasks carry that UUID, and the executor runs them under a new
+    * per-session context classloader. `CodeGenerator.compile` caches
+    * on (context classloader, source), so every replay missed the cache:
+    * it compiled the previous replay's executor-side classes again with
+    * Janino and ran them before the JIT had compiled them (14 classes
+    * per 4-micro-batch `stream_hourly_agg` replay). With isolation off,
+    * the clone's
+    * tasks run under the executor's shared classloader and hit the
+    * cache. A session reads the key from its own conf, which the clone
+    * copies when `start()` builds it, so the parent session keeps its
+    * setting. graft adds no session artifacts (no `addArtifact`,
+    * `addJar` or `addFile`), so isolation protects nothing here. */
+  private[streaming] def withReplayConf[A](spark: SparkSession)
       (body: => A): A = {
     val kCk = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     // session-conf keys copy into each query's hadoopConf verbatim, so
     // the bare hadoop key (no spark.hadoop. prefix) is the one that
     // reaches FileContext resolution
     val kFs = "fs.AbstractFileSystem.file.impl"
-    val prev = Seq(kCk, kFs).map(k => k -> spark.conf.getOption(k))
+    val kIso = "spark.sql.artifact.isolation.enabled"
+    val prev = Seq(kCk, kFs, kIso).map(k => k -> spark.conf.getOption(k))
     spark.conf.set(kCk, "false")
     spark.conf.set(kFs, "org.apache.hadoop.fs.local.RawLocalFs")
+    spark.conf.set(kIso, "false")
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
@@ -288,7 +320,7 @@ object Events {
     * splits. Restores the session conf afterwards; the streaming query
     * keeps its planned value for its whole lifetime. */
   private[streaming] def withStatePartitions[A](spark: SparkSession,
-      n: Int)(body: => A): A = withReplayCheckpointConf(spark) {
+      n: Int)(body: => A): A = withReplayConf(spark) {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, n)
@@ -309,7 +341,8 @@ object Events {
     * that regime never arrives). SPARK_GRAFT_STATE_PROVIDER=rocksdb
     * selects it, with changelog checkpointing ON (round-10 A/B: delta
     * upload beats full-snapshot upload 8-17%) and row-count tracking
-    * OFF (a GET before every PUT for a metric). */
+    * OFF (a GET before every PUT for a metric: it must know whether
+    * the key existed). */
   private[streaming] def withLargeState[A](spark: SparkSession,
       n: Int)(body: => A): A = {
     val pKey = "spark.sql.streaming.stateStore.providerClass"
@@ -324,16 +357,9 @@ object Events {
       spark.conf.set(pKey, "org.apache.spark.sql.execution.streaming." +
         "state.RocksDBStateStoreProvider")
     else spark.conf.unset(pKey)
-    // RocksDB-only knobs (inert on the heap-backed provider):
-    // SPARK_GRAFT_CHANGELOG=false and SPARK_GRAFT_STATE_PARTS=<n>
-    // exist for benchmark A/Bs only.
-    spark.conf.set(cKey,
-      sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
-    // row-count bookkeeping costs a RocksDB GET before every PUT (it
-    // must know whether the key existed). Specs that assert state row
-    // counts opt back in via SPARK_GRAFT_TRACK_ROWS or their own conf.
-    spark.conf.set(tKey,
-      sys.env.getOrElse("SPARK_GRAFT_TRACK_ROWS", "false"))
+    // RocksDB-only knobs, inert on the heap-backed provider
+    spark.conf.set(cKey, "true")
+    spark.conf.set(tKey, "false")
     // replay runners drain a static directory: the trailing no-data
     // micro-batch would pay one more full open+commit cycle across
     // every state partition just to advance the watermark
@@ -342,9 +368,7 @@ object Events {
       case Some(x) => spark.conf.set(key, x)
       case None    => spark.conf.unset(key)
     }
-    try withStatePartitions(spark,
-      sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(n))(
-      body)
+    try withStatePartitions(spark, n)(body)
     finally prev.foreach { case (k, v) => restore(k, v) }
   }
 
@@ -446,7 +470,7 @@ object Events {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName).select(col("event_type"),
+    takeMemorySink(spark, sinkName).select(col("event_type"),
       graft.operators.Aggs.sketchQuantileUdf(col("cdf"), lit(0.5))
         .as("med_est"),
       graft.operators.Aggs.sketchQuantileUdf(col("cdf"), lit(0.9))
@@ -525,7 +549,7 @@ object Events {
     // exact second pass: count ONLY the <= m streamed candidates (the
     // shuffle carries at most m distinct keys after the map-side
     // broadcast filter), keep exact count strictly above N/m
-    val summary = spark.table(sinkName)
+    val summary = takeMemorySink(spark, sinkName)
     spark.read.parquet(path)
       .select(keyExpr.as("key"))
       .crossJoin(broadcast(summary))
@@ -590,7 +614,7 @@ object Events {
         case None    => spark.conf.unset(nKey)
       }
     }
-    spark.table(sinkName)
+    takeMemorySink(spark, sinkName)
   }
 
   /** Gap-based sessionization: consecutive events of a user belong to
@@ -755,7 +779,7 @@ object Events {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName).filter(col("user_id") =!= -1L)
+    takeMemorySink(spark, sinkName).filter(col("user_id") =!= -1L)
   }
 
   /** Batch reference for `sessionize`: lag-based session ids over a

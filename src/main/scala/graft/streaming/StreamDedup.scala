@@ -334,7 +334,7 @@ object StreamDedup {
       q.stop()
     }
     graft.pipeline.Dedup.verifySharedRuns(
-      spark.table(sinkName).distinct(),
+      Events.takeMemorySink(spark, sinkName).distinct(),
       spark.read.parquet(path)
         .withColumn(id, org.apache.spark.sql.functions.col(id)
           .cast("long")),
@@ -370,7 +370,7 @@ object StreamDedup {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName).distinct()
+    Events.takeMemorySink(spark, sinkName).distinct()
   }
 
   /** Run the stream to completion over a static directory (memory sink,
@@ -398,7 +398,7 @@ object StreamDedup {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName).distinct()
+    Events.takeMemorySink(spark, sinkName).distinct()
   }
 
   /** Run the winnow stream to completion over a static directory and

@@ -64,7 +64,7 @@ object StreamText {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName)
+    Events.takeMemorySink(spark, sinkName)
   }
 
   /** Streaming exact-n-gram decontamination guard — the live-ingestion
@@ -115,7 +115,7 @@ object StreamText {
       .parquet(dir)
     // stateless guard, but each micro-batch still writes offset/commit
     // WAL files — skip the double-checksum ops on the temp checkpoint
-    Events.withReplayCheckpointConf(spark) {
+    Events.withReplayConf(spark) {
       val q = decontamStream(stream, id, text, benchHashes, n)
         .writeStream
         .format("memory")
@@ -125,7 +125,7 @@ object StreamText {
       q.processAllAvailable()
       q.stop()
     }
-    spark.table(sinkName)
+    Events.takeMemorySink(spark, sinkName)
   }
 
   /** Streaming temperature-flattened mixture sampling — the live form

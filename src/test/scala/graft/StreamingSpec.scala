@@ -25,6 +25,31 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("a repeated stream replay compiles no generated code again") {
+    // each replay runs in a cloned session; its tasks must reuse the
+    // executor's classloader, or the codegen cache misses every class
+    val path = s"$sfDir/events.parquet"
+    val schema = spark.read.parquet(path).schema
+    def replay(): Set[Seq[Any]] = Events.runHourlyTypeAgg(spark, path,
+        schema, s"spec_replay_${System.nanoTime()}")
+      .collect().map(_.toSeq).toSet
+    def compiled: Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val first = replay()
+    val c0 = compiled
+    val second = replay()
+    assert(compiled - c0 == 0L)
+    assert(second == first)
+    assert(first.nonEmpty)
+  }
+
+  test("the stream gates drop their memory-sink views") {
+    SparkEntry.queries("stream_hourly_agg")(spark, sfDir).count(): Unit
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_sink_"))
+    assert(left.isEmpty, left.mkString(", "))
+  }
+
   test("sessionize emits gap-separated sessions incrementally") {
     val ss = spark
     import ss.implicits._

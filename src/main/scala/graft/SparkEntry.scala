@@ -2491,65 +2491,47 @@ object SparkEntry {
     // readStream -> watermark -> window -> memory-sink query over the
     // events files; the oracle computes the same thing in batch SQL, so
     // the gate checks stream/batch parity exactly ---------------------------
-    "stream_hourly_agg" -> ((s, dir) => {
-      val schema = t(s, dir, "events").schema
-      streaming.Events.runHourlyTypeAgg(s, s"$dir/events.parquet", schema,
-        s"graft_stream_sink_${System.nanoTime()}")
-    }),
+    "stream_hourly_agg" -> ((s, dir) =>
+      streaming.Events.runHourlyTypeAgg(s, s"$dir/events.parquet")),
 
     // --- streaming minhash near-dup: a REAL readStream over the
     // documents table (one file per trigger) through the stateful
     // bucket kernel; output = distinct candidate pairs, oracled against
     // the SAME md5 band-bucket math in DuckDB --------------------------
-    "stream_minhash_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    "stream_minhash_pairs" -> ((s, dir) =>
       streaming.StreamDedup.runMinhashPairs(s, s"$dir/documents.parquet",
-        docs.schema, "doc_id", "text",
-        s"graft_stream_mh_${System.nanoTime()}")
-        .orderBy("id_a", "id_b")
-    }),
+        "doc_id", "text")
+        .orderBy("id_a", "id_b")),
 
     // --- streaming minhash, live-tailing horizon mode: band buckets
     // bounded by event-time eviction; output = the in-horizon subset of
     // stream_minhash_pairs (ts synthesized as doc_id seconds) --------------
-    "stream_minhash_pairs_horizon" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    "stream_minhash_pairs_horizon" -> ((s, dir) =>
       streaming.StreamDedup.runMinhashPairsHorizon(s,
-        s"$dir/documents.parquet", docs.schema, "doc_id", "text",
-        s"graft_stream_mhh_${System.nanoTime()}", horizonSec = 100)
-        .orderBy("id_a", "id_b")
-    }),
+        s"$dir/documents.parquet", "doc_id", "text", horizonSec = 100)
+        .orderBy("id_a", "id_b")),
 
     // --- streaming winnow contamination detection: fingerprints stream
     // through a per-fingerprint bucket state; verified candidates must
     // equal the batch substring join (same oracle as pipe_winnow_pairs —
     // the guarantee theorem holds across micro-batch boundaries too) --------
-    "stream_winnow_pairs" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    "stream_winnow_pairs" -> ((s, dir) =>
       streaming.StreamDedup.runWinnowPairs(s, s"$dir/documents.parquet",
-        docs.schema, "doc_id", "text",
-        s"graft_stream_wn_${System.nanoTime()}")
-    }),
+        "doc_id", "text")),
 
     // --- streaming winnow, live-tailing horizon mode: bounded state via
     // event-time eviction; output = the in-horizon subset of
     // stream_winnow_pairs (ts synthesized as doc_id seconds) --------------
-    "stream_winnow_pairs_horizon" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    "stream_winnow_pairs_horizon" -> ((s, dir) =>
       streaming.StreamDedup.runWinnowPairsHorizon(s,
-        s"$dir/documents.parquet", docs.schema, "doc_id", "text",
-        s"graft_stream_wh_${System.nanoTime()}", horizonSec = 100)
-    }),
+        s"$dir/documents.parquet", "doc_id", "text", horizonSec = 100)),
 
     // --- streaming corpus profile: the langid/token kernels over a
     // document stream, complete-mode grouped agg (state = one row per
     // language) — oracled against the same profile in DuckDB ---------------
-    "stream_lang_profile" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    "stream_lang_profile" -> ((s, dir) =>
       streaming.StreamText.runLangProfile(s, s"$dir/documents.parquet",
-        docs.schema, "doc_id", "text",
-        s"graft_stream_lp_${System.nanoTime()}")
-    }),
+        "doc_id", "text")),
 
     // --- streaming decontamination guard: bench gram-hash set reduced
     // once driver-side, each micro-batch screened by a STATELESS
@@ -2562,8 +2544,7 @@ object SparkEntry {
         .select((col("doc_id") + 1000000L).as("bench_id"),
           substring(col("text"), 21, 200).as("text"))
       streaming.StreamText.runDecontam(s, s"$dir/documents.parquet",
-        docs.schema, "doc_id", "text", bench, "text",
-        s"graft_stream_dec_${System.nanoTime()}", n = 8)
+        "doc_id", "text", bench, "text", n = 8)
     }),
 
     // --- streaming temperature mixing: per-stratum ppt rates derived
@@ -2571,12 +2552,10 @@ object SparkEntry {
     // stream applies the identical stateless md5 predicate per
     // micro-batch — no state, no watermark; output equals the batch
     // operator (shared oracle) ----------------------------------------------
-    "stream_temperature_mix" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    "stream_temperature_mix" -> ((s, dir) =>
       streaming.StreamText.runTemperatureMix(s,
-        s"$dir/documents.parquet", docs.schema, "doc_id", "lang",
-        budgetDiv = 10, alpha = 0.5, "graft_stream_tmx")
-    }),
+        s"$dir/documents.parquet", "doc_id", "lang",
+        budgetDiv = 10, alpha = 0.5)),
 
     // --- retention cohorts: first-seen day cohorts x activity-day
     // offsets, exact distinct user counts ----------------------------------
@@ -2594,11 +2573,8 @@ object SparkEntry {
     // stream state (one bounded sketch per event_type); exact vs
     // quantile_cont while each group's n <= k — which holds at the
     // oracle's sf0.01 ------------------------------------------------------
-    "stream_approx_cdf" -> ((s, dir) => {
-      val schema = t(s, dir, "events").schema
-      streaming.Events.runValueQuantiles(s, s"$dir/events.parquet",
-        schema, s"graft_stream_qt_${System.nanoTime()}")
-    }),
+    "stream_approx_cdf" -> ((s, dir) =>
+      streaming.Events.runValueQuantiles(s, s"$dir/events.parquet")),
 
     // --- streaming heavy hitters: the Misra-Gries udaf as complete-mode
     // stream state (ONE bounded 64-counter summary at any stream length
@@ -2606,24 +2582,20 @@ object SparkEntry {
     // — the PODS'12 survival guarantee holds across micro-batch merges,
     // so the output equals batch agg_heavy_hitters and its SQL oracle ------
     "stream_heavy_hitters" -> ((s, dir) => {
-      val schema = t(s, dir, "events").schema
       val keyExpr = when(col("event_id") % 4 =!= 0,
           concat(lit("hot_"), (col("event_id") % 3).cast("string")))
         .otherwise(concat(lit("cold_"), col("event_id").cast("string")))
       streaming.Events.runHeavyHitters(s, s"$dir/events.parquet",
-        schema, keyExpr, s"graft_stream_hh_${System.nanoTime()}", m = 64)
+        keyExpr, m = 64)
     }),
 
     // --- streaming exact dedup: a REAL readStream through
     // dropDuplicatesWithinWatermark; the key SET is order-independent,
     // so the oracle is a plain DISTINCT ------------------------------------
-    "stream_dedup" -> ((s, dir) => {
-      val schema = t(s, dir, "events").schema
-      streaming.Events.runDedupStream(s, s"$dir/events.parquet", schema,
-        Seq("user_id", "event_type"),
-        s"graft_stream_dd_${System.nanoTime()}")
-        .select(col("user_id"), col("event_type"))
-    }),
+    "stream_dedup" -> ((s, dir) =>
+      streaming.Events.runDedupStream(s, s"$dir/events.parquet",
+        Seq("user_id", "event_type"))
+        .select(col("user_id"), col("event_type"))),
 
     // --- skew-salted equi-join: identical results to the plain join,
     // with the hot keys fanned over deterministic salts -------------------
@@ -2686,16 +2658,13 @@ object SparkEntry {
     // over a real readStream; a sentinel appended after the data batch
     // advances the watermark so open sessions FLUSH — output equals the
     // batch sessionization over all events (same oracle) -------------------
-    "stream_sessionize" -> ((s, dir) => {
-      val schema = t(s, dir, "events").schema
+    "stream_sessionize" -> ((s, dir) =>
       streaming.Events.runSessionizeStream(s, s"$dir/events.parquet",
-        schema, gapNs = 1800000000000L,
-        s"graft_stream_sz_${System.nanoTime()}")
+        gapNs = 1800000000000L)
         .withColumn("start_ts",
           col("start_ts") - pmod(col("start_ts"), lit(1000L)))
         .withColumn("end_ts",
-          col("end_ts") - pmod(col("end_ts"), lit(1000L)))
-    }),
+          col("end_ts") - pmod(col("end_ts"), lit(1000L)))),
 
     // --- TableMapPartitions (Table.scala:176): per-partition imperative
     // row transform through the row encoder ---------------------------------

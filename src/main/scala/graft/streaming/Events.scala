@@ -88,7 +88,7 @@ object Events {
   /** File-source stream with the batch schema (`ts` in any dtype
     * `tsNanos` accepts). */
   def readEventStream(spark: SparkSession, dir: String,
-      schema: StructType, maxFilesPerTrigger: Int = 1): DataFrame =
+      schema: StructType, maxFilesPerTrigger: Int): DataFrame =
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -126,7 +126,7 @@ object Events {
     * executor memory (`maxBytesPerTrigger`); this is the same knob for
     * the parity runners, keeping >= 2 batches when there are >= 2
     * files so cross-batch state logic still gets exercised. */
-  private[graft] def filesPerTrigger(dir: String,
+  private def filesPerTrigger(dir: String,
       targetBatches: Int = 4): Int = {
     // resolve through the path's Hadoop FileSystem (as the writers do):
     // java.io.File.listFiles returns null for any non-local scheme
@@ -144,36 +144,167 @@ object Events {
     math.max(1, (math.max(n, 1) + targetBatches - 1) / targetBatches)
   }
 
-  /** Drain a streaming Dataset to completion through a
-    * foreachBatch→parquet-append sink and return a batch read of the
-    * accumulated output. The complete-output `memory` sink pins the
+  /** Replay `path` (a parquet file or directory) through a Structured
+    * Streaming query to completion and return its output rows: every
+    * streaming parity runner goes through here. The source schema comes
+    * from a batch read of `path`; the input is staged as a directory
+    * (`stageAsDir`, prefix `tag`) and read `filesPerTrigger` files per
+    * micro-batch, or as one micro-batch when `oneBatch`. The replay
+    * confs plus the runner's own `confs` are scoped around the query,
+    * which is started, drained and stopped here.
+    *
+    * Output goes to a uniquely named `memory` sink in `mode`, or, when
+    * `drain`, through a foreachBatch parquet-append sink (append mode;
+    * see `takeParquetDrain`). A `sentinel` is appended to a fresh
+    * staging directory (the source is never written) after the first
+    * drain, and the query is drained again. */
+  private[streaming] def replay(spark: SparkSession, path: String,
+      tag: String, confs: Seq[(String, Option[String])] = Nil,
+      mode: OutputMode = OutputMode.Append(), drain: Boolean = false,
+      oneBatch: Boolean = false, sentinel: Option[DataFrame] = None)
+      (query: DataFrame => Dataset[_]): DataFrame = {
+    val schema = spark.read.parquet(path).schema
+    val dir = stageAsDir(path, tag, fresh = sentinel.isDefined)
+    val root = if (drain)
+      java.nio.file.Files.createTempDirectory(tag).toString else ""
+    val sinkName = s"${tag}_${System.nanoTime()}"
+    val outSchema = withConfs(spark, replayConfs ++ confs) {
+      val out = query(readEventStream(spark, dir, schema,
+        if (oneBatch) Int.MaxValue else filesPerTrigger(dir))).toDF()
+      val w = out.writeStream.outputMode(mode)
+      val sink: (DataFrame, Long) => Unit =
+        (batch, _) => batch.write.mode("append").parquet(root + "/out")
+      val q = (if (drain) w.foreachBatch(sink)
+          .option("checkpointLocation", root + "/chk")
+        else w.format("memory").queryName(sinkName)).start()
+      try {
+        q.processAllAvailable()
+        sentinel.foreach { s =>
+          s.write.mode("append").parquet(dir)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      out.schema
+    }
+    if (drain) takeParquetDrain(spark, root, outSchema)
+    else takeMemorySink(spark, sinkName)
+  }
+
+  /** Scope session confs around `body`: `key -> Some(v)` sets a key,
+    * `key -> None` unsets it, and every key gets its previous value (or
+    * its unset state) back on exit. */
+  private def withConfs[A](spark: SparkSession,
+      confs: Seq[(String, Option[String])])(body: => A): A = {
+    def put(kv: (String, Option[String])): Unit = kv match {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach(put)
+    try body finally prev.foreach(put)
+  }
+
+  /** Replay-harness session conf, scoped around every replay query.
+    *
+    * Checkpoint integrity: the parity runners' checkpoints
+    * are TEMPORARY (memory/parquet-drain sinks, temp dirs force-deleted
+    * on stop), yet every checkpoint file was written under TWO
+    * integrity layers — Spark 4.1's per-file checksum
+    * (`ChecksumCheckpointFileManager`) on top of Hadoop's `ChecksumFs`
+    * `.crc` twin. On a local FS without libhadoop each extra file
+    * op shells out (`RawLocalFileSystem.setPermission` /
+    * `getFileLinkStatus` fork+exec `chmod`/`stat` — measured by stack
+    * sampling at ~20% of the stream-gate floor, §5 driver overhead).
+    * Both layers are pure cost for a checkpoint that is deleted
+    * seconds later; a production deployment with durable checkpoints
+    * on HDFS/S3 keeps its own integrity machinery and never takes this
+    * path. Each streaming query resolves its checkpoint FS from the
+    * session conf at start. Session-conf keys copy into each query's
+    * hadoopConf verbatim, so the bare hadoop key (no spark.hadoop.
+    * prefix) is the one that reaches FileContext resolution.
+    *
+    * Codegen cache: Structured Streaming runs every query in
+    * `sparkSession.cloneSession()`, a new session with its own UUID.
+    * Under artifact isolation (on by default in Spark 4.1) the clone's
+    * tasks carry that UUID, and the executor runs them under a new
+    * per-session context classloader. `CodeGenerator.compile` caches
+    * on (context classloader, source), so every replay missed the cache:
+    * it compiled the previous replay's executor-side classes again with
+    * Janino and ran them before the JIT had compiled them (14 classes
+    * per 4-micro-batch `stream_hourly_agg` replay). With isolation off,
+    * the clone's
+    * tasks run under the executor's shared classloader and hit the
+    * cache. A session reads the key from its own conf, which the clone
+    * copies when `start()` builds it, so the parent session keeps its
+    * setting. graft adds no session artifacts (no `addArtifact`,
+    * `addJar` or `addFile`), so isolation protects nothing here. */
+  private val replayConfs = Seq(
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> Some("false"),
+    "fs.AbstractFileSystem.file.impl" ->
+      Some("org.apache.hadoop.fs.local.RawLocalFs"),
+    "spark.sql.artifact.isolation.enabled" -> Some("false"))
+
+  /** Stateful-query partition sizing: `spark.sql.shuffle.partitions` at
+    * FIRST micro-batch fixes the state-store partition count for the
+    * checkpoint's lifetime, and every micro-batch pays an open+commit
+    * per state partition. Size it to expected STATE volume (keys ×
+    * state bytes), not input cores — a windowed agg with thousands of
+    * keys wants far fewer state stores than a 100 TB scan wants input
+    * splits. Scoped by `replay`; the streaming query keeps its planned
+    * value for its whole lifetime. */
+  private[streaming] def statePartitions(n: Int)
+      : Seq[(String, Option[String])] =
+    Seq("spark.sql.shuffle.partitions" -> Some(n.toString))
+
+  /** Stateful-query confs for LARGE state (millions of keys — e.g.
+    * one state row per winnow fingerprint), beside more state
+    * partitions so the per-batch store commit parallelizes across
+    * cores. Provider choice, round-11 A/B at sf1 (~1.25M state keys,
+    * back-to-back in one session): the default heap-backed provider's
+    * median is 64-66 s with a tight band vs RocksDB+changelog's
+    * 93-114 s with a 1.5-1.6x band — the round-9 assertion that RocksDB
+    * wins at million-key state was wrong AT THIS SIZE, so the replay
+    * runners default to the heap-backed provider. RocksDB's regime
+    * starts where state exceeds executor memory (tens of millions of
+    * rows per partition — a live NoTimeout deployment; the horizon
+    * kernels bound state precisely so that regime never arrives).
+    * SPARK_GRAFT_STATE_PROVIDER=rocksdb selects it, with changelog
+    * checkpointing ON (round-10 A/B: delta upload beats full-snapshot
+    * upload 8-17%) and row-count tracking OFF (a GET before every PUT
+    * for a metric: it must know whether the key existed); both keys are
+    * inert on the heap-backed provider. */
+  private[streaming] def largeState: Seq[(String, Option[String])] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      Option.when(sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
+        .contains("rocksdb"))("org.apache.spark.sql.execution." +
+        "streaming.state.RocksDBStateStoreProvider"),
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> Some("true"),
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "trackTotalNumberOfRows" -> Some("false"))
+
+  /** Skip the trailing no-data micro-batch of a replay whose last data
+    * batch already emits every row: it would only advance the
+    * watermark and evict state the stopped query never reuses — one
+    * more full open+commit cycle across every state partition for zero
+    * output. A replay that flushes on the watermark (sessionize's
+    * sentinel) needs that batch and must not use this. */
+  private[streaming] val noTrailingBatch: Seq[(String, Option[String])] =
+    Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> Some("false"))
+
+  /** A parquet-drained replay's output, as a batch read. The
+    * complete-output `memory` sink pins the
     * ENTIRE output stream in driver memory — at sf10 the winnow
     * candidate-pair stream alone exceeded the JVM (the r11/r12
     * scaling-table exclusion, a harness artifact, not an operator
-    * bound). Here each micro-batch's output lands on disk and is
-    * immediately droppable from memory: output size bounds DISK, not
+    * bound). A drain lands each micro-batch's output on disk, where it
+    * is immediately droppable from memory: output size bounds DISK, not
     * the driver heap. The explicit checkpoint keeps batch replay
     * possible after a crash; replayed batches rewrite the same rows
     * and the callers' `distinct()` absorbs them. */
-  private[streaming] def drainToParquet[T](
-      ds: org.apache.spark.sql.Dataset[T], tag: String)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = ds.sparkSession
-    val root = java.nio.file.Files.createTempDirectory(tag).toString
+  private def takeParquetDrain(spark: SparkSession, root: String,
+      schema: StructType): DataFrame = {
     val out = root + "/out"
-    val sink: (org.apache.spark.sql.Dataset[T], Long) => Unit =
-      (batch, _) => batch.write.mode("append").parquet(out)
-    // the checkpoint below is rmTree'd right after the drain — skip the
-    // double-checksum file ops (withReplayConf scaladoc)
-    withReplayConf(spark) {
-      val q = ds.writeStream
-        .foreachBatch(sink)
-        .option("checkpointLocation", root + "/chk")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
     // SEQUENCE the disk footprints (round-14 ask: at 100x the winnow
     // state store + drained candidates + verify spill exceed one box
     // only CONCURRENTLY): the query is stopped and this harness never
@@ -208,7 +339,7 @@ object Events {
       // zero batches produced output files: empty result, same schema
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ds.toDF().schema)
+        schema)
     else spark.read.parquet(out)
   }
 
@@ -216,7 +347,7 @@ object Events {
     * temp view dropped. The view would otherwise keep the rows alive
     * until the session ends; the returned frame is already analyzed, so
     * it holds the sink's `MemoryPlan` without the view. */
-  private[streaming] def takeMemorySink(spark: SparkSession,
+  private def takeMemorySink(spark: SparkSession,
       sinkName: String): DataFrame = {
     val df = spark.table(sinkName)
     spark.catalog.dropTempView(sinkName)
@@ -225,152 +356,38 @@ object Events {
 
   /** The file stream source wants a DIRECTORY: stage a single file
     * behind a symlink in a temp dir (no copy); directories pass
-    * through. Shared by every streaming parity runner. */
-  private[graft] def stageAsDir(path: String, prefix: String): String =
-    if (new java.io.File(path).isDirectory) path
+    * through unless `fresh`, which links each of their data files into
+    * a new temp dir, so rows appended to the staged dir never touch
+    * the source. */
+  private def stageAsDir(path: String, prefix: String,
+      fresh: Boolean): String = {
+    val src = new java.io.File(path)
+    if (src.isDirectory && !fresh) path
     else {
       val d = java.nio.file.Files.createTempDirectory(prefix)
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(new java.io.File(path).getName),
-        java.nio.file.Path.of(path))
+      val files =
+        if (src.isDirectory)
+          src.listFiles().filter(f => f.isFile &&
+            !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        else Array(src)
+      files.foreach(f => java.nio.file.Files.createSymbolicLink(
+        d.resolve(f.getName), f.toPath))
       d.toString
     }
+  }
+
+  // state = one row per (hour-window, event_type) — KBs for any
+  // retention the watermark admits: 2 stores hold it (sizing rationale
+  // on statePartitions)
+  private val hourlyAggStatePartitions = 2
 
   /** Run the streaming side to completion over a static directory and
     * return the result (complete-mode memory sink) — used by the parity
     * gate; a live deployment would use the same query with a real sink. */
-  def runHourlyTypeAgg(spark: SparkSession, path: String,
-      schema: StructType, sinkName: String,
-      // state = one row per (hour-window, event_type) — KBs for any
-      // retention the watermark admits: 2 stores hold it (sizing
-      // rationale on withStatePartitions)
-      numStatePartitions: Int = 2): DataFrame = {
-    val streamDir = stageAsDir(path, "graft_stream")
-    withStatePartitions(spark, numStatePartitions) {
-      val q = hourlyTypeAgg(readEventStream(spark, streamDir, schema,
-        maxFilesPerTrigger = filesPerTrigger(streamDir)))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    takeMemorySink(spark, sinkName)
-  }
-
-  /** Replay-harness session conf, scoped around each replay query's
-    * start; every key restores on exit.
-    *
-    * Checkpoint integrity: the parity runners' checkpoints
-    * are TEMPORARY (memory/parquet-drain sinks, temp dirs force-deleted
-    * on stop), yet every checkpoint file was written under TWO
-    * integrity layers — Spark 4.1's per-file checksum
-    * (`ChecksumCheckpointFileManager`) on top of Hadoop's `ChecksumFs`
-    * `.crc` twin. On a local FS without libhadoop each extra file
-    * op shells out (`RawLocalFileSystem.setPermission` /
-    * `getFileLinkStatus` fork+exec `chmod`/`stat` — measured by stack
-    * sampling at ~20% of the stream-gate floor, §5 driver overhead).
-    * Both layers are pure cost for a checkpoint that is deleted
-    * seconds later; a production deployment with durable checkpoints
-    * on HDFS/S3 keeps its own integrity machinery and never takes this
-    * path. Each streaming query resolves its checkpoint FS from the
-    * session conf at start.
-    *
-    * Codegen cache: Structured Streaming runs every query in
-    * `sparkSession.cloneSession()`, a new session with its own UUID.
-    * Under artifact isolation (on by default in Spark 4.1) the clone's
-    * tasks carry that UUID, and the executor runs them under a new
-    * per-session context classloader. `CodeGenerator.compile` caches
-    * on (context classloader, source), so every replay missed the cache:
-    * it compiled the previous replay's executor-side classes again with
-    * Janino and ran them before the JIT had compiled them (14 classes
-    * per 4-micro-batch `stream_hourly_agg` replay). With isolation off,
-    * the clone's
-    * tasks run under the executor's shared classloader and hit the
-    * cache. A session reads the key from its own conf, which the clone
-    * copies when `start()` builds it, so the parent session keeps its
-    * setting. graft adds no session artifacts (no `addArtifact`,
-    * `addJar` or `addFile`), so isolation protects nothing here. */
-  private[streaming] def withReplayConf[A](spark: SparkSession)
-      (body: => A): A = {
-    val kCk = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    // session-conf keys copy into each query's hadoopConf verbatim, so
-    // the bare hadoop key (no spark.hadoop. prefix) is the one that
-    // reaches FileContext resolution
-    val kFs = "fs.AbstractFileSystem.file.impl"
-    val kIso = "spark.sql.artifact.isolation.enabled"
-    val prev = Seq(kCk, kFs, kIso).map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(kCk, "false")
-    spark.conf.set(kFs, "org.apache.hadoop.fs.local.RawLocalFs")
-    spark.conf.set(kIso, "false")
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
-  /** Stateful-query partition sizing: `spark.sql.shuffle.partitions` at
-    * FIRST micro-batch fixes the state-store partition count for the
-    * checkpoint's lifetime, and every micro-batch pays an open+commit
-    * per state partition. Size it to expected STATE volume (keys ×
-    * state bytes), not input cores — a windowed agg with thousands of
-    * keys wants far fewer state stores than a 100 TB scan wants input
-    * splits. Restores the session conf afterwards; the streaming query
-    * keeps its planned value for its whole lifetime. */
-  private[streaming] def withStatePartitions[A](spark: SparkSession,
-      n: Int)(body: => A): A = withReplayConf(spark) {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Stateful-query sizing for LARGE state (millions of keys — e.g.
-    * one state row per winnow fingerprint): more state partitions so
-    * the per-batch store commit parallelizes across cores. Provider
-    * choice, round-11 A/B at sf1 (~1.25M state keys, back-to-back in
-    * one session): the default heap-backed provider's median is 64-66 s
-    * with a tight band vs RocksDB+changelog's 93-114 s with a 1.5-1.6x
-    * band — the round-9 assertion that RocksDB wins at million-key
-    * state was wrong AT THIS SIZE, so the replay runners default to the
-    * heap-backed provider. RocksDB's regime starts where state exceeds
-    * executor memory (tens of millions of rows per partition — a live
-    * NoTimeout deployment; the horizon kernels bound state precisely so
-    * that regime never arrives). SPARK_GRAFT_STATE_PROVIDER=rocksdb
-    * selects it, with changelog checkpointing ON (round-10 A/B: delta
-    * upload beats full-snapshot upload 8-17%) and row-count tracking
-    * OFF (a GET before every PUT for a metric: it must know whether
-    * the key existed). */
-  private[streaming] def withLargeState[A](spark: SparkSession,
-      n: Int)(body: => A): A = {
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val cKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val tKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "trackTotalNumberOfRows"
-    val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = Seq(pKey, cKey, tKey, nKey)
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set(pKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-    else spark.conf.unset(pKey)
-    // RocksDB-only knobs, inert on the heap-backed provider
-    spark.conf.set(cKey, "true")
-    spark.conf.set(tKey, "false")
-    // replay runners drain a static directory: the trailing no-data
-    // micro-batch would pay one more full open+commit cycle across
-    // every state partition just to advance the watermark
-    spark.conf.set(nKey, "false")
-    def restore(key: String, v: Option[String]): Unit = v match {
-      case Some(x) => spark.conf.set(key, x)
-      case None    => spark.conf.unset(key)
-    }
-    try withStatePartitions(spark, n)(body)
-    finally prev.foreach { case (k, v) => restore(k, v) }
-  }
+  def runHourlyTypeAgg(spark: SparkSession, path: String): DataFrame =
+    replay(spark, path, "graft_stream",
+      statePartitions(hourlyAggStatePartitions),
+      OutputMode.Complete())(hourlyTypeAgg)
 
   /** Ordered funnel analysis: per user, the earliest completion of the
     * step sequence — step i's time is the MIN event time of its type
@@ -437,6 +454,11 @@ object Events {
       .agg(count(lit(1)).as("n_users"))
   }
 
+  // state = ONE sketch row per event_type (a bounded enum at any
+  // corpus scale): 2 stores hold it; every extra store is one more
+  // per-batch delta-file commit (statePartitions scaladoc)
+  private val quantileStatePartitions = 2
+
   /** Streaming quantile sketches: the KLL-style `Aggs.approxCdf`
     * typed aggregator lifted onto a complete-mode stream group-by —
     * state is one bounded sketch per group, so percentile monitoring
@@ -451,38 +473,21 @@ object Events {
     * stays pinned by the bounded-input `agg_approx_cdf` gate and the
     * batch/stream parity spec. */
   def runValueQuantileEstimates(spark: SparkSession, path: String,
-      schema: StructType, sinkName: String, k: Int = 4096,
-      // state = ONE sketch row per event_type (a bounded enum at any
-      // corpus scale): 2 stores hold it; every extra store is one more
-      // per-batch delta-file commit (withStatePartitions scaladoc)
-      numStatePartitions: Int = 2): DataFrame = {
-    val dir = stageAsDir(path, "graft_sqtl")
-    withStatePartitions(spark, numStatePartitions) {
-      val q = readEventStream(spark, dir, schema,
-          maxFilesPerTrigger = filesPerTrigger(dir))
-        .groupBy(col("event_type"))
+      k: Int = 4096): DataFrame =
+    replay(spark, path, "graft_sqtl",
+      statePartitions(quantileStatePartitions), OutputMode.Complete()) {
+      _.groupBy(col("event_type"))
         .agg(graft.operators.Aggs.approxCdf(col("value"), k).as("cdf"))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    takeMemorySink(spark, sinkName).select(col("event_type"),
+    }.select(col("event_type"),
       graft.operators.Aggs.sketchQuantileUdf(col("cdf"), lit(0.5))
         .as("med_est"),
       graft.operators.Aggs.sketchQuantileUdf(col("cdf"), lit(0.9))
         .as("p90_est"))
-  }
 
   /** The gate surface over `runValueQuantileEstimates`. */
   def runValueQuantiles(spark: SparkSession, path: String,
-      schema: StructType, sinkName: String, k: Int = 4096,
-      numStatePartitions: Int = 2, eps: Double = 0.01): DataFrame = {
-    val est = runValueQuantileEstimates(spark, path, schema, sinkName,
-      k, numStatePartitions)
+      k: Int = 4096, eps: Double = 0.01): DataFrame = {
+    val est = runValueQuantileEstimates(spark, path, k)
     // exact rank of each estimate against the full data — one scan,
     // broadcast of the tiny per-group estimate table
     spark.read.parquet(path)
@@ -506,6 +511,10 @@ object Events {
           col("le_p") / col("n") >= lit(0.9 - eps)).as("p90_ok"))
   }
 
+  // state = ONE global Misra-Gries summary row: a single store holds
+  // it (sizing rationale on statePartitions)
+  private val heavyHittersStatePartitions = 1
+
   /** Streaming exact heavy hitters — the Misra-Gries typed aggregator
     * ([[graft.operators.Aggs.misraGriesAgg]]) lifted onto a
     * complete-mode stream aggregation, then the exact second pass of
@@ -526,30 +535,18 @@ object Events {
     * `keyExpr` is any deterministic expression over the source columns
     * (applied identically to the stream and the verification scan). */
   def runHeavyHitters(spark: SparkSession, path: String,
-      schema: StructType, keyExpr: Column, sinkName: String, m: Int,
-      // state = ONE global Misra-Gries summary row: a single store
-      // holds it (sizing rationale on withStatePartitions)
-      numStatePartitions: Int = 1): DataFrame = {
-    val dir = stageAsDir(path, "graft_shh")
-    withStatePartitions(spark, numStatePartitions) {
-      val q = readEventStream(spark, dir, schema,
-          maxFilesPerTrigger = filesPerTrigger(dir))
-        .select(keyExpr.as("key"))
+      keyExpr: Column, m: Int): DataFrame = {
+    val summary = replay(spark, path, "graft_shh",
+      statePartitions(heavyHittersStatePartitions),
+      OutputMode.Complete()) {
+      _.select(keyExpr.as("key"))
         .agg(udaf(graft.operators.Aggs.misraGriesAgg(m))
             .apply(col("key")).as("cand"),
           count(col("key")).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
     }
     // exact second pass: count ONLY the <= m streamed candidates (the
     // shuffle carries at most m distinct keys after the map-side
     // broadcast filter), keep exact count strictly above N/m
-    val summary = takeMemorySink(spark, sinkName)
     spark.read.parquet(path)
       .select(keyExpr.as("key"))
       .crossJoin(broadcast(summary))
@@ -576,46 +573,25 @@ object Events {
       .drop("__t")
   }
 
+  // state = one row per id key inside the watermark
+  private val dedupStatePartitions = 8
+
   /** Run `dedupStream` to completion over a static directory (append
     * mode — each key's first arrival emits exactly once) and return the
     * sink table; the oracle checks the key set, which is deterministic
     * regardless of intra-batch arrival order. */
   def runDedupStream(spark: SparkSession, path: String,
-      schema: StructType, idCols: Seq[String], sinkName: String,
-      numStatePartitions: Int = 8): DataFrame = {
-    val streamDir = stageAsDir(path, "graft_stream_dd")
+      idCols: Seq[String]): DataFrame =
     // exact-parity harness: process the whole input as ONE micro-batch.
     // With per-file triggers, a key whose only occurrences sit >1h
     // behind a later file's max event time would be dropped as late by
     // the watermark and the output would undershoot the DISTINCT
     // oracle. Bounded-state multi-batch eviction (the production
-    // semantics) is exercised separately in StreamingSpec.
-    withStatePartitions(spark, numStatePartitions) {
-      // the single data batch emits every first arrival already; the
-      // trailing no-data micro-batch would only advance the watermark
-      // and evict state this stopped query never reuses — one full
-      // open+commit cycle across every state partition for zero output
-      // (same rationale as withLargeState's replay drains)
-      val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevN = spark.conf.getOption(nKey)
-      spark.conf.set(nKey, "false")
-      try {
-      val q = dedupStream(readEventStream(spark, streamDir, schema,
-        maxFilesPerTrigger = Int.MaxValue), idCols)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      } finally prevN match {
-        case Some(v) => spark.conf.set(nKey, v)
-        case None    => spark.conf.unset(nKey)
-      }
-    }
-    takeMemorySink(spark, sinkName)
-  }
+    // semantics) is exercised separately in StreamingSpec. The single
+    // data batch emits every first arrival already: no trailing batch.
+    replay(spark, path, "graft_stream_dd",
+      statePartitions(dedupStatePartitions) ++ noTrailingBatch,
+      oneBatch = true)(dedupStream(_, idCols))
 
   /** Gap-based sessionization: consecutive events of a user belong to
     * one session while gaps stay under `gapNs`. Streaming kernel:
@@ -724,6 +700,9 @@ object Events {
       }
   }
 
+  // state = one open-session row per live user
+  private val sessionStatePartitions = 8
+
   /** Run `sessionizeStream` to completion over a static directory with
     * a FULL flush: after the data batch, a sentinel event (user -1) far
     * past max(ts) + gap is appended to the staged directory, advancing
@@ -732,22 +711,7 @@ object Events {
     * Output therefore equals the batch sessionization over ALL events —
     * the parity the oracle checks, open sessions included. */
   def runSessionizeStream(spark: SparkSession, path: String,
-      schema: StructType, gapNs: Long, sinkName: String,
-      numStatePartitions: Int = 8): DataFrame = {
-    // ALWAYS stage into a fresh temp dir (even for directory sources):
-    // the sentinel below is appended to the staged dir, never the source
-    val dir = {
-      val d = java.nio.file.Files.createTempDirectory("graft_sess")
-      val src = new java.io.File(path)
-      val files =
-        if (src.isDirectory)
-          src.listFiles().filter(f => f.isFile &&
-            !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        else Array(src)
-      files.foreach(f => java.nio.file.Files.createSymbolicLink(
-        d.resolve(f.getName), f.toPath))
-      d.toString
-    }
+      gapNs: Long): DataFrame = {
     val batch = spark.read.parquet(path)
     val dt = batch.schema("ts").dataType
     val maxRow = batch.select(max(tsNanos(col("ts"), dt))).head()
@@ -759,27 +723,21 @@ object Events {
     }
     val maxNs = maxRow.getLong(0)
     val sentinelNs = maxNs + 2L * gapNs + 3600L * 1000000000L
-    withStatePartitions(spark, numStatePartitions) {
-      val q = sessionizeStream(
-        readEventStream(spark, dir, schema,
-          maxFilesPerTrigger = Int.MaxValue), gapNs)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      // append the sentinel AFTER the data batch so it can never drag
-      // the watermark ahead of real events
-      batch.limit(1)
-        .withColumn("event_id", lit(-1L))
-        .withColumn("user_id", lit(-1L))
-        .withColumn("ts", tsFromNanos(lit(sentinelNs), dt))
-        .write.mode("append").parquet(dir)
-      q.processAllAvailable()
-      q.stop()
-    }
-    takeMemorySink(spark, sinkName).filter(col("user_id") =!= -1L)
+    // built from one row collected on the driver: a `limit(1)` in the
+    // write plan would compile a new class on every run, because
+    // `BaseLimitExec` names its counter from a JVM-global sequence
+    val sentinel = spark
+      .createDataFrame(java.util.List.of(batch.head()), batch.schema)
+      .withColumn("event_id", lit(-1L))
+      .withColumn("user_id", lit(-1L))
+      .withColumn("ts", tsFromNanos(lit(sentinelNs), dt))
+    // the sentinel lands AFTER the data batch so it can never drag the
+    // watermark ahead of real events; the watermark-driven flush needs
+    // the no-data batch, so noTrailingBatch must stay off here
+    replay(spark, path, "graft_sess",
+      statePartitions(sessionStatePartitions), oneBatch = true,
+      sentinel = Some(sentinel))(sessionizeStream(_, gapNs))
+      .filter(col("user_id") =!= -1L)
   }
 
   /** Batch reference for `sessionize`: lag-based session ids over a

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -31,10 +31,11 @@ object StreamDedup {
     * must be the bucket state, so the signature here is a plain
     * projection with higher-order array minima. Families match the batch
     * pipeline bit-for-bit: "md5" (DuckDB-reproducible — the oracle path)
-    * and "xxhash64" (the fast production family). */
+    * and "xxhash64" (the fast production family). The `carry` columns
+    * pass through unchanged beside (doc, band, bsig). */
   def bandedSignatures(docs: DataFrame, id: String, text: String,
       numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3,
-      family: String = "md5"): DataFrame = {
+      family: String = "md5", carry: Seq[String] = Nil): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(rowsPerBand * bands == numHashes, "bands must divide numHashes")
     require(family == "md5" || family == "xxhash64",
@@ -48,17 +49,21 @@ object StreamDedup {
     // the dominant cost of the stream gate. Staged as a multi-referenced
     // attribute so the kernel evaluates once per row; the band bucket
     // hash stays a codegen'd scalar md5/xxhash64.
+    val carried = carry.map(col)
     docs
-      .select(col(id).cast("long").as("doc"),
-        graft.pipeline.Text.shingles(col(text), shingleSize).as("__sh"))
+      .select(col(id).cast("long").as("doc") +:
+        graft.pipeline.Text.shingles(col(text), shingleSize).as("__sh") +:
+        carried: _*)
       .filter(size(col("__sh")) > 0)
-      .select(col("doc"), graft.functions.TextKernels
-        .minhashSigs(col("__sh"), numHashes, family).as("__mh"))
-      .select(col("doc"),
+      .select(col("doc") +: graft.functions.TextKernels
+        .minhashSigs(col("__sh"), numHashes, family).as("__mh") +:
+        carried: _*)
+      .select(col("doc") +:
         posexplode(array((0 until bands).map(b =>
           bsigOf((0 until rowsPerBand).map(r =>
             element_at(col("__mh"), b * rowsPerBand + r + 1)))): _*))
-          .as(Seq("band", "bsig")))
+          .as(Seq("band", "bsig")) +:
+        carried: _*)
   }
 
   /** Streaming candidate pairs. Output may contain a pair once per
@@ -270,28 +275,9 @@ object StreamDedup {
       .withWatermark("__hts", s"$latenessMs milliseconds")
     // the ts column threads through the banded projection directly
     // (a post-hoc self-join would make this a stream-stream join)
-    val rowsPerBand = numHashes / bands
-    require(rowsPerBand * bands == numHashes, "bands must divide numHashes")
-    require(family == "md5" || family == "xxhash64",
-      s"unknown minhash family: $family")
-    val bsigOf: Seq[Column] => Column =
-      if (family == "md5")
-        cs => md5(concat_ws("_", cs.map(_.cast("string")): _*))
-      else cs => xxhash64(cs: _*).cast("string")
-    val rows = withTs
-      .select(col(id).cast("long").as("doc"),
-        graft.pipeline.Text.shingles(col(text), shingleSize).as("__sh"),
-        col("__hts"))
-      .filter(size(col("__sh")) > 0)
-      .select(col("doc"), graft.functions.TextKernels
-        .minhashSigs(col("__sh"), numHashes, family).as("__mh"),
-        col("__hts"))
-      .select(col("doc"),
-        posexplode(array((0 until bands).map(b =>
-          bsigOf((0 until rowsPerBand).map(r =>
-            element_at(col("__mh"), b * rowsPerBand + r + 1)))): _*))
-          .as(Seq("band", "bsig")),
-        col("__hts").as("ts"))
+    val rows = bandedSignatures(withTs, id, text, numHashes, bands,
+        shingleSize, family, carry = Seq("__hts"))
+      .withColumnRenamed("__hts", "ts")
       .as[TsBanded]
     rows.groupByKey(b => (b.band, b.bsig))
       .flatMapGroupsWithState[HorizonState, CandidatePair](
@@ -303,6 +289,13 @@ object StreamDedup {
       }
   }
 
+  // state = one row per band bucket, for the minhash runner and its
+  // horizon twin
+  private val minhashStatePartitions = 8
+  // state = one row per FINGERPRINT (~0.4/normalized char) — millions
+  // of keys at any real corpus slice, the large-state regime
+  private val winnowStatePartitions = 32
+
   /** Run the horizon stream to completion over a static directory with
     * event time synthesized from the id (ts = id seconds — the parity
     * runners' stand-in for an ingest timestamp) and return the verified
@@ -310,36 +303,17 @@ object StreamDedup {
     * |id_b - id_a| <= horizonSec. `latenessMs` defaults to a span no
     * replay order exceeds, making the output independent of micro-batch
     * composition (see `winnowPairsStreamHorizon`). */
-  def runWinnowPairsHorizon(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, text: String, sinkName: String, horizonSec: Long,
+  def runWinnowPairsHorizon(spark: SparkSession, path: String,
+      id: String, text: String, horizonSec: Long,
       latenessMs: Long = 365L * 24 * 3600 * 1000,
-      k: Int = 16, w: Int = 4, numStatePartitions: Int = 32): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_swh")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-      .withColumn("__ingest",
-        timestamp_seconds(col(id).cast("long")))
-    Events.withLargeState(spark, numStatePartitions) {
-      val q = winnowPairsStreamHorizon(stream, id, text, "__ingest",
-        horizonSec * 1000, latenessMs, k, w)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      k: Int = 16, w: Int = 4): DataFrame = {
+    val candidates = Events.replay(spark, path, "graft_swh",
+      Events.statePartitions(winnowStatePartitions) ++
+        Events.largeState ++ Events.noTrailingBatch) { stream =>
+      winnowPairsStreamHorizon(ingestTimed(stream, id), id, text,
+        "__ingest", horizonSec * 1000, latenessMs, k, w)
     }
-    graft.pipeline.Dedup.verifySharedRuns(
-      Events.takeMemorySink(spark, sinkName).distinct(),
-      spark.read.parquet(path)
-        .withColumn(id, org.apache.spark.sql.functions.col(id)
-          .cast("long")),
-      id, text, k + w - 1)
-      .withColumn("n_shared", col("n_shared").cast("long"))
+    verified(spark, candidates, path, id, text, k + w - 1)
   }
 
   /** Run the minhash horizon stream to completion over a static
@@ -347,59 +321,30 @@ object StreamDedup {
     * seconds) and return the DISTINCT in-horizon candidate pairs —
     * exactly `runMinhashPairs` restricted to
     * |id_b - id_a| <= horizonSec. */
-  def runMinhashPairsHorizon(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, text: String, sinkName: String, horizonSec: Long,
+  def runMinhashPairsHorizon(spark: SparkSession, path: String,
+      id: String, text: String, horizonSec: Long,
       latenessMs: Long = 365L * 24 * 3600 * 1000,
-      family: String = "md5", numStatePartitions: Int = 8): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_smhh")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-      .withColumn("__ingest",
-        timestamp_seconds(col(id).cast("long")))
-    Events.withStatePartitions(spark, numStatePartitions) {
-      val q = minhashPairsStreamHorizon(stream, id, text, "__ingest",
-        horizonSec * 1000, latenessMs, family = family)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Events.takeMemorySink(spark, sinkName).distinct()
-  }
+      family: String = "md5"): DataFrame =
+    Events.replay(spark, path, "graft_smhh",
+      Events.statePartitions(minhashStatePartitions)) { stream =>
+      minhashPairsStreamHorizon(ingestTimed(stream, id), id, text,
+        "__ingest", horizonSec * 1000, latenessMs, family = family)
+    }.distinct()
+
+  // the horizon runners' event time: the id read as epoch seconds
+  private def ingestTimed(stream: DataFrame, id: String): DataFrame =
+    stream.withColumn("__ingest", timestamp_seconds(col(id).cast("long")))
 
   /** Run the stream to completion over a static directory (memory sink,
     * one file per trigger → real cross-batch state) and return the
     * DISTINCT candidate pairs — the parity surface the oracle checks
     * against the batch band-bucket join. */
-  def runMinhashPairs(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, text: String, sinkName: String,
-      family: String = "md5", numStatePartitions: Int = 8): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_smh")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    // state partitions sized to state volume, not cores — see
-    // Events.withStatePartitions
-    Events.withStatePartitions(spark, numStatePartitions) {
-      val q = minhashPairsStream(stream, id, text, family = family)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Events.takeMemorySink(spark, sinkName).distinct()
-  }
+  def runMinhashPairs(spark: SparkSession, path: String, id: String,
+      text: String, family: String = "md5"): DataFrame =
+    Events.replay(spark, path, "graft_smh",
+      Events.statePartitions(minhashStatePartitions)) {
+      minhashPairsStream(_, id, text, family = family)
+    }.distinct()
 
   /** Run the winnow stream to completion over a static directory and
     * return the verified pairs: DISTINCT streamed candidates joined
@@ -408,33 +353,25 @@ object StreamDedup {
     * winnowing guarantee makes streamed-candidate recall exact, so this
     * equals `Dedup.winnowSubstringPairs` on the batch read — one
     * definition of "contaminated pair" for backfill and live tailing.
-    * Candidates drain through the bounded parquet sink
-    * ([[drainToParquet]]), so the harness holds nothing
-    * candidate-pair-scaled in driver memory. */
-  def runWinnowPairs(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, text: String, sinkName: String,
-      k: Int = 16, w: Int = 4, numStatePartitions: Int = 32): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_swn")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    // one state row per FINGERPRINT (~0.4/normalized char) — millions of
-    // keys at any real corpus slice, the large-state regime
-    val candidates = Events.withLargeState(spark, numStatePartitions) {
-      Events.drainToParquet(
-        winnowPairsStream(stream, id, text, k, w), sinkName)
+    * Candidates drain through the bounded parquet sink, so the harness
+    * holds nothing candidate-pair-scaled in driver memory. */
+  def runWinnowPairs(spark: SparkSession, path: String, id: String,
+      text: String, k: Int = 16, w: Int = 4): DataFrame = {
+    val candidates = Events.replay(spark, path, "graft_swn",
+      Events.statePartitions(winnowStatePartitions) ++
+        Events.largeState ++ Events.noTrailingBatch, drain = true) {
+      winnowPairsStream(_, id, text, k, w)
     }
-    // pre-cast the id to long on the batch read: the streamed candidate
-    // pairs are typed long (CandidatePair), and verifySharedRuns joins
-    // ids as-is by contract
-    graft.pipeline.Dedup.verifySharedRuns(
-      candidates.distinct(),
-      spark.read.parquet(path)
-        .withColumn(id, org.apache.spark.sql.functions.col(id)
-          .cast("long")),
-      id, text, k + w - 1)
-      .withColumn("n_shared", col("n_shared").cast("long"))
+    verified(spark, candidates, path, id, text, k + w - 1)
   }
+
+  // DISTINCT streamed candidates verified against a batch read of
+  // `path`, with the id pre-cast to long: the candidate pairs are typed
+  // long (CandidatePair), and verifySharedRuns joins ids as-is
+  private def verified(spark: SparkSession, candidates: DataFrame,
+      path: String, id: String, text: String, runLen: Int): DataFrame =
+    graft.pipeline.Dedup.verifySharedRuns(candidates.distinct(),
+      spark.read.parquet(path).withColumn(id, col(id).cast("long")),
+      id, text, runLen)
+      .withColumn("n_shared", col("n_shared").cast("long"))
 }

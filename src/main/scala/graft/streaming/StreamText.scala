@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -39,33 +39,18 @@ object StreamText {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"))
 
-  /** Drive the profile over a parquet file/dir as a file stream
-    * (one file per micro-batch) into a memory sink; returns the final
-    * profile. Mirrors `StreamDedup.runMinhashPairs`'s staging. */
-  def runLangProfile(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, text: String, sinkName: String,
-      // state = ONE row per language (a bounded enum at any corpus
-      // scale): 2 stores hold it; every extra store is one more
-      // per-batch delta-file commit (Events.withStatePartitions doc)
-      numStatePartitions: Int = 2): DataFrame = {
-    val dir = Events.stageAsDir(path, "graft_stxt")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    Events.withStatePartitions(spark, numStatePartitions) {
-      val q = langProfile(stream, id, text)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Events.takeMemorySink(spark, sinkName)
-  }
+  // state = ONE row per language (a bounded enum at any corpus
+  // scale): 2 stores hold it; every extra store is one more per-batch
+  // delta-file commit (Events.statePartitions doc)
+  private val langProfileStatePartitions = 2
+
+  /** Drive the profile over a parquet file/dir as a file stream into a
+    * complete-mode memory sink; returns the final profile. */
+  def runLangProfile(spark: SparkSession, path: String, id: String,
+      text: String): DataFrame =
+    Events.replay(spark, path, "graft_stxt",
+      Events.statePartitions(langProfileStatePartitions),
+      OutputMode.Complete())(langProfile(_, id, text))
 
   /** Streaming exact-n-gram decontamination guard — the live-ingestion
     * form of `pipeline.Dedup.exactNgramDecontam`: the benchmark set
@@ -99,33 +84,16 @@ object StreamText {
     * reduction the batch operator broadcasts). Returns the streamed
     * (id, n_hits, n_distinct) rows — exactly
     * `Dedup.exactNgramDecontam(corpus, bench)`. */
-  def runDecontam(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, text: String, bench: DataFrame, benchText: String,
-      sinkName: String, n: Int = 8): DataFrame = {
+  def runDecontam(spark: SparkSession, path: String, id: String,
+      text: String, bench: DataFrame, benchText: String,
+      n: Int = 8): DataFrame = {
     val benchHashes = bench
       .select(explode(graft.functions.TextKernels.tokenNgramHashes(
         graft.pipeline.Text.tokens(col(benchText)), n, "decon"))
         .as("h"))
       .distinct().collect().map(_.getLong(0))
-    val dir = Events.stageAsDir(path, "graft_sdec")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    // stateless guard, but each micro-batch still writes offset/commit
-    // WAL files — skip the double-checksum ops on the temp checkpoint
-    Events.withReplayConf(spark) {
-      val q = decontamStream(stream, id, text, benchHashes, n)
-        .writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    Events.takeMemorySink(spark, sinkName)
+    Events.replay(spark, path, "graft_sdec")(
+      decontamStream(_, id, text, benchHashes, n))
   }
 
   /** Streaming temperature-flattened mixture sampling — the live form
@@ -152,22 +120,15 @@ object StreamText {
     * rows, equal to `Sampling.temperatureSampleBudgetDiv` on the batch
     * read. Output drains through the bounded parquet sink (it is
     * ~corpus/budgetDiv-scaled — never driver-memory-resident). */
-  def runTemperatureMix(spark: org.apache.spark.sql.SparkSession,
-      path: String, schema: org.apache.spark.sql.types.StructType,
-      id: String, stratum: String, budgetDiv: Long, alpha: Double,
-      sinkName: String): DataFrame = {
+  def runTemperatureMix(spark: SparkSession, path: String, id: String,
+      stratum: String, budgetDiv: Long, alpha: Double): DataFrame = {
     val batch = spark.read.parquet(path)
     val rates = graft.pipeline.Sampling.temperatureRates(batch, stratum,
       expr(s"__ntot div CAST($budgetDiv AS BIGINT)"), alpha)
       .localCheckpoint(false)
-    val dir = Events.stageAsDir(path, "graft_stmx")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", Events.filesPerTrigger(dir))
-      .parquet(dir)
-    Events.drainToParquet(
-      temperatureMixStream(stream, id, stratum, rates)
-        .select(col(id), col(stratum)),
-      sinkName)
+    Events.replay(spark, path, "graft_stmx", drain = true) {
+      temperatureMixStream(_, id, stratum, rates)
+        .select(col(id), col(stratum))
+    }
   }
 }

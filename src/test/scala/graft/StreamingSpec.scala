@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -16,8 +20,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming hourly agg equals the batch transform") {
     val dir = "/root/testdata/sf0.001"
     val batchDf = spark.read.parquet(s"$dir/events.parquet")
-    val streamed = Events.runHourlyTypeAgg(spark,
-      s"$dir/events.parquet", batchDf.schema, "spec_stream_sink")
+    val streamed = Events.runHourlyTypeAgg(spark, s"$dir/events.parquet")
       .collect().map(_.toSeq).toSet
     val batch = Events.hourlyTypeAgg(batchDf)
       .collect().map(_.toSeq).toSet
@@ -25,29 +28,73 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
-  test("a repeated stream replay compiles no generated code again") {
-    // each replay runs in a cloned session; its tasks must reuse the
-    // executor's classloader, or the codegen cache misses every class
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    def replay(): Set[Seq[Any]] = Events.runHourlyTypeAgg(spark, path,
-        schema, s"spec_replay_${System.nanoTime()}")
-      .collect().map(_.toSeq).toSet
+  /** Runs `replay` twice: the second run must compile no generated code
+    * and return the same rows as the first. */
+  private def assertWarmReplay(replay: => DataFrame): Unit = {
+    def rows: Set[Seq[Any]] = replay.collect().map(_.toSeq).toSet
     def compiled: Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
-    val first = replay()
+    val first = rows
     val c0 = compiled
-    val second = replay()
+    val second = rows
     assert(compiled - c0 == 0L)
     assert(second == first)
     assert(first.nonEmpty)
   }
 
-  test("the stream gates drop their memory-sink views") {
-    SparkEntry.queries("stream_hourly_agg")(spark, sfDir).count(): Unit
-    val left = spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_stream_sink_"))
-    assert(left.isEmpty, left.mkString(", "))
+  test("a repeated stream replay compiles no generated code again") {
+    // each replay runs in a cloned session; its tasks must reuse the
+    // executor's classloader, or the codegen cache misses every class
+    assertWarmReplay(Events.runHourlyTypeAgg(spark,
+      s"$sfDir/events.parquet"))
+  }
+
+  test("a repeated sessionize replay compiles no generated code again") {
+    // its sentinel write must hold no limit operator, whose generated
+    // code is named from a JVM-global counter
+    assertWarmReplay(Events.runSessionizeStream(spark,
+      s"$sfDir/events.parquet", gapNs = 1800000000000L))
+  }
+
+  test("every stream gate stops its query and restores views and confs") {
+    val scoped = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      "fs.AbstractFileSystem.file.impl",
+      "spark.sql.artifact.isolation.enabled",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled",
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
+    def confs = scoped.map(k => k -> spark.conf.getOption(k))
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val gates = SparkEntry.queries.keys.toSeq.sorted
+      .filter(g => g.startsWith("stream_") && g != "stream_sessionize_batch")
+    assert(gates.size == 12)
+    gates.foreach { g =>
+      val (confs0, views0) = (confs, views)
+      SparkEntry.queries(g)(spark, sfDir).count(): Unit
+      assert(spark.streams.active.isEmpty, g)
+      assert(views == views0, g)
+      assert(confs == confs0, g)
+    }
+  }
+
+  test("Events.scala holds the only stream reader and writer in main code") {
+    // one replay runner: a new runner cannot fork its own query block
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val users =
+      try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter { p =>
+          val src = Files.readString(p)
+          src.contains(".readStream") || src.contains(".writeStream")
+        }
+        .map((p: Path) => root.relativize(p).toString).toSeq
+      finally walk.close()
+    assert(users === Seq("graft/streaming/Events.scala"))
   }
 
   test("sessionize emits gap-separated sessions incrementally") {
@@ -166,7 +213,7 @@ class StreamingSpec extends SparkSpec {
     link("f1"); link("f2")
     val all = base.union(dupes)
     val got = StreamDedup.runMinhashPairs(spark, streamDir.toString,
-      all.schema, "doc_id", "text", "spec_stream_mh")
+      "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = Dedup.minhashPairs(all, "doc_id", "text")
       .select("id_a", "id_b")
@@ -192,8 +239,7 @@ class StreamingSpec extends SparkSpec {
     docs.repartition(3).write.mode("overwrite")
       .parquet(s"$dir/corpus.parquet")
     val got = StreamText.runDecontam(spark, s"$dir/corpus.parquet",
-      docs.schema, "doc_id", "text", bench, "text",
-      "spec_stream_dec", n = 8)
+      "doc_id", "text", bench, "text", n = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     val want = Dedup.exactNgramDecontam(docs, "doc_id", "text",
@@ -215,8 +261,8 @@ class StreamingSpec extends SparkSpec {
     docs.repartition(4).write.mode("overwrite")
       .parquet(s"$dir/corpus.parquet")
     val got = StreamText.runTemperatureMix(spark,
-      s"$dir/corpus.parquet", docs.schema, "doc_id", "lang",
-      budgetDiv = 10, alpha = 0.5, "spec_stream_tmx")
+      s"$dir/corpus.parquet", "doc_id", "lang",
+      budgetDiv = 10, alpha = 0.5)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val want = Sampling.temperatureSampleBudgetDiv(docs, "doc_id",
       "lang", budgetDiv = 10, alpha = 0.5)
@@ -248,7 +294,7 @@ class StreamingSpec extends SparkSpec {
       df.collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2)))).toMap
     val got = toMap(StreamText.runLangProfile(spark, streamDir.toString,
-      docs.schema, "doc_id", "text", "spec_stream_lp"))
+      "doc_id", "text"))
     val want = toMap(StreamText.langProfile(docs, "doc_id", "text"))
     assert(got == want)
     assert(got.values.map(_._1).sum == docs.count())
@@ -348,7 +394,7 @@ class StreamingSpec extends SparkSpec {
       df.collect().map(r => r.getString(0) ->
         ((r.getDouble(1), r.getDouble(2)))).toMap
     val got = toMap(Events.runValueQuantileEstimates(spark,
-      streamDir.toString, events.schema, "spec_stream_qt")
+      streamDir.toString)
       .select(col("event_type"), round(col("med_est"), 6),
         round(col("p90_est"), 6)))
     val want = toMap(events.groupBy(col("event_type"))
@@ -513,10 +559,8 @@ class StreamingSpec extends SparkSpec {
     // 5 part files -> multiple micro-batches (filesPerTrigger targets 4)
     spark.createDataFrame(rows).toDF("event_id", "key")
       .repartition(5).write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
     val m = 16
-    val got = Events.runHeavyHitters(spark, dir, schema, col("key"),
-        s"shh_spec_${System.nanoTime()}", m = m)
+    val got = Events.runHeavyHitters(spark, dir, col("key"), m = m)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val batch = graft.operators.Aggs.heavyHittersExact(
         spark.read.parquet(dir), "key", m)

@@ -1289,8 +1289,6 @@ object Dedup {
       // absorbs without the giant-row OOM (scaladoc invariant above)
       maxGramsPerDoc: Int = 8 << 20): DataFrame = {
     // integer threshold units + every bound formula live in PpjoinCore
-    // (shared with the tools.PpjoinAnatomy stage replay — round-15
-    // advice: keep the measurement tool desync-proof)
     val (t4, tn) = PpjoinCore.thresholdUnits(threshold)
     // lever 1: collapse identical gram sets; reps carry member lists
     val groups = df
@@ -1673,17 +1671,13 @@ object Dedup {
 }
 
 /** The integer formulas and the prefix-build pipeline of
-  * [[Dedup.prefixFilterJaccardPairs]], extracted so the stage-replay
-  * diagnostic (`graft.tools.PpjoinAnatomy`) measures the OPERATOR'S
-  * formulas instead of a hand-copied duplicate — a change here changes
-  * both sides of every future A/B run by construction (round-15
-  * advice: the copies had already started to drift in comments).
+  * [[Dedup.prefixFilterJaccardPairs]], their only caller.
   *
   * Unit system: thresholds are 4-decimal integer units (t4 = τ·1e4);
   * τ' = (2τ)/(1+τ) appears only as the integer pair (tn, 2e4) with
   * tn = 2·t4 − 1, so every bound below is exact integer arithmetic —
   * no float threshold ever decides a pair. */
-private[graft] object PpjoinCore {
+private[pipeline] object PpjoinCore {
   import org.apache.spark.sql.functions._
 
   /** threshold τ ∈ (0,1] → (t4 = round(τ·1e4), tn = 2·t4 − 1). */

@@ -1,6 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DataType, DecimalType, LongType,
@@ -132,7 +136,7 @@ object Events {
     // java.io.File.listFiles returns null for any non-local scheme
     // (HDFS/S3), which would silently degrade to 1-file batches
     val n = try {
-      val p = new org.apache.hadoop.fs.Path(dir)
+      val p = new Path(dir)
       val conf = org.apache.spark.sql.SparkSession.getActiveSession
         .map(_.sessionState.newHadoopConf())
         .getOrElse(new org.apache.hadoop.conf.Configuration())
@@ -146,9 +150,9 @@ object Events {
 
   /** Replay `path` (a parquet file or directory) through a Structured
     * Streaming query to completion and return its output rows: every
-    * streaming parity runner goes through here. The source schema comes
-    * from a batch read of `path`; the input is staged as a directory
-    * (`stageAsDir`, prefix `tag`) and read `filesPerTrigger` files per
+    * streaming parity runner goes through here. The input is staged as
+    * a directory (`stageAsDir`, prefix `tag`), its schema is the batch
+    * reader's (`footerSchema`), and it is read `filesPerTrigger` files per
     * micro-batch, or as one micro-batch when `oneBatch`. The replay
     * confs plus the runner's own `confs` are scoped around the query,
     * which is started, drained and stopped here.
@@ -163,8 +167,8 @@ object Events {
       mode: OutputMode = OutputMode.Append(), drain: Boolean = false,
       oneBatch: Boolean = false, sentinel: Option[DataFrame] = None)
       (query: DataFrame => Dataset[_]): DataFrame = {
-    val schema = spark.read.parquet(path).schema
     val dir = stageAsDir(path, tag, fresh = sentinel.isDefined)
+    val schema = footerSchema(spark, dir)
     val root = if (drain)
       java.nio.file.Files.createTempDirectory(tag).toString else ""
     val sinkName = s"${tag}_${System.nanoTime()}"
@@ -188,6 +192,23 @@ object Events {
     }
     if (drain) takeParquetDrain(spark, root, outSchema)
     else takeMemorySink(spark, sinkName)
+  }
+
+  /** The schema a batch read of `path` (a parquet file or directory)
+    * infers, taken on the driver from the footer of its first data file:
+    * the batch read's inference reads that same footer in a Spark job. */
+  private[graft] def footerSchema(spark: SparkSession, path: String)
+      : StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val first = if (fs.getFileStatus(p).isFile) p
+      else fs.listStatus(p).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .minBy(_.getName)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
+    val footer = try reader.getFooter finally reader.close()
+    GraftBridge.parquetSchema(new Footer(first, footer), spark)
   }
 
   /** Scope session confs around `body`: `key -> Some(v)` sets a key,
@@ -255,33 +276,6 @@ object Events {
   private[streaming] def statePartitions(n: Int)
       : Seq[(String, Option[String])] =
     Seq("spark.sql.shuffle.partitions" -> Some(n.toString))
-
-  /** Stateful-query confs for LARGE state (millions of keys — e.g.
-    * one state row per winnow fingerprint), beside more state
-    * partitions so the per-batch store commit parallelizes across
-    * cores. Provider choice, round-11 A/B at sf1 (~1.25M state keys,
-    * back-to-back in one session): the default heap-backed provider's
-    * median is 64-66 s with a tight band vs RocksDB+changelog's
-    * 93-114 s with a 1.5-1.6x band — the round-9 assertion that RocksDB
-    * wins at million-key state was wrong AT THIS SIZE, so the replay
-    * runners default to the heap-backed provider. RocksDB's regime
-    * starts where state exceeds executor memory (tens of millions of
-    * rows per partition — a live NoTimeout deployment; the horizon
-    * kernels bound state precisely so that regime never arrives).
-    * SPARK_GRAFT_STATE_PROVIDER=rocksdb selects it, with changelog
-    * checkpointing ON (round-10 A/B: delta upload beats full-snapshot
-    * upload 8-17%) and row-count tracking OFF (a GET before every PUT
-    * for a metric: it must know whether the key existed); both keys are
-    * inert on the heap-backed provider. */
-  private[streaming] def largeState: Seq[(String, Option[String])] = Seq(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      Option.when(sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-        .contains("rocksdb"))("org.apache.spark.sql.execution." +
-        "streaming.state.RocksDBStateStoreProvider"),
-    "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled" -> Some("true"),
-    "spark.sql.streaming.stateStore.rocksdb." +
-      "trackTotalNumberOfRows" -> Some("false"))
 
   /** Skip the trailing no-data micro-batch of a replay whose last data
     * batch already emits every row: it would only advance the

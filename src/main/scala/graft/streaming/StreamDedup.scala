@@ -293,7 +293,11 @@ object StreamDedup {
   // horizon twin
   private val minhashStatePartitions = 8
   // state = one row per FINGERPRINT (~0.4/normalized char) — millions
-  // of keys at any real corpus slice, the large-state regime
+  // of keys at any real corpus slice, the large-state regime. It stays
+  // on Spark's default heap-backed provider: at sf1 (~1.25M keys, the
+  // round-11 A/B) its median was 64-66 s vs RocksDB+changelog's
+  // 93-114 s; RocksDB pays off only once state outgrows executor
+  // memory, and `spark.sql.streaming.stateStore.providerClass` selects it
   private val winnowStatePartitions = 32
 
   /** Run the horizon stream to completion over a static directory with
@@ -309,7 +313,7 @@ object StreamDedup {
       k: Int = 16, w: Int = 4): DataFrame = {
     val candidates = Events.replay(spark, path, "graft_swh",
       Events.statePartitions(winnowStatePartitions) ++
-        Events.largeState ++ Events.noTrailingBatch) { stream =>
+        Events.noTrailingBatch) { stream =>
       winnowPairsStreamHorizon(ingestTimed(stream, id), id, text,
         "__ingest", horizonSec * 1000, latenessMs, k, w)
     }
@@ -359,7 +363,7 @@ object StreamDedup {
       text: String, k: Int = 16, w: Int = 4): DataFrame = {
     val candidates = Events.replay(spark, path, "graft_swn",
       Events.statePartitions(winnowStatePartitions) ++
-        Events.largeState ++ Events.noTrailingBatch, drain = true) {
+        Events.noTrailingBatch, drain = true) {
       winnowPairsStream(_, id, text, k, w)
     }
     verified(spark, candidates, path, id, text, k + w - 1)

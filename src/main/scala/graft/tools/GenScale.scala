@@ -29,7 +29,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val in = sys.env.getOrElse("SPARK_GRAFT_GEN_IN", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_GEN_OUT",
-      "/root/repo/.bench-data/sf1")
+      java.nio.file.Paths.get(".bench-data/sf1").toAbsolutePath.toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_GEN_REPS", "10").toInt
     val spark = graft.GraftSession.build()
 

@@ -77,7 +77,7 @@ object GenZipf {
 
   def main(args: Array[String]): Unit = {
     val out = sys.env.getOrElse("SPARK_GRAFT_GEN_OUT",
-      "/root/repo/.bench-data/zipf_sf01")
+      java.nio.file.Paths.get(".bench-data/zipf_sf01").toAbsolutePath.toString)
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_GEN_DOCS", "5000").toLong
     val spark = graft.GraftSession.build()
     // Heaps' law vocabulary: V = 30·sqrt(expected corpus word count);

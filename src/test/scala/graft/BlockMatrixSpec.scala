@@ -196,7 +196,7 @@ class BlockMatrixSpec extends SparkSpec {
 
   test("ldPruneGlobal removes cross-boundary correlated survivors") {
     val mt = Vcf.read(spark,
-      "/root/repo/src/test/resources/oracle_sample.vcf")
+      Fixtures.path("oracle_sample.vcf"))
     val global = Ld.ldPruneGlobal(mt, r2Threshold = 0.5, window = 1500)
     val local = Ld.ldPrune(mt, r2Threshold = 0.5, window = 1500)
     val g = global.df.count(); val l = local.df.count()

@@ -317,7 +317,7 @@ class CoverageSpec extends SparkSpec {
 
   test("matrix distinctByRow and annotateGlobals") {
     val mt = graft.sources.Vcf.read(spark,
-      "/root/repo/src/test/resources/oracle_sample.vcf")
+      Fixtures.path("oracle_sample.vcf"))
     val doubled = mt.copy(rows = mt.rows.unionByName(mt.rows))
     assert(doubled.distinctByRow().rows.count() == mt.rows.count())
     assert(mt.annotateGlobals("build" -> "GRCh38")

@@ -171,7 +171,7 @@ class ExtrasSpec extends SparkSpec {
 
   test("bgen sidecar index round-trips and skips the rescan") {
     val src = java.nio.file.Path.of(
-      "/root/repo/src/test/resources/oracle_bgen.bgen")
+      Fixtures.path("oracle_bgen.bgen"))
     val dir = java.nio.file.Files.createTempDirectory("graft_bgen")
     val cp = dir.resolve("t.bgen")
     java.nio.file.Files.copy(src, cp)
@@ -183,11 +183,11 @@ class ExtrasSpec extends SparkSpec {
     assert(loaded.variants == scanned.variants)
     // and a full read through the sidecar decodes identically
     val a = Bgen.read(spark, cp.toString,
-      Some("/root/repo/src/test/resources/oracle_bgen.sample"))
+      Some(Fixtures.path("oracle_bgen.sample")))
       .entriesTable.df.select("position", "s", "GT").collect()
       .map(_.toSeq).toSet
     val b = Bgen.read(spark, src.toString,
-      Some("/root/repo/src/test/resources/oracle_bgen.sample"))
+      Some(Fixtures.path("oracle_bgen.sample")))
       .entriesTable.df.select("position", "s", "GT").collect()
       .map(_.toSeq).toSet
     assert(a == b)
@@ -224,8 +224,8 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("bgen streamed byte-range read equals the indexed read") {
-    val src = "/root/repo/src/test/resources/oracle_bgen.bgen"
-    val smp = Some("/root/repo/src/test/resources/oracle_bgen.sample")
+    val src = Fixtures.path("oracle_bgen.bgen")
+    val smp = Some(Fixtures.path("oracle_bgen.sample"))
     def dump(mt: MatrixTable) = mt.entriesTable.df
       .select("contig", "position", "ref", "s", "GT")
       .collect().map(_.toSeq).toSet
@@ -242,8 +242,8 @@ class ExtrasSpec extends SparkSpec {
   test("bgen write/read round-trips GT and 8-bit GP") {
     import graft.functions.Calls
     val src = Bgen.read(spark,
-      "/root/repo/src/test/resources/oracle_bgen.bgen",
-      Some("/root/repo/src/test/resources/oracle_bgen.sample"))
+      Fixtures.path("oracle_bgen.bgen"),
+      Some(Fixtures.path("oracle_bgen.sample")))
     val dir = java.nio.file.Files.createTempDirectory("graft_bgw")
     val out = dir.resolve("rt.bgen").toString
     Bgen.write(src, out)

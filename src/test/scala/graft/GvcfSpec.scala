@@ -58,7 +58,7 @@ class GvcfSpec extends SparkSpec {
 
   test("matrix tailRows / keyRowsBy / annotateColsAgg") {
     val mt = Vcf.read(spark,
-      "/root/repo/src/test/resources/oracle_sample.vcf")
+      Fixtures.path("oracle_sample.vcf"))
     val total = mt.rows.count()
     val tail = mt.tailRows(5)
     assert(tail.rows.count() == 5)
@@ -90,7 +90,7 @@ class GvcfSpec extends SparkSpec {
   }
 
   test("gzipped VCF reads identically to plain text") {
-    val plain = "/root/repo/src/test/resources/oracle_sample.vcf"
+    val plain = Fixtures.path("oracle_sample.vcf")
     val dir = java.nio.file.Files.createTempDirectory("graft_vcfgz")
     val gz = dir.resolve("s.vcf.gz")
     val out = new java.util.zip.GZIPOutputStream(

@@ -268,7 +268,7 @@ class HailIdxSpec extends SparkSpec {
   test("graft matrix export .idx: row offsets AND entries_offset " +
     "annotations both pin; entries spec carries _offsetField") {
     val mt = graft.sources.Vcf.read(spark,
-      "/root/repo/src/test/resources/oracle_sample.vcf")
+      Fixtures.path("oracle_sample.vcf"))
     val out = java.nio.file.Files.createTempDirectory("graft_idxmt")
     val path = s"$out/sample.mt"
     HailNativeWrite.writeMatrixTable(mt, path)

@@ -7,8 +7,8 @@ import graft.sources.HailNative
 
 class HailNativeSpec extends SparkSpec {
 
-  private val Ht = "/root/repo/src/test/resources/sample.ht"
-  private val Mt = "/root/repo/src/test/resources/sample.mt"
+  private val Ht = Fixtures.path("sample.ht")
+  private val Mt = Fixtures.path("sample.mt")
 
   test("reads a native .ht: schema, values, missingness, globals") {
     val t = HailNative.readTable(spark, Ht)
@@ -62,7 +62,7 @@ class HailNativeSpec extends SparkSpec {
     // legacy EArray/EBinary lengths, EInt32/EInt64 scalars (negative
     // values included — two's-complement varints), 4-byte block frames
     val t = HailNative.readTable(spark,
-      "/root/repo/src/test/resources/sample_legacy.ht")
+      Fixtures.path("sample_legacy.ht"))
     assert(t.globals == Map("tag" -> "legacy"))
     val rows = t.df.orderBy("id").collect()
     assert(rows.length == 2)
@@ -136,7 +136,7 @@ class HailNativeSpec extends SparkSpec {
   test("file_version outside the tested range is refused loudly") {
     import java.nio.file.Files
     def htWithVersion(rep: Any): String = {
-      val src = new java.io.File("src/test/resources/sample.ht")
+      val src = new java.io.File(Fixtures.path("sample.ht"))
       val dst = Files.createTempDirectory("graft_ver").resolve("v.ht")
       org.apache.commons.io.FileUtils.copyDirectory(src, dst.toFile)
       val metaPath = dst.resolve("metadata.json.gz")

@@ -8,7 +8,7 @@ import graft.sources.Vcf
 class LmmSpec extends SparkSpec {
 
   private def fixtureMt(): MatrixTable = Vcf.read(spark,
-    "/root/repo/src/test/resources/oracle_sample.vcf")
+    Fixtures.path("oracle_sample.vcf"))
 
   test("identity kinship collapses the LMM to OLS") {
     val mt = fixtureMt()

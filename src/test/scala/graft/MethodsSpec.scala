@@ -643,7 +643,7 @@ class MethodsSpec extends SparkSpec {
     import graft.methods.MatingSimulation
     import org.apache.spark.sql.Row
     val mt = Vcf.read(spark,
-      "/root/repo/src/test/resources/oracle_sample.vcf")
+      Fixtures.path("oracle_sample.vcf"))
     val sim = MatingSimulation.simulateRandomMating(mt, nRounds = 2,
       generationSizeMultiplier = 1.0, keepFounders = true, seed = 5L)
     // 5 founders -> +5 -> +10: 20 samples, founders keep original ids

@@ -12,7 +12,7 @@ import graft.sources.Vcf
 class PlanAuditSpec extends SparkSpec {
 
   private def fixtureMt(): MatrixTable = Vcf.read(spark,
-    "/root/repo/src/test/resources/oracle_sample.vcf")
+    Fixtures.path("oracle_sample.vcf"))
 
   /** executedPlan treeString with InMemoryRelation cached subtrees
     * removed. Under `spark.graft.materialize=persistDisk` the fan-out
@@ -835,7 +835,7 @@ class PlanAuditSpec extends SparkSpec {
       "both QC consumers; the write-side row pass is one narrow stage") {
     eachMaterializeMode {
       val sp0 = methods.SplitMulti(Vcf.read(spark,
-        "/root/repo/src/test/resources/oracle_multi.vcf"))
+        Fixtures.path("oracle_multi.vcf")))
       val sp = sp0.copy(rows = pipeline.Materialize.fanout(sp0.rows))
       val ann = methods.Qc.annotateVariantQc(sp)
         .annotateColsTable(methods.Qc.sampleQc(sp), Seq("call_rate"))

@@ -106,7 +106,7 @@ class SourcesSpec extends SparkSpec {
 
   test("exportEntriesByCol writes one partition dir per sample") {
     val mt = Vcf.read(spark,
-      "/root/repo/src/test/resources/oracle_sample.vcf")
+      Fixtures.path("oracle_sample.vcf"))
     val dir = java.nio.file.Files.createTempDirectory("graft_eebc")
     TextTable.exportEntriesByCol(mt, s"$dir/out")
     val parts = new java.io.File(s"$dir/out").listFiles()
@@ -127,7 +127,7 @@ class SourcesSpec extends SparkSpec {
   test("PLINK read decodes 2-bit genotypes against the golden dump") {
     import graft.functions.Calls
     val mt = sources.Plink.read(spark,
-      "/root/repo/src/test/resources/oracle_plink")
+      Fixtures.path("oracle_plink"))
     assert(mt.nCols === 11)
     assert(mt.rows.count() === 25)
     assert(mt.colValues.head.getString(0) === "IND0")
@@ -138,7 +138,7 @@ class SourcesSpec extends SparkSpec {
         (if (r.isNullAt(2)) null else (r.getInt(2), r.getInt(3)))).toMap
     val expected = spark.read.option("sep", "\t").option("header", "true")
       .option("nullValue", "\\N")
-      .csv("/root/repo/src/test/resources/oracle_plink_expected.tsv")
+      .csv(Fixtures.path("oracle_plink_expected.tsv"))
       .collect().map(r => (r.getString(1).toInt, r.getString(4)) ->
         (if (r.isNullAt(5)) null
          else (r.getString(5).toInt, r.getString(6).toInt))).toMap
@@ -149,8 +149,8 @@ class SourcesSpec extends SparkSpec {
   test("BGEN read matches golden dump incl missing samples") {
     import graft.functions.Calls
     val mt = sources.Bgen.read(spark,
-      "/root/repo/src/test/resources/oracle_bgen.bgen",
-      Some("/root/repo/src/test/resources/oracle_bgen.sample"))
+      Fixtures.path("oracle_bgen.bgen"),
+      Some(Fixtures.path("oracle_bgen.sample")))
     assert(mt.nCols === 7)
     assert(mt.rows.count() === 18)
     val got = mt.entriesTable.df
@@ -159,15 +159,15 @@ class SourcesSpec extends SparkSpec {
         (if (r.isNullAt(2)) -1 else r.getInt(2))).toMap
     val expected = spark.read.option("sep", "\t").option("header", "true")
       .option("nullValue", "\\N")
-      .csv("/root/repo/src/test/resources/oracle_bgen_expected.tsv")
+      .csv(Fixtures.path("oracle_bgen_expected.tsv"))
       .collect().map(r => (r.getString(1).toInt, r.getString(4)) ->
         (if (r.isNullAt(5)) -1 else r.getString(5).toInt)).toMap
     assert(got === expected)
   }
 
   test("reference .idx2 sidecar plans the BGEN read, both layouts") {
-    import java.nio.file.{Files, Path, StandardCopyOption}
-    val res = Path.of("/root/repo/src/test/resources")
+    import java.nio.file.{Files, StandardCopyOption}
+    val res = Fixtures.root
     val bgen = res.resolve("oracle_bgen.bgen")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -223,7 +223,7 @@ class SourcesSpec extends SparkSpec {
     assert(bed.df.collect().map(r => (r.getString(0), r.getInt(1),
       r.getInt(2))).toSet === Set(("chr1", 100, 200), ("chr2", 5, 50)))
     val fam = sources.Annotations.importFam(spark,
-      "/root/repo/src/test/resources/oracle_plink.fam")
+      Fixtures.path("oracle_plink.fam"))
     assert(fam.df.count() === 11)
     assert(fam.df.filter(col("s") === "IND0").head()
       .getAs[String]("fam_id") === "FAM0")
@@ -232,7 +232,7 @@ class SourcesSpec extends SparkSpec {
   test("PLINK export/import roundtrip preserves genotypes") {
     import graft.functions.Calls
     val mt = sources.Plink.read(spark,
-      "/root/repo/src/test/resources/oracle_plink")
+      Fixtures.path("oracle_plink"))
     val dir = java.nio.file.Files.createTempDirectory("graft_plink")
     sources.Plink.write(mt, s"$dir/out")
     val back = sources.Plink.read(spark, s"$dir/out")
@@ -274,8 +274,8 @@ class SourcesSpec extends SparkSpec {
 
   test("GEN export/import roundtrip preserves probabilities") {
     val mt = sources.Gen.read(spark,
-      "/root/repo/src/test/resources/oracle_gen.gen",
-      "/root/repo/src/test/resources/oracle_gen.sample")
+      Fixtures.path("oracle_gen.gen"),
+      Fixtures.path("oracle_gen.sample"))
     val dir = java.nio.file.Files.createTempDirectory("graft_gen")
     sources.Gen.write(mt, s"$dir/gen", s"$dir/out.sample")
     val back = sources.Gen.read(spark, s"$dir/gen", s"$dir/out.sample")
@@ -312,7 +312,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("gtf geneIntervals filters by symbol and version-stripped ids") {
-    val path = "/root/repo/src/test/resources/oracle_annotations.gtf"
+    val path = Fixtures.path("oracle_annotations.gtf")
     val rg = Some(graft.functions.ReferenceGenome.GRCh38)
     assert(graft.sources.Gtf.geneIntervals(spark, path,
       geneSymbols = Seq("BETA"), referenceGenome = rg) ===

@@ -3,10 +3,12 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.Events
 import graft.streaming.Events.{Event, Session}
@@ -47,6 +49,44 @@ class StreamingSpec extends SparkSpec {
     // executor's classloader, or the codegen cache misses every class
     assertWarmReplay(Events.runHourlyTypeAgg(spark,
       s"$sfDir/events.parquet"))
+  }
+
+  test("a replay takes the batch schema from a footer, without a job") {
+    // job -> its streaming query id; a replay's own jobs have none
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("sql.streaming.queryId"))))
+    }
+    def jobsOf(body: => Any): Seq[Option[String]] = {
+      GraftBridge.drainListenerBus(spark)
+      jobs.clear()
+      body
+      GraftBridge.drainListenerBus(spark)
+      jobs.asScala.toSeq
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (t <- Seq("events", "documents")) {
+        val single = s"$sfDir/$t.parquet"
+        val tmp = Files.createTempDirectory(s"graft_split_$t")
+        val split = tmp.resolve("spark").toString
+        spark.read.parquet(single).repartition(16).write.parquet(split)
+        val copies = Files.createDirectory(tmp.resolve("copies"))
+        (0 until 16).foreach(i => Files.createSymbolicLink(
+          copies.resolve(f"part-$i%02d.parquet"), Paths.get(single)))
+        for (p <- Seq(single, split, copies.toString)) {
+          var schema: StructType = null
+          assert(jobsOf { schema = Events.footerSchema(spark, p) } == Nil, p)
+          assert(schema == spark.read.parquet(p).schema, p)
+        }
+      }
+      val replay = jobsOf(Events.runHourlyTypeAgg(spark,
+        s"$sfDir/events.parquet"))
+      assert(replay.nonEmpty)
+      assert(replay.forall(_.isDefined), "a replay job outside its query")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a repeated sessionize replay compiles no generated code again") {

@@ -7,7 +7,7 @@ import graft.sources.Vcf
 class VepSpec extends SparkSpec {
 
   private def fixtureMt(): MatrixTable = Vcf.read(spark,
-    "/root/repo/src/test/resources/oracle_sample.vcf")
+    Fixtures.path("oracle_sample.vcf"))
 
   private def variantTable(): Table = {
     val mt = fixtureMt()

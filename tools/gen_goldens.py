@@ -1,11 +1,16 @@
 #!/usr/bin/env python3
-"""Regenerate the literal golden-oracle VALUES embedded in SparkEntry
-(`__LMM_GOLDEN__`-shaped constants) from a Verify dump.
+"""Regenerate the literal golden-oracle VALUES embedded in the gate
+families under src/main/scala/graft/gates (`__LMM_GOLDEN__`-shaped
+constants) from a Verify dump.
 
 Usage: run Verify first, then
     python3 tools/gen_goldens.py /tmp/verify_out
-and paste the printed SQL fragments into SparkEntry.scala
-(LmmKinshipGolden / SkatPGolden). Values print via Python repr — the
+and paste each printed SQL fragment into the constant it names, in the
+family file that defines it: LmmKinshipGolden / SkatPGolden in
+AssocGates.scala, BnGoldenRows in GeneticsGates.scala, the BPE,
+quality-classifier and compress-ratio goldens in PipeTextGates.scala
+(`grep -rn <Name> src/main/scala/graft/gates` finds any of them).
+Values print via Python repr — the
 shortest round-trip form — so DuckDB parses back the bit-identical
 double and the repr-strict hash gate matches.
 

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains (Bench / Verify / ProfileQuery /
-# ExplainDump / GenScale / GenZipf / PpjoinAnatomy): same JVM options as
-# build.sbt's forked run, without the ~90 s sbt startup per invocation.
+# ExplainDump / GenScale / GenZipf): same JVM options as build.sbt's
+# forked run, without the ~90 s sbt startup per invocation. It runs from
+# the checkout root, where the gates resolve their fixtures.
 # Session confs live in graft.GraftSession, not here. Usage:
 #   tools/run_graft.sh graft.Bench [args...]
 # Env contract identical to the sbt path (SPARK_GRAFT_*; SPARK_DRIVER_MEM

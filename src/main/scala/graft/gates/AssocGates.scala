@@ -1,7 +1,10 @@
 package graft
 package gates
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.Calls
 import Support._
 
 /** Association, relatedness and LD gates: linear/logistic/Poisson/mixed-
@@ -58,6 +61,200 @@ object AssocGates {
   private val SkatPGolden: String =
     "('chr1', 0.463908), ('chr2', 0.381543)"
 
+  /** OLS oracle CTE `imp`: each fixture genotype's mean-imputed dosage
+    * `x` beside the phenotype `$y`, the sample's number. */
+  private def olsImp(y: String): String =
+    s"""imp AS (
+      |  SELECT contig, position, ref, alts,
+      |    coalesce(CAST(a1 + a2 AS DOUBLE),
+      |      avg(CAST(a1 + a2 AS DOUBLE))
+      |        OVER (PARTITION BY contig, position)) AS x,
+      |    CAST(substr(s, 2, 10) AS DOUBLE) AS $y
+      |  FROM q)""".stripMargin
+
+  /** OLS oracle CTEs `g`, the sums of `from`'s (x, y) per variant (and per
+    * `y_idx` when `byYIdx`), and `f`, which adds the closed-form slope
+    * `beta` and intercept `alpha`. */
+  private def olsFit(from: String, byYIdx: Boolean): String = {
+    val (key, group) = if (byYIdx) (", y_idx", ", 5") else ("", "")
+    s"""g AS (
+      |  SELECT contig, position, ref, alts$key,
+      |    count(*) AS n, sum(x) AS sx, sum(y) AS sy,
+      |    sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
+      |  FROM $from GROUP BY 1, 2, 3, 4$group),
+      |f AS (
+      |  SELECT *,
+      |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS beta,
+      |    (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
+      |      AS alpha
+      |  FROM g)""".stripMargin
+  }
+
+  /** OLS oracle columns over `f`: `beta`, its standard error and t. */
+  private def olsTStats: String =
+    """round(beta, 6) AS beta,
+      |  round(sqrt(greatest((syy - beta * sxy - alpha * sy) / (n - 2), 0)
+      |    * n / (n * sxx - sx * sx)), 6) AS standard_error,
+      |  round(beta / sqrt(greatest((syy - beta * sxy - alpha * sy)
+      |      / (n - 2), 0) * n / (n * sxx - sx * sx)), 4) AS t_stat""".stripMargin
+
+  /** Binary carrier indicator of a call: 1 when it has a non-ref allele. */
+  private def carrier(gt: Column): Column =
+    (Calls.nNonRefAlleles(gt) > 0).cast("double")
+
+  /** The fixture's called entries joined to `pheno`, with the integer
+    * carrier indicator `x`. */
+  private def carrierEntries(mt: MatrixTable, pheno: DataFrame): DataFrame =
+    mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
+      .filter(col("GT").isNotNull)
+      .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
+
+  /** A logistic gate's fit of the binary phenotype y (odd sample number)
+    * on `carrier` with `test`, joined with each variant's 2x2 cell counts
+    * `n11`, `n10`, `n01`, `n00` over (x, y), which the oracles' closed
+    * forms read. */
+  private def logisticCells(s: SparkSession, test: String): DataFrame = {
+    val mt = sources.Vcf.read(s, vcfFixture)
+    val pheno = mt.colsTable.df.withColumn("y",
+      (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
+    val fit = methods.Regression.logisticRegressionRows(mt, pheno, "y",
+      xOf = carrier, test = test).df
+    val cells = carrierEntries(mt, pheno)
+      .groupBy(col("contig"), col("position"), col("ref"))
+      .agg(
+        sum(col("x") * col("y")).cast("long").as("n11"),
+        sum(col("x") * (lit(1.0) - col("y"))).cast("long").as("n10"),
+        sum((lit(1) - col("x")) * col("y")).cast("long").as("n01"),
+        sum((lit(1) - col("x")) * (lit(1.0) - col("y"))).cast("long")
+          .as("n00"))
+    fit.join(cells, Seq("contig", "position", "ref"))
+  }
+
+  private def allCellsPositive: Column =
+    col("n11") > 0 && col("n10") > 0 && col("n01") > 0 && col("n00") > 0
+
+  /** The logistic oracles' CTEs: `d` pairs each called genotype's carrier
+    * indicator x with the phenotype y, `c` counts the 2x2 cells per
+    * variant (and their total `n` when `withN`). */
+  private def logisticCellCtes(withN: Boolean): String = {
+    val n = if (withN) ",\n    count(*) AS n" else ""
+    s"""WITH $sampleVcfCte,
+      |d AS (
+      |  SELECT contig, position, ref,
+      |    CASE WHEN a1 + a2 > 0 THEN 1 ELSE 0 END AS x,
+      |    CAST(substr(s, 2, 10) AS INTEGER) % 2 AS y
+      |  FROM q WHERE a1 IS NOT NULL),
+      |c AS (
+      |  SELECT contig, position, ref,
+      |    sum(x * y) AS n11, sum(x * (1 - y)) AS n10,
+      |    sum((1 - x) * y) AS n01, sum((1 - x) * (1 - y)) AS n00$n
+      |  FROM d GROUP BY 1, 2, 3)""".stripMargin
+  }
+
+  /** PC-Relate oracle CTEs `d`, `st` and `c0`: each genotype's dosage,
+    * its variant's mean dosage `meang`, and the mean-imputed dosage `gv`
+    * by sample index (`mu` adds the columns after `gv`). */
+  private def pcRelateGenotypes(mu: String): String =
+    s"""WITH $sampleVcfCte,
+      |d AS (
+      |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
+      |  FROM q),
+      |st AS (
+      |  SELECT contig, position, avg(dose) AS meang
+      |  FROM d GROUP BY 1, 2),
+      |c0 AS (
+      |  SELECT d.contig, d.position,
+      |    CAST(substr(d.s, 2, 10) AS INTEGER) - 1 AS idx,
+      |    coalesce(dose, meang) AS gv$mu
+      |  FROM d JOIN st USING (contig, position))""".stripMargin
+
+  /** PC-Relate oracle tail over `c1` (imputed dosage `gv`, fitted `mu`,
+    * `bad` flag per sample and variant): the reference's gramian ratios
+    * phi, k2 and k0, as the gates' kin and ibd columns. */
+  private def pcRelateEstimates: String =
+    """f AS (
+      |  SELECT contig, position, idx,
+      |    CASE WHEN bad THEN 0.0 ELSE gv / 2.0 - mu END AS a,
+      |    CASE WHEN bad THEN 0.0 ELSE sqrt(mu * (1.0 - mu)) END AS sd,
+      |    CASE WHEN bad OR gv <> 2.0 THEN 0.0 ELSE 1.0 END AS ha,
+      |    CASE WHEN bad OR gv <> 0.0 THEN 0.0 ELSE 1.0 END AS hr,
+      |    CASE WHEN bad THEN 0.0 ELSE mu * mu END AS mu2,
+      |    CASE WHEN bad THEN 0.0
+      |      ELSE (1.0 - mu) * (1.0 - mu) END AS om2,
+      |    CASE WHEN bad THEN 0.0
+      |      ELSE CASE WHEN gv = 0.0 THEN mu WHEN gv = 1.0 THEN 0.0
+      |        ELSE 1.0 - mu END END AS gd,
+      |    CASE WHEN bad THEN 0.0 ELSE mu * (1.0 - mu) END AS v
+      |  FROM c1),
+      |selfphi AS (
+      |  SELECT idx, 2.0 * (sum(a * a) / sum(sd * sd)) AS c
+      |  FROM f GROUP BY idx),
+      |pairs AS (
+      |  SELECT x.idx AS i, y.idx AS j,
+      |    sum(x.a * y.a) AS saa, sum(x.sd * y.sd) AS sss,
+      |    sum(x.gd * y.gd) AS sgg, sum(x.gd * y.v) AS sgv,
+      |    sum(x.v * y.gd) AS svg, sum(x.v * y.v) AS svv,
+      |    sum(x.ha * y.hr) + sum(x.hr * y.ha) AS ibs0,
+      |    sum(x.mu2 * y.om2) + sum(x.om2 * y.mu2) AS denom
+      |  FROM f x JOIN f y ON x.contig = y.contig
+      |    AND x.position = y.position AND x.idx < y.idx
+      |  GROUP BY 1, 2),
+      |k AS (
+      |  SELECT i, j, saa / sss AS phi,
+      |    (sgg - cj.c * sgv - ci.c * svg + ci.c * cj.c * svv) / svv
+      |      AS k2,
+      |    ibs0, denom
+      |  FROM pairs
+      |  JOIN selfphi ci ON ci.idx = pairs.i
+      |  JOIN selfphi cj ON cj.idx = pairs.j),
+      |kk AS (
+      |  SELECT i, j, phi, k2,
+      |    CASE WHEN phi <= pow(2.0, -2.5) THEN 1.0 - 4.0 * phi + k2
+      |         ELSE ibs0 / denom END AS k0
+      |  FROM k)
+      |SELECT i, j, round(phi, 6) + 0.0 AS kin,
+      |  round(k0, 6) + 0.0 AS ibd0,
+      |  round(1.0 - (k2 + k0), 6) + 0.0 AS ibd1,
+      |  round(k2, 6) + 0.0 AS ibd2
+      |FROM kk""".stripMargin
+
+  /** linear SKAT of the sample-number phenotype, one group per contig,
+    * each variant weighted 1 / (position % 7 + 1). */
+  private def skatByContig(s: SparkSession): DataFrame = {
+    val mt = sources.Vcf.read(s, vcfFixture)
+    val pheno = mt.colsTable.df
+      .withColumn("y", substring(col("s"), 2, 10).cast("double"))
+    methods.Skat.skat(mt, pheno, "y", Nil,
+      keyExpr = col("contig"),
+      weightExpr = lit(1.0) /
+        (pmod(col("position"), lit(7)) + 1).cast("double"))
+  }
+
+  /** SKAT oracle CTEs: the intercept-only null's residuals `r` and
+    * variance `ss`, the mean-imputed dosages `mi`, and `qv`, each
+    * variant's weighted squared score. */
+  private def skatQvCtes: String =
+    s"""WITH $sampleVcfCte,
+      |yy AS (
+      |  SELECT DISTINCT s, CAST(substr(s, 2, 10) AS DOUBLE) AS yv
+      |  FROM q),
+      |st AS (SELECT avg(yv) AS ybar FROM yy),
+      |r AS (SELECT s, yv - ybar AS res FROM yy, st),
+      |ss AS (
+      |  SELECT sum(res * res) / (count(*) - 1) AS sigsq FROM r),
+      |mi AS (
+      |  SELECT contig, position, ref, alts, s,
+      |    coalesce(CAST(a1 + a2 AS DOUBLE),
+      |      avg(CAST(a1 + a2 AS DOUBLE))
+      |        OVER (PARTITION BY contig, position, ref, alts)) AS x
+      |  FROM q),
+      |qv AS (
+      |  SELECT contig, position, ref, alts,
+      |    pow(sum(r.res * mi.x), 2)
+      |      * (CAST(1.0 AS DOUBLE) / (position % 7 + 1)) AS qc
+      |  FROM mi JOIN r USING (s)
+      |  GROUP BY contig, position, ref, alts)""".stripMargin
+
   def all: Seq[Gate] = Seq(
     // --- lambda_gc (statgen.py:3097): genomic-control inflation on a
     // symmetric uniform p grid — median p = 0.5 makes the implied chi²
@@ -88,32 +285,11 @@ object AssocGates {
           round(col("standard_error"), 6).as("standard_error"),
           round(col("t_stat"), 4).as("t_stat"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |imp AS (
-        |  SELECT contig, position, ref, alts,
-        |    coalesce(CAST(a1 + a2 AS DOUBLE),
-        |      avg(CAST(a1 + a2 AS DOUBLE))
-        |        OVER (PARTITION BY contig, position)) AS x,
-        |    CAST(substr(s, 2, 10) AS DOUBLE) AS y
-        |  FROM q),
-        |g AS (
-        |  SELECT contig, position, ref, alts,
-        |    count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-        |  FROM imp GROUP BY 1, 2, 3, 4),
-        |f AS (
-        |  SELECT *,
-        |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS beta,
-        |    (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
-        |      AS alpha
-        |  FROM g)
+      s"""WITH $sampleVcfCte,
+        |${olsImp("y")},
+        |${olsFit("imp", byYIdx = false)}
         |SELECT contig, position, ref, alts, n,
-        |  round(beta, 6) AS beta,
-        |  round(sqrt(greatest((syy - beta * sxy - alpha * sy) / (n - 2), 0)
-        |    * n / (n * sxx - sx * sx)), 6) AS standard_error,
-        |  round(beta / sqrt(greatest((syy - beta * sxy - alpha * sy)
-        |      / (n - 2), 0) * n / (n * sxx - sx * sx)), 4) AS t_stat
+        |  $olsTStats
         |FROM f""".stripMargin
     }),
 
@@ -138,38 +314,17 @@ object AssocGates {
     }, {
       // each y fits independently with the shared x — the same simple-
       // regression closed form per (variant, y index)
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |imp AS (
-        |  SELECT contig, position, ref, alts,
-        |    coalesce(CAST(a1 + a2 AS DOUBLE),
-        |      avg(CAST(a1 + a2 AS DOUBLE))
-        |        OVER (PARTITION BY contig, position)) AS x,
-        |    CAST(substr(s, 2, 10) AS DOUBLE) AS y1
-        |  FROM q),
+      s"""WITH $sampleVcfCte,
+        |${olsImp("y1")},
         |ys AS (
         |  SELECT contig, position, ref, alts, x,
         |    CAST(0 AS INTEGER) AS y_idx, y1 AS y FROM imp
         |  UNION ALL
         |  SELECT contig, position, ref, alts, x,
         |    CAST(1 AS INTEGER), y1 * y1 FROM imp),
-        |g AS (
-        |  SELECT contig, position, ref, alts, y_idx,
-        |    count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-        |  FROM ys GROUP BY 1, 2, 3, 4, 5),
-        |f AS (
-        |  SELECT *,
-        |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS beta,
-        |    (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
-        |      AS alpha
-        |  FROM g)
+        |${olsFit("ys", byYIdx = true)}
         |SELECT contig, position, ref, alts, n, y_idx,
-        |  round(beta, 6) AS beta,
-        |  round(sqrt(greatest((syy - beta * sxy - alpha * sy) / (n - 2), 0)
-        |    * n / (n * sxx - sx * sx)), 6) AS standard_error,
-        |  round(beta / sqrt(greatest((syy - beta * sxy - alpha * sy)
-        |      / (n - 2), 0) * n / (n * sxx - sx * sx)), 4) AS t_stat
+        |  $olsTStats
         |FROM f""".stripMargin
     }),
 
@@ -190,26 +345,9 @@ object AssocGates {
     }, {
       // identity-kinship LMM == OLS: same closed form as linreg_rows with
       // chi_sq = t^2
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |imp AS (
-        |  SELECT contig, position, ref, alts,
-        |    coalesce(CAST(a1 + a2 AS DOUBLE),
-        |      avg(CAST(a1 + a2 AS DOUBLE))
-        |        OVER (PARTITION BY contig, position)) AS x,
-        |    CAST(substr(s, 2, 10) AS DOUBLE) AS y
-        |  FROM q),
-        |g AS (
-        |  SELECT contig, position, ref, alts,
-        |    count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |    sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-        |  FROM imp GROUP BY 1, 2, 3, 4),
-        |f AS (
-        |  SELECT *,
-        |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS beta,
-        |    (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
-        |      AS alpha
-        |  FROM g)
+      s"""WITH $sampleVcfCte,
+        |${olsImp("y")},
+        |${olsFit("imp", byYIdx = false)}
         |SELECT contig, position, ref, alts,
         |  round(beta, 6) AS beta,
         |  round(beta * beta / (greatest((syy - beta * sxy - alpha * sy)
@@ -220,41 +358,13 @@ object AssocGates {
     // --- logistic_regression_rows (statgen.py:731, Wald) with binary x:
     // the fitted slope must equal the closed-form log odds ratio ------------
     Gate("logistic_rows", (s, _) => {
-      import graft.functions.Calls
-      val mt = sources.Vcf.read(s, vcfFixture)
-      val pheno = mt.colsTable.df.withColumn("y",
-        (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
-      val fit = methods.Regression.logisticRegressionRows(mt, pheno, "y",
-        xOf = gt => (Calls.nNonRefAlleles(gt) > 0).cast("double")).df
-      val e = mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
-        .filter(col("GT").isNotNull)
-        .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
-      val cells = e.groupBy(col("contig"), col("position"), col("ref"))
-        .agg(
-          sum(col("x") * col("y")).cast("long").as("n11"),
-          sum(col("x") * (lit(1.0) - col("y"))).cast("long").as("n10"),
-          sum((lit(1) - col("x")) * col("y")).cast("long").as("n01"),
-          sum((lit(1) - col("x")) * (lit(1.0) - col("y"))).cast("long")
-            .as("n00"))
-      fit.join(cells, Seq("contig", "position", "ref"))
-        .filter(col("n11") > 0 && col("n10") > 0 && col("n01") > 0 &&
-          col("n00") > 0)
+      logisticCells(s, "wald")
+        .filter(allCellsPositive)
         .select(col("contig"), col("position"), col("ref"), col("n"),
           round(col("beta"), 6).as("beta"),
           round(col("standard_error"), 6).as("standard_error"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, ref,
-        |    CASE WHEN a1 + a2 > 0 THEN 1 ELSE 0 END AS x,
-        |    CAST(substr(s, 2, 10) AS INTEGER) % 2 AS y
-        |  FROM q WHERE a1 IS NOT NULL),
-        |c AS (
-        |  SELECT contig, position, ref,
-        |    sum(x * y) AS n11, sum(x * (1 - y)) AS n10,
-        |    sum((1 - x) * y) AS n01, sum((1 - x) * (1 - y)) AS n00
-        |  FROM d GROUP BY 1, 2, 3)
+      s"""${logisticCellCtes(withN = false)}
         |SELECT contig, position, ref,
         |  CAST(n11 + n10 + n01 + n00 AS BIGINT) AS n,
         |  round(ln(CAST(n11 * n00 AS DOUBLE) / (n10 * n01)), 6) AS beta,
@@ -280,8 +390,7 @@ object AssocGates {
           round(element_at(col("scores"), 1), 6).as("pc1"),
           round(element_at(col("scores"), 2), 6).as("pc2"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |af AS (SELECT contig, position,
         |    sum(a1 + a2) * 1.0 / (2 * count(a1)) AS af
         |  FROM q WHERE a1 IS NOT NULL GROUP BY 1, 2),
@@ -304,8 +413,7 @@ object AssocGates {
           col("n_het_het"), col("n_opp_hom"),
           round(col("phi"), 6).as("phi"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |g AS (
         |  SELECT contig, position, s,
         |    CASE WHEN a1 = 0 AND a2 = 0 THEN 2
@@ -364,8 +472,7 @@ object AssocGates {
         .select(col("contig"), col("pos_i"), col("pos_j"),
           (round(col("r"), 6) + lit(0.0)).as("r"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |d AS (
         |  SELECT contig, position, ref, alts, s,
         |    CAST(a1 + a2 AS DOUBLE) AS dose
@@ -408,70 +515,14 @@ object AssocGates {
       // pc_relate with an intercept-only model: mu = mean(dose)/2 per
       // variant; bad entries (non-integral imputed dose or out-of-range mu)
       // contribute zero; phi/k2/k0 are the reference's gramian ratios
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
-        |  FROM q),
-        |st AS (
-        |  SELECT contig, position, avg(dose) AS meang
-        |  FROM d GROUP BY 1, 2),
-        |c0 AS (
-        |  SELECT d.contig, d.position,
-        |    CAST(substr(d.s, 2, 10) AS INTEGER) - 1 AS idx,
-        |    coalesce(dose, meang) AS gv, meang / 2.0 AS mu
-        |  FROM d JOIN st USING (contig, position)),
+      s"""${pcRelateGenotypes(", meang / 2.0 AS mu")},
         |c1 AS (
         |  SELECT *,
         |    gv IS NULL OR gv NOT IN (0.0, 1.0, 2.0) OR mu IS NULL
         |      OR mu <= 0.05 OR mu >= 0.95 OR mu <= 0.0 OR mu >= 1.0
         |      AS bad
         |  FROM c0),
-        |f AS (
-        |  SELECT contig, position, idx,
-        |    CASE WHEN bad THEN 0.0 ELSE gv / 2.0 - mu END AS a,
-        |    CASE WHEN bad THEN 0.0 ELSE sqrt(mu * (1.0 - mu)) END AS sd,
-        |    CASE WHEN bad OR gv <> 2.0 THEN 0.0 ELSE 1.0 END AS ha,
-        |    CASE WHEN bad OR gv <> 0.0 THEN 0.0 ELSE 1.0 END AS hr,
-        |    CASE WHEN bad THEN 0.0 ELSE mu * mu END AS mu2,
-        |    CASE WHEN bad THEN 0.0
-        |      ELSE (1.0 - mu) * (1.0 - mu) END AS om2,
-        |    CASE WHEN bad THEN 0.0
-        |      ELSE CASE WHEN gv = 0.0 THEN mu WHEN gv = 1.0 THEN 0.0
-        |        ELSE 1.0 - mu END END AS gd,
-        |    CASE WHEN bad THEN 0.0 ELSE mu * (1.0 - mu) END AS v
-        |  FROM c1),
-        |selfphi AS (
-        |  SELECT idx, 2.0 * (sum(a * a) / sum(sd * sd)) AS c
-        |  FROM f GROUP BY idx),
-        |pairs AS (
-        |  SELECT x.idx AS i, y.idx AS j,
-        |    sum(x.a * y.a) AS saa, sum(x.sd * y.sd) AS sss,
-        |    sum(x.gd * y.gd) AS sgg, sum(x.gd * y.v) AS sgv,
-        |    sum(x.v * y.gd) AS svg, sum(x.v * y.v) AS svv,
-        |    sum(x.ha * y.hr) + sum(x.hr * y.ha) AS ibs0,
-        |    sum(x.mu2 * y.om2) + sum(x.om2 * y.mu2) AS denom
-        |  FROM f x JOIN f y ON x.contig = y.contig
-        |    AND x.position = y.position AND x.idx < y.idx
-        |  GROUP BY 1, 2),
-        |k AS (
-        |  SELECT i, j, saa / sss AS phi,
-        |    (sgg - cj.c * sgv - ci.c * svg + ci.c * cj.c * svv) / svv
-        |      AS k2,
-        |    ibs0, denom
-        |  FROM pairs
-        |  JOIN selfphi ci ON ci.idx = pairs.i
-        |  JOIN selfphi cj ON cj.idx = pairs.j),
-        |kk AS (
-        |  SELECT i, j, phi, k2,
-        |    CASE WHEN phi <= pow(2.0, -2.5) THEN 1.0 - 4.0 * phi + k2
-        |         ELSE ibs0 / denom END AS k0
-        |  FROM k)
-        |SELECT i, j, round(phi, 6) + 0.0 AS kin,
-        |  round(k0, 6) + 0.0 AS ibd0,
-        |  round(1.0 - (k2 + k0), 6) + 0.0 AS ibd1,
-        |  round(k2, 6) + 0.0 AS ibd2
-        |FROM kk""".stripMargin
+        |$pcRelateEstimates""".stripMargin
     }),
 
     // --- hl.agg.info_score (aggregators.py:1568, IMPUTE info measure)
@@ -544,19 +595,7 @@ object AssocGates {
       val h = x * breeze.linalg.inv(x.t * x) * x.t
       val hatVals = (for { si <- 0 until 5; ti <- 0 until 5 }
         yield s"($si, $ti, ${h(si, ti)})").mkString(", ")
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
-        |  FROM q),
-        |st AS (
-        |  SELECT contig, position, avg(dose) AS meang
-        |  FROM d GROUP BY 1, 2),
-        |c0 AS (
-        |  SELECT d.contig, d.position,
-        |    CAST(substr(d.s, 2, 10) AS INTEGER) - 1 AS idx,
-        |    coalesce(dose, meang) AS gv
-        |  FROM d JOIN st USING (contig, position)),
+      s"""${pcRelateGenotypes("")},
         |hm AS (SELECT * FROM (VALUES $hatVals) AS h(hs, ht, w)),
         |mus AS (
         |  SELECT g.contig, g.position, hm.hs AS idx,
@@ -570,51 +609,7 @@ object AssocGates {
         |      AS bad
         |  FROM c0 JOIN mus ON mus.contig = c0.contig
         |    AND mus.position = c0.position AND mus.idx = c0.idx),
-        |f AS (
-        |  SELECT contig, position, idx,
-        |    CASE WHEN bad THEN 0.0 ELSE gv / 2.0 - mu END AS a,
-        |    CASE WHEN bad THEN 0.0 ELSE sqrt(mu * (1.0 - mu)) END AS sd,
-        |    CASE WHEN bad OR gv <> 2.0 THEN 0.0 ELSE 1.0 END AS ha,
-        |    CASE WHEN bad OR gv <> 0.0 THEN 0.0 ELSE 1.0 END AS hr,
-        |    CASE WHEN bad THEN 0.0 ELSE mu * mu END AS mu2,
-        |    CASE WHEN bad THEN 0.0
-        |      ELSE (1.0 - mu) * (1.0 - mu) END AS om2,
-        |    CASE WHEN bad THEN 0.0
-        |      ELSE CASE WHEN gv = 0.0 THEN mu WHEN gv = 1.0 THEN 0.0
-        |        ELSE 1.0 - mu END END AS gd,
-        |    CASE WHEN bad THEN 0.0 ELSE mu * (1.0 - mu) END AS v
-        |  FROM c1),
-        |selfphi AS (
-        |  SELECT idx, 2.0 * (sum(a * a) / sum(sd * sd)) AS c
-        |  FROM f GROUP BY idx),
-        |pairs AS (
-        |  SELECT x.idx AS i, y.idx AS j,
-        |    sum(x.a * y.a) AS saa, sum(x.sd * y.sd) AS sss,
-        |    sum(x.gd * y.gd) AS sgg, sum(x.gd * y.v) AS sgv,
-        |    sum(x.v * y.gd) AS svg, sum(x.v * y.v) AS svv,
-        |    sum(x.ha * y.hr) + sum(x.hr * y.ha) AS ibs0,
-        |    sum(x.mu2 * y.om2) + sum(x.om2 * y.mu2) AS denom
-        |  FROM f x JOIN f y ON x.contig = y.contig
-        |    AND x.position = y.position AND x.idx < y.idx
-        |  GROUP BY 1, 2),
-        |k AS (
-        |  SELECT i, j, saa / sss AS phi,
-        |    (sgg - cj.c * sgv - ci.c * svg + ci.c * cj.c * svv) / svv
-        |      AS k2,
-        |    ibs0, denom
-        |  FROM pairs
-        |  JOIN selfphi ci ON ci.idx = pairs.i
-        |  JOIN selfphi cj ON cj.idx = pairs.j),
-        |kk AS (
-        |  SELECT i, j, phi, k2,
-        |    CASE WHEN phi <= pow(2.0, -2.5) THEN 1.0 - 4.0 * phi + k2
-        |         ELSE ibs0 / denom END AS k0
-        |  FROM k)
-        |SELECT i, j, round(phi, 6) + 0.0 AS kin,
-        |  round(k0, 6) + 0.0 AS ibd0,
-        |  round(1.0 - (k2 + k0), 6) + 0.0 AS ibd1,
-        |  round(k2, 6) + 0.0 AS ibd2
-        |FROM kk""".stripMargin
+        |$pcRelateEstimates""".stripMargin
     }),
 
     // --- linear_mixed_regression_rows with NON-TRIVIAL kinship (the
@@ -646,13 +641,7 @@ object AssocGates {
     // literal golden; provenance: SkatSpec proves imhofTail exact against
     // closed-form chi-square mixture tails) --------------------------------
     Gate("geno_skat_p", (s, _) => {
-      val mt = sources.Vcf.read(s, vcfFixture)
-      val pheno = mt.colsTable.df
-        .withColumn("y", substring(col("s"), 2, 10).cast("double"))
-      methods.Skat.skat(mt, pheno, "y", Nil,
-        keyExpr = col("contig"),
-        weightExpr = lit(1.0) /
-          (pmod(col("position"), lit(7)) + 1).cast("double"))
+      skatByContig(s)
         .select(col("id"), col("size"),
           round(col("q_stat"), 6).as("q_stat"),
           round(col("p_value"), 6).as("p_value"))
@@ -660,27 +649,7 @@ object AssocGates {
       // q_stat from the exact SQL quadratic form; p_value joined as a
       // literal golden per group (imhofTail's exactness is spec-proven on
       // closed-form mixtures, SkatSpec)
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |yy AS (
-        |  SELECT DISTINCT s, CAST(substr(s, 2, 10) AS DOUBLE) AS yv
-        |  FROM q),
-        |st AS (SELECT avg(yv) AS ybar FROM yy),
-        |r AS (SELECT s, yv - ybar AS res FROM yy, st),
-        |ss AS (
-        |  SELECT sum(res * res) / (count(*) - 1) AS sigsq FROM r),
-        |mi AS (
-        |  SELECT contig, position, ref, alts, s,
-        |    coalesce(CAST(a1 + a2 AS DOUBLE),
-        |      avg(CAST(a1 + a2 AS DOUBLE))
-        |        OVER (PARTITION BY contig, position, ref, alts)) AS x
-        |  FROM q),
-        |qv AS (
-        |  SELECT contig, position, ref, alts,
-        |    pow(sum(r.res * mi.x), 2)
-        |      * (CAST(1.0 AS DOUBLE) / (position % 7 + 1)) AS qc
-        |  FROM mi JOIN r USING (s)
-        |  GROUP BY contig, position, ref, alts),
+      s"""$skatQvCtes,
         |qs AS (
         |  SELECT contig AS id, CAST(count(*) AS INTEGER) AS size,
         |    round(sum(qc) / (2 * ss.sigsq), 6) AS q_stat
@@ -693,39 +662,13 @@ object AssocGates {
     // score per key group; q_stat is a closed quadratic form the oracle
     // reproduces exactly (p_value is spec-tested — mixture CDF) ----------
     Gate("geno_skat", (s, _) => {
-      val mt = sources.Vcf.read(s, vcfFixture)
-      val pheno = mt.colsTable.df
-        .withColumn("y", substring(col("s"), 2, 10).cast("double"))
-      methods.Skat.skat(mt, pheno, "y", Nil,
-        keyExpr = col("contig"),
-        weightExpr = lit(1.0) /
-          (pmod(col("position"), lit(7)) + 1).cast("double"))
+      skatByContig(s)
         .select(col("id"), col("size"),
           round(col("q_stat"), 6).as("q_stat"))
     }, {
       // linear SKAT q_stat is the closed quadratic form
       // sum_v w_v (res . x_v)^2 / (2 sigma^2) with an intercept-only null
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |yy AS (
-        |  SELECT DISTINCT s, CAST(substr(s, 2, 10) AS DOUBLE) AS yv
-        |  FROM q),
-        |st AS (SELECT avg(yv) AS ybar FROM yy),
-        |r AS (SELECT s, yv - ybar AS res FROM yy, st),
-        |ss AS (
-        |  SELECT sum(res * res) / (count(*) - 1) AS sigsq FROM r),
-        |mi AS (
-        |  SELECT contig, position, ref, alts, s,
-        |    coalesce(CAST(a1 + a2 AS DOUBLE),
-        |      avg(CAST(a1 + a2 AS DOUBLE))
-        |        OVER (PARTITION BY contig, position, ref, alts)) AS x
-        |  FROM q),
-        |qv AS (
-        |  SELECT contig, position, ref, alts,
-        |    pow(sum(r.res * mi.x), 2)
-        |      * (CAST(1.0 AS DOUBLE) / (position % 7 + 1)) AS qc
-        |  FROM mi JOIN r USING (s)
-        |  GROUP BY contig, position, ref, alts)
+      s"""$skatQvCtes
         |SELECT contig AS id, CAST(count(*) AS INTEGER) AS size,
         |  round(sum(qc) / (2 * ss.sigsq), 6) AS q_stat
         |FROM qv, ss GROUP BY contig, ss.sigsq""".stripMargin
@@ -735,43 +678,14 @@ object AssocGates {
     // binary x the full model is saturated on the 2x2 cells, so the
     // deviance is closed-form ----------------------------------------------
     Gate("logistic_lrt", (s, _) => {
-      import graft.functions.Calls
-      val mt = sources.Vcf.read(s, vcfFixture)
-      val pheno = mt.colsTable.df.withColumn("y",
-        (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
-      val fit = methods.Regression.logisticRegressionRows(mt, pheno, "y",
-        xOf = gt => (Calls.nNonRefAlleles(gt) > 0).cast("double"),
-        test = "lrt").df
-      val e = mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
-        .filter(col("GT").isNotNull)
-        .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
-      val cells = e.groupBy(col("contig"), col("position"), col("ref"))
-        .agg(
-          sum(col("x") * col("y")).cast("long").as("n11"),
-          sum(col("x") * (lit(1.0) - col("y"))).cast("long").as("n10"),
-          sum((lit(1) - col("x")) * col("y")).cast("long").as("n01"),
-          sum((lit(1) - col("x")) * (lit(1.0) - col("y"))).cast("long")
-            .as("n00"))
-      fit.join(cells, Seq("contig", "position", "ref"))
-        .filter(col("n11") > 0 && col("n10") > 0 && col("n01") > 0 &&
-          col("n00") > 0)
+      logisticCells(s, "lrt")
+        .filter(allCellsPositive)
         .select(col("contig"), col("position"), col("ref"), col("n"),
           round(col("chi_sq_stat"), 6).as("chi_sq_stat"))
     }, {
       // deviance of the cell-saturated full model vs the intercept null:
       // 2*(LL_full - LL_null), all closed-form over the 2x2 cells
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, ref,
-        |    CASE WHEN a1 + a2 > 0 THEN 1 ELSE 0 END AS x,
-        |    CAST(substr(s, 2, 10) AS INTEGER) % 2 AS y
-        |  FROM q WHERE a1 IS NOT NULL),
-        |c AS (
-        |  SELECT contig, position, ref,
-        |    sum(x * y) AS n11, sum(x * (1 - y)) AS n10,
-        |    sum((1 - x) * y) AS n01, sum((1 - x) * (1 - y)) AS n00
-        |  FROM d GROUP BY 1, 2, 3),
+      s"""${logisticCellCtes(withN = false)},
         |f AS (
         |  SELECT contig, position, ref,
         |    CAST(n11 + n10 + n01 + n00 AS BIGINT) AS n,
@@ -792,24 +706,7 @@ object AssocGates {
     // --- logistic_regression_rows test='score' (statgen.py:731): the
     // score statistic at the null fit is closed-form for binary x ----------
     Gate("logistic_score", (s, _) => {
-      import graft.functions.Calls
-      val mt = sources.Vcf.read(s, vcfFixture)
-      val pheno = mt.colsTable.df.withColumn("y",
-        (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
-      val fit = methods.Regression.logisticRegressionRows(mt, pheno, "y",
-        xOf = gt => (Calls.nNonRefAlleles(gt) > 0).cast("double"),
-        test = "score").df
-      val e = mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
-        .filter(col("GT").isNotNull)
-        .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
-      val cells = e.groupBy(col("contig"), col("position"), col("ref"))
-        .agg(
-          sum(col("x") * col("y")).cast("long").as("n11"),
-          sum(col("x") * (lit(1.0) - col("y"))).cast("long").as("n10"),
-          sum((lit(1) - col("x")) * col("y")).cast("long").as("n01"),
-          sum((lit(1) - col("x")) * (lit(1.0) - col("y"))).cast("long")
-            .as("n00"))
-      fit.join(cells, Seq("contig", "position", "ref"))
+      logisticCells(s, "score")
         .filter(col("n11") + col("n01") > 0 &&
           col("n10") + col("n00") > 0 &&
           col("n11") + col("n10") > 0 &&
@@ -819,19 +716,7 @@ object AssocGates {
     }, {
       // score statistic at the intercept-only null fit: closed-form
       // U^2 / (pbar qbar n1 (1 - n1/n)) for binary x
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, ref,
-        |    CASE WHEN a1 + a2 > 0 THEN 1 ELSE 0 END AS x,
-        |    CAST(substr(s, 2, 10) AS INTEGER) % 2 AS y
-        |  FROM q WHERE a1 IS NOT NULL),
-        |c AS (
-        |  SELECT contig, position, ref,
-        |    sum(x * y) AS n11, sum(x * (1 - y)) AS n10,
-        |    sum((1 - x) * y) AS n01, sum((1 - x) * (1 - y)) AS n00,
-        |    count(*) AS n
-        |  FROM d GROUP BY 1, 2, 3),
+      s"""${logisticCellCtes(withN = true)},
         |f AS (
         |  SELECT contig, position, ref, CAST(n AS BIGINT) AS n,
         |    CAST(n11 + n10 AS DOUBLE) AS n1,
@@ -853,26 +738,8 @@ object AssocGates {
     // the null to mu=(k+.5)/(n+1), so beta, se, and the penalized
     // deviance are all exact cell arithmetic the oracle can replay ---------
     Gate("logistic_firth", (s, _) => {
-      import graft.functions.Calls
-      val mt = sources.Vcf.read(s, vcfFixture)
-      val pheno = mt.colsTable.df.withColumn("y",
-        (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
-      val fit = methods.Regression.logisticRegressionRows(mt, pheno, "y",
-        xOf = gt => (Calls.nNonRefAlleles(gt) > 0).cast("double"),
-        test = "firth").df
-      val e = mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
-        .filter(col("GT").isNotNull)
-        .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
-      val cells = e.groupBy(col("contig"), col("position"), col("ref"))
-        .agg(
-          sum(col("x") * col("y")).cast("long").as("n11"),
-          sum(col("x") * (lit(1.0) - col("y"))).cast("long").as("n10"),
-          sum((lit(1) - col("x")) * col("y")).cast("long").as("n01"),
-          sum((lit(1) - col("x")) * (lit(1.0) - col("y"))).cast("long")
-            .as("n00"))
-      fit.join(cells, Seq("contig", "position", "ref"))
-        .filter(col("n11") > 0 && col("n10") > 0 && col("n01") > 0 &&
-          col("n00") > 0)
+      logisticCells(s, "firth")
+        .filter(allCellsPositive)
         .select(col("contig"), col("position"), col("ref"), col("n"),
           round(col("beta"), 6).as("beta"),
           round(col("standard_error"), 6).as("standard_error"),
@@ -881,18 +748,7 @@ object AssocGates {
       // firth penalized fit on the 2x2 cells: add-half group means, Wald
       // se from the information at the penalized optimum, and the
       // penalized-likelihood ratio incl. the 0.5*ln det I Jeffreys terms
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, ref,
-        |    CASE WHEN a1 + a2 > 0 THEN 1 ELSE 0 END AS x,
-        |    CAST(substr(s, 2, 10) AS INTEGER) % 2 AS y
-        |  FROM q WHERE a1 IS NOT NULL),
-        |c AS (
-        |  SELECT contig, position, ref,
-        |    sum(x * y) AS n11, sum(x * (1 - y)) AS n10,
-        |    sum((1 - x) * y) AS n01, sum((1 - x) * (1 - y)) AS n00
-        |  FROM d GROUP BY 1, 2, 3),
+      s"""${logisticCellCtes(withN = false)},
         |f AS (
         |  SELECT contig, position, ref, n11, n10, n01, n00,
         |    CAST(n11 + n10 + n01 + n00 AS BIGINT) AS n,
@@ -921,17 +777,13 @@ object AssocGates {
     // --- poisson_regression_rows (statgen.py:1650, Wald) with binary x:
     // the fitted slope must equal the closed-form log rate ratio -----------
     Gate("poisson_rows", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       // deterministic count phenotype from sample id
       val pheno = mt.colsTable.df.withColumn("y",
         (substring(col("s"), 2, 10).cast("int") + 1).cast("double"))
       val fit = methods.Regression.poissonRegressionRows(mt, pheno, "y",
-        xOf = gt => (Calls.nNonRefAlleles(gt) > 0).cast("double")).df
-      val e = mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
-        .filter(col("GT").isNotNull)
-        .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
-      val cells = e.groupBy(col("contig"), col("position"), col("ref"))
+        xOf = carrier).df
+      val cells = carrierEntries(mt, pheno).groupBy(col("contig"), col("position"), col("ref"))
         .agg(
           sum(col("x") * col("y")).cast("double").as("sy1"),
           sum((lit(1) - col("x")) * col("y")).cast("double").as("sy0"),
@@ -946,8 +798,7 @@ object AssocGates {
     }, {
       // Poisson MLE with binary x is closed-form: beta = ln(mean1/mean0),
       // SE = sqrt(1/sum(y|x=1) + 1/sum(y|x=0))
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |d AS (
         |  SELECT contig, position, ref,
         |    CASE WHEN a1 + a2 > 0 THEN 1 ELSE 0 END AS x,
@@ -974,8 +825,7 @@ object AssocGates {
           round(col("Z1"), 6).as("z1"), round(col("Z2"), 6).as("z2"),
           round(col("PI_HAT"), 6).as("pi_hat"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |st AS (
         |  SELECT contig, position,
         |    CAST(sum(CASE WHEN a1 = 0 THEN 1 ELSE 0 END
@@ -1044,7 +894,6 @@ object AssocGates {
     // r² for the univariate and one partitioned annotation, via the
     // radius-binned banded self-join (nothing n² materialized) -------------
     Gate("geno_ld_score", (s, _) => {
-      import graft.functions.Calls
       val mt0 = sources.Vcf.read(s, vcfFixture)
       val mt = mt0.copy(rows = mt0.rows
         .withColumn("ann1",
@@ -1056,20 +905,7 @@ object AssocGates {
           round(col("ann1"), 6).as("ann1"),
           round(col("univariate"), 6).as("univariate"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
-        |  FROM q),
-        |mu AS (SELECT contig, position, avg(dose) AS mu FROM d
-        |  GROUP BY 1, 2),
-        |c AS (
-        |  SELECT d.contig, d.position, d.s,
-        |    coalesce(d.dose, mu.mu) - mu.mu AS xc
-        |  FROM d JOIN mu USING (contig, position)),
-        |nr AS (SELECT contig, position, sqrt(sum(xc * xc)) AS nrm FROM c
-        |  GROUP BY 1, 2),
-        |v AS (SELECT c.contig, c.position, c.s, c.xc / nr.nrm AS v
-        |  FROM c JOIN nr USING (contig, position)),
+      s"""$unitDoseCtes,
         |meta AS (SELECT DISTINCT contig, position, ref, alts FROM raw),
         |padj AS (
         |  SELECT va.contig, va.position AS pi, vb.position AS pj,

@@ -2,11 +2,24 @@ package graft
 package gates
 
 import org.apache.spark.sql.functions._
+
+import graft.functions.Calls
 import Support._
 
 /** Expression-library, NDArray and linear-algebra gates: `fn_*`,
   * `ndarray_*`, `linalg_*` and BlockMatrix I/O. */
 object FnGates {
+  /** GRM/PCA oracle CTEs: `d` holds each genotype's dosage, `st` each
+    * variant's alt-allele count `ac` and called count `nc`. */
+  private def doseCountCtes: String =
+    s"""WITH $sampleVcfCte,
+      |d AS (
+      |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
+      |  FROM q),
+      |st AS (
+      |  SELECT contig, position, sum(dose) AS ac, count(dose) AS nc
+      |  FROM d GROUP BY 1, 2)""".stripMargin
+
   def all: Seq[Gate] = Seq(
     // --- contingency_table_test (reference stats/package.scala:148):
     // chi-sq above min_cell_count, Fisher + conditional-MLE OR below;
@@ -76,14 +89,7 @@ object FnGates {
       methods.Pca.grm(mt)
         .select(col("i"), col("j"), round(col("grm"), 6).as("grm"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
-        |  FROM q),
-        |st AS (
-        |  SELECT contig, position, sum(dose) AS ac, count(dose) AS nc
-        |  FROM d GROUP BY 1, 2),
+      s"""$doseCountCtes,
         |f AS (
         |  SELECT d.contig, d.position,
         |    CAST(substr(d.s, 2, 10) AS INTEGER) - 1 AS idx,
@@ -113,14 +119,7 @@ object FnGates {
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       s.range(1).select(lit(trace).as("trace"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (
-        |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
-        |  FROM q),
-        |st AS (
-        |  SELECT contig, position, sum(dose) AS ac, count(dose) AS nc
-        |  FROM d GROUP BY 1, 2),
+      s"""$doseCountCtes,
         |f AS (
         |  SELECT coalesce((dose - ac / nc)
         |      / sqrt((ac / nc) * (2 - ac / nc)), 0) AS nrm
@@ -247,8 +246,7 @@ object FnGates {
       methods.Pca.rrm(mt)
         .select(col("i"), col("j"), round(col("rrm"), 6).as("rrm"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |d AS (
         |  SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
         |  FROM q),
@@ -754,7 +752,6 @@ object FnGates {
     // row dosage vectors, missing mean-imputed per row; row index is
     // key order. NaN rows (zero variance) drop on both sides ---------------
     Gate("linalg_row_correlation", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       val r = methods.Pca.rowCorrelation(mt,
         e => Calls.nNonRefAlleles(e("GT")))
@@ -763,20 +760,7 @@ object FnGates {
         .withColumn("value", round(col("value"), 6) + lit(0.0))
         .filter(col("value") =!= 0.0)
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |d AS (SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
-        |  FROM q),
-        |mu AS (SELECT contig, position, avg(dose) AS mu FROM d
-        |  GROUP BY 1, 2),
-        |c AS (
-        |  SELECT d.contig, d.position, d.s,
-        |    coalesce(d.dose, mu.mu) - mu.mu AS xc
-        |  FROM d JOIN mu USING (contig, position)),
-        |nr AS (SELECT contig, position, sqrt(sum(xc * xc)) AS nrm FROM c
-        |  GROUP BY 1, 2),
-        |v AS (SELECT c.contig, c.position, c.s, c.xc / nr.nrm AS v
-        |  FROM c JOIN nr USING (contig, position)),
+      s"""$unitDoseCtes,
         |ri AS (SELECT contig, position,
         |    row_number() OVER (ORDER BY contig, position) - 1 AS idx
         |  FROM (SELECT DISTINCT contig, position FROM d)),

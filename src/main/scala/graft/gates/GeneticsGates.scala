@@ -3,6 +3,8 @@ package gates
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+
+import graft.functions.Calls
 import Support._
 
 /** Genetics gates: variant/sample QC, call functions, allele filtering and
@@ -73,6 +75,58 @@ object GeneticsGates {
       |  __BN_GOLDEN__) t(position, p0, n_alt, n_het)""".stripMargin
       .replace("__BN_GOLDEN__", BnGoldenRows)
 
+  /** Mendel oracle CTEs: `g` holds the dosages of each kid (S1, S4), its
+    * father S2 and mother S3 per variant (the kid's `kidCols` first), `c`
+    * the reference's mendel code `code` per kid and variant, after
+    * `cCols`. */
+  private def mendelCodeCtes(kidCols: String, cCols: String, code: String)
+      : String =
+    s"""WITH $sampleVcfCte,
+      |g AS (
+      |  SELECT $kidCols t.kid AS s,
+      |    d.a1 + d.a2 AS fn, m.a1 + m.a2 AS mn, k.a1 + k.a2 AS cn
+      |  FROM (VALUES ('S1'), ('S4')) t(kid)
+      |  JOIN q k ON k.s = t.kid
+      |  JOIN q d ON d.s = 'S2' AND d.contig = k.contig
+      |    AND d.position = k.position
+      |  JOIN q m ON m.s = 'S3' AND m.contig = k.contig
+      |    AND m.position = k.position),
+      |c AS (
+      |  SELECT $cCols
+      |    CASE WHEN fn = 2 AND mn = 2 AND cn = 1 THEN 1
+      |         WHEN fn = 0 AND mn = 0 AND cn = 1 THEN 2
+      |         WHEN fn = 0 AND mn = 0 AND cn = 2 THEN 5
+      |         WHEN fn = 2 AND mn = 2 AND cn = 0 THEN 8
+      |         WHEN fn = 0 AND cn = 2 THEN 3
+      |         WHEN mn = 0 AND cn = 2 THEN 4
+      |         WHEN fn = 2 AND cn = 0 THEN 6
+      |         WHEN mn = 2 AND cn = 0 THEN 7
+      |         END AS $code
+      |  FROM g)""".stripMargin
+
+  /** The concordance gates' right matrix: odd positions, DP >= 10. */
+  private def concordanceRight(mt: MatrixTable): MatrixTable =
+    mt.filterRows(pmod(col("position"), lit(2)) === 1)
+      .filterEntries(e => e("DP") >= 10)
+
+  /** Concordance oracle CTEs: the 5-state call class of each entry on the
+    * left (`lc`, the whole fixture) and the right (`rc`, odd positions
+    * with DP >= 10). */
+  private def concordanceCtes: String =
+    s"""WITH $sampleVcfCte,
+      |l AS (
+      |  SELECT contig, position, ref, s,
+      |    CASE WHEN a1 IS NULL THEN 1
+      |      WHEN a1 = 0 AND a2 = 0 THEN 2
+      |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS lc
+      |  FROM q),
+      |r AS (
+      |  SELECT contig, position, ref, s,
+      |    CASE WHEN a1 IS NULL THEN 1
+      |      WHEN a1 = 0 AND a2 = 0 THEN 2
+      |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS rc
+      |  FROM q WHERE position % 2 = 1 AND dp >= 10)""".stripMargin
+
   def all: Seq[Gate] = Seq(
     // --- summarize_variants (qc.py): per-contig counts, allele-type
     // counts, allele-number histogram in long format -----------------------
@@ -82,8 +136,7 @@ object GeneticsGates {
     }, {
       // mirrors Alleles.alleleType's predicate order exactly (base-regex
       // gate, equal-length SNP/MNP via hamming, prefix/suffix indels)
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |v AS (SELECT DISTINCT contig, position, ref, alts FROM q),
         |ex AS (SELECT contig, ref,
         |  unnest(string_split(alts, ',')) AS a FROM v),
@@ -121,7 +174,6 @@ object GeneticsGates {
 
     // --- genetics: packed-call accessors (Calls: pure bit arithmetic) ------
     Gate("geno_call_functions", (s, dir) => {
-      import graft.functions.Calls
       val o = t(s, dir, "orders")
       val call = Calls.diploid(pmod(col("o_orderkey"), lit(3)),
         pmod(col("o_custkey"), lit(3)))
@@ -151,7 +203,6 @@ object GeneticsGates {
 
     // --- genetics: call_stats aggregator (AC/AF/AN/hom) --------------------
     Gate("geno_call_stats", (s, dir) => {
-      import graft.functions.Calls
       val o = t(s, dir, "orders")
       val call = Calls.diploid(pmod(col("o_orderkey"), lit(2)),
         pmod(col("o_custkey"), lit(2)))
@@ -228,8 +279,7 @@ object GeneticsGates {
         round(col("dp_stdev"), 6).as("dp_stdev"),
         col("dp_min"), col("dp_max"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |ac AS (
         |  SELECT contig, position,
         |    sum(CASE WHEN a1 = 1 THEN 1 ELSE 0 END
@@ -284,7 +334,6 @@ object GeneticsGates {
     // over the VCF fixture with deterministic synthesized AD/GQ and a
     // position-derived reference AF the oracle recomputes ------------------
     Gate("qc_compute_charr", (s, _) => {
-      import graft.functions.Calls
       implicit val rg: graft.functions.ReferenceGenome =
         graft.functions.ReferenceGenome.GRCh38
       val mt0 = sources.Vcf.read(s, vcfFixture)
@@ -302,8 +351,7 @@ object GeneticsGates {
       methods.Qc.computeCharr(mt, refAf).df
         .select(col("s"), round(col("charr"), 6).as("charr"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |kept AS (
         |  SELECT s,
         |    ((dp - CAST(floor(dp * 2 / 3.0) AS INTEGER))
@@ -330,7 +378,6 @@ object GeneticsGates {
       val sim = methods.MatingSimulation.simulateRandomMating(
         mt, nRounds = 1, generationSizeMultiplier = 1.0,
         keepFounders = true, seed = 5L)
-      import graft.functions.Calls
       sim.entriesTable.df
         .groupBy(col("s"), col("original"), col("mother"), col("father"))
         .agg(
@@ -376,8 +423,7 @@ object GeneticsGates {
         col("n_called"), col("n_not_called"), col("n_filtered"),
         col("n_het"), col("n_non_ref"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base
+      s"""WITH $sampleVcfCte
         |SELECT contig, position, ref, alts,
         |  CAST(sum(CASE WHEN a1 = 0 THEN 1 ELSE 0 END
         |    + CASE WHEN a2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ac_ref,
@@ -442,7 +488,6 @@ object GeneticsGates {
     // recodes over deterministic synthesized AD/GQ/PL (pure functions of
     // DP and GT, so the oracle rebuilds them exactly) ----------------------
     Gate("geno_filter_alleles_hts", (s, _) => {
-      import graft.functions.Calls
       val mt0 = sources.Vcf.read(s, vcfMultiFixture)
       val nAll = size(col("alt")) + 1
       val tAll = (nAll * (nAll + 1) / 2).cast("int")
@@ -606,7 +651,6 @@ object GeneticsGates {
     // --- split_multi (reference statgen.py:3132/3312): explode alts,
     // downcode GT, min-rep — on a committed multiallelic fixture -----------
     Gate("split_multi", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfMultiFixture)
       methods.SplitMulti(mt).entriesTable.df
         .select(col("contig"), col("position"), col("ref"),
@@ -646,7 +690,6 @@ object GeneticsGates {
     // GT:DP); thresholds sized to the fixture so every filter stage
     // drops something real -------------------------------------------------
     Gate("genetics_pipeline", (s, _) => {
-      import graft.functions.Calls
       val sp0 = methods.SplitMulti(sources.Vcf.read(s, vcfMultiFixture))
       val sp = sp0.copy(rows = pipeline.Materialize.fanout(sp0.rows))
       val ann = methods.Qc.annotateVariantQc(sp)
@@ -728,8 +771,7 @@ object GeneticsGates {
         round(col("f_stat"), 6).as("f_stat"),
         col("is_female"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |x AS (SELECT * FROM q WHERE contig = 'chr2'),
         |st AS (
         |  SELECT contig, position,
@@ -774,29 +816,8 @@ object GeneticsGates {
       // first, then single-parent codes 3/4/6/7, which also fire with the
       // other parent uncalled (NULL n_alt makes its conditions false —
       // missing_false). All fixture variants are autosomal.
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |g AS (
-        |  SELECT k.contig, k.position, k.ref, t.kid AS s,
-        |    d.a1 + d.a2 AS fn, m.a1 + m.a2 AS mn, k.a1 + k.a2 AS cn
-        |  FROM (VALUES ('S1'), ('S4')) t(kid)
-        |  JOIN q k ON k.s = t.kid
-        |  JOIN q d ON d.s = 'S2' AND d.contig = k.contig
-        |    AND d.position = k.position
-        |  JOIN q m ON m.s = 'S3' AND m.contig = k.contig
-        |    AND m.position = k.position),
-        |c AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN fn = 2 AND mn = 2 AND cn = 1 THEN 1
-        |         WHEN fn = 0 AND mn = 0 AND cn = 1 THEN 2
-        |         WHEN fn = 0 AND mn = 0 AND cn = 2 THEN 5
-        |         WHEN fn = 2 AND mn = 2 AND cn = 0 THEN 8
-        |         WHEN fn = 0 AND cn = 2 THEN 3
-        |         WHEN mn = 0 AND cn = 2 THEN 4
-        |         WHEN fn = 2 AND cn = 0 THEN 6
-        |         WHEN mn = 2 AND cn = 0 THEN 7
-        |         END AS mendel_code
-        |  FROM g)
+      s"""${mendelCodeCtes("k.contig, k.position, k.ref,",
+        "contig, position, ref, s,", "mendel_code")}
         |SELECT contig, position, ref, s, mendel_code
         |FROM c WHERE mendel_code IS NOT NULL""".stripMargin
     }),
@@ -811,29 +832,8 @@ object GeneticsGates {
         .select(col("contig"), col("position"), col("ref"),
           concat_ws(",", col("alt")).as("alts"), col("errors"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |g AS (
-        |  SELECT k.contig, k.position, k.ref, k.alts, t.kid AS s,
-        |    d.a1 + d.a2 AS fn, m.a1 + m.a2 AS mn, k.a1 + k.a2 AS cn
-        |  FROM (VALUES ('S1'), ('S4')) t(kid)
-        |  JOIN q k ON k.s = t.kid
-        |  JOIN q d ON d.s = 'S2' AND d.contig = k.contig
-        |    AND d.position = k.position
-        |  JOIN q m ON m.s = 'S3' AND m.contig = k.contig
-        |    AND m.position = k.position),
-        |c AS (
-        |  SELECT contig, position, ref, alts,
-        |    CASE WHEN fn = 2 AND mn = 2 AND cn = 1 THEN 1
-        |         WHEN fn = 0 AND mn = 0 AND cn = 1 THEN 2
-        |         WHEN fn = 0 AND mn = 0 AND cn = 2 THEN 5
-        |         WHEN fn = 2 AND mn = 2 AND cn = 0 THEN 8
-        |         WHEN fn = 0 AND cn = 2 THEN 3
-        |         WHEN mn = 0 AND cn = 2 THEN 4
-        |         WHEN fn = 2 AND cn = 0 THEN 6
-        |         WHEN mn = 2 AND cn = 0 THEN 7
-        |         END AS mendel_code
-        |  FROM g),
+      s"""${mendelCodeCtes("k.contig, k.position, k.ref, k.alts,",
+        "contig, position, ref, alts,", "mendel_code")},
         |e AS (SELECT contig, position, ref, alts, count(*) AS n
         |  FROM c WHERE mendel_code IS NOT NULL GROUP BY 1, 2, 3, 4)
         |SELECT v.contig, v.position, v.ref, v.alts,
@@ -850,29 +850,8 @@ object GeneticsGates {
         ("S1", "S2", "S3", true), ("S4", "S2", "S3", false))).df
         .select(col("s"), col("errors"), col("snp_errors"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |g AS (
-        |  SELECT k.contig, k.position, k.ref, k.alts, t.kid AS s,
-        |    d.a1 + d.a2 AS fn, m.a1 + m.a2 AS mn, k.a1 + k.a2 AS cn
-        |  FROM (VALUES ('S1'), ('S4')) t(kid)
-        |  JOIN q k ON k.s = t.kid
-        |  JOIN q d ON d.s = 'S2' AND d.contig = k.contig
-        |    AND d.position = k.position
-        |  JOIN q m ON m.s = 'S3' AND m.contig = k.contig
-        |    AND m.position = k.position),
-        |c AS (
-        |  SELECT s, ref, string_split(alts, ',')[1] AS a,
-        |    CASE WHEN fn = 2 AND mn = 2 AND cn = 1 THEN 1
-        |         WHEN fn = 0 AND mn = 0 AND cn = 1 THEN 2
-        |         WHEN fn = 0 AND mn = 0 AND cn = 2 THEN 5
-        |         WHEN fn = 2 AND mn = 2 AND cn = 0 THEN 8
-        |         WHEN fn = 0 AND cn = 2 THEN 3
-        |         WHEN mn = 0 AND cn = 2 THEN 4
-        |         WHEN fn = 2 AND cn = 0 THEN 6
-        |         WHEN mn = 2 AND cn = 0 THEN 7
-        |         END AS code
-        |  FROM g),
+      s"""${mendelCodeCtes("k.contig, k.position, k.ref, k.alts,",
+        "s, ref, string_split(alts, ',')[1] AS a,", "code")},
         |impl(code, w0, w1, w2) AS (VALUES
         |  (1,1,1,1),(2,1,1,1),(3,1,0,1),(4,0,1,1),(5,0,0,1),(6,1,0,1),
         |  (7,0,1,1),(8,0,0,1),(9,0,1,1),(10,0,1,1),(11,1,0,1),(12,1,0,1)),
@@ -908,7 +887,6 @@ object GeneticsGates {
     // transmission; the 2x2 candidate-combination search replayed
     // relationally in the oracle ------------------------------------------
     Gate("geno_phase_by_transmission", (s, _) => {
-      import graft.functions.Calls
       implicit val rg: graft.functions.ReferenceGenome =
         graft.functions.ReferenceGenome.GRCh38
       val mt = sources.Vcf.read(s, vcfFixture)
@@ -923,8 +901,7 @@ object GeneticsGates {
           Calls.allele1(col("mother_entry")("PBT_GT")).as("m_a1"),
           Calls.allele2(col("mother_entry")("PBT_GT")).as("m_a2"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |t AS (SELECT k.contig, k.position, tr.kid AS s,
         |    k.a1 AS ka1, k.a2 AS ka2, d.a1 AS da1, d.a2 AS da2,
         |    m.a1 AS ma1, m.a2 AS ma2
@@ -971,25 +948,10 @@ object GeneticsGates {
     // --- concordance (qc.py:360): 5-state cross-tab of two matrices -------
     Gate("geno_concordance", (s, _) => {
       val mt = sources.Vcf.read(s, vcfFixture)
-      val right = mt
-        .filterRows(pmod(col("position"), lit(2)) === 1)
-        .filterEntries(e => e("DP") >= 10)
+      val right = concordanceRight(mt)
       methods.Genetics.concordance(mt, right)
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |l AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN a1 IS NULL THEN 1
-        |      WHEN a1 = 0 AND a2 = 0 THEN 2
-        |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS lc
-        |  FROM q),
-        |r AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN a1 IS NULL THEN 1
-        |      WHEN a1 = 0 AND a2 = 0 THEN 2
-        |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS rc
-        |  FROM q WHERE position % 2 = 1 AND dp >= 10)
+      s"""$concordanceCtes
         |SELECT coalesce(l.lc, 0) AS left_state,
         |  coalesce(r.rc, 0) AS right_state, count(*) AS n
         |FROM l FULL OUTER JOIN r USING (contig, position, ref, s)
@@ -1000,25 +962,10 @@ object GeneticsGates {
     // cols/rows tables of `concordance`) -----------------------------------
     Gate("geno_concordance_per_sample", (s, _) => {
       val mt = sources.Vcf.read(s, vcfFixture)
-      val right = mt
-        .filterRows(pmod(col("position"), lit(2)) === 1)
-        .filterEntries(e => e("DP") >= 10)
+      val right = concordanceRight(mt)
       methods.Genetics.concordancePerSample(mt, right)
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |l AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN a1 IS NULL THEN 1
-        |      WHEN a1 = 0 AND a2 = 0 THEN 2
-        |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS lc
-        |  FROM q),
-        |r AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN a1 IS NULL THEN 1
-        |      WHEN a1 = 0 AND a2 = 0 THEN 2
-        |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS rc
-        |  FROM q WHERE position % 2 = 1 AND dp >= 10)
+      s"""$concordanceCtes
         |SELECT s,
         |  coalesce(l.lc, 0) AS left_state,
         |  coalesce(r.rc, 0) AS right_state, count(*) AS n
@@ -1028,27 +975,12 @@ object GeneticsGates {
 
     Gate("geno_concordance_per_variant", (s, _) => {
       val mt = sources.Vcf.read(s, vcfFixture)
-      val right = mt
-        .filterRows(pmod(col("position"), lit(2)) === 1)
-        .filterEntries(e => e("DP") >= 10)
+      val right = concordanceRight(mt)
       methods.Genetics.concordancePerVariant(mt, right)
         .select(col("contig"), col("position"), col("ref"),
           col("left_state"), col("right_state"), col("n"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
-        |l AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN a1 IS NULL THEN 1
-        |      WHEN a1 = 0 AND a2 = 0 THEN 2
-        |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS lc
-        |  FROM q),
-        |r AS (
-        |  SELECT contig, position, ref, s,
-        |    CASE WHEN a1 IS NULL THEN 1
-        |      WHEN a1 = 0 AND a2 = 0 THEN 2
-        |      WHEN a1 <> a2 THEN 3 ELSE 4 END AS rc
-        |  FROM q WHERE position % 2 = 1 AND dp >= 10)
+      s"""$concordanceCtes
         |SELECT contig, position, ref,
         |  coalesce(l.lc, 0) AS left_state,
         |  coalesce(r.rc, 0) AS right_state, count(*) AS n
@@ -1060,7 +992,6 @@ object GeneticsGates {
     // synthesized GATK-style AD/GQ/PL entry fields (deterministic from
     // GT/DP/position so the oracle reproduces the closed-form posterior)
     Gate("geno_de_novo", (s, _) => {
-      import graft.functions.Calls
       implicit val rg: graft.functions.ReferenceGenome =
         graft.functions.ReferenceGenome.GRCh38
       val mt0 = sources.Vcf.read(s, vcfFixture)
@@ -1094,8 +1025,7 @@ object GeneticsGates {
       // synthesized PL model: eps = 10^(-(25+pos%10)/10), matching-class
       // pp = 1/(1+2eps), off-class pp = eps/(1+2eps); all-SNV fixture so
       // only the SNP confidence chain applies; GQ always >= min_gq
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |g AS (
         |  SELECT k.contig, k.position, k.ref, t.kid AS id,
         |    k.a1 + k.a2 AS kg, d.a1 + d.a2 AS dg, m.a1 + m.a2 AS mg,
@@ -1154,8 +1084,7 @@ object GeneticsGates {
         .select(col("contig"), col("position"), col("ref"),
           col("t"), col("u"), round(col("chi_sq"), 6).as("chi_sq"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |g AS (
         |  SELECT contig, position, ref, s, a1 + a2 AS nalt,
         |    CASE WHEN a1 <> a2 THEN 1 ELSE 0 END AS het,
@@ -1183,7 +1112,6 @@ object GeneticsGates {
     // deterministic, so per-variant call summaries gate against literal
     // goldens (provenance: BaldingNicholsSpec checks the af moments) -------
     Gate("balding_nichols", (s, _) => {
-      import graft.functions.Calls
       val mt = methods.BaldingNichols.baldingNicholsModel(s,
         nPopulations = 3, nSamples = 20, nVariants = 50, seed = 7L)
       mt.rows.select(col("position"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
+
+import graft.functions.Calls
 import Support._
 
 /** MatrixTable and aggregator gates: entries, row/column aggregations,
@@ -534,7 +536,6 @@ object MatrixGates {
     // --- full_outer_join_mt (experimental): outer join on rows AND
     // columns; entries become struct(left_entry, right_entry) -------------
     Gate("matrix_full_outer_join", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       val l = mt.chooseCols(IndexedSeq(0, 1)).filterRows(col("position") < 2000)
       val r = mt.chooseCols(IndexedSeq(1, 2)).filterRows(col("position") >= 1000)
@@ -545,8 +546,7 @@ object MatrixGates {
           Calls.allele1(col("right_entry")("GT")).as("r_a1"),
           Calls.allele2(col("right_entry")("GT")).as("r_a2"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |lv AS (SELECT DISTINCT contig, position FROM q
         |  WHERE position < 2000),
         |rv AS (SELECT DISTINCT contig, position FROM q
@@ -569,7 +569,6 @@ object MatrixGates {
     // --- explode_trio_matrix (experimental): trio matrix back to a
     // sample matrix, three columns per trio ---------------------------------
     Gate("matrix_explode_trio", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       val tm = methods.Trios.trioMatrix(mt,
         Seq(("S1", "S2", "S3", true), ("S4", "S2", "S3", false)))
@@ -578,8 +577,7 @@ object MatrixGates {
           Calls.allele1(col("GT")).as("a1"),
           Calls.allele2(col("GT")).as("a2"), col("DP").as("dp"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base
+      s"""WITH $sampleVcfCte
         |SELECT q.contig, q.position, r.s, q.a1, q.a2, q.dp
         |FROM (VALUES ('S1'), ('S2'), ('S3'), ('S4'), ('S2'), ('S3'))
         |  r(s)
@@ -634,20 +632,10 @@ object MatrixGates {
     // --- MatrixUnionRows (MatrixIR.scala:792): two disjoint row slices
     // union back to the whole fixture — vcf_import oracle verbatim ---------
     Gate("matrix_union_rows", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       val odd = mt.filterRows(col("position") % 2 === 1)
       val even = mt.filterRows(col("position") % 2 === 0)
-      odd.unionRows(even).entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"), col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"), col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      genotypeDump(odd.unionRows(even).entriesTable.df)
     },
       // disjoint-slice union and self-union-dedup both restore the fixture
       VcfImportOracleSql),
@@ -655,18 +643,8 @@ object MatrixGates {
     // --- MatrixDistinctByRow (MatrixIR.scala): self-union deduped back
     // to the fixture --------------------------------------------------------
     Gate("matrix_distinct_by_row", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
-      mt.unionRows(mt).distinctByRow().entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"), col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"), col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      genotypeDump(mt.unionRows(mt).distinctByRow().entriesTable.df)
     },
       VcfImportOracleSql),
 
@@ -677,15 +655,7 @@ object MatrixGates {
         .select(col("contig"), col("position"), col("ref"),
           concat_ws(",", col("alt")).as("alts"), col("qual"))
     },
-      raw"""WITH raw AS (
-        |  SELECT * FROM read_csv(
-        |    '${Fixtures.path("oracle_sample.vcf")}',
-        |    delim='\t', header=false, skip=7,
-        |    columns={'contig':'VARCHAR','position':'INTEGER',
-        |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
-        |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-        |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
-        |      'S4':'VARCHAR','S5':'VARCHAR'}))
+      raw"""WITH $vcfRawCte
         |SELECT contig, position, ref, alts, qual FROM raw
         |ORDER BY contig, position LIMIT 10""".stripMargin),
 
@@ -693,24 +663,12 @@ object MatrixGates {
     // same projection and oracle as vcf_import, but through the on-disk
     // native format (key-sorted rows + manifest, indexed cols) -------------
     Gate("matrix_write_read", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s,
         Fixtures.path("oracle_sample.vcf"))
       val dir = java.nio.file.Files.createTempDirectory("graft_mtwr")
       mt.write(s"$dir/mt")
       val back = MatrixTable.read(s, s"$dir/mt")
-      back.entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"),
-          col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"),
-          col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      genotypeDump(back.entriesTable.df)
     },
       // identical semantics through the native on-disk round-trip
       VcfImportOracleSql),
@@ -762,7 +720,6 @@ object MatrixGates {
     // --- trio_matrix (`family_methods.py:16`): cols become trios, entries
     // carry (proband, father, mother) sub-entries --------------------------
     Gate("trio_matrix", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       val tm = methods.Trios.trioMatrix(mt, Seq(
         ("S1", "S2", "S3", true), ("S4", "S5", "S1", false)))
@@ -775,8 +732,7 @@ object MatrixGates {
         Calls.allele1(col("mother_entry")("GT")).as("mom_a1"),
         Calls.allele2(col("mother_entry")("GT")).as("mom_a2"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base,
+      s"""WITH $sampleVcfCte,
         |trio(id, dad, mom) AS (
         |  VALUES ('S1', 'S2', 'S3'), ('S4', 'S5', 'S1'))
         |SELECT k.contig, k.position, trio.id,
@@ -863,15 +819,7 @@ object MatrixGates {
         .select(col("qual"), col("position"), col("ref"),
           concat_ws(",", col("alt")).as("alts"))
     },
-      raw"""WITH raw AS (
-        |  SELECT * FROM read_csv(
-        |    '${Fixtures.path("oracle_sample.vcf")}',
-        |    delim='\t', header=false, skip=7,
-        |    columns={'contig':'VARCHAR','position':'INTEGER',
-        |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
-        |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-        |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
-        |      'S4':'VARCHAR','S5':'VARCHAR'}))
+      raw"""WITH $vcfRawCte
         |SELECT qual, position, ref, alts
         |FROM raw ORDER BY qual, position LIMIT 5""".stripMargin),
 

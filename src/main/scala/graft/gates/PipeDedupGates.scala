@@ -1,13 +1,63 @@
 package graft
 package gates
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Support._
 
 /** Text-pipeline dedup gates: exact, fuzzy and near-duplicate detection and
   * candidate-pair finding. */
 object PipeDedupGates {
+  /** Span-dedup oracle CTEs: every position of a 30-char gram that
+    * occurs again earlier in the corpus (`rem`), grouped into islands
+    * `grp` per doc by the gap > 30 rule (`isl`). */
+  private def spanIslandCtes: String =
+    """pos AS (
+      |  SELECT doc_id, text,
+      |    unnest(generate_series(1, length(text) - 29)) AS i
+      |  FROM documents WHERE length(text) >= 30),
+      |g AS (SELECT doc_id, i, substr(text, i, 30) AS gram FROM pos),
+      |occ AS (SELECT doc_id, i,
+      |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, i) AS rn,
+      |    count(*)     OVER (PARTITION BY gram) AS c
+      |  FROM g),
+      |rem AS (SELECT doc_id, i - 1 AS p FROM occ WHERE c > 1 AND rn > 1),
+      |fl AS (SELECT doc_id, p,
+      |    CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) > 30
+      |         THEN 1 ELSE 0 END AS f
+      |  FROM rem),
+      |isl AS (SELECT doc_id, p,
+      |    sum(f) OVER (PARTITION BY doc_id ORDER BY p) AS grp
+      |  FROM fl)""".stripMargin
+
+  /** The fuzzy gates' keys: each doc's lowercased 12-char text prefix. */
+  private def textPrefixKeys(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("doc_id"), lower(substring(col("text"), 1, 12)).as("k"))
+
+  /** Fuzzy-join oracle CTEs: the deletion-neighbourhood variants `v` of
+    * each doc's key, the 2..1000-member variant buckets `ok`, and the
+    * distinct candidate pairs `cand` with their keys `sa`, `sb`. */
+  private def fuzzyCandidateCtes: String =
+    """k AS (
+      |  SELECT doc_id, lower(substr(text, 1, 12)) AS s FROM documents
+      |  WHERE text IS NOT NULL AND length(text) > 0),
+      |v AS (
+      |  SELECT DISTINCT doc_id, s,
+      |    CASE WHEN i = 0 THEN s
+      |         ELSE substr(s, 1, i - 1) || substr(s, i + 1) END AS var
+      |  FROM (SELECT doc_id, s,
+      |          unnest(generate_series(0, length(s))) AS i
+      |        FROM k)),
+      |ok AS (
+      |  SELECT var FROM v GROUP BY 1
+      |  HAVING count(*) > 1 AND count(*) <= 1000),
+      |cand AS (
+      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+      |    a.s AS sa, b.s AS sb
+      |  FROM v a JOIN ok USING (var) JOIN v b USING (var)
+      |  WHERE a.doc_id < b.doc_id)""".stripMargin
+
   def all: Seq[Gate] = Seq(
     // --- pipeline: exact dedup (hash-groupBy) ------------------------------
     Gate("pipe_dedup_exact", (s, dir) =>
@@ -71,66 +121,13 @@ object PipeDedupGates {
     },
       // connected components over the minhash candidate graph: recursive
       // transitive closure, cluster id = min reachable doc id
-      """WITH RECURSIVE tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id, shingles,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
-        |edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM cand
-        |  UNION SELECT id_b, id_a FROM cand),
-        |reach AS (
-        |  SELECT a AS node, a AS r FROM edges
-        |  UNION
-        |  SELECT reach.node, e.b FROM reach JOIN edges e ON reach.r = e.a)
+      raw"""WITH RECURSIVE ${minhashClusterCtes("documents", keepShingles = true)}
         |SELECT node AS doc_id, min(r) AS cluster
         |FROM reach GROUP BY node""".stripMargin),
 
     Gate("pipe_minhash_pairs", (s, dir) =>
       pipeline.Dedup.minhashPairs(t(s, dir, "documents"), "doc_id", "text"),
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id, shingles,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id)
+      raw"""WITH ${minhashCandidateCtes("documents", keepShingles = true)}
         |SELECT id_a, id_b,
         |  CAST((20000 * len(list_intersect(sa.shingles, sb.shingles))
         |      + (len(sa.shingles) + len(sb.shingles)
@@ -191,18 +188,7 @@ object PipeDedupGates {
       // independent all-pairs shared-substring join (19 = k + w - 1 of the
       // Spark side's winnowing parameters); the Spark side reaches the same
       // set through fingerprint candidates + verify, never a quadratic join
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, nt,
-        |    unnest(generate_series(1, greatest(length(nt) - 18, 0))) AS i
-        |  FROM d WHERE length(nt) >= 19),
-        |g AS (SELECT DISTINCT doc_id, substr(nt, i, 19) AS gram FROM pos)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-        |FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2""".stripMargin),
+      WinnowPairsOracleSql),
 
     // --- exact duplicated-substring spans (the suffix-array dedup of
     // Lee et al. 2022, relational): maximal char ranges covered by
@@ -222,23 +208,7 @@ object PipeDedupGates {
       // gram bytes — value-identical unless the kernel hash collides):
       // duplicated-gram positions minus the canonical first occurrence,
       // merged into maximal char spans by the gap > 30 island rule
-      """WITH pos AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(1, length(text) - 29)) AS i
-        |  FROM documents WHERE length(text) >= 30),
-        |g AS (SELECT doc_id, i, substr(text, i, 30) AS gram FROM pos),
-        |occ AS (SELECT doc_id, i,
-        |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, i) AS rn,
-        |    count(*)     OVER (PARTITION BY gram) AS c
-        |  FROM g),
-        |rem AS (SELECT doc_id, i - 1 AS p FROM occ WHERE c > 1 AND rn > 1),
-        |fl AS (SELECT doc_id, p,
-        |    CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) > 30
-        |         THEN 1 ELSE 0 END AS f
-        |  FROM rem),
-        |isl AS (SELECT doc_id, p,
-        |    sum(f) OVER (PARTITION BY doc_id ORDER BY p) AS grp
-        |  FROM fl)
+      s"""WITH $spanIslandCtes
         |SELECT doc_id, min(p) AS span_start,
         |  max(p) + 30 - min(p) AS span_len,
         |  count(*) AS n_positions
@@ -254,23 +224,7 @@ object PipeDedupGates {
         .select(col("doc_id"), col("clean_text")),
       // same spans, then each doc reassembled from its kept segments
       // (the gaps between spans plus the tail after the last span)
-      """WITH pos AS (
-        |  SELECT doc_id, text,
-        |    unnest(generate_series(1, length(text) - 29)) AS i
-        |  FROM documents WHERE length(text) >= 30),
-        |g AS (SELECT doc_id, i, substr(text, i, 30) AS gram FROM pos),
-        |occ AS (SELECT doc_id, i,
-        |    row_number() OVER (PARTITION BY gram ORDER BY doc_id, i) AS rn,
-        |    count(*)     OVER (PARTITION BY gram) AS c
-        |  FROM g),
-        |rem AS (SELECT doc_id, i - 1 AS p FROM occ WHERE c > 1 AND rn > 1),
-        |fl AS (SELECT doc_id, p,
-        |    CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) > 30
-        |         THEN 1 ELSE 0 END AS f
-        |  FROM rem),
-        |isl AS (SELECT doc_id, p,
-        |    sum(f) OVER (PARTITION BY doc_id ORDER BY p) AS grp
-        |  FROM fl),
+      s"""WITH $spanIslandCtes,
         |sp AS (SELECT doc_id, min(p) AS s, max(p) + 30 - min(p) AS l
         |  FROM isl GROUP BY doc_id, grp),
         |segs AS (
@@ -378,31 +332,12 @@ object PipeDedupGates {
     // verification with its own levenshtein --------------------------------
     Gate("pipe_fuzzy_join", (s, dir) =>
       pipeline.Dedup.editDistancePairs(
-        t(s, dir, "documents")
-          .select(col("doc_id"), lower(substring(col("text"), 1, 12))
-            .as("k")),
+        textPrefixKeys(s, dir),
         "doc_id", "k"),
       // deletion-neighborhood fuzzy join replay: variants (i=0 is the
       // string itself), distinct per doc, 2..1000 bucket cap, pair
       // dedup, levenshtein verify
-      """WITH k AS (
-        |  SELECT doc_id, lower(substr(text, 1, 12)) AS s FROM documents
-        |  WHERE text IS NOT NULL AND length(text) > 0),
-        |v AS (
-        |  SELECT DISTINCT doc_id, s,
-        |    CASE WHEN i = 0 THEN s
-        |         ELSE substr(s, 1, i - 1) || substr(s, i + 1) END AS var
-        |  FROM (SELECT doc_id, s,
-        |          unnest(generate_series(0, length(s))) AS i
-        |        FROM k)),
-        |ok AS (
-        |  SELECT var FROM v GROUP BY 1
-        |  HAVING count(*) > 1 AND count(*) <= 1000),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    a.s AS sa, b.s AS sb
-        |  FROM v a JOIN ok USING (var) JOIN v b USING (var)
-        |  WHERE a.doc_id < b.doc_id)
+      s"""WITH $fuzzyCandidateCtes
         |SELECT id_a, id_b, levenshtein(sa, sb) AS dist
         |FROM cand WHERE levenshtein(sa, sb) <= 1""".stripMargin),
 
@@ -413,30 +348,11 @@ object PipeDedupGates {
     // shuffle, audited in PlanAuditSpec) -----------------------------------
     Gate("pipe_fuzzy_best_match", (s, dir) =>
       pipeline.Dedup.bestFuzzyMatchPerDoc(
-        t(s, dir, "documents")
-          .select(col("doc_id"), lower(substring(col("text"), 1, 12))
-            .as("k")),
+        textPrefixKeys(s, dir),
         "doc_id", "k", k = 2),
       // same deletion-neighborhood replay, symmetrized and ranked per doc
       // by (dist, match id) — the top-2 rollup
-      """WITH k AS (
-        |  SELECT doc_id, lower(substr(text, 1, 12)) AS s FROM documents
-        |  WHERE text IS NOT NULL AND length(text) > 0),
-        |v AS (
-        |  SELECT DISTINCT doc_id, s,
-        |    CASE WHEN i = 0 THEN s
-        |         ELSE substr(s, 1, i - 1) || substr(s, i + 1) END AS var
-        |  FROM (SELECT doc_id, s,
-        |          unnest(generate_series(0, length(s))) AS i
-        |        FROM k)),
-        |ok AS (
-        |  SELECT var FROM v GROUP BY 1
-        |  HAVING count(*) > 1 AND count(*) <= 1000),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    a.s AS sa, b.s AS sb
-        |  FROM v a JOIN ok USING (var) JOIN v b USING (var)
-        |  WHERE a.doc_id < b.doc_id),
+      s"""WITH $fuzzyCandidateCtes,
         |p AS (
         |  SELECT id_a, id_b, levenshtein(sa, sb) AS dist
         |  FROM cand WHERE levenshtein(sa, sb) <= 1),
@@ -464,56 +380,14 @@ object PipeDedupGates {
       // integer numerator sum_d (v_d*n - s_d)^2 over n^2; ties break to
       // the lowest cluster index (row_number ORDER BY dist, c == Spark's
       // array_position first-minimum).
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id AS id,
         |    list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
         |  FROM embeddings),
-        |init AS (
-        |  SELECT row_number() OVER (ORDER BY id) - 1 AS c, v AS s,
-        |    CAST(1 AS BIGINT) AS n
-        |  FROM (SELECT id, v FROM e ORDER BY id LIMIT 4)),
-        |a1 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, init i) WHERE rk = 1),
-        |m1 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a1.c, t.d, CAST(sum(a1.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a1, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a1.c, t.d) GROUP BY c),
-        |c1 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM init i LEFT JOIN m1 m ON i.c = m.c),
-        |a2 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c1 i) WHERE rk = 1),
-        |m2 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a2.c, t.d, CAST(sum(a2.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a2, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a2.c, t.d) GROUP BY c),
-        |c2 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM c1 i LEFT JOIN m2 m ON i.c = m.c)
+        |${kmeansCtes(4, 2)}
         |SELECT id AS vec_id, c AS cluster FROM (
-        |  SELECT e.id, i.c,
-        |    row_number() OVER (PARTITION BY e.id ORDER BY
-        |      CAST(list_reduce(list_transform(range(1, 65),
-        |        d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |        (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |  FROM e, c2 i) WHERE rk = 1""".stripMargin),
+        |  ${nearestCentroid("e.id, i.c", "c2", "  ")}""".stripMargin),
 
     // --- SemDeDup (cluster-then-compare semantic dedup): the exact
     // k-means clusters block the candidate space; a vector is dropped
@@ -526,57 +400,15 @@ object PipeDedupGates {
       // SemDeDup: the pipe_kmeans_exact CTE verbatim (same k=4, iters=2
       // assignment), then within-cluster cosine pairs; a vector is
       // dropped iff a lower-id cluster-mate clears the 0.2 threshold.
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id AS id,
         |    list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
         |  FROM embeddings),
-        |init AS (
-        |  SELECT row_number() OVER (ORDER BY id) - 1 AS c, v AS s,
-        |    CAST(1 AS BIGINT) AS n
-        |  FROM (SELECT id, v FROM e ORDER BY id LIMIT 4)),
-        |a1 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, init i) WHERE rk = 1),
-        |m1 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a1.c, t.d, CAST(sum(a1.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a1, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a1.c, t.d) GROUP BY c),
-        |c1 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM init i LEFT JOIN m1 m ON i.c = m.c),
-        |a2 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c1 i) WHERE rk = 1),
-        |m2 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a2.c, t.d, CAST(sum(a2.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a2, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a2.c, t.d) GROUP BY c),
-        |c2 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM c1 i LEFT JOIN m2 m ON i.c = m.c),
+        |${kmeansCtes(4, 2)},
         |asg AS (
         |  SELECT id, c AS cluster FROM (
-        |    SELECT e.id, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c2 i) WHERE rk = 1),
+        |    ${nearestCentroid("e.id, i.c", "c2", "    ")}),
         |emb AS (SELECT vec_id AS id, embedding FROM embeddings),
         |p AS (
         |  SELECT a.cluster, a.id AS id_a, b.id AS id_b,

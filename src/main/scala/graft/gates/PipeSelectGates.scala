@@ -1,6 +1,7 @@
 package graft
 package gates
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import Support._
 
@@ -89,10 +90,53 @@ object PipeSelectGates {
 
   /** Shared oracle for the exact ANN gates (`pipe_ann_topk` and the
     * full-probe IVF path, which must reproduce it exactly). */
-  private val AnnTopkOracleSql: String =
-    """WITH q AS (
+  private def AnnTopkOracleSql: String =
+    s"""WITH q AS (
       |  SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      |c AS (
+      |${cosineCte("embeddings, q WHERE vec_id != 0")}
+      |SELECT vec_id, round(dp / (na * nb), 6) AS cos
+      |FROM c ORDER BY dp / (na * nb) DESC, vec_id LIMIT 10""".stripMargin
+
+  /** The URL gates' synthetic URL per doc: three shapes by doc_id % 3
+    * (mixed-case host, default port and tracking params / bare host /
+    * escaped path and fbclid). */
+  private def syntheticUrl: Column =
+    when(col("doc_id") % 3 === 0,
+        concat(lit("HTTP://"), upper(col("source")),
+          lit(".Example.Com:80/A/"), col("doc_id").cast("string"),
+          lit("?utm_campaign=x&z=26&a=1#top")))
+      .when(col("doc_id") % 3 === 1,
+        concat(lit("https://sub."), col("source"), lit(".org")))
+      .otherwise(
+        concat(lit("https://"), col("source"), lit(".net/P%20Q/"),
+          col("doc_id").cast("string"), lit("?b=2&a=1&fbclid=abc")))
+
+  /** URL oracle CTE `u`: `syntheticUrl` in SQL. */
+  private def urlCte: String =
+    """u AS (
+      |  SELECT doc_id,
+      |    CASE WHEN doc_id % 3 = 0 THEN 'HTTP://' || upper(source) ||
+      |           '.Example.Com:80/A/' || doc_id ||
+      |           '?utm_campaign=x&z=26&a=1#top'
+      |         WHEN doc_id % 3 = 1 THEN 'https://sub.' || source || '.org'
+      |         ELSE 'https://' || source || '.net/P%20Q/' || doc_id ||
+      |           '?b=2&a=1&fbclid=abc' END AS url
+      |  FROM documents)""".stripMargin
+
+  /** URL oracle CTE `h`: each `u` URL's lowercased host, without user
+    * info and port. */
+  private def urlHostCte: String =
+    """h AS (
+      |  SELECT doc_id,
+      |    regexp_replace(regexp_replace(lower(coalesce(regexp_extract(url,
+      |      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1), '')),
+      |      '^[^@]*@', ''), ':[0-9]+$', '') AS host
+      |  FROM u)""".stripMargin
+
+  /** ANN oracle CTE `c`: the dot product `dp` of each vector with the
+    * query `qv` and both norms (`na`, `nb`), over `from`. */
+  private def cosineCte(from: String): String =
+    s"""c AS (
       |  SELECT vec_id,
       |    list_sum(list_transform(range(1, 65),
       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
@@ -102,9 +146,47 @@ object PipeSelectGates {
       |         * CAST(embedding[i] AS DOUBLE)))) AS na,
       |    sqrt(list_sum(list_transform(range(1, 65),
       |      i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))) AS nb
-      |  FROM embeddings, q WHERE vec_id != 0)
-      |SELECT vec_id, round(dp / (na * nb), 6) AS cos
-      |FROM c ORDER BY dp / (na * nb) DESC, vec_id LIMIT 10""".stripMargin
+      |  FROM $from)""".stripMargin
+
+  /** BM25 oracle CTEs for the query "join hash vector spark": per-doc
+    * length and term counts (`perdoc`), corpus stats (`stats`), and each
+    * doc's `score` (per-term 4dp contributions summed as DECIMAL) and
+    * `n_matched` terms (`scored`). */
+  private def bm25ScoredCtes: String = {
+    val terms = Seq("join", "hash", "vector", "spark").zipWithIndex
+    val tf = terms.map { case (w, j) =>
+      s"    sum(CASE WHEN t = '$w' THEN 1 ELSE 0 END) AS tf$j" }
+    val df = terms.map { case (_, j) =>
+      s"    CAST(sum(CASE WHEN tf$j > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df$j"
+    }
+    val score = terms.map { case (_, j) =>
+      s"""CAST(round(ln(1 + (n - df$j + 0.5) / (df$j + 0.5)) * tf$j * 2.2
+         |      / (tf$j + 1.2 * (0.25 + 0.75 * dl
+         |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))""".stripMargin
+    }
+    val matched = terms.map { case (_, j) =>
+      s"CASE WHEN tf$j > 0 THEN 1 ELSE 0 END" }
+    s"""tok AS (
+      |  SELECT doc_id AS doc,
+      |    unnest(string_split_regex(lower(text), ' +')) AS t
+      |  FROM documents),
+      |perdoc AS (
+      |  SELECT doc, count(*) AS dl,
+      |${tf.mkString(",\n")}
+      |  FROM tok WHERE t <> '' GROUP BY doc),
+      |stats AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(dl) AS BIGINT) AS sumdl,
+      |${df.mkString(",\n")}
+      |  FROM perdoc),
+      |scored AS (
+      |  SELECT doc,
+      |    ${score.mkString("\n    + ")}
+      |      AS score,
+      |    CAST(${matched.mkString("\n      + ")} AS BIGINT)
+      |      AS n_matched
+      |  FROM perdoc, stats)""".stripMargin
+  }
 
   def all: Seq[Gate] = Seq(
     // --- URL canonicalization (crawl dedup hygiene): three synthetic
@@ -112,15 +194,7 @@ object PipeSelectGates {
     // params / bare host / spaces + fbclid) through normalize, host
     // and apex-domain extraction — every regex step replayed in SQL ---------
     Gate("pipe_url_normalize", (s, dir) => {
-      val url = when(col("doc_id") % 3 === 0,
-          concat(lit("HTTP://"), upper(col("source")),
-            lit(".Example.Com:80/A/"), col("doc_id").cast("string"),
-            lit("?utm_campaign=x&z=26&a=1#top")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("https://sub."), col("source"), lit(".org")))
-        .otherwise(
-          concat(lit("https://"), col("source"), lit(".net/P%20Q/"),
-            col("doc_id").cast("string"), lit("?b=2&a=1&fbclid=abc")))
+      val url = syntheticUrl
       t(s, dir, "documents").select(col("doc_id"),
         pipeline.Text.urlNormalize(url).as("norm_url"),
         pipeline.Text.urlHost(url).as("host"),
@@ -129,25 +203,17 @@ object PipeSelectGates {
       // full SQL replay of the URL canonicalization contract: fragment
       // strip, scheme+host lowercase, default-port strip, tracking-param
       // drop, param sort, empty path -> '/'
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN 'HTTP://' || upper(source) ||
-        |           '.Example.Com:80/A/' || doc_id ||
-        |           '?utm_campaign=x&z=26&a=1#top'
-        |         WHEN doc_id % 3 = 1 THEN 'https://sub.' || source || '.org'
-        |         ELSE 'https://' || source || '.net/P%20Q/' || doc_id ||
-        |           '?b=2&a=1&fbclid=abc' END AS url
-        |  FROM documents),
+      raw"""WITH $urlCte,
         |p1 AS (
-        |  SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS base
+        |  SELECT doc_id, url, regexp_replace(url, '#.*$$', '') AS base
         |  FROM u),
         |p2 AS (
         |  SELECT doc_id, url,
         |    regexp_replace(lower(coalesce(regexp_extract(base,
         |      '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1), '')),
-        |      ':(80|443)$', '') AS scheme_host,
+        |      ':(80|443)$$', '') AS scheme_host,
         |    coalesce(regexp_extract(base,
-        |      '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(.*)$', 1), '') AS rest
+        |      '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(.*)$$', 1), '') AS rest
         |  FROM p1),
         |p3 AS (
         |  SELECT doc_id, url, scheme_host,
@@ -155,24 +221,19 @@ object PipeSelectGates {
         |         THEN '/' ELSE regexp_extract(rest, '^([^?]*)', 1) END
         |      AS path,
         |    list_sort(list_filter(
-        |      string_split(coalesce(regexp_extract(rest, '\?(.*)$', 1), ''),
+        |      string_split(coalesce(regexp_extract(rest, '\?(.*)$$', 1), ''),
         |        '&'),
         |      p -> p <> '' AND NOT regexp_matches(p,
         |        '^(utm_[a-z]+|fbclid|gclid)='))) AS params
         |  FROM p2),
-        |h AS (
-        |  SELECT doc_id,
-        |    regexp_replace(regexp_replace(lower(coalesce(regexp_extract(url,
-        |      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1), '')),
-        |      '^[^@]*@', ''), ':[0-9]+$', '') AS host
-        |  FROM u)
+        |$urlHostCte
         |SELECT p3.doc_id,
         |  scheme_host || path ||
         |    CASE WHEN len(params) > 0
         |         THEN '?' || array_to_string(params, '&') ELSE '' END
         |    AS norm_url,
         |  h.host AS host,
-        |  coalesce(regexp_extract(h.host, '([^.]+\.[^.]+)$', 1), '')
+        |  coalesce(regexp_extract(h.host, '([^.]+\.[^.]+)$$', 1), '')
         |    AS domain
         |FROM p3 JOIN h USING (doc_id)""".stripMargin),
 
@@ -180,15 +241,7 @@ object PipeSelectGates {
     // smallest doc_ids per apex domain; the id sum pins WHICH rows
     // survived, not just how many ------------------------------------------
     Gate("pipe_domain_cap", (s, dir) => {
-      val url = when(col("doc_id") % 3 === 0,
-          concat(lit("HTTP://"), upper(col("source")),
-            lit(".Example.Com:80/A/"), col("doc_id").cast("string"),
-            lit("?utm_campaign=x&z=26&a=1#top")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("https://sub."), col("source"), lit(".org")))
-        .otherwise(
-          concat(lit("https://"), col("source"), lit(".net/P%20Q/"),
-            col("doc_id").cast("string"), lit("?b=2&a=1&fbclid=abc")))
+      val url = syntheticUrl
       val withDom = t(s, dir, "documents")
         .withColumn("domain", pipeline.Text.urlDomain(url))
       pipeline.Text.domainCap(withDom, "doc_id", col("domain"), cap = 10)
@@ -197,24 +250,11 @@ object PipeSelectGates {
     },
       // same synthesized URLs -> apex domain -> keep the 10 smallest ids
       // per domain; id_sum pins the surviving row set
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN 'HTTP://' || upper(source) ||
-        |           '.Example.Com:80/A/' || doc_id ||
-        |           '?utm_campaign=x&z=26&a=1#top'
-        |         WHEN doc_id % 3 = 1 THEN 'https://sub.' || source || '.org'
-        |         ELSE 'https://' || source || '.net/P%20Q/' || doc_id ||
-        |           '?b=2&a=1&fbclid=abc' END AS url
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    regexp_replace(regexp_replace(lower(coalesce(regexp_extract(url,
-        |      '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1), '')),
-        |      '^[^@]*@', ''), ':[0-9]+$', '') AS host
-        |  FROM u),
+      raw"""WITH $urlCte,
+        |$urlHostCte,
         |d AS (
         |  SELECT doc_id,
-        |    coalesce(regexp_extract(host, '([^.]+\.[^.]+)$', 1), '')
+        |    coalesce(regexp_extract(host, '([^.]+\.[^.]+)$$', 1), '')
         |      AS domain
         |  FROM h),
         |r AS (
@@ -311,46 +351,7 @@ object PipeSelectGates {
       // BM25: per-doc length + per-term tf in one grouped pass, corpus
       // stats (N, avgdl, df) in a scalar CTE, Lucene-floored idf; 4dp
       // per-term contributions summed as exact decimals.
-      """WITH tok AS (
-        |  SELECT doc_id AS doc,
-        |    unnest(string_split_regex(lower(text), ' +')) AS t
-        |  FROM documents),
-        |perdoc AS (
-        |  SELECT doc, count(*) AS dl,
-        |    sum(CASE WHEN t = 'join' THEN 1 ELSE 0 END) AS tf0,
-        |    sum(CASE WHEN t = 'hash' THEN 1 ELSE 0 END) AS tf1,
-        |    sum(CASE WHEN t = 'vector' THEN 1 ELSE 0 END) AS tf2,
-        |    sum(CASE WHEN t = 'spark' THEN 1 ELSE 0 END) AS tf3
-        |  FROM tok WHERE t <> '' GROUP BY doc),
-        |stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(dl) AS BIGINT) AS sumdl,
-        |    CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df0,
-        |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
-        |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2,
-        |    CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df3
-        |  FROM perdoc),
-        |scored AS (
-        |  SELECT doc,
-        |    CAST(round(ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-        |      / (tf0 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |    + CAST(round(ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-        |      / (tf1 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |    + CAST(round(ln(1 + (n - df2 + 0.5) / (df2 + 0.5)) * tf2 * 2.2
-        |      / (tf2 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |    + CAST(round(ln(1 + (n - df3 + 0.5) / (df3 + 0.5)) * tf3 * 2.2
-        |      / (tf3 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |      AS score,
-        |    CAST(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN tf3 > 0 THEN 1 ELSE 0 END AS BIGINT)
-        |      AS n_matched
-        |  FROM perdoc, stats)
+      s"""WITH $bm25ScoredCtes
         |SELECT doc AS doc_id, CAST(score AS DOUBLE) AS score, n_matched
         |FROM scored WHERE n_matched > 0
         |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin),
@@ -380,63 +381,14 @@ object PipeSelectGates {
       pipeline.Retrieval.rrfFuse(Seq(lex, den), "doc_id", "score",
         k = 20)
     },
-      """WITH tok AS (
-        |  SELECT doc_id AS doc,
-        |    unnest(string_split_regex(lower(text), ' +')) AS t
-        |  FROM documents),
-        |perdoc AS (
-        |  SELECT doc, count(*) AS dl,
-        |    sum(CASE WHEN t = 'join' THEN 1 ELSE 0 END) AS tf0,
-        |    sum(CASE WHEN t = 'hash' THEN 1 ELSE 0 END) AS tf1,
-        |    sum(CASE WHEN t = 'vector' THEN 1 ELSE 0 END) AS tf2,
-        |    sum(CASE WHEN t = 'spark' THEN 1 ELSE 0 END) AS tf3
-        |  FROM tok WHERE t <> '' GROUP BY doc),
-        |stats AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(dl) AS BIGINT) AS sumdl,
-        |    CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df0,
-        |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
-        |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2,
-        |    CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df3
-        |  FROM perdoc),
-        |scored AS (
-        |  SELECT doc,
-        |    CAST(round(ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * 2.2
-        |      / (tf0 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |    + CAST(round(ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * 2.2
-        |      / (tf1 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |    + CAST(round(ln(1 + (n - df2 + 0.5) / (df2 + 0.5)) * tf2 * 2.2
-        |      / (tf2 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |    + CAST(round(ln(1 + (n - df3 + 0.5) / (df3 + 0.5)) * tf3 * 2.2
-        |      / (tf3 + 1.2 * (0.25 + 0.75 * dl
-        |        / (CAST(sumdl AS DOUBLE) / n))), 4) AS DECIMAL(18,4))
-        |      AS score,
-        |    CAST(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END
-        |      + CASE WHEN tf3 > 0 THEN 1 ELSE 0 END AS BIGINT)
-        |      AS n_matched
-        |  FROM perdoc, stats),
+      s"""WITH $bm25ScoredCtes,
         |lex AS (
         |  SELECT doc AS doc_id, CAST(score AS DOUBLE) AS score
         |  FROM scored WHERE n_matched > 0
         |  ORDER BY score DESC, doc_id ASC LIMIT 100),
         |q AS (
         |  SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-        |c AS (
-        |  SELECT vec_id,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
-        |      AS dp,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE)
-        |         * CAST(embedding[i] AS DOUBLE)))) AS na,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))) AS nb
-        |  FROM embeddings, q WHERE vec_id != 0),
+        |${cosineCte("embeddings, q WHERE vec_id != 0")},
         |den AS (
         |  SELECT vec_id AS doc_id, round(dp / (na * nb), 6) AS score
         |  FROM c
@@ -763,57 +715,15 @@ object PipeSelectGates {
         "vec_id", "embedding", k = 4, quota = 100),
       // cluster balancing: the pipe_kmeans_exact CTE verbatim, then a
       // per-cluster rank cap in deterministic md5-hash order
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id AS id,
         |    list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
         |  FROM embeddings),
-        |init AS (
-        |  SELECT row_number() OVER (ORDER BY id) - 1 AS c, v AS s,
-        |    CAST(1 AS BIGINT) AS n
-        |  FROM (SELECT id, v FROM e ORDER BY id LIMIT 4)),
-        |a1 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, init i) WHERE rk = 1),
-        |m1 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a1.c, t.d, CAST(sum(a1.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a1, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a1.c, t.d) GROUP BY c),
-        |c1 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM init i LEFT JOIN m1 m ON i.c = m.c),
-        |a2 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c1 i) WHERE rk = 1),
-        |m2 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a2.c, t.d, CAST(sum(a2.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a2, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a2.c, t.d) GROUP BY c),
-        |c2 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM c1 i LEFT JOIN m2 m ON i.c = m.c),
+        |${kmeansCtes(4, 2)},
         |af AS (
         |  SELECT id, c FROM (
-        |    SELECT e.id, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c2 i) WHERE rk = 1)
+        |    ${nearestCentroid("e.id, i.c", "c2", "    ")})
         |SELECT vec_id, cluster, pick_rank FROM (
         |  SELECT id AS vec_id, c AS cluster,
         |    row_number() OVER (PARTITION BY c ORDER BY
@@ -841,57 +751,15 @@ object PipeSelectGates {
       // persisted IVF: the kmeans CTE over vec_id != 0, probe cells
       // ranked by exact rational distance of the grid-quantized query,
       // cosine top-10 restricted to the probed cells' members
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT vec_id AS id, embedding,
         |    list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
         |  FROM embeddings WHERE vec_id != 0),
-        |init AS (
-        |  SELECT row_number() OVER (ORDER BY id) - 1 AS c, v AS s,
-        |    CAST(1 AS BIGINT) AS n
-        |  FROM (SELECT id, v FROM e ORDER BY id LIMIT 4)),
-        |a1 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, init i) WHERE rk = 1),
-        |m1 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a1.c, t.d, CAST(sum(a1.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a1, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a1.c, t.d) GROUP BY c),
-        |c1 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM init i LEFT JOIN m1 m ON i.c = m.c),
-        |a2 AS (
-        |  SELECT id, v, c FROM (
-        |    SELECT e.id, e.v, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c1 i) WHERE rk = 1),
-        |m2 AS (
-        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
-        |    SELECT a2.c, t.d, CAST(sum(a2.v[t.d]) AS BIGINT) AS sd,
-        |      CAST(count(*) AS BIGINT) AS n
-        |    FROM a2, unnest(range(1, 65)) AS t(d)
-        |    GROUP BY a2.c, t.d) GROUP BY c),
-        |c2 AS (
-        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
-        |  FROM c1 i LEFT JOIN m2 m ON i.c = m.c),
+        |${kmeansCtes(4, 2)},
         |af AS (
         |  SELECT id, c FROM (
-        |    SELECT e.id, i.c,
-        |      row_number() OVER (PARTITION BY e.id ORDER BY
-        |        CAST(list_reduce(list_transform(range(1, 65),
-        |          d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
-        |          (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
-        |    FROM e, c2 i) WHERE rk = 1),
+        |    ${nearestCentroid("e.id, i.c", "c2", "    ")}),
         |qg AS (
         |  SELECT list_transform(embedding,
         |      x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv
@@ -1131,17 +999,7 @@ object PipeSelectGates {
         |  FROM embeddings, p),
         |qq AS (SELECT embedding AS qv, bucket AS qb FROM b
         |  WHERE vec_id = 0),
-        |c AS (
-        |  SELECT vec_id,
-        |    list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))
-        |      AS dp,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE)
-        |         * CAST(embedding[i] AS DOUBLE)))) AS na,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)))) AS nb
-        |  FROM b, qq WHERE vec_id != 0 AND bucket = qb)
+        |${cosineCte("b, qq WHERE vec_id != 0 AND bucket = qb")}
         |SELECT vec_id, round(dp / (na * nb), 6) AS cos
         |FROM c ORDER BY dp / (na * nb) DESC, vec_id LIMIT 10""".stripMargin
     })

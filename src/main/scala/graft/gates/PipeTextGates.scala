@@ -347,30 +347,7 @@ object PipeTextGates {
     Gate("pipe_split_leakage", (s, dir) =>
       pipeline.Dedup.splitLeakage(t(s, dir, "documents"), "doc_id",
         "text", Seq("train" -> 900, "val" -> 100)),
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id, shingles,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
+      raw"""WITH ${minhashCandidateCtes("documents", keepShingles = true)},
         |pairs AS (
         |  SELECT id_a, id_b,
         |    CAST((20000 * len(list_intersect(sa.shingles, sb.shingles))
@@ -660,15 +637,7 @@ object PipeTextGates {
       pipeline.Dedup.winnowContamination(corpus, "doc_id", "text",
         bench, "doc_id", "text")
     },
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, nt,
-        |    unnest(generate_series(1, greatest(length(nt) - 18, 0))) AS i
-        |  FROM d WHERE length(nt) >= 19),
-        |g AS (SELECT DISTINCT doc_id, substr(nt, i, 19) AS gram FROM pos)
+      s"""WITH $gram19Ctes
         |SELECT a.doc_id AS corpus_id, b.doc_id AS bench_id,
         |  count(*) AS n_shared
         |FROM g a JOIN g b ON a.gram = b.gram
@@ -690,15 +659,7 @@ object PipeTextGates {
       // the same substring-join replay, rolled up to one verdict row per
       // contaminated corpus doc (sum(BIGINT) is HUGEINT in DuckDB — cast
       // back to match Spark's long)
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, nt,
-        |    unnest(generate_series(1, greatest(length(nt) - 18, 0))) AS i
-        |  FROM d WHERE length(nt) >= 19),
-        |g AS (SELECT DISTINCT doc_id, substr(nt, i, 19) AS gram FROM pos),
+      s"""WITH $gram19Ctes,
         |pairs AS (
         |  SELECT a.doc_id AS corpus_id, b.doc_id AS bench_id,
         |    count(*) AS n_shared
@@ -731,7 +692,7 @@ object PipeTextGates {
           "zh" -> 500))
         .select("doc_id", "lang")
     },
-      """WITH RECURSIVE q AS (
+      raw"""WITH RECURSIVE q AS (
         |  SELECT doc_id, text, lang FROM documents
         |  WHERE length(text) >= 100
         |    AND length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
@@ -744,37 +705,7 @@ object PipeTextGates {
         |        list_sort(list_distinct(string_split_regex(lower(text),
         |        ' +'))), ' ')) ORDER BY doc_id) AS rn
         |    FROM q) WHERE rn = 1),
-        |tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM fded),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
-        |edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM cand
-        |  UNION SELECT id_b, id_a FROM cand),
-        |reach AS (
-        |  SELECT a AS node, a AS r FROM edges
-        |  UNION
-        |  SELECT reach.node, e.b FROM reach JOIN edges e ON reach.r = e.a),
+        |${minhashClusterCtes("fded", keepShingles = false)},
         |clu AS (SELECT node, min(r) AS cluster FROM reach GROUP BY node),
         |ded AS (
         |  SELECT f.doc_id, f.lang FROM fded f
@@ -837,7 +768,7 @@ object PipeTextGates {
       // quality gates → md5 split assign → per-(split, lang) summary.
       // The partitioned-parquet export leg is value-preserving, so the
       // replay covers it by recomputing the same aggregate
-      """WITH RECURSIVE cleaned AS (
+      raw"""WITH RECURSIVE cleaned AS (
         |  SELECT doc_id, text, lang FROM documents
         |  WHERE length(text) >= 100
         |    AND length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
@@ -849,37 +780,7 @@ object PipeTextGates {
         |      row_number() OVER (PARTITION BY md5(text)
         |        ORDER BY doc_id) AS rn
         |    FROM cleaned) WHERE rn = 1),
-        |tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM ex),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b
-        |    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id),
-        |edges AS (
-        |  SELECT id_a AS a, id_b AS b FROM cand
-        |  UNION SELECT id_b, id_a FROM cand),
-        |reach AS (
-        |  SELECT a AS node, a AS r FROM edges
-        |  UNION
-        |  SELECT reach.node, e.b FROM reach JOIN edges e ON reach.r = e.a),
+        |${minhashClusterCtes("ex", keepShingles = false)},
         |clu AS (SELECT node, min(r) AS cluster FROM reach GROUP BY node),
         |ded AS (
         |  SELECT f.doc_id, f.lang, f.text FROM ex f
@@ -914,7 +815,7 @@ object PipeTextGates {
         pipeline.Text.langId(col("text")).as("pred_lang"),
         pipeline.Text.qualityScore(col("text")).as("quality"),
         pipeline.Text.subwordCount(col("text")).as("n_subwords")),
-      """WITH w AS (
+      raw"""WITH w AS (
         |  SELECT doc_id, lang, text,
         |    string_split_regex(lower(text), ' +') AS toks,
         |    CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
@@ -922,19 +823,7 @@ object PipeTextGates {
         |    CAST(length(regexp_replace(text, ' +', '', 'g')) AS DOUBLE)
         |      / greatest(len(string_split_regex(trim(text), ' +')), 1) AS mwl
         |  FROM documents),
-        |sc AS (
-        |  SELECT *,
-        |    len(list_intersect(toks,
-        |      ['the','and','of','to','is','in','that','with'])) AS s_en,
-        |    len(list_intersect(toks,
-        |      ['der','die','das','und','ist','nicht','ein','mit'])) AS s_de,
-        |    len(list_intersect(toks,
-        |      ['le','la','les','et','est','une','dans','pour'])) AS s_fr,
-        |    len(list_intersect(toks,
-        |      ['el','los','las','es','una','que','por','como'])) AS s_es,
-        |    length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g'))
-        |      AS cjk
-        |  FROM w)
+        |$langScoreCte
         |SELECT doc_id, lang,
         |  CASE WHEN cjk > length(text) * 0.2 THEN 'zh'
         |       WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'

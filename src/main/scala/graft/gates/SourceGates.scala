@@ -1,7 +1,10 @@
 package graft
 package gates
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.Calls
 import Support._
 
 /** Format gates: VCF, BGEN, GEN, PLINK, native `.ht`/`.mt`, Avro,
@@ -74,6 +77,60 @@ object SourceGates {
       |  round(paa, 6) AS paa
       |FROM e""".stripMargin
 
+  /** The two single-sample gVCFs of the VDS gates, written under a new
+    * temp directory named `prefix` and combined: VA has reference blocks
+    * [1,99]@21 and [101,900]@24 around a het at 100, VB a block [1,500]@17
+    * and a hom-alt at 600. */
+  private def combinedGvcfs(s: SparkSession, prefix: String)
+      : methods.VariantDataset = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    def gvcf(name: String, body: String): String = {
+      val f = dir.resolve(s"$name.vcf")
+      java.nio.file.Files.writeString(f,
+        """##fileformat=VCFv4.2
+          |##INFO=<ID=END,Number=1,Type=Integer,Description="Block end">
+          |##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">
+          |##FORMAT=<ID=DP,Number=1,Type=Integer,Description="Depth">
+          |""".stripMargin +
+          s"#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\t$name\n"
+          + body)
+      f.toString
+    }
+    val a = sources.Vcf.readGvcf(s, gvcf("VA",
+      "chr1\t1\t.\tA\t<NON_REF>\t.\t.\tEND=99\tGT:DP\t0/0:21\n" +
+      "chr1\t100\t.\tA\tG,<NON_REF>\t50\tPASS\t.\tGT:DP\t0/1:30\n" +
+      "chr1\t101\t.\tC\t<NON_REF>\t.\t.\tEND=900\tGT:DP\t0/0:24\n"))
+    val b = sources.Vcf.readGvcf(s, gvcf("VB",
+      "chr1\t1\t.\tA\t<NON_REF>\t.\t.\tEND=500\tGT:DP\t0/0:17\n" +
+      "chr1\t600\t.\tT\tC,<NON_REF>\t44\tPASS\t.\tGT:DP\t1/1:28\n"))
+    methods.VdsCombiner.combine(Seq(a, b))
+  }
+
+  /** The `bgen_import` projection: one row per entry with the hard call
+    * and the three genotype probabilities. */
+  private def bgenDump(mt: MatrixTable): DataFrame = {
+    mt.entriesTable.df.select(
+      col("contig"), col("position"), col("ref"),
+      element_at(col("alt"), 1).as("alt"), col("s"),
+      Calls.nNonRefAlleles(col("GT")).as("gt"),
+      round(element_at(col("GP"), 1), 6).as("paa"),
+      round(element_at(col("GP"), 2), 6).as("pab"),
+      round(element_at(col("GP"), 3), 6).as("pbb"))
+  }
+
+  /** The fixture VCF bgzipped into a new temp directory named `prefix`
+    * (2 KiB BGZF blocks, so the file splits); returns its path. */
+  private def bgzipFixture(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val bgz = dir.resolve("f.vcf.bgz").toString
+    val out = new sources.BGzipOutputStream(
+      new java.io.FileOutputStream(bgz), 2048)
+    out.write(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(vcfFixture)))
+    out.close()
+    bgz
+  }
+
   def all: Seq[Gate] = Seq(
     // --- get_vcf_metadata (reference impex.py): header declarations -------
     Gate("vcf_metadata", (s, _) => sources.Vcf.metadata(s, vcfFixture),
@@ -95,7 +152,6 @@ object SourceGates {
     // --- PLINK import (io/plink/LoadPlink.scala): 2-bit .bed decode;
     // oracle = golden text dump generated alongside the binary fixture -----
     Gate("plink_import", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Plink.read(s,
         Fixtures.path("oracle_plink"))
       mt.entriesTable.df.select(
@@ -109,23 +165,15 @@ object SourceGates {
     // --- BGEN v1.2 import (io/bgen/LoadBgen.scala): zlib layout-2 decode;
     // oracle = golden dump generated alongside the binary fixture ----------
     Gate("bgen_import", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Bgen.read(s,
         Fixtures.path("oracle_bgen.bgen"),
         Some(Fixtures.path("oracle_bgen.sample")))
-      mt.entriesTable.df.select(
-        col("contig"), col("position"), col("ref"),
-        element_at(col("alt"), 1).as("alt"), col("s"),
-        Calls.nNonRefAlleles(col("GT")).as("gt"),
-        round(element_at(col("GP"), 1), 6).as("paa"),
-        round(element_at(col("GP"), 2), 6).as("pab"),
-        round(element_at(col("GP"), 3), 6).as("pbb"))
+      bgenDump(mt)
     },
       BgenImportOracleSql),
 
     // --- Oxford GEN import (io/gen/): text probabilities + hard calls -----
     Gate("gen_import", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Gen.read(s,
         Fixtures.path("oracle_gen.gen"),
         Fixtures.path("oracle_gen.sample"))
@@ -141,28 +189,7 @@ object SourceGates {
     // single-sample gVCFs merge and densify; the expected grid is small
     // enough to oracle as literal VALUES -----------------------------------
     Gate("vds_combine_densify", (s, _) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_vdsq")
-      def gvcf(name: String, body: String): String = {
-        val f = dir.resolve(s"$name.vcf")
-        java.nio.file.Files.writeString(f,
-          """##fileformat=VCFv4.2
-            |##INFO=<ID=END,Number=1,Type=Integer,Description="Block end">
-            |##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">
-            |##FORMAT=<ID=DP,Number=1,Type=Integer,Description="Depth">
-            |""".stripMargin +
-            s"#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\t$name\n"
-            + body)
-        f.toString
-      }
-      val a = sources.Vcf.readGvcf(s, gvcf("VA",
-        "chr1\t1\t.\tA\t<NON_REF>\t.\t.\tEND=99\tGT:DP\t0/0:21\n" +
-        "chr1\t100\t.\tA\tG,<NON_REF>\t50\tPASS\t.\tGT:DP\t0/1:30\n" +
-        "chr1\t101\t.\tC\t<NON_REF>\t.\t.\tEND=900\tGT:DP\t0/0:24\n"))
-      val b = sources.Vcf.readGvcf(s, gvcf("VB",
-        "chr1\t1\t.\tA\t<NON_REF>\t.\t.\tEND=500\tGT:DP\t0/0:17\n" +
-        "chr1\t600\t.\tT\tC,<NON_REF>\t44\tPASS\t.\tGT:DP\t1/1:28\n"))
-      import graft.functions.Calls
-      methods.VdsCombiner.combine(Seq(a, b)).toDenseMt()
+      combinedGvcfs(s, "graft_vdsq").toDenseMt()
         .entriesTable.df
         .select(col("contig"), col("position"), col("s"),
           Calls.nNonRefAlleles(col("GT")).as("n_alt"), col("DP"))
@@ -180,28 +207,8 @@ object SourceGates {
     // sample) base coverage from reference blocks; oracle = hand-computed
     // literals over the same tiny gVCF fixtures ----------------------------
     Gate("vds_interval_coverage", (s, _) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_vdsc")
-      def gvcf(name: String, body: String): String = {
-        val f = dir.resolve(s"$name.vcf")
-        java.nio.file.Files.writeString(f,
-          """##fileformat=VCFv4.2
-            |##INFO=<ID=END,Number=1,Type=Integer,Description="Block end">
-            |##FORMAT=<ID=GT,Number=1,Type=String,Description="Genotype">
-            |##FORMAT=<ID=DP,Number=1,Type=Integer,Description="Depth">
-            |""".stripMargin +
-            s"#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\t$name\n"
-            + body)
-        f.toString
-      }
-      val a = sources.Vcf.readGvcf(s, gvcf("VA",
-        "chr1\t1\t.\tA\t<NON_REF>\t.\t.\tEND=99\tGT:DP\t0/0:21\n" +
-        "chr1\t100\t.\tA\tG,<NON_REF>\t50\tPASS\t.\tGT:DP\t0/1:30\n" +
-        "chr1\t101\t.\tC\t<NON_REF>\t.\t.\tEND=900\tGT:DP\t0/0:24\n"))
-      val b = sources.Vcf.readGvcf(s, gvcf("VB",
-        "chr1\t1\t.\tA\t<NON_REF>\t.\t.\tEND=500\tGT:DP\t0/0:17\n" +
-        "chr1\t600\t.\tT\tC,<NON_REF>\t44\tPASS\t.\tGT:DP\t1/1:28\n"))
       val thresholds = Seq(0, 10, 20, 30)
-      val cov = methods.VdsCombiner.combine(Seq(a, b))
+      val cov = combinedGvcfs(s, "graft_vdsc")
         .intervalCoverage(Seq(("chr1", 50, 150), ("chr1", 400, 1000)),
           thresholds)
       val tArr = array(thresholds.map(lit): _*)
@@ -248,21 +255,9 @@ object SourceGates {
     // --- VCF import: typed INFO/FORMAT entries on a committed fixture;
     // oracle re-parses the same file with DuckDB read_csv ------------------
     Gate("vcf_import", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s,
         Fixtures.path("oracle_sample.vcf"))
-      mt.entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"),
-          col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"),
-          col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      genotypeDump(mt.entriesTable.df)
     },
       VcfImportOracleSql),
 
@@ -289,24 +284,12 @@ object SourceGates {
         |FROM nation""".stripMargin),
 
     Gate("mt_export", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s,
         Fixtures.path("oracle_sample.vcf"))
       val out = java.nio.file.Files.createTempDirectory("graft_mtex")
       sources.HailNativeWrite.writeMatrixTable(mt, s"$out/sample.mt")
       val back = sources.HailNative.readMatrixTable(s, s"$out/sample.mt")
-      back.entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"),
-          col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"),
-          col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      genotypeDump(back.entriesTable.df)
     },
       VcfImportOracleSql),
 
@@ -379,15 +362,7 @@ object SourceGates {
           element_at(col("vep.transcript_consequences"), 1)("gene_id")
             .as("gene_id"))
     },
-      raw"""WITH raw AS (
-        |  SELECT * FROM read_csv(
-        |    '${Fixtures.path("oracle_sample.vcf")}',
-        |    delim='\t', header=false, skip=7,
-        |    columns={'contig':'VARCHAR','position':'INTEGER',
-        |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
-        |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-        |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
-        |      'S4':'VARCHAR','S5':'VARCHAR'}))
+      raw"""WITH $vcfRawCte
         |SELECT contig, position, ref, alts,
         |  'GRCh38' AS assembly_name,
         |  ref || '/' || alts AS allele_string,
@@ -420,15 +395,7 @@ object SourceGates {
           element_at(col("nirvana.variants"), 1)("end").as("vend"))
     },
       // the awk stand-in's annotations are closed-form in the fixture row
-      raw"""WITH raw AS (
-        |  SELECT * FROM read_csv(
-        |    '${Fixtures.path("oracle_sample.vcf")}',
-        |    delim='\t', header=false, skip=7,
-        |    columns={'contig':'VARCHAR','position':'INTEGER',
-        |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
-        |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-        |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
-        |      'S4':'VARCHAR','S5':'VARCHAR'}))
+      raw"""WITH $vcfRawCte
         |SELECT contig, position, ref, alts,
         |  contig || 'q' || CAST(position % 30 AS VARCHAR) AS band,
         |  CAST(position % 7 + 0.5 AS DOUBLE) AS phylop,
@@ -443,7 +410,6 @@ object SourceGates {
     // --- export_vcf → import_vcf roundtrip (io/vcf/ExportVCF.scala):
     // the text writer must reproduce the import projection bit-for-bit ----
     Gate("vcf_write_roundtrip", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Vcf.read(s, vcfFixture)
       val dir = java.nio.file.Files.createTempDirectory("graft_vcf_rt")
       sources.Vcf.write(mt, s"$dir/out")
@@ -457,25 +423,13 @@ object SourceGates {
       java.nio.file.Files.writeString(dir.resolve("all.vcf"),
         header + parts)
       val back = sources.Vcf.read(s, dir.resolve("all.vcf").toString)
-      back.entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"),
-          col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"),
-          col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      genotypeDump(back.entriesTable.df)
     },
       // the text-writer round-trip restores the import projection exactly
       VcfImportOracleSql),
 
     // --- export_plink → import_plink roundtrip (io/plink/) ----------------
     Gate("plink_write_roundtrip", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Plink.read(s,
         Fixtures.path("oracle_plink"))
       val dir = java.nio.file.Files.createTempDirectory("graft_plink_rt")
@@ -492,27 +446,19 @@ object SourceGates {
     // --- export_bgen → import_bgen roundtrip (io/bgen/ExportBGEN.scala):
     // 8-bit probability quantization is lossless through the round-trip ----
     Gate("bgen_export_roundtrip", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Bgen.read(s,
         Fixtures.path("oracle_bgen.bgen"),
         Some(Fixtures.path("oracle_bgen.sample")))
       val dir = java.nio.file.Files.createTempDirectory("graft_bgen_rt")
       sources.Bgen.write(mt, s"$dir/out.bgen")
       val back = sources.Bgen.read(s, s"$dir/out.bgen")
-      back.entriesTable.df.select(
-        col("contig"), col("position"), col("ref"),
-        element_at(col("alt"), 1).as("alt"), col("s"),
-        Calls.nNonRefAlleles(col("GT")).as("gt"),
-        round(element_at(col("GP"), 1), 6).as("paa"),
-        round(element_at(col("GP"), 2), 6).as("pab"),
-        round(element_at(col("GP"), 3), 6).as("pbb"))
+      bgenDump(back)
     },
       BgenImportOracleSql),
 
     // --- export_gen → import_gen roundtrip (io/gen/): 3-decimal text
     // probabilities survive the round-trip exactly -------------------------
     Gate("gen_write_roundtrip", (s, _) => {
-      import graft.functions.Calls
       val mt = sources.Gen.read(s,
         Fixtures.path("oracle_gen.gen"),
         Fixtures.path("oracle_gen.sample"))
@@ -530,24 +476,8 @@ object SourceGates {
     // --- splittable bgzip VCF import (io/compress/BGzipCodec.scala):
     // the BGZF-codec read must reproduce the plain-text import ------------
     Gate("vcf_bgz_import", (s, _) => {
-      import graft.functions.Calls
-      val dir = java.nio.file.Files.createTempDirectory("graft_bgz_gate")
-      val bgz = dir.resolve("f.vcf.bgz").toString
-      val out = new sources.BGzipOutputStream(
-        new java.io.FileOutputStream(bgz), 2048)
-      out.write(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(vcfFixture)))
-      out.close()
-      sources.Vcf.read(s, bgz).entriesTable.df
-        .filter(col("GT").isNotNull)
-        .select(col("contig"), col("position"), col("ref"),
-          concat_ws(",", col("alt")).as("alts"), col("qual"),
-          col("info")("DP").as("info_dp"),
-          element_at(col("info")("AC"), 1).as("info_ac"), col("s"),
-          Calls.allele1(col("GT")).as("a1"),
-          Calls.allele2(col("GT")).as("a2"),
-          Calls.isPhased(col("GT")).as("phased"),
-          col("DP").as("dp"))
+      val bgz = bgzipFixture("graft_bgz_gate")
+      genotypeDump(sources.Vcf.read(s, bgz).entriesTable.df)
     },
       VcfImportOracleSql),
 
@@ -555,14 +485,7 @@ object SourceGates {
     // LoadVCF partial reads): bgzip the fixture, index it, seek-read two
     // regions; only in-region rows come back --------------------------------
     Gate("vcf_region_read", (s, _) => {
-      import graft.functions.Calls
-      val dir = java.nio.file.Files.createTempDirectory("graft_tbx_gate")
-      val bgz = dir.resolve("f.vcf.bgz").toString
-      val out = new sources.BGzipOutputStream(
-        new java.io.FileOutputStream(bgz), 2048)
-      out.write(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(vcfFixture)))
-      out.close()
+      val bgz = bgzipFixture("graft_tbx_gate")
       sources.Tabix.write(s, bgz)
       val mt = sources.Vcf.readRegions(s, bgz,
         Seq(("chr1", 300, 1200), ("chr2", 1, 700)))
@@ -573,8 +496,7 @@ object SourceGates {
           Calls.allele1(col("GT")).as("a1"),
           Calls.allele2(col("GT")).as("a2"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base
+      s"""WITH $sampleVcfCte
         |SELECT contig, position, ref, alts, s, a1, a2
         |FROM q
         |WHERE a1 IS NOT NULL AND (

@@ -1,12 +1,42 @@
 package graft
 package gates
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Support._
 
 /** Streaming gates: each replays a batch table through `Events.replay` and
   * must equal the batch answer. */
 object StreamGates {
+  /** A session frame's `start_ts`/`end_ts` nanosecond bounds truncated to
+    * microseconds: DuckDB reads the TIMESTAMP(NANOS) column at micro
+    * precision, so both engines then agree. */
+  private def toMicros(sessions: DataFrame): DataFrame = sessions
+    .withColumn("start_ts",
+      col("start_ts") - pmod(col("start_ts"), lit(1000L)))
+    .withColumn("end_ts",
+      col("end_ts") - pmod(col("end_ts"), lit(1000L)))
+
+  /** Shared by `stream_sessionize_batch` and `stream_sessionize`: the
+    * batch closed form of 30-minute gap sessions per user. */
+  private def SessionizeOracleSql: String =
+    """WITH e AS (
+      |  SELECT user_id, CAST(epoch_ns(ts) AS BIGINT) AS ts, value
+      |  FROM events),
+      |l AS (
+      |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+      |      OR ts - lag(ts) OVER w > 1800000000000
+      |    THEN 1 ELSE 0 END AS ns
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+      |s AS (
+      |  SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts
+      |    ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM l)
+      |SELECT user_id, min(ts) AS start_ts, max(ts) AS end_ts,
+      |  count(*) AS n_events,
+      |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+      |FROM s GROUP BY user_id, sid""".stripMargin
+
   def all: Seq[Gate] = Seq(
     // --- Structured Streaming: the hourly windowed agg runs as a real
     // readStream -> watermark -> window -> memory-sink query over the
@@ -29,26 +59,7 @@ object StreamGates {
         .orderBy("id_a", "id_b"),
       // the streaming kernel must surface exactly the batch band-bucket
       // candidates (the md5 family is bit-reproducible in DuckDB)
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b)
+      raw"""WITH ${minhashBandCtes("documents", keepShingles = false)}
         |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
         |FROM bands a JOIN bands b
         |  ON a.band = b.band AND a.bsig = b.bsig
@@ -63,26 +74,7 @@ object StreamGates {
         .orderBy("id_a", "id_b"),
       // the in-horizon restriction of stream_minhash_pairs: event time is
       // doc_id seconds, horizon 100 s -> |id_b - id_a| <= 100
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(w)-1),
-        |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
-        |  FROM tok WHERE len(w) >= 3),
-        |mh AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, 8), i ->
-        |      list_min(list_transform(shingles, s ->
-        |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
-        |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
-        |  FROM sh),
-        |bands AS (
-        |  SELECT doc_id, b.band,
-        |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
-        |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
-        |  FROM mh, (SELECT unnest(range(0,4)) AS band) b)
+      raw"""WITH ${minhashBandCtes("documents", keepShingles = false)}
         |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
         |FROM bands a JOIN bands b
         |  ON a.band = b.band AND a.bsig = b.bsig
@@ -98,18 +90,7 @@ object StreamGates {
         "doc_id", "text"),
       // identical to pipe_winnow_pairs: the streaming kernel must surface
       // exactly the batch candidate set (verified), micro-batches or not
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, nt,
-        |    unnest(generate_series(1, greatest(length(nt) - 18, 0))) AS i
-        |  FROM d WHERE length(nt) >= 19),
-        |g AS (SELECT DISTINCT doc_id, substr(nt, i, 19) AS gram FROM pos)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-        |FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2""".stripMargin),
+      WinnowPairsOracleSql),
 
     // --- streaming winnow, live-tailing horizon mode: bounded state via
     // event-time eviction; output = the in-horizon subset of
@@ -121,15 +102,7 @@ object StreamGates {
       // doc_id seconds, horizon 100 s -> pairs with id_b - id_a <= 100
       // (emission filters exactly; eviction is the state bound — see
       // StreamDedup.winnowPairsStreamHorizon's contract)
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
-        |  FROM documents),
-        |pos AS (
-        |  SELECT doc_id, nt,
-        |    unnest(generate_series(1, greatest(length(nt) - 18, 0))) AS i
-        |  FROM d WHERE length(nt) >= 19),
-        |g AS (SELECT DISTINCT doc_id, substr(nt, i, 19) AS gram FROM pos)
+      s"""WITH $gram19Ctes
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
         |FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
         |  AND b.doc_id - a.doc_id <= 100
@@ -141,23 +114,11 @@ object StreamGates {
     Gate("stream_lang_profile", (s, dir) =>
       streaming.StreamText.runLangProfile(s, s"$dir/documents.parquet",
         "doc_id", "text"),
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT text,
         |    string_split_regex(lower(text), ' +') AS toks
         |  FROM documents),
-        |sc AS (
-        |  SELECT *,
-        |    len(list_intersect(toks,
-        |      ['the','and','of','to','is','in','that','with'])) AS s_en,
-        |    len(list_intersect(toks,
-        |      ['der','die','das','und','ist','nicht','ein','mit'])) AS s_de,
-        |    len(list_intersect(toks,
-        |      ['le','la','les','et','est','une','dans','pour'])) AS s_fr,
-        |    len(list_intersect(toks,
-        |      ['el','los','las','es','una','que','por','como'])) AS s_es,
-        |    length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g'))
-        |      AS cjk
-        |  FROM w),
+        |$langScoreCte,
         |langs AS (
         |  SELECT
         |    CASE WHEN cjk > length(text) * 0.2 THEN 'zh'
@@ -246,59 +207,19 @@ object StreamGates {
     // (StreamingSpec proves stream/batch parity; this oracles the batch
     // closed form) ----------------------------------------------------------
     Gate("stream_sessionize_batch", (s, dir) =>
-      streaming.Events.sessionizeBatch(
-        t(s, dir, "events"), gapNs = 1800000000000L)
-        // DuckDB reads the TIMESTAMP(NANOS) column at micro precision;
-        // truncate the ns bounds so both engines agree
-        .withColumn("start_ts",
-          col("start_ts") - pmod(col("start_ts"), lit(1000L)))
-        .withColumn("end_ts",
-          col("end_ts") - pmod(col("end_ts"), lit(1000L))),
-      """WITH e AS (
-        |  SELECT user_id, CAST(epoch_ns(ts) AS BIGINT) AS ts, value
-        |  FROM events),
-        |l AS (
-        |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |      OR ts - lag(ts) OVER w > 1800000000000
-        |    THEN 1 ELSE 0 END AS ns
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM l)
-        |SELECT user_id, min(ts) AS start_ts, max(ts) AS end_ts,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sid""".stripMargin),
+      toMicros(streaming.Events.sessionizeBatch(
+        t(s, dir, "events"), gapNs = 1800000000000L)),
+      SessionizeOracleSql),
 
     // --- TRUE streaming sessionization: the event-time-timeout kernel
     // over a real readStream; a sentinel appended after the data batch
     // advances the watermark so open sessions FLUSH — output equals the
     // batch sessionization over all events (same oracle) -------------------
     Gate("stream_sessionize", (s, dir) =>
-      streaming.Events.runSessionizeStream(s, s"$dir/events.parquet",
-        gapNs = 1800000000000L)
-        .withColumn("start_ts",
-          col("start_ts") - pmod(col("start_ts"), lit(1000L)))
-        .withColumn("end_ts",
-          col("end_ts") - pmod(col("end_ts"), lit(1000L))),
+      toMicros(streaming.Events.runSessionizeStream(s,
+        s"$dir/events.parquet", gapNs = 1800000000000L)),
       // identical to stream_sessionize_batch: the streaming kernel with
       // the watermark flush must reproduce the batch closed form exactly
-      """WITH e AS (
-        |  SELECT user_id, CAST(epoch_ns(ts) AS BIGINT) AS ts, value
-        |  FROM events),
-        |l AS (
-        |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |      OR ts - lag(ts) OVER w > 1800000000000
-        |    THEN 1 ELSE 0 END AS ns
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM l)
-        |SELECT user_id, min(ts) AS start_ts, max(ts) AS end_ts,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sid""".stripMargin)
+      SessionizeOracleSql)
   )
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Calls
+
 /** Helpers shared by more than one gate family (and `SparkEntry.entry`). */
 private[graft] object Support {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
@@ -20,6 +22,172 @@ private[graft] object Support {
 
   /** The committed 5-sample VCF that most genetics gates import. */
   def vcfFixture: String = Fixtures.path("oracle_sample.vcf")
+
+  /** The `vcf_import` projection of a VCF-shaped entries frame: one row
+    * per called genotype, the columns `VcfImportOracleSql` computes. */
+  def genotypeDump(entries: DataFrame): DataFrame = entries
+    .filter(col("GT").isNotNull)
+    .select(col("contig"), col("position"), col("ref"),
+      concat_ws(",", col("alt")).as("alts"),
+      col("qual"),
+      col("info")("DP").as("info_dp"),
+      element_at(col("info")("AC"), 1).as("info_ac"),
+      col("s"),
+      Calls.allele1(col("GT")).as("a1"),
+      Calls.allele2(col("GT")).as("a2"),
+      Calls.isPhased(col("GT")).as("phased"),
+      col("DP").as("dp"))
+
+  /** `vcfParseCte` over the 5-sample fixture `vcfFixture`. */
+  def sampleVcfCte: String =
+    vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
+
+  /** Oracle CTEs over `sampleVcfCte`: `d` holds each genotype's dosage,
+    * `c` its mean-imputed, centred value `xc`, and `v` that value scaled
+    * to a unit-norm vector per variant (`nr` holds the norms). */
+  def unitDoseCtes: String =
+    s"""WITH $sampleVcfCte,
+      |d AS (SELECT contig, position, s, CAST(a1 + a2 AS DOUBLE) AS dose
+      |  FROM q),
+      |mu AS (SELECT contig, position, avg(dose) AS mu FROM d
+      |  GROUP BY 1, 2),
+      |c AS (
+      |  SELECT d.contig, d.position, d.s,
+      |    coalesce(d.dose, mu.mu) - mu.mu AS xc
+      |  FROM d JOIN mu USING (contig, position)),
+      |nr AS (SELECT contig, position, sqrt(sum(xc * xc)) AS nrm FROM c
+      |  GROUP BY 1, 2),
+      |v AS (SELECT c.contig, c.position, c.s, c.xc / nr.nrm AS v
+      |  FROM c JOIN nr USING (contig, position))""".stripMargin
+
+  /** MinHash oracle CTEs over `from`'s (doc_id, text): `tok` holds the
+    * word lists, `sh` the distinct word 3-shingles, `mh` the 8 md5
+    * minhashes (beside the shingles when `keepShingles`) and `bands` the
+    * md5 of each 2-row band. */
+  def minhashBandCtes(from: String, keepShingles: Boolean): String = {
+    val sh = if (keepShingles) " shingles," else ""
+    s"""tok AS (
+      |  SELECT doc_id, string_split_regex(lower(text), ' +') AS w
+      |  FROM $from),
+      |sh AS (
+      |  SELECT doc_id,
+      |    list_distinct(list_transform(range(1, len(w)-1),
+      |      j -> concat(w[j], ' ', w[j+1], ' ', w[j+2]))) AS shingles
+      |  FROM tok WHERE len(w) >= 3),
+      |mh AS (
+      |  SELECT doc_id,$sh
+      |    list_transform(range(0, 8), i ->
+      |      list_min(list_transform(shingles, s ->
+      |        CAST(('0x' || substr(md5(concat(s, '|', i // 4)),
+      |          1 + 8 * (i % 4), 8)) AS BIGINT)))) AS sig
+      |  FROM sh),
+      |bands AS (
+      |  SELECT doc_id, b.band,
+      |    md5(concat(CAST(sig[b.band*2+1] AS VARCHAR), '_',
+      |      CAST(sig[b.band*2+2] AS VARCHAR))) AS bsig
+      |  FROM mh, (SELECT unnest(range(0,4)) AS band) b)""".stripMargin
+  }
+
+  /** `minhashBandCtes` and `cand`, the distinct pairs sharing a band. */
+  def minhashCandidateCtes(from: String, keepShingles: Boolean): String =
+    s"""${minhashBandCtes(from, keepShingles)},
+      |cand AS (
+      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM bands a JOIN bands b
+      |    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** `minhashCandidateCtes` and the recursive `reach`: every doc reachable
+    * from each candidate doc over the undirected pair `edges`. */
+  def minhashClusterCtes(from: String, keepShingles: Boolean): String =
+    s"""${minhashCandidateCtes(from, keepShingles)},
+      |edges AS (
+      |  SELECT id_a AS a, id_b AS b FROM cand
+      |  UNION SELECT id_b, id_a FROM cand),
+      |reach AS (
+      |  SELECT a AS node, a AS r FROM edges
+      |  UNION
+      |  SELECT reach.node, e.b FROM reach JOIN edges e ON reach.r = e.a)""".stripMargin
+
+  /** Oracle CTEs `d`, `pos`, `g`: each document's distinct 19-char runs
+    * of its lowercased alphanumerics (19 = k + w - 1 of the Spark side's
+    * winnowing parameters). */
+  def gram19Ctes: String =
+    """d AS (
+      |  SELECT doc_id,
+      |    regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nt
+      |  FROM documents),
+      |pos AS (
+      |  SELECT doc_id, nt,
+      |    unnest(generate_series(1, greatest(length(nt) - 18, 0))) AS i
+      |  FROM d WHERE length(nt) >= 19),
+      |g AS (SELECT DISTINCT doc_id, substr(nt, i, 19) AS gram FROM pos)""".stripMargin
+
+  /** Shared by `pipe_winnow_pairs` and `stream_winnow_pairs`: the
+    * independent all-pairs join on shared 19-char runs. */
+  def WinnowPairsOracleSql: String =
+    s"""WITH $gram19Ctes
+      |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+      |FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
+      |GROUP BY 1, 2""".stripMargin
+
+  /** Language-id oracle CTE `sc`: `w`'s rows with each language's
+    * stopword hits in `toks` (`s_en`, `s_de`, `s_fr`, `s_es`) and the
+    * CJK character count `cjk` of `text`. */
+  def langScoreCte: String =
+    """sc AS (
+      |  SELECT *,
+      |    len(list_intersect(toks,
+      |      ['the','and','of','to','is','in','that','with'])) AS s_en,
+      |    len(list_intersect(toks,
+      |      ['der','die','das','und','ist','nicht','ein','mit'])) AS s_de,
+      |    len(list_intersect(toks,
+      |      ['le','la','les','et','est','une','dans','pour'])) AS s_fr,
+      |    len(list_intersect(toks,
+      |      ['el','los','las','es','una','que','por','como'])) AS s_es,
+      |    length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g'))
+      |      AS cjk
+      |  FROM w)""".stripMargin
+
+  /** Exact k-means oracle: `SELECT <cols>` ranking each vector of `e`
+    * (integer units `v`) against the `centroids` states (unit sums `s`,
+    * counts `n`) by exact rational squared distance, ties to the lowest
+    * cluster `c`, keeping the nearest (`rk` = 1). `pad` is the indent of
+    * the SELECT line; the text ends before the subquery's alias. */
+  def nearestCentroid(cols: String, centroids: String, pad: String)
+      : String =
+    s"""SELECT $cols,
+      |$pad  row_number() OVER (PARTITION BY e.id ORDER BY
+      |$pad    CAST(list_reduce(list_transform(range(1, 65),
+      |$pad      d -> (e.v[d]*i.n - i.s[d])*(e.v[d]*i.n - i.s[d])),
+      |$pad      (a, b) -> a + b) AS DOUBLE) / (i.n*i.n), i.c) AS rk
+      |${pad}FROM e, $centroids i) WHERE rk = 1""".stripMargin
+
+  /** Exact k-means oracle CTEs over `e` (vector `id`, integer units `v`):
+    * `init` seeds `k` centroid states from the lowest ids, then iteration
+    * `it` assigns (`a<it>`), sums the members (`m<it>`) and updates the
+    * states (`c<it>`); `c<iters>` holds the final centroids. */
+  def kmeansCtes(k: Int, iters: Int): String = {
+    val steps = (1 to iters).map { it =>
+      val prev = if (it == 1) "init" else s"c${it - 1}"
+      s"""a$it AS (
+        |  SELECT id, v, c FROM (
+        |    ${nearestCentroid("e.id, e.v, i.c", prev, "    ")}),
+        |m$it AS (
+        |  SELECT c, list(sd ORDER BY d) AS s, max(n) AS n FROM (
+        |    SELECT a$it.c, t.d, CAST(sum(a$it.v[t.d]) AS BIGINT) AS sd,
+        |      CAST(count(*) AS BIGINT) AS n
+        |    FROM a$it, unnest(range(1, 65)) AS t(d)
+        |    GROUP BY a$it.c, t.d) GROUP BY c),
+        |c$it AS (
+        |  SELECT i.c, COALESCE(m.s, i.s) AS s, COALESCE(m.n, i.n) AS n
+        |  FROM $prev i LEFT JOIN m$it m ON i.c = m.c)""".stripMargin
+    }
+    s"""init AS (
+      |  SELECT row_number() OVER (ORDER BY id) - 1 AS c, v AS s,
+      |    CAST(1 AS BIGINT) AS n
+      |  FROM (SELECT id, v FROM e ORDER BY id LIMIT $k)),
+      |${steps.mkString(",\n")}""".stripMargin
+  }
 
   /** DuckDB CTE parsing a committed VCF fixture into one row per
     * (variant, sample) with gt/a1/a2/dp — shared by the genetics oracles. */
@@ -124,17 +292,22 @@ private[graft] object Support {
       |  count(DISTINCT h) AS n_distinct
       |FROM cg JOIN bg USING (h) GROUP BY doc_id""".stripMargin
 
-  /** Shared oracle for `vcf_import` and `matrix_write_read`. */
+  /** DuckDB CTE `raw`: the text columns of the 5-sample VCF fixture. */
+  def vcfRawCte: String =
+    raw"""raw AS (
+      |  SELECT * FROM read_csv(
+      |    '${Fixtures.path("oracle_sample.vcf")}',
+      |    delim='\t', header=false, skip=7,
+      |    columns={'contig':'VARCHAR','position':'INTEGER',
+      |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
+      |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
+      |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
+      |      'S4':'VARCHAR','S5':'VARCHAR'}))""".stripMargin
+
+  /** Shared oracle for `vcf_import` and every gate that must restore its
+    * projection (`genotypeDump`). */
   def VcfImportOracleSql: String =
-      raw"""WITH raw AS (
-        |  SELECT * FROM read_csv(
-        |    '${Fixtures.path("oracle_sample.vcf")}',
-        |    delim='\t', header=false, skip=7,
-        |    columns={'contig':'VARCHAR','position':'INTEGER',
-        |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
-        |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-        |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
-        |      'S4':'VARCHAR','S5':'VARCHAR'})),
+      raw"""WITH $vcfRawCte,
         |unp AS (
         |  SELECT contig, position, ref, alts, qual, info, 'S1' AS s, S1 AS e
         |    FROM raw

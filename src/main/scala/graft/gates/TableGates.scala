@@ -54,6 +54,33 @@ object TableGates {
     (clicks, purch)
   }
 
+  /** As-of oracle CTEs: the `c` clicks and `p` purchases (one per user
+    * and nanosecond time `p_tns`, the highest event id) of the events. */
+  private def asofCtes: String =
+    """e AS (
+      |  SELECT event_id, user_id, epoch_ns(ts) AS tns, event_type,
+      |    value
+      |  FROM events),
+      |c AS (SELECT event_id, user_id, tns FROM e
+      |      WHERE event_type = 'click'),
+      |p0 AS (SELECT user_id, tns AS p_tns, event_id AS p_event_id,
+      |         value AS p_value
+      |       FROM e WHERE event_type = 'purchase'),
+      |p AS (SELECT user_id, p_tns, p_event_id, p_value FROM (
+      |    SELECT p0.*, row_number() OVER (
+      |      PARTITION BY user_id, p_tns
+      |      ORDER BY p_event_id DESC) AS rn
+      |    FROM p0) WHERE rn = 1)""".stripMargin
+
+  /** As-of oracle CTE `j`: each click beside the purchase DuckDB's ASOF
+    * join picks for it, with `cmp` comparing click and purchase times. */
+  private def asofJoinCte(cmp: String): String =
+    s"""j AS (
+      |  SELECT c.event_id, c.user_id, c.tns,
+      |    p.p_event_id, p.p_tns, p.p_value
+      |  FROM c ASOF LEFT JOIN p
+      |    ON c.user_id = p.user_id AND c.tns $cmp p.p_tns)""".stripMargin
+
   def all: Seq[Gate] = Seq(
     // --- TableFilter (`TableIR.scala:2143`) --------------------------------
     Gate("table_filter", (s, dir) =>
@@ -497,8 +524,7 @@ object TableGates {
         .filterLocusIntervals(Seq((("chr1", 1500), ("chr2", 1000))))
         .df.select(col("contig"), col("position"), col("ref"), col("qual"))
     }, {
-      val base = vcfParseCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
-      s"""WITH $base
+      s"""WITH $sampleVcfCte
         |SELECT DISTINCT contig, position, ref, qual
         |FROM raw
         |WHERE (contig = 'chr1' AND position >= 1500)
@@ -602,25 +628,8 @@ object TableGates {
         "tns", "p_tns", Seq("p_event_id", "p_value"),
         toleranceNs = Some(3600L * 1000000000L))
     },
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS tns, event_type,
-        |    value
-        |  FROM events),
-        |c AS (SELECT event_id, user_id, tns FROM e
-        |      WHERE event_type = 'click'),
-        |p0 AS (SELECT user_id, tns AS p_tns, event_id AS p_event_id,
-        |         value AS p_value
-        |       FROM e WHERE event_type = 'purchase'),
-        |p AS (SELECT user_id, p_tns, p_event_id, p_value FROM (
-        |    SELECT p0.*, row_number() OVER (
-        |      PARTITION BY user_id, p_tns
-        |      ORDER BY p_event_id DESC) AS rn
-        |    FROM p0) WHERE rn = 1),
-        |j AS (
-        |  SELECT c.event_id, c.user_id, c.tns,
-        |    p.p_event_id, p.p_tns, p.p_value
-        |  FROM c ASOF LEFT JOIN p
-        |    ON c.user_id = p.user_id AND c.tns >= p.p_tns)
+      s"""WITH $asofCtes,
+        |${asofJoinCte(">=")}
         |SELECT event_id, user_id, tns,
         |  CASE WHEN tns - p_tns <= 3600000000000
         |    THEN p_event_id END AS p_event_id,
@@ -637,25 +646,8 @@ object TableGates {
         "tns", "p_tns", Seq("p_event_id", "p_value"),
         toleranceNs = Some(3600L * 1000000000L))
     },
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS tns, event_type,
-        |    value
-        |  FROM events),
-        |c AS (SELECT event_id, user_id, tns FROM e
-        |      WHERE event_type = 'click'),
-        |p0 AS (SELECT user_id, tns AS p_tns, event_id AS p_event_id,
-        |         value AS p_value
-        |       FROM e WHERE event_type = 'purchase'),
-        |p AS (SELECT user_id, p_tns, p_event_id, p_value FROM (
-        |    SELECT p0.*, row_number() OVER (
-        |      PARTITION BY user_id, p_tns
-        |      ORDER BY p_event_id DESC) AS rn
-        |    FROM p0) WHERE rn = 1),
-        |j AS (
-        |  SELECT c.event_id, c.user_id, c.tns,
-        |    p.p_event_id, p.p_tns, p.p_value
-        |  FROM c ASOF LEFT JOIN p
-        |    ON c.user_id = p.user_id AND c.tns <= p.p_tns)
+      s"""WITH $asofCtes,
+        |${asofJoinCte("<=")}
         |SELECT event_id, user_id, tns,
         |  CASE WHEN p_tns - tns <= 3600000000000
         |    THEN p_event_id END AS p_event_id,
@@ -672,20 +664,7 @@ object TableGates {
         "tns", "p_tns", Seq("p_event_id", "p_value"),
         toleranceNs = Some(3600L * 1000000000L))
     },
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS tns, event_type,
-        |    value
-        |  FROM events),
-        |c AS (SELECT event_id, user_id, tns FROM e
-        |      WHERE event_type = 'click'),
-        |p0 AS (SELECT user_id, tns AS p_tns, event_id AS p_event_id,
-        |         value AS p_value
-        |       FROM e WHERE event_type = 'purchase'),
-        |p AS (SELECT user_id, p_tns, p_event_id, p_value FROM (
-        |    SELECT p0.*, row_number() OVER (
-        |      PARTITION BY user_id, p_tns
-        |      ORDER BY p_event_id DESC) AS rn
-        |    FROM p0) WHERE rn = 1),
+      s"""WITH $asofCtes,
         |b AS (
         |  SELECT c.event_id, c.user_id, c.tns,
         |    CASE WHEN c.tns - p.p_tns <= 3600000000000

@@ -287,14 +287,6 @@ final case class MatrixTable(
       .drop(table.key.map(k => s"__rk_$k"): _*))
   }
 
-  /** Interval-keyed MatrixAnnotateRowsTable: annotate each row with the
-    * (broadcast) interval containing `point` — [lo, hi) semantics, rows
-    * with no containing interval keep null annotations (left join). */
-  def annotateRowsIntervalTable(intervals: DataFrame, point: Column,
-      lo: Column, hi: Column): MatrixTable =
-    copy(rows = rows.join(broadcast(intervals),
-      point >= lo && point < hi, "left"))
-
   /** MatrixAnnotateColsTable (`MatrixIR.scala:704`): join col fields
     * against a keyed table — cols live on the driver, so this is a local
     * hash lookup over the collected (small) table. */
@@ -344,12 +336,6 @@ final case class MatrixTable(
   }
 
   // ---- aggregation --------------------------------------------------------
-
-  /** Per-row aggregation over entries (entry-scoped agg in annotate_rows,
-    * e.g. call_rate) — a Catalyst `aggregate` fold over the array. */
-  def aggregateEntriesPerRow(name: String, zero: Column,
-      seq: (Column, Column) => Column): MatrixTable =
-    annotateRows(name -> aggregate(entries, zero, seq))
 
   /** MatrixAggregateRowsByKey (`MatrixIR.scala:533`): group rows by a new
     * key, aggregating entries element-wise (the reference's `AggElements`

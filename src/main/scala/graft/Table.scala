@@ -54,8 +54,6 @@ final case class Table(
     copy(key = newKey, keySorted = stillSorted)
   }
 
-  def unkey: Table = copy(key = Nil, keySorted = false)
-
   /** add_index (reference `table.py` `add_index` — a scan count over key
     * order): global 0-based contiguous row index. Two-phase distributed
     * scan (per-partition partials + broadcast prefix offsets, one lazy
@@ -665,16 +663,6 @@ object Table {
     val k = col(t.key.head)
     val hiPred = if (inclusiveHi) k <= lit(hi) else k < lit(hi)
     t.copy(df = t.df.filter(k >= lit(lo) && hiPred))
-  }
-
-  /** Single-key point lookup. */
-  def queryTablePoint(spark: SparkSession, path: String, key: Any)
-      : Table = {
-    val t = readPruned(spark, path) { (flo, fhi) =>
-      NativeFormat.cmp(flo, key) <= 0 && NativeFormat.cmp(fhi, key) >= 0
-    }
-    require(t.key.nonEmpty, s"$path has no key")
-    t.copy(df = t.df.filter(col(t.key.head) === lit(key)))
   }
 
   /** Native read keeping only files whose manifest key range passes

@@ -48,14 +48,6 @@ object Calls {
     ploidy(c) === 2 && allele1(c) =!= allele2(c)
   def isHomVar(c: Column): Column =
     allele1(c) > 0 && allele1(c) === allele2(c)
-  def isNonRef(c: Column): Column = allele1(c) > 0 || nonRefA2(c) > 0
-  def isHetNonRef(c: Column): Column =
-    isHet(c) && allele1(c) > 0 && allele2(c) > 0
-  def isHetRef(c: Column): Column =
-    isHet(c) && (allele1(c) === 0 || allele2(c) === 0)
-
-  private def nonRefA2(c: Column): Column =
-    when(ploidy(c) === 2, allele2(c)).otherwise(0)
 
   /** Number of non-reference alleles (0, 1 or 2). */
   def nNonRefAlleles(c: Column): Column =
@@ -90,14 +82,7 @@ object Calls {
         .otherwise(lit(HaploidA2)),
       isPhased(c)))
 
-  def containsAllele(c: Column, a: Int): Column =
-    allele1(c) === a || (ploidy(c) === 2 && allele2(c) === a)
-
   // ---- genotype-probability helpers (GenotypeFunctions.scala) -------------
-
-  /** Expected alt-allele dosage from genotype probabilities [pAA,pAa,paa]. */
-  def gpDosage(gp: Column): Column =
-    element_at(gp, 2) + element_at(gp, 3) * 2.0
 
   /** Phred-scaled likelihoods -> normalized probabilities. */
   def plToGp(pl: Column): Column = {

@@ -33,20 +33,4 @@ object Iterate {
       }
       p.toSeq
     }
-
-  /** Scalar convenience: one-dimensional fixpoint. */
-  def fixpoint1(step: Double => Double, tol: Double, maxIter: Int)
-      : UserDefinedFunction =
-    udf { (init: Double) =>
-      var p = init
-      var it = 0
-      var continue = true
-      while (continue && it < maxIter) {
-        val n = step(p)
-        continue = math.abs(n - p) > tol
-        p = n
-        it += 1
-      }
-      p
-    }
 }

@@ -21,11 +21,6 @@ final case class ReferenceGenome(
     // PAR intervals as (contig, start, end)
     par: Seq[(String, Long, Long)] = Nil) {
 
-  def contigIndex(contig: Column): Column =
-    contigs.zipWithIndex.foldLeft(lit(-1)) { case (acc, (c, i)) =>
-      when(contig === c, i).otherwise(acc)
-    }
-
   /** Cumulative offset of each contig in the linearized genome. */
   private lazy val offsets: Map[String, Long] =
     contigs.scanLeft(0L)((acc, c) => acc + lengths(c)).zip(contigs)
@@ -89,8 +84,6 @@ object Loci {
     inX(l) && inPar(l)
   def inXNonPar(l: Column)(implicit rg: ReferenceGenome): Column =
     inX(l) && !inPar(l)
-  def inYPar(l: Column)(implicit rg: ReferenceGenome): Column =
-    inY(l) && inPar(l)
   def inYNonPar(l: Column)(implicit rg: ReferenceGenome): Column =
     inY(l) && !inPar(l)
 
@@ -126,15 +119,11 @@ object Loci {
     length(ref) < length(alt) && substring(alt, 1, 1) === substring(ref, 1, 1)
   def isDeletion(ref: Column, alt: Column): Column =
     length(ref) > length(alt) && substring(ref, 1, 1) === substring(alt, 1, 1)
-  def isIndel(ref: Column, alt: Column): Column =
-    isInsertion(ref, alt) || isDeletion(ref, alt)
 
   def isTransition(ref: Column, alt: Column): Column =
     isSnp(ref, alt) && (
       (ref === "A" && alt === "G") || (ref === "G" && alt === "A") ||
       (ref === "C" && alt === "T") || (ref === "T" && alt === "C"))
-  def isTransversion(ref: Column, alt: Column): Column =
-    isSnp(ref, alt) && !isTransition(ref, alt)
 
   def alleleType(ref: Column, alt: Column): Column =
     when(isSnp(ref, alt),

@@ -20,17 +20,12 @@ object NdArrays {
 
   def shape(nd: Column): Column = nd("shape")
   def data(nd: Column): Column = nd("data")
-  def nElements(nd: Column): Column =
-    aggregate(nd("shape"), lit(1L), (a, v) => a * v)
 
   /** 2-D element reference (row-major). */
   def ref2(nd: Column, i: Column, j: Column): Column =
     element_at(nd("data"),
       (i * element_at(nd("shape"), 2) + j + 1).cast("int"))
 
-  /** Element-wise map/zip preserve shape. */
-  def map1(nd: Column, f: Column => Column): Column =
-    struct(nd("shape").as("shape"), transform(nd("data"), f).as("data"))
   def map2(a: Column, b: Column, f: (Column, Column) => Column): Column =
     struct(a("shape").as("shape"),
       zip_with(a("data"), b("data"), f).as("data"))

@@ -24,17 +24,8 @@ object Rand {
   def runifStream(seed: Long, i: Int, keys: Column*): Column =
     runif(seed, (lit(i) +: keys): _*)
 
-  def rbool(seed: Long, p: Double, keys: Column*): Column =
-    runif(seed, keys: _*) < p
-
   def rint32(seed: Long, n: Int, keys: Column*): Column =
     (runif(seed, keys: _*) * n).cast("int")
-
-  def rint64(seed: Long, n: Long, keys: Column*): Column =
-    (runif(seed, keys: _*) * n).cast("long")
-
-  def runifRange(seed: Long, lo: Double, hi: Double, keys: Column*): Column =
-    runif(seed, keys: _*) * (hi - lo) + lo
 
   /** Standard normal via Box–Muller over two hash streams — pure
     * expressions, no UDF. */
@@ -46,10 +37,6 @@ object Rand {
 
   def rnorm(seed: Long, mean: Double, sd: Double, keys: Column*): Column =
     rnorm(seed, keys: _*) * sd + mean
-
-  /** Exponential via inverse CDF. */
-  def rexp(seed: Long, rate: Double, keys: Column*): Column =
-    -log(greatest(lit(1.0) - runif(seed, keys: _*), lit(1e-300))) / rate
 
   /** Beta via Jöhnk's rejection algorithm (valid for a, b <= 1): draw
     * (x, y) = (u1^(1/a), u2^(1/b)); accept x/(x+y) when x+y <= 1, else
@@ -97,8 +84,4 @@ object Rand {
     }.tail
     prods.map(p => (p > l).cast("int")).reduce(_ + _)
   }
-
-  /** Deterministic shuffle key: sort by this to get a seeded permutation. */
-  def shuffleKey(seed: Long, keys: Column*): Column = xxhash64(
-    (lit(seed) +: keys): _*)
 }

@@ -23,28 +23,11 @@ object StatTests {
       .ChiSquaredDistribution(df).cumulativeProbability(x)
   }
 
-  val pnorm: UserDefinedFunction = udf { (x: Double) =>
-    new org.apache.commons.math3.distribution.NormalDistribution()
-      .cumulativeProbability(x)
-  }
-
-  val qnorm: UserDefinedFunction = udf { (p: Double) =>
-    new org.apache.commons.math3.distribution.NormalDistribution()
-      .inverseCumulativeProbability(p)
-  }
-
   /** Student-t two-sided p-value for a t statistic with df dof. */
   val pT: UserDefinedFunction = udf { (t: Double, df: Double) =>
     if (t.isNaN) Double.NaN
     else 2.0 * (1.0 - new org.apache.commons.math3.distribution
       .TDistribution(df).cumulativeProbability(math.abs(t)))
-  }
-
-  /** F-distribution upper tail (for linear regression F stats). */
-  val pF: UserDefinedFunction = udf { (f: Double, d1: Double, d2: Double) =>
-    if (f.isNaN || f < 0) Double.NaN
-    else 1.0 - new org.apache.commons.math3.distribution
-      .FDistribution(d1, d2).cumulativeProbability(f)
   }
 
   /** 2x2 chi-squared test statistic (no continuity correction) as a pure
@@ -201,15 +184,6 @@ object StatTests {
   val hweExact: UserDefinedFunction =
     udf { (nHomRef: Long, nHet: Long, nHomVar: Long, oneSided: Boolean) =>
       hweExactPair(nHomRef, nHet, nHomVar, oneSided)
-    }
-
-  /** Binomial test p-value (two-sided) via commons-math. */
-  val binomTest: UserDefinedFunction =
-    udf { (successes: Int, n: Int, p: Double) =>
-      new org.apache.commons.math3.stat.inference.BinomialTest()
-        .binomialTest(n, successes, p,
-          org.apache.commons.math3.stat.inference.AlternativeHypothesis
-            .TWO_SIDED)
     }
 
   // ---- density / quantile tail (reference functions/MathFunctions.scala:

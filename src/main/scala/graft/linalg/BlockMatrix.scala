@@ -26,9 +26,6 @@ final case class BlockMatrix(m: MlBlockMatrix) {
   def nCols: Long = m.numCols()
   def blockSize: Int = m.rowsPerBlock
 
-  private def bdm(x: org.apache.spark.mllib.linalg.Matrix): BDM[Double] =
-    new BDM(x.numRows, x.numCols, x.toArray)
-
   /** Element-wise map over stored blocks (dropped blocks stay dropped —
     * apply only zero-preserving fns to sparsified matrices, as in the
     * reference). */

@@ -250,11 +250,6 @@ object Aggs {
     implicit val e: Encoder[Double] = Encoders.scalaDouble
     udaf(foldAgg(z, seq, comb)).apply(c)
   }
-  def foldLong(c: Column, z: Long, seq: (Long, Long) => Long,
-      comb: (Long, Long) => Long): Column = {
-    implicit val e: Encoder[Long] = Encoders.scalaLong
-    udaf(foldAgg(z, seq, comb)).apply(c)
-  }
 
   // ---- approx_cdf: KLL-style mergeable quantile sketch --------------------
 

@@ -71,13 +71,4 @@ object Tidyr {
     }
     t.copy(df = added.drop(field))
   }
-
-  /** separate at a character position: prefix / remainder. */
-  def separateAt(t: Table, field: String, into: (String, String),
-      at: Int): Table = {
-    val added = t.df
-      .withColumn(into._1, substring(col(field), 1, at))
-      .withColumn(into._2, substring(col(field), at + 1, 1000000))
-    t.copy(df = added.drop(field))
-  }
 }

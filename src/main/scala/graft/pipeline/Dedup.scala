@@ -356,31 +356,6 @@ object Dedup {
       .select("id_a", "id_b", "shared", "overlap")
   }
 
-  /** Exact-duplicate subset of `winnowPairs`, verified: candidates whose
-    * smaller fingerprint set is fully contained (overlap == 1.0) and
-    * whose raw texts agree byte-for-byte. The winnow stage carries the
-    * RECALL obligation — identical texts always fingerprint identically
-    * and therefore must surface as full-overlap candidates, so a
-    * plumbing bug (bucketing, caps, joins) undershoots the exact-dup
-    * oracle — while the md5 verify join restores precision against the
-    * (possible) near-dup pair whose textual difference falls entirely
-    * between selected fingerprints. Same oracle-ability contract as
-    * `minhashExactPairs`. Scope limits of the recall obligation: docs
-    * whose text normalizes to EMPTY (no alphanumerics) carry no
-    * fingerprints and never pair here — run `exact` first for those —
-    * and a fingerprint bucket past `maxBucketSize` is dropped like
-    * every LSH pipeline's. */
-  def winnowExactPairs(df: DataFrame, id: String, text: String,
-      k: Int = 12, w: Int = 8, maxBucketSize: Int = 10000): DataFrame = {
-    val h = df.select(col(id).as("doc"), md5(col(text)).as("__h"))
-    winnowPairs(df, id, text, k, w, minShared = 1, maxBucketSize)
-      .filter(col("overlap") === 1.0)
-      .join(h.select(col("doc").as("id_a"), col("__h").as("__ha")), "id_a")
-      .join(h.select(col("doc").as("id_b"), col("__h").as("__hb")), "id_b")
-      .filter(col("__ha") === col("__hb"))
-      .select("id_a", "id_b", "shared")
-  }
-
   /** Substring-copy pairs via winnowing, verified exactly: candidate
     * pairs come from shared winnowing fingerprints (`winnowPairs`,
     * minShared = 1), then each candidate is verified by intersecting the
@@ -1652,22 +1627,6 @@ object Dedup {
     docs.join(clusters.withColumnRenamed("node", id), Seq(id), "left")
       .filter(col("cluster").isNull || col("cluster") === col(id))
       .drop("cluster")
-
-  def jaccardVerify(pairs: DataFrame, docs: DataFrame, id: String,
-      text: String, shingleSize: Int = 3): DataFrame = {
-    val sh = docs.select(col(id).as("doc"),
-      Text.shingles(col(text), shingleSize).as("sh"))
-    val iv = graft.functions.TextKernels
-      .intersectCount(col("sh_a"), col("sh_b"))
-    pairs
-      .join(sh.select(col("doc").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("__iv", iv)
-      .withColumn("jaccard", col("__iv").cast("double") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("__iv"))
-          .cast("double"))
-      .drop("sh_a", "sh_b", "__iv")
-  }
 }
 
 /** The integer formulas and the prefix-build pipeline of

@@ -23,13 +23,6 @@ import org.apache.spark.sql.types._
   * pipe without touching the plumbing. */
 object Multimodal {
 
-  /** Metadata schema carried alongside every binary payload. */
-  val metaSchema: StructType = StructType(Seq(
-    StructField("modality", StringType),   // "image" | "audio" | "video"
-    StructField("format", StringType),     // e.g. "png", "wav"
-    StructField("byte_len", LongType),
-    StructField("content_md5", StringType)))
-
   /** Decoded-feature schema produced by the (stubbed) decoder. */
   val decodedSchema: StructType = StructType(Seq(
     StructField("width", IntegerType),

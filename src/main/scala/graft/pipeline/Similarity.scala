@@ -44,20 +44,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Batched brute force: every query row against every data row via a
-    * broadcast of the (small) query set, grouped top-k per query. */
-  def bruteForceTopKBatch(data: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, qIdCol: String, qVecCol: String,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val joined = data.crossJoin(broadcast(queries))
-      .withColumn("cos", cosine(col(vecCol), col(qVecCol)))
-    val w = Window.partitionBy(col(qIdCol))
-      .orderBy(col("cos").desc, col(idCol).asc)
-    joined.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col(qIdCol), col(idCol), col("cos"), col("rk"))
-  }
-
   /** Deterministic random hyperplanes for sign-bit LSH (driver-generated
     * from `seed`, shipped as literals — constant-folded by Catalyst). */
   def hyperplanes(dim: Int, nPlanes: Int, seed: Long): Seq[Seq[Double]] = {

@@ -948,7 +948,6 @@ object HailNative {
     val entrySchema = sparkType(entriesSpec.vType).asInstanceOf[StructType]
     require(entrySchema.fields.length == 1,
       s"unexpected entries row type: $entrySchema")
-    val entriesField = entrySchema.fields.head.name
     val joined = StructType(rowSchema.fields :+
       StructField(MatrixTable.EntriesField,
         entrySchema.fields.head.dataType))

@@ -31,13 +31,6 @@ object TextTable {
   def grep(spark: SparkSession, regex: String, path: String): DataFrame =
     importLines(spark, path).df.filter(col("text").rlike(regex))
 
-  /** import_csv (reference `impex.py:3392`): comma-separated
-    * `importTable` (Spark's csv reader already handles quoting). */
-  def importCsv(spark: SparkSession, path: String,
-      impute: Boolean = false, noHeader: Boolean = false): Table =
-    importTable(spark, path, sep = ",", impute = impute,
-      noHeader = noHeader)
-
   def importTable(spark: SparkSession, path: String, sep: String = "\t",
       impute: Boolean = false, noHeader: Boolean = false): Table = {
     val base = spark.read

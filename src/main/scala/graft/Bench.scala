@@ -27,6 +27,32 @@ import org.apache.spark.sql.SparkSession
   *    whose MEDIAN is the sentinel is visibly broken rather than silently
   *    absent. */
 object Bench {
+  /** The gates the one-line JSON reports by name (one per operator family
+    * plus every historically expensive one); GateRegistrySpec checks that
+    * each is a registered gate. */
+  val headline: Set[String] = Set(
+    "table_join_inner", "table_order_by", "table_scan_sum",
+    "table_aggregate_by_key", "table_filter", "table_distinct",
+    "table_interval_join", "table_multi_way_zip_join", "query_table",
+    "vcf_import", "bgen_import", "plink_import", "split_multi",
+    "linreg_rows", "logistic_rows", "lmm_rows", "geno_ld_matrix",
+    "geno_king", "geno_ibd", "geno_mendel_errors", "geno_tdt",
+    "geno_de_novo", "geno_pc_relate", "geno_skat", "geno_concordance",
+    "qc_variant_qc", "qc_sample_qc", "linalg_pca", "linalg_grm",
+    "matrix_entries_table", "matrix_aggregate_rows_by_key",
+    "matrix_filter_entries_agg", "matrix_write_read",
+    "matrix_annotate_rows_table", "pipe_minhash_pairs",
+    "pipe_simhash_pairs", "pipe_embed_dedup", "pipe_neardup_clusters",
+    "pipe_ann_topk", "pipe_ann_lsh", "pipe_text_stats",
+    "pipe_dedup_exact", "stream_hourly_agg", "vds_combine_densify",
+    "rand_seeded", "pipe_knn_join", "pipe_image_dedup", "geno_ld_prune",
+    "table_add_index", "pipe_minhash_fast",
+    "pipe_quality_filters",
+    "geno_simulate_mating", "pipe_winnow_pairs", "pipe_ngram_jaccard",
+    "pipe_corpus_clean", "stream_winnow_pairs",
+    "pipe_semdedup", "pipe_lm_score", "pipe_bpe_encode",
+    "pipe_contamination_docs", "pipe_fuzzy_best_match")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
@@ -79,28 +105,6 @@ object Bench {
     val burnin = Array.fill(queries.length)(Double.NaN)
     @volatile var passesDone = 0
     @volatile var printed = false
-    val headline = Set(
-      "table_join_inner", "table_order_by", "table_scan_sum",
-      "table_aggregate_by_key", "table_filter", "table_distinct",
-      "table_interval_join", "table_multi_way_zip_join", "query_table",
-      "vcf_import", "bgen_import", "plink_import", "split_multi",
-      "linreg_rows", "logistic_rows", "lmm_rows", "geno_ld_matrix",
-      "geno_king", "geno_ibd", "geno_mendel_errors", "geno_tdt",
-      "geno_de_novo", "geno_pc_relate", "geno_skat", "geno_concordance",
-      "qc_variant_qc", "qc_sample_qc", "linalg_pca", "linalg_grm",
-      "matrix_entries_table", "matrix_aggregate_rows_by_key",
-      "matrix_filter_entries_agg", "matrix_write_read",
-      "matrix_annotate_rows_table", "pipe_minhash_pairs",
-      "pipe_simhash_pairs", "pipe_embed_dedup", "pipe_neardup_clusters",
-      "pipe_ann_topk", "pipe_ann_lsh", "pipe_text_stats",
-      "pipe_dedup_exact", "stream_hourly_agg", "vds_combine_densify",
-      "rand_seeded", "pipe_knn_join", "pipe_image_dedup", "geno_ld_prune",
-      "table_add_index", "pipe_minhash_fast",
-      "pipe_quality_filters",
-      "geno_simulate_mating", "pipe_winnow_pairs", "pipe_ngram_jaccard",
-      "pipe_corpus_clean", "stream_winnow_pairs",
-      "pipe_semdedup", "pipe_lm_score", "pipe_bpe_encode",
-      "pipe_contamination_docs", "pipe_fuzzy_best_match")
     // Locale.ROOT: the one-line JSON contract must not pick up a
     // comma decimal separator from the JVM default locale.
     def num(v: Double): String =

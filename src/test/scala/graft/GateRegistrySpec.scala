@@ -47,6 +47,35 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(counts.filter(_._2 != 1) === Nil)
   }
 
+  test("Bench's headline gates are registered gates") {
+    assert(Bench.headline.size === 61)
+    assert((Bench.headline -- SparkEntry.queries.keySet) === Set.empty)
+  }
+
+  test("no run of 8 code lines repeats in the gate families") {
+    // every non-blank, non-comment line of graft/gates, leading whitespace
+    // dropped; a run of 8 such lines written twice is copy-paste that
+    // belongs in one builder (the family file's or Support's)
+    val run = 8
+    val code = scalaSources("src/main/scala/graft/gates").sortBy(_.toString)
+      .map { p =>
+        p.getFileName.toString -> Files.readAllLines(p).asScala.toIndexedSeq
+          .zipWithIndex.collect {
+            case (l, i) if l.trim.nonEmpty &&
+                !Seq("//", "*", "/*").exists(l.trim.startsWith) =>
+              (i + 1, l.trim)
+          }
+      }
+    val windows = for {
+      (file, lines) <- code
+      k <- 0 to lines.length - run
+    } yield lines.slice(k, k + run).map(_._2) -> s"$file:${lines(k)._1}"
+    val repeats = windows.groupBy(_._1).values.collect {
+      case ws if ws.size > 1 => ws.map(_._2).mkString(" = ")
+    }.toSeq.sorted
+    assert(repeats === Nil)
+  }
+
   test("the fixture root is the checkout's src/test/resources") {
     assert(Fixtures.root.isAbsolute)
     assert(Files.isRegularFile(Paths.get(Fixtures.path("oracle_sample.vcf"))))

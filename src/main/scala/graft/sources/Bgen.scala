@@ -315,7 +315,26 @@ object Bgen {
     * true record chain. Any seam mismatch (or an unfindable boundary)
     * returns None and the caller falls back to the sequential walk. */
   def indexParallel(spark: SparkSession, path: String,
-      splitBytes: Long = 32L << 20): Option[BgenFile] = {
+      splitBytes: Long = 32L << 20): Option[BgenFile] =
+    walkSplits(spark, path, splitBytes)(identity)(_.length.toLong).map {
+      case (h, pieces) => BgenFile(h.n, h.compression, h.sampleIds,
+        pieces.iterator.flatMap(_._3).toIndexedSeq)
+    }
+
+  /** The split walk `indexParallel` and `streamPlan` share: cut the file
+    * after its header at `splitBytes` boundaries (at most 10000 splits)
+    * and, in one task per split, resync to a variant-record boundary
+    * (split 0 starts at the header-declared first record) and walk the
+    * split's records, keeping `summarize` of them. The driver then
+    * requires every seam to equal its left neighbour's walk end, the
+    * last walk to end at the file end, and the pieces' `count`s to sum
+    * to the header's variant count: an induction that proves every piece
+    * sits on the true record chain. Returns the header and each split's
+    * (start, end, summary) in file order; None for a one-split file, an
+    * unfindable boundary or any mismatch. */
+  private def walkSplits[T](spark: SparkSession, path: String,
+      splitBytes: Long)(summarize: IndexedSeq[VariantMeta] => T)(
+      count: T => Long): Option[(HeaderMeta, Seq[(Long, Long, T)])] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(path)
@@ -340,11 +359,11 @@ object Bgen {
           val syncOff =
             if (i == 0) from
             else resyncVariant(in, from, fileLen, nL, compL)
-          if (syncOff < 0) (i, -1L, -1L, IndexedSeq.empty[VariantMeta])
+          if (syncOff < 0) (i, -1L, -1L, Option.empty[T])
           else {
             val (vs, end) =
               walkVariants(in, syncOff, until, fileLen, compL)
-            (i, syncOff, end, vs)
+            (i, syncOff, end, Some(summarize(vs)))
           }
         } finally in.close()
       }
@@ -358,9 +377,8 @@ object Bgen {
         case _ => true
       } &&
       pieces.last._3 == fileLen
-    val variants = pieces.iterator.flatMap(_._4).toIndexedSeq
-    if (seamsOk && variants.length == h.m)
-      Some(BgenFile(h.n, h.compression, h.sampleIds, variants))
+    if (seamsOk && pieces.map(pc => count(pc._4.get)).sum == h.m)
+      Some((h, pieces.map(pc => (pc._2, pc._3, pc._4.get)).toSeq))
     else None
   }
 
@@ -591,51 +609,10 @@ object Bgen {
     * offsets + a count per split), never the variant list. None on any
     * mismatch. */
   private def streamPlan(spark: SparkSession, path: String,
-      splitBytes: Long): Option[(HeaderMeta, Seq[(Long, Long)])] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fileLen = fs.getFileStatus(p).getLen
-    val raw = fs.open(p)
-    val h = try headerMeta(path, raw) finally raw.close()
-    val start0 = h.firstVariantOffset + 4
-    val span = fileLen - start0
-    val nSplits = math.min(math.max(1L, span / splitBytes), 10000L).toInt
-    if (nSplits <= 1) return None
-    val bounds = (0 to nSplits).map(i => start0 + span * i / nSplits)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val nL = h.n; val compL = h.compression
-    val pieces = spark.sparkContext
-      .parallelize(0 until nSplits, nSplits)
-      .map { i =>
-        val from = bounds(i); val until = bounds(i + 1)
-        val taskP = new org.apache.hadoop.fs.Path(path)
-        val in = taskP.getFileSystem(conf.value).open(taskP)
-        try {
-          val syncOff =
-            if (i == 0) from
-            else resyncVariant(in, from, fileLen, nL, compL)
-          if (syncOff < 0) (i, -1L, -1L, 0)
-          else {
-            val (vs, end) = walkVariants(in, syncOff, until, fileLen, compL)
-            (i, syncOff, end, vs.length)
-          }
-        } finally in.close()
-      }
-      .collect()
-      .sortBy(_._1)
-    val seamsOk = pieces.head._2 == start0 &&
-      pieces.forall(_._2 >= 0) &&
-      pieces.sliding(2).forall {
-        case Array(a, b) => b._2 == a._3
-        case _ => true
-      } &&
-      pieces.last._3 == fileLen &&
-      pieces.map(_._4.toLong).sum == h.m
-    if (seamsOk) Some((h, pieces.map(pc => (pc._2, pc._3)).toSeq))
-    else None
-  }
+      splitBytes: Long): Option[(HeaderMeta, Seq[(Long, Long)])] =
+    walkSplits(spark, path, splitBytes)(_.length.toLong)(identity).map {
+      case (h, pieces) => (h, pieces.map(pc => (pc._1, pc._2)))
+    }
 
   /** File size above which `read` switches to the streamed byte-range
     * plan (no driver-side variant list at all). */

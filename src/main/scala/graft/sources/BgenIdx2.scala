@@ -1,11 +1,6 @@
 package graft.sources
 
-import java.io.InputStream
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path => HPath}
-import org.apache.spark.sql.Row
-import org.json4s._
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** Reader for the reference engine's BGEN `.idx2` index sidecar
   * (`io/bgen/BgenSettings.scala getIndexSpec`, `io/index/IndexReader
@@ -31,9 +26,6 @@ object BgenIdx2 {
 
   import HailNative._
 
-  final case class Idx2Meta(fileVersion: Int, branchingFactor: Int,
-      height: Int, nKeys: Long, rootOffset: Long)
-
   /** The `.idx2` path for a `.bgen`, if present in either layout. */
   def locate(fs: FileSystem, bgenPath: String): Option[String] = {
     val p = new HPath(bgenPath + ".idx2")
@@ -45,46 +37,14 @@ object BgenIdx2 {
     } else Some(p.toString)
   }
 
-  private def jInt(j: JValue, f: String): Long = (j \ f) match {
-    case JInt(v) => v.toLong
-    case JLong(v) => v
-    case x => throw new IllegalArgumentException(s"idx2 metadata $f: $x")
-  }
-
-  /** Metadata from either layout. File form: trailing 8-byte LE long
-    * points at the JSON tail (reference `IndexReader
-    * .readInlineMetadataRaw`). */
+  /** Metadata from either layout (the file form's is inline, see
+    * `HailIdx.readInlineMetadata`), and the node payload's path. */
   private def readMeta(fs: FileSystem, idx2: String)
-      : (Idx2Meta, String /* index payload path */) = {
-    val p = new HPath(idx2)
-    val jv =
-      if (fs.getFileStatus(p).isDirectory)
-        readJsonGz(fs.getConf, s"$idx2/metadata.json.gz")
-      else {
-        val len = fs.getFileStatus(p).getLen
-        val in = fs.open(p)
-        try {
-          in.seek(len - 8)
-          val b = new Array[Byte](8)
-          in.readFully(b)
-          val mdOff = (0 until 8).map(i => (b(i) & 0xffL) << (8 * i)).sum
-          val jsonBytes = new Array[Byte]((len - mdOff - 8).toInt)
-          in.seek(mdOff)
-          in.readFully(jsonBytes)
-          org.json4s.jackson.JsonMethods.parse(
-            new String(jsonBytes, "UTF-8"))
-        } finally in.close()
-      }
-    val meta = Idx2Meta(
-      jInt(jv, "fileVersion").toInt,
-      jInt(jv, "branchingFactor").toInt,
-      jInt(jv, "height").toInt,
-      jInt(jv, "nKeys"),
-      jInt(jv, "rootOffset"))
-    val payload =
-      if (fs.getFileStatus(p).isDirectory) s"$idx2/index" else idx2
-    (meta, payload)
-  }
+      : (HailIdx.IdxMeta, String) =
+    if (fs.getFileStatus(new HPath(idx2)).isDirectory)
+      (HailIdx.idxMeta(readJsonGz(fs.getConf, s"$idx2/metadata.json.gz"),
+        idx2), s"$idx2/index")
+    else (HailIdx.readMeta(fs, idx2), idx2)
 
   // ---- node schemas (BgenSettings.getIndexSpec, version-dependent) -------
 
@@ -141,7 +101,7 @@ object BgenIdx2 {
   def readOffsets(fs: FileSystem, idx2: String): IndexedSeq[Long] = {
     val out = IndexedSeq.newBuilder[Long]
     val (meta, payload) = readMeta(fs, idx2)
-    val n = walkLeaves(fs, idx2, meta, payload)((_, off) => out += off)
+    val n = walkLeaves(fs, meta, payload)((_, off) => out += off)
     val offsets = out.result()
     require(offsets.length.toLong == n,
       s"$idx2: walked ${offsets.length} keys, metadata says $n")
@@ -159,7 +119,7 @@ object BgenIdx2 {
     val stride = math.max(1L, (meta0.nKeys + nRanges - 1) / nRanges)
     val out = IndexedSeq.newBuilder[Long]
     var i = 0L
-    val n = walkLeaves(fs, idx2, meta0, payload0) { (_, off) =>
+    val n = walkLeaves(fs, meta0, payload0) { (_, off) =>
       if (i % stride == 0) out += off
       i += 1
     }
@@ -169,49 +129,17 @@ object BgenIdx2 {
 
   /** Root-to-leaf walk invoking `onKey(first_idx + k, offset)` per leaf
     * entry in index order; returns metadata nKeys. */
-  private def walkLeaves(fs: FileSystem, idx2: String, meta: Idx2Meta,
-      payload: String)(
-      onKey: (Long, Long) => Unit): Long = {
+  private def walkLeaves(fs: FileSystem, meta: HailIdx.IdxMeta,
+      payload: String)(onKey: (Long, Long) => Unit): Long = {
     val v13 = {
       val (maj, min) = ((meta.fileVersion >> 16) & 0xff,
         (meta.fileVersion >> 8) & 0xff)
       maj > 1 || (maj == 1 && min >= 3)
     }
-    val spec = bufSpec(meta.fileVersion)
-    val (leafE, leafV) = leafTypes(v13)
-    val (intE, intV) = internalTypes(v13)
-    val in = fs.open(new HPath(payload))
-    try {
-      def nodeAt(off: Long): Unit = {
-        in.seek(off)
-        val ib = buildInBuf(spec, unclosable(in))
-        ib.readByte() match {
-          case 1 =>
-            val row = decode(intE, intV, ib).asInstanceOf[Row]
-            row.getSeq[Row](0).foreach(c => nodeAt(c.getLong(0)))
-          case 0 =>
-            val row = decode(leafE, leafV, ib).asInstanceOf[Row]
-            val firstIdx = row.getLong(0)
-            row.getSeq[Row](1).zipWithIndex.foreach { case (k, j) =>
-              onKey(firstIdx + j, k.getLong(1))
-            }
-          case t => throw new IllegalArgumentException(
-            s"$idx2: bad node tag $t at offset $off")
-        }
-      }
-      nodeAt(meta.rootOffset)
-    } finally in.close()
+    HailIdx.walk(fs, payload, meta.rootOffset, bufSpec(meta.fileVersion),
+      leafTypes(v13), internalTypes(v13)) { (i, k) => onKey(i, k.getLong(1)) }
     meta.nKeys
   }
-
-  /** Shield the shared seekable stream from per-node buffer close. */
-  private def unclosable(in: FSDataInputStream): InputStream =
-    new InputStream {
-      def read(): Int = in.read()
-      override def read(b: Array[Byte], off: Int, len: Int): Int =
-        in.read(b, off, len)
-      override def close(): Unit = ()
-    }
 
   /** Contiguous byte ranges covering all variant records, cut at record
     * starts into ~`nRanges` pieces — drop-in for the streamed read's

@@ -217,7 +217,23 @@ object HailIdx {
   final case class IdxMeta(fileVersion: Int, branchingFactor: Int,
       height: Int, nKeys: Long, rootOffset: Long)
 
-  def readMeta(fs: FileSystem, path: String): IdxMeta = {
+  /** The metadata fields of an index's JSON (inline or legacy). */
+  private[sources] def idxMeta(jv: org.json4s.JValue, path: String)
+      : IdxMeta = {
+    def jLong(f: String): Long = (jv \ f) match {
+      case org.json4s.JInt(v) => v.toLong
+      case org.json4s.JLong(v) => v
+      case x => throw new IllegalArgumentException(s"$path metadata $f: $x")
+    }
+    IdxMeta(jLong("fileVersion").toInt, jLong("branchingFactor").toInt,
+      jLong("height").toInt, jLong("nKeys"), jLong("rootOffset"))
+  }
+
+  /** The inline metadata JSON of a single-file index: a trailing 8-byte
+    * little-endian long points at the JSON tail (reference `IndexReader
+    * .readInlineMetadataRaw`). */
+  private[sources] def readInlineMetadata(fs: FileSystem, path: String)
+      : org.json4s.JValue = {
     val p = new HPath(path)
     val len = fs.getFileStatus(p).getLen
     val in = fs.open(p)
@@ -229,62 +245,71 @@ object HailIdx {
       val jsonBytes = new Array[Byte]((len - mdOff - 8).toInt)
       in.seek(mdOff)
       in.readFully(jsonBytes)
-      val jv = org.json4s.jackson.JsonMethods.parse(
-        new String(jsonBytes, "UTF-8"))
-      def jLong(f: String): Long = (jv \ f) match {
-        case org.json4s.JInt(v) => v.toLong
-        case org.json4s.JLong(v) => v
-        case x => throw new IllegalArgumentException(s"idx $f: $x")
-      }
-      IdxMeta(jLong("fileVersion").toInt, jLong("branchingFactor").toInt,
-        jLong("height").toInt, jLong("nKeys"), jLong("rootOffset"))
+      org.json4s.jackson.JsonMethods.parse(new String(jsonBytes, "UTF-8"))
     } finally in.close()
   }
+
+  def readMeta(fs: FileSystem, path: String): IdxMeta =
+    idxMeta(readInlineMetadata(fs, path), path)
 
   /** Root-to-leaf walk: (key, offset, annotation) per entry, in index
     * order — the validation surface for round-trip specs and the
     * point-read primitive for range queries over exported parts. */
   def readEntries(fs: FileSystem, path: String, keyE: ETyp, keyV: VType,
-      annE: ETyp, annV: VType): IndexedSeq[(Row, Long, Row)] = {
-    val meta = readMeta(fs, path)
-    val (leafE, leafV) = leafTypes(keyE, keyV, annE, annV)
-    val (intE, intV) = internalTypes(keyE, keyV, annE, annV)
-    walk(fs, path, meta, IdxBufSpec, leafE, leafV, intE, intV)
-  }
+      annE: ETyp, annV: VType): IndexedSeq[(Row, Long, Row)] =
+    entries(fs, path, readMeta(fs, path), IdxBufSpec,
+      leafTypes(keyE, keyV, annE, annV),
+      internalTypes(keyE, keyV, annE, annV))
 
-  private def walk(fs: FileSystem, path: String, meta: IdxMeta,
-      spec: BufSpec, leafE: ETyp, leafV: VType, intE: ETyp, intV: VType)
+  private def entries(fs: FileSystem, path: String, meta: IdxMeta,
+      spec: BufSpec, leaf: (ETyp, VType), internal: (ETyp, VType))
       : IndexedSeq[(Row, Long, Row)] = {
     val out = IndexedSeq.newBuilder[(Row, Long, Row)]
+    walk(fs, path, meta.rootOffset, spec, leaf, internal) { (_, k) =>
+      out += ((k.getStruct(0), k.getLong(1), k.getStruct(2)))
+    }
+    val entries = out.result()
+    require(entries.length.toLong == meta.nKeys,
+      s"$path: walked ${entries.length} keys, metadata says ${meta.nKeys}")
+    entries
+  }
+
+  /** Root-to-leaf walk of the node file `path` from `rootOffset`, calling
+    * `onEntry(index, entry)` for every leaf entry (a row of key, offset,
+    * annotation) in index order. Each node sits in its own flushed
+    * frame, so a seek plus a fresh buffer decodes it alone; the walk
+    * reads each node once. */
+  private[sources] def walk(fs: FileSystem, path: String, rootOffset: Long,
+      spec: BufSpec, leaf: (ETyp, VType), internal: (ETyp, VType))(
+      onEntry: (Long, Row) => Unit): Unit = {
     val in = fs.open(new HPath(path))
+    // the per-node buffers must not close the shared stream
+    val unclosable = new java.io.InputStream {
+      def read(): Int = in.read()
+      override def read(b: Array[Byte], o: Int, l: Int): Int =
+        in.read(b, o, l)
+      override def close(): Unit = ()
+    }
     try {
       def nodeAt(off: Long): Unit = {
         in.seek(off)
-        val ib = buildInBuf(spec, new java.io.InputStream {
-          def read(): Int = in.read()
-          override def read(b: Array[Byte], o: Int, l: Int): Int =
-            in.read(b, o, l)
-          override def close(): Unit = ()
-        })
+        val ib = buildInBuf(spec, unclosable)
         ib.readByte() match {
           case 1 =>
-            val row = decode(intE, intV, ib).asInstanceOf[Row]
+            val row = decode(internal._1, internal._2, ib).asInstanceOf[Row]
             row.getSeq[Row](0).foreach(c => nodeAt(c.getLong(0)))
           case 0 =>
-            val row = decode(leafE, leafV, ib).asInstanceOf[Row]
-            row.getSeq[Row](1).foreach { k =>
-              out += ((k.getStruct(0), k.getLong(1), k.getStruct(2)))
+            val row = decode(leaf._1, leaf._2, ib).asInstanceOf[Row]
+            val firstIdx = row.getLong(0)
+            row.getSeq[Row](1).zipWithIndex.foreach { case (k, j) =>
+              onEntry(firstIdx + j, k)
             }
           case t => throw new IllegalArgumentException(
             s"$path: bad node tag $t at offset $off")
         }
       }
-      nodeAt(meta.rootOffset)
+      nodeAt(rootOffset)
     } finally in.close()
-    val entries = out.result()
-    require(entries.length.toLong == meta.nKeys,
-      s"$path: walked ${entries.length} keys, metadata says ${meta.nKeys}")
-    entries
   }
 
   // ---- legacy (pre-0.2.139) directory-layout indexes -----------------------
@@ -336,18 +361,12 @@ object HailIdx {
       try org.json4s.jackson.JsonMethods.parse(
         new String(in.readAllBytes(), "UTF-8"))
       finally in.close()
-    def jLong(f: String): Long = (jv \ f) match {
-      case org.json4s.JInt(v) => v.toLong
-      case org.json4s.JLong(v) => v
-      case x => throw new IllegalArgumentException(s"legacy idx $f: $x")
-    }
     def jStr(f: String): String = (jv \ f) match {
       case org.json4s.JString(s) => s
       case x => throw new IllegalArgumentException(s"legacy idx $f: $x")
     }
-    (IdxMeta(jLong("fileVersion").toInt, jLong("branchingFactor").toInt,
-      jLong("height").toInt, jLong("nKeys"), jLong("rootOffset")),
-      jStr("keyType"), jStr("annotationType"), jStr("indexPath"))
+    (idxMeta(jv, dir), jStr("keyType"), jStr("annotationType"),
+      jStr("indexPath"))
   }
 
   /** Decode every entry of a reference-written legacy `.idx`
@@ -358,9 +377,8 @@ object HailIdx {
     val (meta, keyT, annT, indexPath) = readMetaLegacy(fs, dir)
     val (keyV, keyE) = parsePackedType(keyT)
     val (annV, annE) = parsePackedType(annT)
-    val (leafE, leafV) = legacyLeafTypes(keyE, keyV, annE, annV)
-    val (intE, intV) = legacyInternalTypes(keyE, keyV, annE, annV)
-    walk(fs, s"$dir/$indexPath", meta, LegacyIdxBufSpec,
-      leafE, leafV, intE, intV)
+    entries(fs, s"$dir/$indexPath", meta, LegacyIdxBufSpec,
+      legacyLeafTypes(keyE, keyV, annE, annV),
+      legacyInternalTypes(keyE, keyV, annE, annV))
   }
 }

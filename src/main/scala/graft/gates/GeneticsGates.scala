@@ -948,8 +948,7 @@ object GeneticsGates {
     // --- concordance (qc.py:360): 5-state cross-tab of two matrices -------
     Gate("geno_concordance", (s, _) => {
       val mt = sources.Vcf.read(s, vcfFixture)
-      val right = concordanceRight(mt)
-      methods.Genetics.concordance(mt, right)
+      methods.Genetics.concordance(mt, concordanceRight(mt))
     }, {
       s"""$concordanceCtes
         |SELECT coalesce(l.lc, 0) AS left_state,
@@ -962,8 +961,7 @@ object GeneticsGates {
     // cols/rows tables of `concordance`) -----------------------------------
     Gate("geno_concordance_per_sample", (s, _) => {
       val mt = sources.Vcf.read(s, vcfFixture)
-      val right = concordanceRight(mt)
-      methods.Genetics.concordancePerSample(mt, right)
+      methods.Genetics.concordancePerSample(mt, concordanceRight(mt))
     }, {
       s"""$concordanceCtes
         |SELECT s,
@@ -975,8 +973,7 @@ object GeneticsGates {
 
     Gate("geno_concordance_per_variant", (s, _) => {
       val mt = sources.Vcf.read(s, vcfFixture)
-      val right = concordanceRight(mt)
-      methods.Genetics.concordancePerVariant(mt, right)
+      methods.Genetics.concordancePerVariant(mt, concordanceRight(mt))
         .select(col("contig"), col("position"), col("ref"),
           col("left_state"), col("right_state"), col("n"))
     }, {

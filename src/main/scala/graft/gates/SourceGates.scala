@@ -108,7 +108,7 @@ object SourceGates {
 
   /** The `bgen_import` projection: one row per entry with the hard call
     * and the three genotype probabilities. */
-  private def bgenDump(mt: MatrixTable): DataFrame = {
+  private def bgenDump(mt: MatrixTable): DataFrame =
     mt.entriesTable.df.select(
       col("contig"), col("position"), col("ref"),
       element_at(col("alt"), 1).as("alt"), col("s"),
@@ -116,7 +116,6 @@ object SourceGates {
       round(element_at(col("GP"), 1), 6).as("paa"),
       round(element_at(col("GP"), 2), 6).as("pab"),
       round(element_at(col("GP"), 3), 6).as("pbb"))
-  }
 
   /** The fixture VCF bgzipped into a new temp directory named `prefix`
     * (2 KiB BGZF blocks, so the file splits); returns its path. */

@@ -14,7 +14,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * recorded byte offset: a tag byte (1 = internal, 0 = leaf) followed by
   * one encoded row in the engine's native value encoding — the same
   * encoding `HailNative` already decodes, so this reader is just the two
-  * node schemas plus a root-to-leaf walk. Leaf entries carry
+  * node schemas plus `HailIdx`'s root-to-leaf walk. Leaf entries carry
   * (key{locus{contig, position}, alleles}, offset) where `offset` is the
   * byte position of the variant's record in the `.bgen` — exact split
   * points for a distributed read, no resync heuristic needed.

@@ -66,19 +66,6 @@ object Dedup {
           col("__para")))), s => s("__para"))).as(text))
   }
 
-  /** MinHash + LSH candidate pairs (the standard shingle → minhash → band →
-    * bucket-join pipeline). `numHashes` minhashes in `bands` bands of
-    * `numHashes / bands` rows; a pair is a candidate iff it agrees on at
-    * least one full band.
-    *
-    * Hash family: lexicographic-min of md5(shingle ++ "|" ++ seed) — a valid
-    * uniform min-hash, chosen because md5 is bit-identical in every engine
-    * (the DuckDB oracle reproduces the signatures exactly).
-    *
-    * Scale: the only shuffle is the band-signature equi-join; bucket sizes
-    * concentrate on true near-dups, so the join output is ~linear in the
-    * number of real duplicate pairs. Returns (id_a, id_b) with the verified
-    * shingle-set Jaccard similarity. */
   /** Shingle sets per doc, behind a forced exchange: the set is consumed
     * multiple times (minhash pass + verify joins) and Catalyst's
     * ReuseExchange computes one shared shuffle instead of re-deriving the
@@ -155,6 +142,14 @@ object Dedup {
     banded.join(buckets, byCols)
   }
 
+  /** (id_a, id_b, keys...) with id_a < id_b for every two docs of
+    * `frame` (a `doc` column plus `keys`) that agree on all `keys`: the
+    * bucket self-join, one row per shared key value. */
+  private def docPairs(frame: DataFrame, keys: String*): DataFrame =
+    frame.select(keys.map(col) :+ col("doc").as("id_a"): _*)
+      .join(frame.select(keys.map(col) :+ col("doc").as("id_b"): _*), keys)
+      .filter(col("id_a") < col("id_b"))
+
   /** LSH candidate pairs joined back to both shingle sets (the shared
     * tail of `minhashPairs` / `minhashExactPairs`). */
   private def candidatesWithShingles(df: DataFrame, id: String,
@@ -166,10 +161,7 @@ object Dedup {
     val banded = bandSignatures(sh, numHashes, bands, family)
       .transform(Materialize.fanout)
     val pruned = capBuckets(banded, Seq("band", "bsig"), maxBucketSize)
-    val cand = pruned.select(col("band"), col("bsig"), col("doc").as("id_a"))
-      .join(pruned.select(col("band"), col("bsig"), col("doc").as("id_b")),
-        Seq("band", "bsig"))
-      .filter(col("id_a") < col("id_b"))
+    val cand = docPairs(pruned, "band", "bsig")
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
     cand
@@ -179,6 +171,19 @@ object Dedup {
         "id_b")
   }
 
+  /** MinHash + LSH candidate pairs (the standard shingle → minhash → band →
+    * bucket-join pipeline). `numHashes` minhashes in `bands` bands of
+    * `numHashes / bands` rows; a pair is a candidate iff it agrees on at
+    * least one full band.
+    *
+    * Hash family: lexicographic-min of md5(shingle ++ "|" ++ seed) — a valid
+    * uniform min-hash, chosen because md5 is bit-identical in every engine
+    * (the DuckDB oracle reproduces the signatures exactly).
+    *
+    * Scale: the only shuffle is the band-signature equi-join; bucket sizes
+    * concentrate on true near-dups, so the join output is ~linear in the
+    * number of real duplicate pairs. Returns (id_a, id_b) with the verified
+    * shingle-set Jaccard similarity. */
   def minhashPairs(df: DataFrame, id: String, text: String,
       numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3,
       maxBucketSize: Int = 10000, family: String = "md5"): DataFrame = {
@@ -288,6 +293,32 @@ object Dedup {
     all
   }
 
+  /** The materialized (doc, fps) winnowing-fingerprint frame every
+    * winnow consumer reads: ONE kernel pass over the corpus, pinned.
+    * Extracted (optimization r17, guide §1.2/§2.4) so the slice
+    * auto-estimator, the candidate build, and the sliced bounded-disk
+    * path all share the same pass instead of re-running the rolling-
+    * hash kernel once each. */
+  private[graft] def winnowFpsFrame(df: DataFrame, id: String,
+      text: String, k: Int, w: Int): DataFrame = df
+    .select(col(id).as("doc"),
+      Text.winnowFingerprints(col(text), k, w).as("fps"))
+    .filter(size(col("fps")) > 0)
+    .repartition(col("doc"))
+    .transform(Materialize.fanout)
+
+  /** The (doc, fp) fingerprint stream of a (doc, fps) frame. */
+  private def fpStream(fps: DataFrame): DataFrame =
+    fps.select(col("doc"), explode(col("fps")).as("fp"))
+
+  /** (id_a, id_b, shared) candidate pairs sharing >= `minShared`
+    * winnowing fingerprints of the (doc, fps) frame. */
+  private def winnowCandidates(fps: DataFrame, minShared: Int,
+      maxBucketSize: Int): DataFrame =
+    docPairs(capBuckets(fpStream(fps), Seq("fp"), maxBucketSize), "fp")
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
+
   /** Winnowing-fingerprint near-dup pairs (MOSS-style): each doc is
     * reduced to its winnowing fingerprint set (rolling-hash k-grams,
     * rightmost-min-per-window selection — `Text.winnowFingerprints`);
@@ -305,46 +336,11 @@ object Dedup {
     * skew (hot boilerplate fingerprints are exactly what the cap
     * drops). Pair counts aggregate map-side before the join output
     * shuffles on (id_a, id_b). */
-  /** (id_a, id_b, shared) candidate pairs sharing >= `minShared`
-    * winnowing fingerprints, plus the materialized fingerprint frame
-    * (doc, fps) for callers that score further. */
-  /** The materialized (doc, fps) winnowing-fingerprint frame every
-    * winnow consumer reads: ONE kernel pass over the corpus, pinned.
-    * Extracted (optimization r17, guide §1.2/§2.4) so the slice
-    * auto-estimator, the candidate build, and the sliced bounded-disk
-    * path all share the same pass instead of re-running the rolling-
-    * hash kernel once each. */
-  private def winnowFpsFrame(df: DataFrame, id: String, text: String,
-      k: Int, w: Int): DataFrame = df
-    .select(col(id).as("doc"),
-      Text.winnowFingerprints(col(text), k, w).as("fps"))
-    .filter(size(col("fps")) > 0)
-    .repartition(col("doc"))
-    .transform(Materialize.fanout)
-
-  private def winnowCandidates(df: DataFrame, id: String, text: String,
-      k: Int, w: Int, minShared: Int, maxBucketSize: Int)
-      : (DataFrame, DataFrame) =
-    winnowCandidatesFromFps(
-      winnowFpsFrame(df, id, text, k, w), minShared, maxBucketSize)
-
-  private def winnowCandidatesFromFps(fps: DataFrame, minShared: Int,
-      maxBucketSize: Int): (DataFrame, DataFrame) = {
-    val flat = fps.select(col("doc"), explode(col("fps")).as("fp"))
-    val pruned = capBuckets(flat, Seq("fp"), maxBucketSize)
-    val cand = pruned.select(col("fp"), col("doc").as("id_a"))
-      .join(pruned.select(col("fp"), col("doc").as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-    (cand, fps)
-  }
-
   def winnowPairs(df: DataFrame, id: String, text: String, k: Int = 12,
       w: Int = 8, minShared: Int = 2, maxBucketSize: Int = 10000)
       : DataFrame = {
-    val (cand, fps) = winnowCandidates(df, id, text, k, w, minShared,
-      maxBucketSize)
+    val fps = winnowFpsFrame(df, id, text, k, w)
+    val cand = winnowCandidates(fps, minShared, maxBucketSize)
     val counts = fps.select(col("doc"), size(col("fps")).as("nfp"))
     cand
       .join(counts.select(col("doc").as("id_a"), col("nfp").as("nfp_a")),
@@ -366,12 +362,11 @@ object Dedup {
     * output EQUALS the full all-pairs substring join — computed without
     * ever shuffling the quadratic gram self-join: the gram verify only
     * runs on the (linear) candidate set. That equality is what the
-    * DuckDB gate checks independently. */
+    * DuckDB gate checks independently. The plan is the one-slice plan
+    * unless [[autoWinnowSlices]] finds the candidate mass too large for
+    * the disk budget (see [[substringPairsAt]]). */
   def winnowSubstringPairs(df: DataFrame, id: String, text: String,
-      k: Int = 16, w: Int = 4, maxBucketSize: Int = 10000,
-      slices: Int = 0): DataFrame = {
-    require(slices >= 0, "slices must be >= 0 (0 = auto-select)")
-    val t = k + w - 1
+      k: Int = 16, w: Int = 4, maxBucketSize: Int = 10000): DataFrame = {
     // ONE fingerprint kernel pass for the whole operator (r17
     // optimization): the pinned fps frame feeds the slice
     // auto-estimator, the candidate build, and (in bounded-disk mode)
@@ -383,18 +378,8 @@ object Dedup {
     // at sf10), so it fits the bounded-disk story at every measured
     // scale.
     val fps = winnowFpsFrame(df, id, text, k, w)
-    val s =
-      if (slices > 0) slices
-      else sys.env.get("SPARK_GRAFT_VERIFY_GRAM_SLICES").map(_.toInt)
-        .getOrElse(autoWinnowSlicesFromFps(fps, maxBucketSize))
-    if (s == 1) {
-      val (cand, _) = winnowCandidatesFromFps(fps, minShared = 1,
-        maxBucketSize)
-      verifySharedRuns(cand.select("id_a", "id_b"), df, id, text, t)
-    } else {
-      winnowSubstringPairsSliced(df, fps, id, text, k, w, maxBucketSize,
-        s)
-    }
+    substringPairsAt(df, fps, id, text, k + w - 1, maxBucketSize,
+      autoWinnowSlices(fps, maxBucketSize))
   }
 
   /** Measured at the r12 sf10 run: 1.69e9 candidate-pair incidences
@@ -404,18 +389,15 @@ object Dedup {
 
   /** Disk budget the default (unsliced) winnow plan may spend on
     * candidate-scaled materializations before [[winnowSubstringPairs]]
-    * flips itself to the bounded sliced mode.
-    * SPARK_GRAFT_WINNOW_DISK_BUDGET_GB overrides (single-box parity
-    * runs size it to the box); the 32 GB default keeps one sf10-shaped
-    * corpus per executor group comfortably under typical local-disk
-    * provisioning. */
-  private def winnowDiskBudgetBytes: Long =
-    sys.env.get("SPARK_GRAFT_WINNOW_DISK_BUDGET_GB").map(_.toLong)
-      .getOrElse(32L) * (1L << 30)
+    * flips itself to the bounded sliced mode: 32 GiB keeps one
+    * sf10-shaped corpus per executor group comfortably under typical
+    * local-disk provisioning. */
+  private val WinnowDiskBudgetBytes = 32L << 30
 
   /** Auto slice count for [[winnowSubstringPairs]] (r12 verdict ask:
     * the bounded mode must engage ITSELF at scale, not rely on the
-    * operator knowing an env var). The default path's disk floor is
+    * operator knowing an env var), read from the pinned (doc, fps)
+    * frame. The default path's disk floor is
     * the candidate pair set, whose incidence mass is a closed form of
     * the fingerprint-bucket sizes the operator already aggregates:
     * M = Σ_buckets c·(c−1)/2 over buckets with 2 ≤ c ≤ cap (larger
@@ -424,41 +406,23 @@ object Dedup {
     * stream, nothing doc-pair-scaled. slices = ceil(M·48 B / budget),
     * clamped to [1, 64]: 1 (the plain co-partitioned plan) whenever
     * the estimate fits the budget. */
-  private[graft] def autoWinnowSlices(df: DataFrame, text: String,
-      k: Int, w: Int, maxBucketSize: Int,
-      budgetBytes: Long = winnowDiskBudgetBytes): Int =
-    slicesFromMass(massOfFlat(
-      df.select(explode(Text.winnowFingerprints(col(text), k, w))
-        .as("fp")), maxBucketSize), budgetBytes)
-
-  /** Same decision rule, reading the already-pinned (doc, fps) frame —
-    * the operator path (one kernel pass total, see
-    * [[winnowSubstringPairs]]). */
-  private def autoWinnowSlicesFromFps(fps: DataFrame,
-      maxBucketSize: Int,
-      budgetBytes: Long = winnowDiskBudgetBytes): Int =
-    slicesFromMass(massOfFlat(
-      fps.select(explode(col("fps")).as("fp")), maxBucketSize),
-      budgetBytes)
-
-  private def massOfFlat(flat: DataFrame, maxBucketSize: Int): Long =
-    flat
+  private[graft] def autoWinnowSlices(fps: DataFrame, maxBucketSize: Int,
+      budgetBytes: Long = WinnowDiskBudgetBytes): Int = {
+    val mass = Option(fpStream(fps)
       .groupBy("fp").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2 && col("c") <= maxBucketSize)
       .agg(sum(expr("c * (c - 1) div 2")).as("m"))
-      .head().getAs[Any]("m") match {
-        case null => 0L
-        case l: java.lang.Long => l.longValue()
-      }
-
-  private def slicesFromMass(mass: Long, budgetBytes: Long): Int = {
+      .head().getAs[java.lang.Long]("m")).fold(0L)(_.longValue)
     val est = mass * BytesPerCandidateIncidence
     math.max(1L, math.min(64L,
       (est + budgetBytes - 1) / budgetBytes)).toInt
   }
 
-  /** Bounded-disk form of [[winnowSubstringPairs]] (slices > 1): equal
-    * output, but NOTHING pair-candidate-scaled ever materializes.
+  /** [[winnowSubstringPairs]] over its pinned (doc, fps) frame at a
+    * given slice count. One slice is the default plan: the fingerprint
+    * candidate pairs, verified by [[verifySharedRuns]]. More slices give
+    * the bounded-disk form: equal output, but NOTHING
+    * pair-candidate-scaled ever materializes.
     *
     * Why the default path can't run at sf10 on one box: the candidate
     * pair set is quadratic in fingerprint-bucket sizes — measured
@@ -474,187 +438,132 @@ object Dedup {
     *     some pair iff one of its fps lands in a bucket of 2..cap
     *     docs) — no pair join;
     *  2. exact shared-gram counts compute per 64-bit-gram-hash residue
-    *     class, each a sequential sub-join shuffling ~1/slices of the
-    *     gram stream (the [[verifySharedRuns]] slicing argument:
-    *     distinct grams partition across residues, counts sum);
+    *     class ([[sharedRunCounts]]);
     *  3. the candidate cross-check (which prunes gram-sharing pairs
     *     whose every shared fingerprint was cap-dropped — exact parity
     *     with the default path) runs per FINGERPRINT residue class as
     *     a semi-join whose probe side streams 1/slices of the bucket
     *     pair incidences and whose survivors are output-scaled.
     * WinnowSpec pins sliced == unsliced output. */
-  private def winnowSubstringPairsSliced(df: DataFrame,
-      fps: DataFrame, id: String, text: String, k: Int, w: Int,
-      maxBucketSize: Int, slices: Int): DataFrame = {
-    val t = k + w - 1
-    val DiskOnly = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    // both consumers (candDocs + the per-residue survivor scan) read
-    // the PINNED fingerprint frame — the kernel never re-runs; only
-    // the cheap explode repeats per consumer
-    def flat = fps.select(col("doc"), explode(col("fps")).as("fp"))
-    val candDocs = capBuckets(flat, Seq("fp"), maxBucketSize)
-      .select(col("doc")).distinct()
-      .localCheckpoint(true, DiskOnly)
-    def g = df.select(col(id).as("doc"),
-        array_distinct(graft.functions.TextKernels.gramHashes(
-          Text.fingerprintNormalize(col(text)), t)).as("__g"))
-      .join(candDocs, Seq("doc"), "left_semi")
-      .select(col("doc"), explode(col("__g")).as("g"))
-    def gramCounts(r: Int): DataFrame = {
-      val gr = g.filter(pmod(col("g"), lit(slices.toLong)) === r)
-      gr.select(col("g"), col("doc").as("id_a"))
-        .join(gr.select(col("g"), col("doc").as("id_b")), Seq("g"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
+  private[graft] def substringPairsAt(df: DataFrame, fps: DataFrame,
+      id: String, text: String, t: Int, maxBucketSize: Int, slices: Int)
+      : DataFrame =
+    if (slices == 1)
+      verifySharedRuns(winnowCandidates(fps, minShared = 1, maxBucketSize)
+        .select("id_a", "id_b"), df, id, text, t)
+    else {
+      // both consumers (candDocs + the per-residue survivor scan) read
+      // the PINNED fingerprint frame — the kernel never re-runs; only
+      // the cheap explode repeats per consumer
+      val flat = fpStream(fps)
+      val candDocs = capBuckets(flat, Seq("fp"), maxBucketSize)
+        .select(col("doc")).distinct()
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val counts = sharedRunCounts(df, id, text, t, candDocs, slices)
+      // per-fp-residue bucket counts equal the global ones (counts are
+      // per-fp), so capBuckets inside the residue is exact — and its
+      // count shuffle is 1/slices instead of the full stream
+      residueFold(flat, "fp", slices)(fr => counts.join(
+        docPairs(capBuckets(fr, Seq("fp"), maxBucketSize), "fp")
+          .select("id_a", "id_b"), Seq("id_a", "id_b"), "left_semi"))(
+        _.distinct())
+        .select("id_a", "id_b", "n_shared")
     }
-    // Incremental folds, NOT collect-all-parts-then-merge: at sf10 the
-    // ANSWER itself is tens of GB (near-dup pairs share grams in every
-    // residue, so per-slice parts are each answer-scaled), and holding
-    // all `slices` parts before one merge re-created the disk floor.
-    // Folding keeps at most TWO answer-scaled frames alive at once —
-    // the previous accumulator (released to the ContextCleaner after
-    // the merge materializes) and the merged result.
-    val counts = (0 until slices).foldLeft(Option.empty[DataFrame]) {
-      (acc, r) =>
-        val part = gramCounts(r)
-        val merged = acc match {
-          case None => part
-          case Some(a) => a.union(part).groupBy("id_a", "id_b")
-            .agg(sum(col("n_shared")).as("n_shared"))
-        }
-        val m = merged.localCheckpoint(true, DiskOnly)
-        System.gc()
-        Some(m)
-    }.get
-    val surv = (0 until slices).foldLeft(Option.empty[DataFrame]) {
-      (acc, r) =>
-        // per-fp-residue bucket counts equal the global ones (counts
-        // are per-fp), so capBuckets inside the residue is exact — and
-        // its count shuffle is 1/slices instead of the full stream
-        val pr = capBuckets(
-          flat.filter(pmod(col("fp"), lit(slices.toLong)) === r),
-          Seq("fp"), maxBucketSize)
-        val pairsR = pr.select(col("fp"), col("doc").as("id_a"))
-          .join(pr.select(col("fp"), col("doc").as("id_b")), Seq("fp"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-        val s = counts.join(pairsR, Seq("id_a", "id_b"), "left_semi")
-        val merged = acc match {
-          case None => s
-          case Some(a) => a.union(s).distinct()
-        }
-        val m = merged.localCheckpoint(true, DiskOnly)
-        System.gc()
-        Some(m)
-    }.get
-    surv.select("id_a", "id_b", "n_shared")
+
+  /** `part` folded over the `slices` residue classes of the long column
+    * `key` of `frame`, each fold step `merge`d over the union of the
+    * accumulator and the next part. One slice is `part(frame)`, nothing
+    * pinned. Otherwise each class runs as a SEQUENTIAL sub-job that
+    * shuffles ~1/slices of the rows: the eager DISK_ONLY checkpoint
+    * makes the step run now and truncates its lineage, and the GC hint
+    * lets the ContextCleaner reclaim the finished step's shuffle files
+    * while the next one writes its own — a wall-clock-for-disk trade.
+    *
+    * Incremental folds, NOT collect-all-parts-then-merge: at sf10 the
+    * ANSWER itself is tens of GB (near-dup pairs share grams in every
+    * residue, so per-slice parts are each answer-scaled), and holding
+    * all `slices` parts before one merge re-created the disk floor.
+    * Folding keeps at most TWO answer-scaled frames alive at once —
+    * the previous accumulator (released to the ContextCleaner after
+    * the merge materializes) and the merged result. */
+  private def residueFold(frame: DataFrame, key: String, slices: Int)(
+      part: DataFrame => DataFrame)(merge: DataFrame => DataFrame)
+      : DataFrame = {
+    def slice(r: Int) =
+      part(frame.filter(pmod(col(key), lit(slices.toLong)) === r))
+    def pin(df: DataFrame) = {
+      val m = df.localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      System.gc()
+      m
+    }
+    if (slices == 1) part(frame)
+    else (1 until slices).foldLeft(pin(slice(0)))((acc, r) =>
+      pin(merge(acc.union(slice(r)))))
   }
+
+  /** The (doc, g) gram-identity stream of the docs of `docs` that are in
+    * `keepDocs` (one `doc` column): each doc's DISTINCT normalized
+    * `t`-grams.
+    *
+    * No cast on the id: the candidate side carries the caller's id type
+    * untouched, and a silent cast-to-null here would empty the gram
+    * table for non-numeric ids (callers with typed ids pre-cast).
+    *
+    * Gram identity = the 64-bit avalanched rolling hash
+    * (GramHashesExpr), distinct'd — not the t-char gram STRING: both
+    * join sides use the same function, so shared-distinct-gram counts
+    * are unchanged (a 64-bit collision would take ~2^32 grams per
+    * doc-pair to matter), and the verification join shuffles 8-byte
+    * longs instead of ~t-byte strings — at sf10 this is the difference
+    * between the parity gates fitting transient shuffle disk and not
+    * (and the string form of `winnowContamination`'s join was
+    * heap-borderline at 48g). */
+  private def gramStream(docs: DataFrame, id: String, text: String, t: Int,
+      keepDocs: DataFrame): DataFrame = docs
+    .select(col(id).as("doc"),
+      array_distinct(graft.functions.TextKernels.gramHashes(
+        Text.fingerprintNormalize(col(text)), t)).as("__g"))
+    .join(keepDocs, Seq("doc"), "left_semi")
+    .select(col("doc"), explode(col("__g")).as("g"))
+
+  /** (id_a, id_b, n_shared): the distinct normalized `t`-grams each two
+    * docs of `keepDocs` share, at the GRAM level — a (doc, gram)
+    * equi-join whose output is bounded by the true shared-run pairs —
+    * NOT a join that drags each doc's full gram array onto every pair
+    * row (that array payload dominated the first implementation ~3x).
+    * Distinct grams partition exactly across residue classes of the
+    * gram hash, so per-pair counts over `slices` classes sum to the
+    * one-slice count BY CONSTRUCTION ([[residueFold]]; WinnowSpec pins
+    * the equality). Each slice recomputes the gram stream and filters
+    * its class: a DISK_ONLY persist of the exploded stream measured
+    * ~40+ GB at sf10, most of the budget the slicing frees. */
+  private[graft] def sharedRunCounts(docs: DataFrame, id: String,
+      text: String, t: Int, keepDocs: DataFrame, slices: Int): DataFrame =
+    residueFold(gramStream(docs, id, text, t, keepDocs), "g", slices)(
+      docPairs(_, "g").groupBy("id_a", "id_b")
+        .agg(count(lit(1)).as("n_shared")))(
+      _.groupBy("id_a", "id_b").agg(sum(col("n_shared")).as("n_shared")))
 
   /** Exact shared-run verification for winnow candidate pairs: count
     * the distinct normalized `t`-grams each candidate pair genuinely
-    * shares, at the GRAM level — a (doc, gram) equi-join whose output
-    * is bounded by the true shared-run pairs — NOT a join that drags
-    * each doc's full gram array onto every candidate row (that array
-    * payload dominated the first implementation ~3x). The gram table is
+    * shares ([[sharedRunCounts]] at one slice). The gram table is
     * restricted to docs appearing in some candidate pair, so at corpus
     * scale this self-join sees only the near-dup population; hot grams
     * are exactly the boilerplate `dedupParagraphs` removes upstream.
     * By the winnowing guarantee every gram-sharing pair IS a candidate,
     * so the final semi-join is a semantic no-op — kept as the recall
-    * cross-check (a kernel bug undershoots here, not silently passes).
-    *
-    * Bounded-disk mode (`slices` > 1, default from
-    * SPARK_GRAFT_VERIFY_GRAM_SLICES): the gram self-join — the one
-    * transient-shuffle-heavy stage of the parity gates — iterates over
-    * the `slices` residue classes of the 64-bit gram hash as SEQUENTIAL
-    * sub-jobs. Distinct grams partition exactly across residue classes,
-    * so per-pair shared counts are the sums of per-slice counts — the
-    * union-then-sum equals the unsliced aggregation BY CONSTRUCTION
-    * (WinnowSpec pins the equality). Each slice recomputes the gram
-    * stream and filters its residue class (persisting the exploded
-    * stream instead measured ~40+ GB at sf10 — most of the budget the
-    * slicing frees), shuffling ~1/slices of the rows; a finished
-    * slice's shuffle files are released (lineage truncated by the
-    * eager checkpoint; the GC hint lets the ContextCleaner reclaim
-    * them) while the next slice runs, so peak transient shuffle disk
-    * is ~a few slices' worth instead of the whole join — a
-    * wall-clock-for-disk trade with bit-identical output. This is what
-    * lets the sf10 winnow-parity verification (measured 77 GB
-    * single-join shuffle vs this box's free disk) run on one machine;
-    * on a real cluster the unsliced join simply scales out. */
+    * cross-check (a kernel bug undershoots here, not silently passes). */
   private[graft] def verifySharedRuns(cand: DataFrame, docs: DataFrame,
-      id: String, text: String, t: Int,
-      slices: Int = defaultGramSlices): DataFrame = {
-    require(slices >= 1, "slices must be >= 1")
-    // sliced mode exists BECAUSE the box is disk-constrained: every
-    // materialization in this path goes DISK_ONLY there (blocks stream
-    // through the block manager; a memory-first put of GB partitions
-    // is what OOM'd winnowContamination at sf10)
-    val candM =
-      if (slices == 1) Materialize.fanout(cand)
-      else Materialize.fanoutDisk(cand)
+      id: String, text: String, t: Int): DataFrame = {
+    val candM = Materialize.fanout(cand)
     val candDocs = candM.select(col("id_a").as("doc"))
       .union(candM.select(col("id_b").as("doc"))).distinct()
-    // no cast on the id: the candidate side carries the caller's id
-    // type untouched, and a silent cast-to-null here would empty the
-    // gram table for non-numeric ids (callers with typed ids pre-cast)
-    //
-    // gram identity = the 64-bit avalanched rolling hash
-    // (GramHashesExpr), distinct'd — not the t-char gram STRING: both
-    // join sides use the same function, so shared-distinct-gram counts
-    // are unchanged (a 64-bit collision would take ~2^32 grams per
-    // doc-pair to matter), and the verification join shuffles 8-byte
-    // longs instead of ~t-byte strings — at sf10 this is the
-    // difference between the parity gates fitting transient shuffle
-    // disk and not.
-    val g = docs.select(col(id).as("doc"),
-        array_distinct(graft.functions.TextKernels.gramHashes(
-          Text.fingerprintNormalize(col(text)), t)).as("__g"))
-      .join(candDocs, Seq("doc"), "left_semi")
-      .select(col("doc"), explode(col("__g")).as("g"))
-    def pairCounts(grams: DataFrame): DataFrame = grams
-      .select(col("g"), col("doc").as("id_a"))
-      .join(grams.select(col("g"), col("doc").as("id_b")), Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
-    val counts =
-      if (slices == 1) pairCounts(g)
-      else {
-        val parts = (0 until slices).map { r =>
-          // each slice RECOMPUTES the gram stream and filters its
-          // residue class — deliberately trading `slices` extra
-          // normalize+hash corpus scans (CPU, ~linear) for disk: a
-          // DISK_ONLY persist of the exploded gram stream measured
-          // ~40+ GB at sf10, most of the budget the slicing frees.
-          // The eager checkpoint makes this slice's sub-join run NOW
-          // (the driver loop serializes the slices); its result — only
-          // the true shared-run pairs, tiny next to the gram stream —
-          // is pinned with lineage truncated, making the slice's
-          // shuffle dependencies unreachable
-          val p = pairCounts(
-            g.filter(pmod(col("g"), lit(slices.toLong)) === r))
-            .localCheckpoint(true,
-              org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          // async reclaim of the finished slice's shuffle files before
-          // the next slice writes its own
-          System.gc()
-          p
-        }
-        parts.reduce(_ union _)
-          .groupBy("id_a", "id_b")
-          .agg(sum(col("n_shared")).as("n_shared"))
-      }
-    counts.join(candM, Seq("id_a", "id_b"), "left_semi")
+    sharedRunCounts(docs, id, text, t, candDocs, slices = 1)
+      .join(candM, Seq("id_a", "id_b"), "left_semi")
       .select("id_a", "id_b", "n_shared")
   }
-
-  /** Default residue-class count for [[verifySharedRuns]]'s bounded
-    * transient-disk mode: 1 (the single co-partitioned join — the
-    * right plan whenever shuffle disk fits) unless
-    * SPARK_GRAFT_VERIFY_GRAM_SLICES overrides, which the single-box
-    * sf10 parity runs set. Output is slice-count-invariant. */
-  private def defaultGramSlices: Int =
-    sys.env.get("SPARK_GRAFT_VERIFY_GRAM_SLICES").map(_.toInt).getOrElse(1)
 
   /** Benchmark-contamination detection: corpus documents that share a
     * verbatim normalized run of >= k + w - 1 chars with any document of
@@ -673,15 +582,6 @@ object Dedup {
     def fps(df: DataFrame, id: String, text: String) = df
       .select(col(id).as("doc"),
         explode(Text.winnowFingerprints(col(text), k, w)).as("fp"))
-    // gram identity = the 64-bit rolling hash, distinct'd (same
-    // treatment as verifySharedRuns): shared-distinct counts are
-    // unchanged and the verification join shuffles 8-byte longs — at
-    // sf10 the string form was heap-borderline at 48g
-    def grams(df: DataFrame, id: String, text: String) = df
-      .select(col(id).as("doc"),
-        array_distinct(graft.functions.TextKernels.gramHashes(
-          Text.fingerprintNormalize(col(text)), t)).as("__g"))
-      .select(col("doc"), explode(col("__g")).as("g"))
     // candidates: one equi-join of the corpus fingerprint stream
     // against the bench fingerprints — the benchmark side is small by
     // nature (eval suites vs a 100 TB corpus) and the corpus is touched
@@ -701,16 +601,14 @@ object Dedup {
       .select(col("doc").as("corpus_id"), col("bdoc").as("bench_id"))
       .dropDuplicates("corpus_id", "bench_id")
       .transform(Materialize.fanoutDisk)
-    // exact verify: shared t-grams, BOTH gram tables restricted to docs
+    // exact verify: shared t-grams, BOTH gram streams restricted to docs
     // appearing in some candidate pair (recall exact by the winnowing
     // guarantee — see verifySharedRuns; the final semi-join is the same
     // cross-check)
-    val gc = grams(corpus, corpusId, corpusText)
-      .join(cand.select(col("corpus_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-    val gb = grams(bench, benchId, benchText)
-      .join(cand.select(col("bench_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
+    val gc = gramStream(corpus, corpusId, corpusText, t,
+      cand.select(col("corpus_id").as("doc")).distinct())
+    val gb = gramStream(bench, benchId, benchText, t,
+      cand.select(col("bench_id").as("doc")).distinct())
     gc.select(col("g"), col("doc").as("corpus_id"))
       .join(gb.select(col("g"), col("doc").as("bench_id")), Seq("g"))
       .groupBy("corpus_id", "bench_id").agg(count(lit(1)).as("n_shared"))

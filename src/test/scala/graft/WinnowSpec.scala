@@ -133,11 +133,29 @@ class WinnowSpec extends SparkSpec {
     assert(got.contains((3L, 5L))) // normalization-invariant pair
   }
 
+  /** 40 docs sharing one long verbatim run, plus one unrelated doc: a
+    * hot fingerprint bucket of 40*39/2 = 780 pair incidences. Docs 1-2
+    * and 3-4 also share a private run each, so under a cap of 10 (the
+    * hot buckets dropped) they stay candidates while their cross pairs,
+    * e.g. (1, 3), share grams only through dropped buckets. */
+  private def hotBucketDocs = {
+    val r = new scala.util.Random(31)
+    val hot = randWord(r, 3 * (K + W))
+    val runs = Seq.fill(2)(randWord(r, K + W + 4))
+    val docs = (1L to 40L).map(i => i -> (hot + " " +
+      (if (i <= 4) runs(((i - 1) / 2).toInt) else randWord(r, 10)))) :+
+      (99L -> randWord(r, 120))
+    spark.createDataFrame(docs).toDF("doc_id", "text")
+  }
+
+  private def fpsOf(df: org.apache.spark.sql.DataFrame) =
+    Dedup.winnowFpsFrame(df, "doc_id", "text", K, W)
+
   test("verifySharedRuns: gram-slice iteration is output-invariant (bounded-disk mode)") {
     // distinct grams partition exactly across hash residue classes, so
     // per-pair counts sum across slices to the unsliced aggregation —
-    // the equality that lets the sf10 parity verification run in K
-    // sequential sub-joins, each under the transient-disk budget
+    // the equality that lets the shared-run count run in K sequential
+    // sub-joins, each under the transient-disk budget
     val t = K + W - 1
     val r = new scala.util.Random(23)
     val shared = randWord(r, t + 9)
@@ -149,58 +167,60 @@ class WinnowSpec extends SparkSpec {
       4L -> (base.take(70) + randWord(r, 50)),
       5L -> randWord(r, 100))
     val df = spark.createDataFrame(all).toDF("doc_id", "text")
+    def pairs(f: org.apache.spark.sql.DataFrame) = f
+      .select("id_a", "id_b", "n_shared").collect()
+      .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
     val cand = Dedup.winnowSubstringPairs(df, "doc_id", "text", K, W)
       .select("id_a", "id_b")
-    def run(slices: Int) =
-      Dedup.verifySharedRuns(cand, df, "doc_id", "text", t,
-          slices = slices)
-        .collect()
-        .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
-    val unsliced = run(1)
-    assert(unsliced.nonEmpty)
-    assert(run(3) === unsliced)
-    assert(run(7) === unsliced)
+    val verified = pairs(Dedup.verifySharedRuns(cand, df, "doc_id",
+      "text", t))
+    assert(verified.nonEmpty)
+    // the counter over every candidate doc, at 1, 3 and 7 slices,
+    // equals the verified candidate pairs (recall is exact)
+    val candDocs = cand.select(col("id_a").as("doc"))
+      .union(cand.select(col("id_b").as("doc"))).distinct()
+    def run(slices: Int) = pairs(Dedup.sharedRunCounts(df, "doc_id",
+      "text", t, candDocs, slices))
+    assert(run(1) === verified)
+    assert(run(3) === verified)
+    assert(run(7) === verified)
     // the full bounded-disk operator path (linear candDocs from bucket
     // sizes + sliced gram counts + sliced candidate cross-check) must
-    // equal the default candidate-join path exactly
-    def full(slices: Int) =
-      Dedup.winnowSubstringPairs(df, "doc_id", "text", K, W,
-          maxBucketSize = 10000, slices = slices)
-        .collect()
-        .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
-    val fullDefault = full(1)
-    assert(fullDefault.nonEmpty)
-    assert(full(3) === fullDefault)
-    assert(full(5) === fullDefault)
+    // equal the default candidate-join path exactly — also where the
+    // bucket cap drops the hot bucket, the case the per-fingerprint-
+    // residue cross-check exists for
+    def full(in: org.apache.spark.sql.DataFrame, cap: Int, slices: Int) =
+      pairs(Dedup.substringPairsAt(in, fpsOf(in), "doc_id", "text", t,
+        cap, slices))
+    Seq(df -> 10000, hotBucketDocs -> 10).foreach { case (in, cap) =>
+      val fullDefault = full(in, cap, 1)
+      assert(fullDefault.nonEmpty)
+      assert(full(in, cap, 3) === fullDefault)
+      assert(full(in, cap, 5) === fullDefault)
+    }
   }
 
   test("autoWinnowSlices: hot-bucket mass flips to sliced mode by itself; stays 1 under budget") {
-    // a synthetic hot fingerprint bucket: 40 docs sharing one long
-    // verbatim run -> that bucket alone carries 40*39/2 = 780 pair
-    // incidences; with a 4 KiB budget (48 B each -> ~37 KiB estimate)
-    // the auto rule must engage the bounded mode WITHOUT the env var
-    val r = new scala.util.Random(31)
-    val hot = randWord(r, 3 * (K + W))
-    val docs = (1L to 40L).map(i => i -> (hot + " " + randWord(r, 10))) :+
-      (99L -> randWord(r, 120))
-    val df = spark.createDataFrame(docs).toDF("doc_id", "text")
-    val auto = Dedup.autoWinnowSlices(df, "text", K, W,
-      maxBucketSize = 10000, budgetBytes = 4096)
-    assert(auto > 1)
+    // the hot bucket alone carries 780 pair incidences; with a 4 KiB
+    // budget (48 B each -> ~37 KiB estimate) the auto rule must engage
+    // the bounded mode by itself
+    val df = hotBucketDocs
+    val fps = fpsOf(df)
+    assert(Dedup.autoWinnowSlices(fps, maxBucketSize = 10000,
+      budgetBytes = 4096) > 1)
     // under the default (32 GB) budget the same corpus keeps the plain
     // co-partitioned plan: slices = 1, nothing changes for small data
-    assert(Dedup.autoWinnowSlices(df, "text", K, W,
-      maxBucketSize = 10000) === 1)
+    assert(Dedup.autoWinnowSlices(fps, maxBucketSize = 10000) === 1)
     // buckets past the cap are DROPPED by the operator, so they must
     // not count toward the mass estimate either
-    assert(Dedup.autoWinnowSlices(df, "text", K, W,
-      maxBucketSize = 10, budgetBytes = 4096) === 1)
-    // and the auto default (slices = 0) produces the same output as
-    // the explicit default path on a normal corpus
+    assert(Dedup.autoWinnowSlices(fps, maxBucketSize = 10,
+      budgetBytes = 4096) === 1)
+    // and the automatic choice produces the same output as the
+    // explicit one-slice path on a normal corpus
     val got0 = Dedup.winnowSubstringPairs(df, "doc_id", "text", K, W)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    val got1 = Dedup.winnowSubstringPairs(df, "doc_id", "text", K, W,
-        maxBucketSize = 10000, slices = 1)
+    val got1 = Dedup.substringPairsAt(df, fps, "doc_id", "text",
+        K + W - 1, maxBucketSize = 10000, slices = 1)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(got0 === got1)
     assert(got0.nonEmpty)

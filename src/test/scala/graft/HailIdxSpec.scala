@@ -134,10 +134,17 @@ class HailIdxSpec extends SparkSpec {
     (partFiles.length, total)
   }
 
+  // the fixture directories are not committed: a host without them fails
+  // here with the missing path named, not on a null directory listing
+  private def legacyFixtures(sub: String, ext: String): Seq[File] = {
+    val dir = new File(s"$Base/$sub")
+    assert(dir.isDirectory, s"legacy 1.1.0 fixture directory $dir is missing")
+    dir.listFiles().toSeq.filter(_.getName.endsWith(ext)).sortBy(_.getName)
+  }
+
   test("legacy 1.1.0 table .idx fixtures decode; keys and offsets " +
     "match the rows component") {
-    val dirs = new File(s"$Base/table").listFiles()
-      .filter(_.getName.endsWith(".ht")).sortBy(_.getName)
+    val dirs = legacyFixtures("table", ".ht")
     assert(dirs.nonEmpty, "no 1.1.0 table fixtures found")
     var checkedParts = 0
     var checkedKeys = 0L
@@ -150,8 +157,7 @@ class HailIdxSpec extends SparkSpec {
 
   test("legacy 1.1.0 matrix_table .idx fixtures decode; keys, row " +
     "offsets AND entries_offset annotations pin to both components") {
-    val dirs = new File(s"$Base/matrix_table").listFiles()
-      .filter(_.getName.endsWith(".hmt")).sortBy(_.getName)
+    val dirs = legacyFixtures("matrix_table", ".hmt")
     assert(dirs.nonEmpty, "no 1.1.0 matrix_table fixtures found")
     dirs.foreach { hmt =>
       val rvdDir = s"${hmt.getPath}/rows/rows"

@@ -189,21 +189,28 @@ private[graft] object Support {
       |${steps.mkString(",\n")}""".stripMargin
   }
 
-  /** DuckDB CTE parsing a committed VCF fixture into one row per
-    * (variant, sample) with gt/a1/a2/dp — shared by the genetics oracles. */
-  def vcfParseCte(path: String, skip: Int, samples: Seq[String])
+  /** DuckDB CTE `raw`: the text columns of a committed VCF fixture, one
+    * row per variant, one column per sample. */
+  def vcfReadCte(path: String, skip: Int, samples: Seq[String])
       : String = {
     val cols = samples.map(s => s"'$s':'VARCHAR'").mkString(",")
-    val unions = samples.map(s =>
-      s"SELECT contig, position, ref, alts, '$s' AS s, $s AS e FROM raw")
-      .mkString("\n  UNION ALL ")
     s"""raw AS (
        |  SELECT * FROM read_csv('$path', delim='\t', header=false,
        |    skip=$skip,
        |    columns={'contig':'VARCHAR','position':'INTEGER',
        |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
        |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-       |      'fmt':'VARCHAR',$cols})),
+       |      'fmt':'VARCHAR',$cols}))""".stripMargin
+  }
+
+  /** DuckDB CTE parsing a committed VCF fixture into one row per
+    * (variant, sample) with gt/a1/a2/dp — shared by the genetics oracles. */
+  def vcfParseCte(path: String, skip: Int, samples: Seq[String])
+      : String = {
+    val unions = samples.map(s =>
+      s"SELECT contig, position, ref, alts, '$s' AS s, $s AS e FROM raw")
+      .mkString("\n  UNION ALL ")
+    s"""${vcfReadCte(path, skip, samples)},
        |unp AS ($unions),
        |pq AS (
        |  SELECT contig, position, ref, alts, s,
@@ -292,17 +299,9 @@ private[graft] object Support {
       |  count(DISTINCT h) AS n_distinct
       |FROM cg JOIN bg USING (h) GROUP BY doc_id""".stripMargin
 
-  /** DuckDB CTE `raw`: the text columns of the 5-sample VCF fixture. */
+  /** `vcfReadCte` over the 5-sample fixture `vcfFixture`. */
   def vcfRawCte: String =
-    raw"""raw AS (
-      |  SELECT * FROM read_csv(
-      |    '${Fixtures.path("oracle_sample.vcf")}',
-      |    delim='\t', header=false, skip=7,
-      |    columns={'contig':'VARCHAR','position':'INTEGER',
-      |      'rsid':'VARCHAR','ref':'VARCHAR','alts':'VARCHAR',
-      |      'qual':'DOUBLE','filt':'VARCHAR','info':'VARCHAR',
-      |      'fmt':'VARCHAR','S1':'VARCHAR','S2':'VARCHAR','S3':'VARCHAR',
-      |      'S4':'VARCHAR','S5':'VARCHAR'}))""".stripMargin
+    vcfReadCte(vcfFixture, 7, (1 to 5).map(i => s"S$i"))
 
   /** Shared oracle for `vcf_import` and every gate that must restore its
     * projection (`genotypeDump`). */

@@ -464,10 +464,10 @@ object Dedup {
       // per-fp-residue bucket counts equal the global ones (counts are
       // per-fp), so capBuckets inside the residue is exact — and its
       // count shuffle is 1/slices instead of the full stream
-      residueFold(flat, "fp", slices)(fr => counts.join(
-        docPairs(capBuckets(fr, Seq("fp"), maxBucketSize), "fp")
-          .select("id_a", "id_b"), Seq("id_a", "id_b"), "left_semi"))(
-        _.distinct())
+      def survivors(fr: DataFrame) = counts.join(
+        docPairs(capBuckets(fr, Seq("fp"), maxBucketSize), "fp"),
+        Seq("id_a", "id_b"), "left_semi")
+      residueFold(flat, "fp", slices)(survivors)(_.distinct())
         .select("id_a", "id_b", "n_shared")
     }
 

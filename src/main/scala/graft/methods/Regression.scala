@@ -105,173 +105,65 @@ object Regression {
     Table(out, mt.rowKey, mt.globals)
   }
 
-  /** Newton-Raphson logistic fit on one variant's collected design matrix
-    * (samples per variant — thousands — fit locally per group, exactly the
-    * reference's per-variant kernel shape,
-    * `is/hail/methods/LogisticRegression.scala`). Returns
-    * (beta, se, z, p, converged) for the x term (index 1). */
-  private val logisticFit: UserDefinedFunction = udf {
-    (xs: Seq[Seq[Double]], ys: Seq[Double]) =>
-      val n = xs.length
-      if (n == 0) (Double.NaN, Double.NaN, Double.NaN, Double.NaN, false)
-      else {
-        val k = xs.head.length
-        val X = breeze.linalg.DenseMatrix(xs.map(_.toArray): _*)
-        val y = breeze.linalg.DenseVector(ys.toArray)
-        var beta = breeze.linalg.DenseVector.zeros[Double](k)
-        var converged = false
-        var iter = 0
-        var H = breeze.linalg.DenseMatrix.zeros[Double](k, k)
-        while (!converged && iter < 25) {
-          val eta = X * beta
-          val mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
-          val w = mu.map(m => m * (1.0 - m))
-          val grad = X.t * (y - mu)
-          val Xw = X.copy
-          var i = 0
-          while (i < n) {
-            var j = 0
-            while (j < k) { Xw(i, j) = X(i, j) * w(i); j += 1 }
-            i += 1
-          }
-          H = X.t * Xw
-          val step =
-            try H \ grad
-            catch { case _: Exception =>
-              breeze.linalg.DenseVector.fill(k)(Double.NaN) }
-          beta = beta + step
-          iter += 1
-          converged = breeze.linalg.norm(grad) < 1e-6
-        }
-        if (!converged || beta.exists(_.isNaN))
-          (Double.NaN, Double.NaN, Double.NaN, Double.NaN, false)
-        else {
-          val hinv: breeze.linalg.DenseMatrix[Double] = breeze.linalg.inv(H)
-          val se = math.sqrt(hinv(1, 1))
-          val z = beta(1) / se
-          val p = 2.0 * (1.0 - new org.apache.commons.math3.distribution
-            .NormalDistribution().cumulativeProbability(math.abs(z)))
-          (beta(1), se, z, p, true)
-        }
-      }
-  }
+  /** A canonical GLM link of the local fitter: the mean mu(eta) and the
+    * IRLS weight w(mu), which for a canonical link is the variance. */
+  private[methods] sealed abstract class Link(val mean: Double => Double,
+      val weight: Double => Double) extends Serializable
+  private[methods] case object Logit
+      extends Link(e => 1.0 / (1.0 + math.exp(-e)), m => m * (1.0 - m))
+  private[methods] case object LogLink extends Link(math.exp, m => m)
 
-  /** Newton-Raphson Poisson (log link) fit — same shape as
-    * `logisticFit` with mu = exp(eta), W = mu (reference
-    * `statgen.py:1650` `poisson_regression_rows`,
-    * `PoissonRegression.scala`). */
-  private val poissonFit: UserDefinedFunction = udf {
-    (xs: Seq[Seq[Double]], ys: Seq[Double]) =>
-      val n = xs.length
-      if (n == 0) (Double.NaN, Double.NaN, Double.NaN, Double.NaN, false)
-      else {
-        val k = xs.head.length
-        val X = breeze.linalg.DenseMatrix(xs.map(_.toArray): _*)
-        val y = breeze.linalg.DenseVector(ys.toArray)
-        var beta = breeze.linalg.DenseVector.zeros[Double](k)
-        var converged = false
-        var iter = 0
-        var H = breeze.linalg.DenseMatrix.zeros[Double](k, k)
-        while (!converged && iter < 25) {
-          val mu = (X * beta).map(math.exp)
-          val grad = X.t * (y - mu)
-          val Xw = X.copy
-          var i = 0
-          while (i < n) {
-            var j = 0
-            while (j < k) { Xw(i, j) = X(i, j) * mu(i); j += 1 }
-            i += 1
-          }
-          H = X.t * Xw
-          val step =
-            try H \ grad
-            catch { case _: Exception =>
-              breeze.linalg.DenseVector.fill(k)(Double.NaN) }
-          beta = beta + step
-          iter += 1
-          converged = breeze.linalg.norm(grad) < 1e-8
-        }
-        if (!converged || beta.exists(_.isNaN))
-          (Double.NaN, Double.NaN, Double.NaN, Double.NaN, false)
-        else {
-          val hinv: breeze.linalg.DenseMatrix[Double] = breeze.linalg.inv(H)
-          val se = math.sqrt(hinv(1, 1))
-          val z = beta(1) / se
-          val p = 2.0 * (1.0 - new org.apache.commons.math3.distribution
-            .NormalDistribution().cumulativeProbability(math.abs(z)))
-          (beta(1), se, z, p, true)
-        }
-      }
-  }
+  // the one stop rule of every local fit: the Newton step's L2 norm
+  // (a step-size rule, like the reference's `LogisticRegressionModel`)
+  private val StepTol = 1e-7
+  private val MaxIter = 100
 
-  /** poisson_regression_rows, Wald (reference `statgen.py:1650`): per-
-    * variant Poisson regression of count `yCol` on `xOf(GT)` plus
-    * covariates with intercept; complete-case, same distribution shape
-    * as the logistic path. */
-  def poissonRegressionRows(mt: MatrixTable, pheno: DataFrame,
-      yCol: String, covCols: Seq[String] = Nil,
-      xOf: Column => Column = Calls.nNonRefAlleles(_).cast("double"))
-      : Table = {
-    val e = mt.entriesTable.df
-      .join(broadcast(pheno), mt.colKey, "inner")
-      .filter(col("GT").isNotNull && col(yCol).isNotNull)
-    val x = xOf(col("GT"))
-    val xs = array((lit(1.0) +: x +: covCols.map(c =>
-      col(c).cast("double"))): _*)
-    val keyCols = mt.rowKey.map(col)
-    val fit = e
-      .withColumn("__xs", xs)
-      .groupBy(keyCols: _*)
-      .agg(
-        poissonFit(collect_list(col("__xs")),
-          collect_list(col(yCol).cast("double"))).as("__fit"),
-        count(lit(1)).as("n"))
-    Table(fit
-      .withColumn("beta", col("__fit")("_1"))
-      .withColumn("standard_error", col("__fit")("_2"))
-      .withColumn("z_stat", col("__fit")("_3"))
-      .withColumn("p_value", col("__fit")("_4"))
-      .withColumn("converged", col("__fit")("_5"))
-      .drop("__fit"), mt.rowKey, mt.globals)
-  }
+  /** XᵀWX, the information of a canonical-link GLM with weights `w`. */
+  private def gram(X: breeze.linalg.DenseMatrix[Double],
+      w: breeze.linalg.DenseVector[Double])
+      : breeze.linalg.DenseMatrix[Double] =
+    X.t * (X(::, breeze.linalg.*) *:* w)
 
-  /** Newton (optionally Firth-penalized) logistic fit on a local design.
-    * Returns (beta, observed information at the optimum, log-likelihood —
-    * penalized by 0.5·logdet(I) when `firth` — and convergence flag).
-    * Firth's adjusted score (Firth 1993; the reference's
-    * `LogisticRegressionModel` firth path) adds h_i(0.5 − mu_i) to each
-    * residual, h the hat-matrix diagonal. */
-  private def fitLogisticLocal(X: breeze.linalg.DenseMatrix[Double],
-      y: breeze.linalg.DenseVector[Double], firth: Boolean)
+  /** Newton-Raphson fit of a canonical-link GLM on one local design — the
+    * per-variant kernel shape of the reference's
+    * `is/hail/methods/LogisticRegression.scala` and
+    * `PoissonRegression.scala` (samples per variant, thousands, fit
+    * locally per group). Returns (beta, the information the last step was
+    * solved with — the reference's convention — and converged): the fit
+    * converges once a step is shorter than `StepTol`; a NaN step
+    * (singular information) ends it unconverged, and so do `MaxIter`
+    * steps. `firth` (logistic only) uses Firth's adjusted score (Firth
+    * 1993; the reference's firth path), which adds h_i(0.5 − mu_i) to
+    * each residual, h the hat-matrix diagonal. */
+  private[methods] def fitGlm(X: breeze.linalg.DenseMatrix[Double],
+      y: breeze.linalg.DenseVector[Double], link: Link,
+      firth: Boolean = false)
       : (breeze.linalg.DenseVector[Double],
-        breeze.linalg.DenseMatrix[Double], Double, Boolean) = {
+        breeze.linalg.DenseMatrix[Double], Boolean) = {
     import breeze.linalg._
-    val n = X.rows; val k = X.cols
+    val k = X.cols
     var beta = DenseVector.zeros[Double](k)
     var info = DenseMatrix.zeros[Double](k, k)
     var converged = false
+    var failed = false
     var iter = 0
-    while (!converged && iter < 100) {
-      val eta = X * beta
-      val mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
-      val w = mu.map(m => m * (1.0 - m))
-      val Xw = X(::, *) *:* w
-      info = X.t * Xw
+    while (!converged && !failed && iter < MaxIter) {
+      val mu = (X * beta).map(link.mean)
+      val w = mu.map(link.weight)
+      info = gram(X, w)
       val resid = y - mu
       if (firth) {
         // singular information (collinear/constant design): no penalized
-        // fit exists — bail out as non-converged instead of throwing
-        // (the UDF must be total; Spark may evaluate it on rows a later
-        // filter would drop)
+        // fit exists — end non-converged instead of throwing (the UDF
+        // must be total; Spark may evaluate it on rows a later filter
+        // would drop)
         val infoInv =
           try inv(info)
           catch { case _: Exception => null }
-        if (infoInv == null) {
-          beta = DenseVector.fill(k)(Double.NaN)
-          iter = 100
-        } else {
+        if (infoInv == null) failed = true
+        else {
           var i = 0
-          while (i < n) {
+          while (i < X.rows) {
             val xi = X(i, ::).t
             val h = w(i) * (xi dot (infoInv * xi))
             resid(i) += h * (0.5 - mu(i))
@@ -279,15 +171,23 @@ object Regression {
           }
         }
       }
-      val grad = X.t * resid
       val step =
-        try info \ grad
+        try info \ (X.t * resid)
         catch { case _: Exception => DenseVector.fill(k)(Double.NaN) }
       beta = beta + step
       iter += 1
-      converged = norm(step) < 1e-7 && !step.exists(_.isNaN)
-      if (step.exists(_.isNaN)) iter = 100
+      failed ||= step.exists(_.isNaN)
+      converged = !failed && norm(step) < StepTol
     }
+    (beta, info, converged)
+  }
+
+  /** Logistic log-likelihood at `beta`; with `firth`, penalized by
+    * 0.5·logdet of the information at `beta` — NaN when that information
+    * is not positive definite. */
+  private def logisticLogLik(X: breeze.linalg.DenseMatrix[Double],
+      y: breeze.linalg.DenseVector[Double],
+      beta: breeze.linalg.DenseVector[Double], firth: Boolean): Double = {
     val eta = X * beta
     // stable log(1 + e^eta) = max(eta, 0) + log1p(e^-|eta|)
     var ll = 0.0
@@ -297,16 +197,13 @@ object Regression {
         (math.max(eta(i), 0.0) + math.log1p(math.exp(-math.abs(eta(i)))))
       i += 1
     }
-    if (firth && converged) {
-      val mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
-      val w = mu.map(m => m * (1.0 - m))
-      info = X.t * (X(::, *) *:* w)
+    if (!firth) ll
+    else
       try {
-        val c = cholesky(info)
-        ll += (0 until k).map(j => math.log(c(j, j))).sum
-      } catch { case _: Exception => converged = false }
-    }
-    (beta, info, ll, converged)
+        val c = breeze.linalg.cholesky(
+          gram(X, eta.map(Logit.mean).map(Logit.weight)))
+        ll + (0 until X.cols).map(j => math.log(c(j, j))).sum
+      } catch { case _: Exception => Double.NaN }
   }
 
   private def chiSqTail1(x: Double): Double =
@@ -316,112 +213,116 @@ object Regression {
     else 1.0 - org.apache.commons.math3.special.Gamma
       .regularizedGammaP(0.5, x / 2.0)
 
-  /** UDF for the lrt/score/firth logistic tests (reference
-    * `LogisticRegression.scala` wald/lrt/score/firth kernels; per-variant
-    * complete-case, so the null model refits on each variant's called
-    * samples). Column 1 of the design is the tested genotype term.
-    * Returns (beta, se, chi_sq, p, converged). */
-  private def logisticTestUdf(test: String): UserDefinedFunction = udf {
-    (xs: Seq[Seq[Double]], ys: Seq[Double]) =>
+  /** The per-variant test UDF (reference `LogisticRegression.scala`
+    * wald/lrt/score/firth kernels, `PoissonRegression.scala` wald;
+    * per-variant complete-case, so the null model refits on each
+    * variant's called samples). Column 1 of the design is the tested x
+    * term. Returns (beta, se, statistic, p, converged) for x, the
+    * statistic z for wald and chi-square otherwise, score with a null
+    * beta and se; every field is null when a fit does not converge. */
+  private def glmTestUdf(link: Link, test: String): UserDefinedFunction =
+    udf { (xs: Seq[Seq[Double]], ys: Seq[Double]) =>
       import breeze.linalg._
-      val bad = (null: java.lang.Double, null: java.lang.Double,
-        null: java.lang.Double, null: java.lang.Double, false)
-      val n = xs.length
-      if (n == 0) bad
-      else {
-        val k = xs.head.length
-        val X = DenseMatrix(xs.map(_.toArray): _*)
-        val y = DenseVector(ys.toArray)
-        val nullCols = (0 until k).filter(_ != 1)
-        val Xn = X(::, nullCols).toDenseMatrix
+      val X = DenseMatrix(xs.map(_.toArray): _*)
+      val y = DenseVector(ys.toArray)
+      val Xn = X(::, (0 until X.cols).filter(_ != 1)).toDenseMatrix
+      def se(info: DenseMatrix[Double]): Double =
+        try math.sqrt(inv(info).apply(1, 1))
+        catch { case _: Exception => Double.NaN }
+      val fit: Option[(java.lang.Double, java.lang.Double, Double, Double)] =
         test match {
+          case "wald" =>
+            val (b, info, c) = fitGlm(X, y, link)
+            val seX = se(info)
+            val z = b(1) / seX
+            Option.when(c)((b(1), seX, z, 2.0 * (1.0 -
+              new org.apache.commons.math3.distribution.NormalDistribution()
+                .cumulativeProbability(math.abs(z)))))
           case "lrt" | "firth" =>
             val firth = test == "firth"
-            val (bF, iF, llF, cF) = fitLogisticLocal(X, y, firth)
-            val (_, _, ll0, c0) = fitLogisticLocal(Xn, y, firth)
-            if (!cF || !c0) bad
-            else {
-              val chi2 = 2.0 * (llF - ll0)
-              val se =
-                try {
-                  val iFInv: DenseMatrix[Double] = inv(iF)
-                  math.sqrt(iFInv(1, 1))
-                } catch { case _: Exception => Double.NaN }
-              (java.lang.Double.valueOf(bF(1)),
-                java.lang.Double.valueOf(se),
-                java.lang.Double.valueOf(chi2),
-                java.lang.Double.valueOf(chiSqTail1(chi2)), true)
-            }
+            val (b, info, c) = fitGlm(X, y, link, firth)
+            val (b0, _, c0) = fitGlm(Xn, y, link, firth)
+            // the penalized fit's se reads the information at its optimum
+            val infoB =
+              if (firth) gram(X, (X * b).map(link.mean).map(link.weight))
+              else info
+            val chi2 = 2.0 * (logisticLogLik(X, y, b, firth) -
+              logisticLogLik(Xn, y, b0, firth))
+            Option.when(c && c0 && !chi2.isNaN)(
+              (b(1), se(infoB), chi2, chiSqTail1(chi2)))
           case "score" =>
-            val (b0, _, _, c0) = fitLogisticLocal(Xn, y, firth = false)
-            if (!c0) bad
-            else {
-              // beta at the null: fitted for untested terms, 0 for x
-              val mu0 = (Xn * b0).map(e => 1.0 / (1.0 + math.exp(-e)))
-              val w0 = mu0.map(m => m * (1.0 - m))
-              val u = X.t * (y - mu0)
-              val info = X.t * (X(::, *) *:* w0)
-              val stat =
-                try u dot (info \ u)
-                catch { case _: Exception => Double.NaN }
-              if (stat.isNaN) bad
-              else (null: java.lang.Double, null: java.lang.Double,
-                java.lang.Double.valueOf(stat),
-                java.lang.Double.valueOf(chiSqTail1(stat)), true)
-            }
+            // beta at the null: fitted for untested terms, 0 for x
+            val (b0, _, c0) = fitGlm(Xn, y, link)
+            val mu0 = (Xn * b0).map(link.mean)
+            val u = X.t * (y - mu0)
+            val stat =
+              try u dot (gram(X, mu0.map(link.weight)) \ u)
+              catch { case _: Exception => Double.NaN }
+            Option.when(c0 && !stat.isNaN)(
+              (null, null, stat, chiSqTail1(stat)))
         }
+      fit match {
+        case Some((b, s, stat, p)) =>
+          (b, s, java.lang.Double.valueOf(stat), java.lang.Double.valueOf(p),
+            true)
+        case None => (null: java.lang.Double, null: java.lang.Double,
+          null: java.lang.Double, null: java.lang.Double, false)
       }
+    }
+
+  /** The rows methods fitted locally per variant: `pheno` joined onto the
+    * entries, rows with missing GT or y dropped (complete-case), the
+    * per-variant design [1, xOf(GT), covariates] collected into the
+    * group and fitted by `glmTestUdf` — bounded by sample count,
+    * distributed across variants. Keeps n and the test's columns. */
+  private def glmRows(mt: MatrixTable, pheno: DataFrame, yCol: String,
+      covCols: Seq[String], xOf: Column => Column, link: Link,
+      test: String): Table = {
+    val e = mt.entriesTable.df
+      .join(broadcast(pheno), mt.colKey, "inner")
+      .filter(col("GT").isNotNull && col(yCol).isNotNull)
+    val xs = array((lit(1.0) +: xOf(col("GT")) +: covCols.map(c =>
+      col(c).cast("double"))): _*)
+    val fit = e
+      .withColumn("__xs", xs)
+      .groupBy(mt.rowKey.map(col): _*)
+      .agg(
+        glmTestUdf(link, test)(collect_list(col("__xs")),
+          collect_list(col(yCol).cast("double"))).as("__fit"),
+        count(lit(1)).as("n"))
+    val stat = if (test == "wald") "z_stat" else "chi_sq_stat"
+    val fields =
+      (if (test == "score") Nil
+       else Seq("beta" -> "_1", "standard_error" -> "_2")) ++
+        Seq(stat -> "_3", "p_value" -> "_4", "converged" -> "_5")
+    val out = fit.select(col("*") +: fields.map { case (name, f) =>
+      col("__fit")(f).as(name) }: _*)
+    Table(out.drop("__fit"), mt.rowKey, mt.globals)
   }
+
+  /** poisson_regression_rows, Wald (reference `statgen.py:1650`): per-
+    * variant Poisson regression of count `yCol` on `xOf(GT)` plus
+    * covariates with intercept; emits beta/standard_error/z_stat/p_value
+    * and converged. */
+  def poissonRegressionRows(mt: MatrixTable, pheno: DataFrame,
+      yCol: String, covCols: Seq[String] = Nil,
+      xOf: Column => Column = Calls.nNonRefAlleles(_).cast("double"))
+      : Table =
+    glmRows(mt, pheno, yCol, covCols, xOf, LogLink, "wald")
 
   /** logistic_regression_rows (reference `statgen.py:731`): per-variant
     * logistic regression of binary `yCol` on `xOf(GT)` plus covariates
     * with intercept; `test` selects wald (default) / lrt / score / firth
     * (`is/hail/methods/LogisticRegression.scala` implements the same
-    * four). The per-variant design (n samples × k) is collected into the
-    * group and fitted locally — bounded by sample count, distributed
-    * across variants. Rows with missing GT or y are dropped
-    * (complete-case). Wald emits beta/standard_error/z_stat/p_value;
-    * lrt/firth emit beta/standard_error/chi_sq_stat/p_value; score emits
-    * chi_sq_stat/p_value. */
+    * four). Wald emits beta/standard_error/z_stat/p_value; lrt/firth emit
+    * beta/standard_error/chi_sq_stat/p_value; score emits
+    * chi_sq_stat/p_value; each also emits n and converged. */
   def logisticRegressionRows(mt: MatrixTable, pheno: DataFrame,
       yCol: String, covCols: Seq[String] = Nil,
       xOf: Column => Column = Calls.nNonRefAlleles(_).cast("double"),
       test: String = "wald"): Table = {
     require(Set("wald", "lrt", "score", "firth").contains(test),
       s"unknown logistic test $test")
-    val e = mt.entriesTable.df
-      .join(broadcast(pheno), mt.colKey, "inner")
-      .filter(col("GT").isNotNull && col(yCol).isNotNull)
-    val x = xOf(col("GT"))
-    val xs = array((lit(1.0) +: x +: covCols.map(c =>
-      col(c).cast("double"))): _*)
-    val keyCols = mt.rowKey.map(col)
-    val fitUdf = if (test == "wald") logisticFit else logisticTestUdf(test)
-    val fit = e
-      .withColumn("__xs", xs)
-      .groupBy(keyCols: _*)
-      .agg(
-        fitUdf(collect_list(col("__xs")),
-          collect_list(col(yCol).cast("double"))).as("__fit"),
-        count(lit(1)).as("n"))
-    val out = test match {
-      case "wald" =>
-        fit.withColumn("beta", col("__fit")("_1"))
-          .withColumn("standard_error", col("__fit")("_2"))
-          .withColumn("z_stat", col("__fit")("_3"))
-          .withColumn("p_value", col("__fit")("_4"))
-          .withColumn("converged", col("__fit")("_5"))
-      case "score" =>
-        fit.withColumn("chi_sq_stat", col("__fit")("_3"))
-          .withColumn("p_value", col("__fit")("_4"))
-          .withColumn("converged", col("__fit")("_5"))
-      case _ =>
-        fit.withColumn("beta", col("__fit")("_1"))
-          .withColumn("standard_error", col("__fit")("_2"))
-          .withColumn("chi_sq_stat", col("__fit")("_3"))
-          .withColumn("p_value", col("__fit")("_4"))
-          .withColumn("converged", col("__fit")("_5"))
-    }
-    Table(out.drop("__fit"), mt.rowKey, mt.globals)
+    glmRows(mt, pheno, yCol, covCols, xOf, Logit, test)
   }
 }

@@ -246,23 +246,12 @@ object Skat {
       } else {
         require(y.forall(v => v == 0.0 || v == 1.0),
           "logistic SKAT needs 0/1 phenotype")
-        var beta = BDV.zeros[Double](k)
-        var iter = 0
-        var mu = BDV.zeros[Double](n)
-        var xtvx = BDM.zeros[Double](k, k)
-        while (iter < 50) {
-          val eta = x * beta
-          mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
-          val w = mu.map(m => m * (1.0 - m))
-          val xw = x(::, breeze.linalg.*) *:* w
-          xtvx = x.t * xw
-          val grad = x.t * (y - mu)
-          if (breeze.linalg.norm(grad) < 1e-8) iter = 50
-          else { beta = beta + (xtvx \ grad); iter += 1 }
-        }
-        val v = mu.map(m => m * (1.0 - m))
-        val cinv = breeze.linalg.inv(breeze.linalg.cholesky(xtvx))
+        val (beta, _, converged) = Regression.fitGlm(x, y, Regression.Logit)
+        require(converged, "logistic SKAT's null model did not converge")
+        val mu = (x * beta).map(Regression.Logit.mean)
+        val v = mu.map(Regression.Logit.weight)
         val vx = x(::, breeze.linalg.*) *:* v
+        val cinv = breeze.linalg.inv(breeze.linalg.cholesky(x.t * vx))
         (y - mu, 1.0, cinv * vx.t, v.map(math.sqrt))
       }
     // ---- per-variant q/a/b as codegen'd expressions --------------------

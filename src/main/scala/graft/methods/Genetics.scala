@@ -1,7 +1,8 @@
 package graft.methods
 
 import org.apache.spark.mllib.linalg.{Vectors => MlVectors}
-import org.apache.spark.mllib.linalg.distributed.{CoordinateMatrix, MatrixEntry, RowMatrix}
+import org.apache.spark.mllib.linalg.distributed.{BlockMatrix, CoordinateMatrix, MatrixEntry, RowMatrix}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
@@ -411,6 +412,27 @@ object Genetics {
     * BlockMatrix product. */
   val PairCountDistributeOver = 5000
 
+  /** G = MᵀM for the sparse matrix M whose rows are the `nCols`-wide
+    * vectors of `vecRows`' one array<double> column, as the MLlib
+    * BlockMatrix product (block-cogroup multiply) — the distributed
+    * Gramian of king/ibd, PC-Relate, grm and rrm past `distributeOver`
+    * samples. Returns G and the persisted row vectors its lineage
+    * reads: unpersist them once G's consumer is materialized. */
+  private[methods] def sparseGramian(vecRows: DataFrame, nCols: Long,
+      blockSize: Int = 1024): (BlockMatrix, RDD[Array[Double]]) = {
+    val vecs = vecRows.rdd.map(_.getSeq[Double](0).toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nVariants = vecs.count()
+    val entriesRdd = vecs.zipWithIndex().flatMap { case (v, ri) =>
+      Iterator.range(0, v.length)
+        .filter(v(_) != 0.0)
+        .map(ci => MatrixEntry(ri, ci.toLong, v(ci)))
+    }
+    val m = new CoordinateMatrix(entriesRdd, nVariants, nCols)
+      .toBlockMatrix(blockSize, blockSize)
+    (m.transpose.multiply(m), vecs)
+  }
+
   private val pairCountsSchema = StructType(
     StructField("i", IntegerType, false) ::
     StructField("j", IntegerType, false) ::
@@ -440,18 +462,8 @@ object Genetics {
         mt.spark.sparkContext.parallelize(rows, 1), pairCountsSchema)
     } else {
       val spark = mt.spark
-      val vecs = mt.rows.select(indicators.as("__v")).rdd
-        .map(_.getSeq[Double](0).toArray)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nVariants = vecs.count()
-      val entriesRdd = vecs.zipWithIndex().flatMap { case (v, ri) =>
-        Iterator.range(0, v.length)
-          .filter(v(_) != 0.0)
-          .map(ci => MatrixEntry(ri, ci.toLong, v(ci)))
-      }
-      val m = new CoordinateMatrix(entriesRdd, nVariants, 3L * n)
-        .toBlockMatrix(blockSize, blockSize)
-      val g = m.transpose.multiply(m)
+      val (g, vecs) = sparseGramian(mt.rows.select(indicators.as("__v")),
+        3L * n, blockSize)
       // slot layout of a global coordinate a: sample = a % n,
       // indicator block = a / n (0 = hom-ref, 1 = het, 2 = called)
       val slotOf = Array(

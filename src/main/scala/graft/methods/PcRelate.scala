@@ -153,29 +153,17 @@ object PcRelate {
       // distributed: G = MᵀM as a BlockMatrix product; pair slots come
       // straight off G's blocks, the per-pair estimator is a
       // distributed map, and only the length-S diagonal is collected
-      import org.apache.spark.mllib.linalg.distributed.{CoordinateMatrix, MatrixEntry}
       import org.apache.spark.storage.StorageLevel
       val spark = mt.spark
-      val blockSize = 1024
-      val vecs = d3.select(vec.as("__v")).rdd
-        .map(_.getSeq[Double](0).toArray)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nVariants = vecs.count()
-      val entriesRdd = vecs.zipWithIndex().flatMap { case (v, ri) =>
-        Iterator.range(0, v.length)
-          .filter(v(_) != 0.0)
-          .map(ci => MatrixEntry(ri, ci.toLong, v(ci)))
-      }
-      val m = new CoordinateMatrix(entriesRdd, nVariants, 8L * n)
-        .toBlockMatrix(blockSize, blockSize)
-      val g = m.transpose.multiply(m)
+      val (g, vecs) =
+        Genetics.sparseGramian(d3.select(vec.as("__v")), 8L * n)
       // slot layout for the 10 needed (rowBlock, colBlock) products of
       // an i<j pair: A·A, S·S, HA·HR, HR·HA, MU2·OM2, OM2·MU2, GD·GD,
       // GD·V, V·GD, V·V
       val slotOf = Map((0, 0) -> 0, (1, 1) -> 1, (2, 3) -> 2,
         (3, 2) -> 3, (4, 5) -> 4, (5, 4) -> 5, (6, 6) -> 6,
         (6, 7) -> 7, (7, 6) -> 8, (7, 7) -> 9)
-      val bs = blockSize
+      val bs = g.rowsPerBlock
       val nL = n
       val slotRecords = g.blocks.flatMap { case ((bi, bj), blk) =>
         val out = List.newBuilder[((Int, Int), (Int, Double))]

@@ -182,22 +182,9 @@ object Pca {
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
     } else {
-      import org.apache.spark.mllib.linalg.distributed.{CoordinateMatrix, MatrixEntry}
-      import org.apache.spark.storage.StorageLevel
-      val blockSize = 1024
-      val vecs = normRows.select(col("__norm")).rdd
-        .map(_.getSeq[Double](0).toArray)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nVariants = vecs.count()
-      val entriesRdd = vecs.zipWithIndex().flatMap { case (v, ri) =>
-        Iterator.range(0, v.length)
-          .filter(v(_) != 0.0)
-          .map(ci => MatrixEntry(ri, ci.toLong, v(ci)))
-      }
-      val mMat = new CoordinateMatrix(entriesRdd, nVariants, n.toLong)
-        .toBlockMatrix(blockSize, blockSize)
-      val g = mMat.transpose.multiply(mMat)
-      val bs = blockSize
+      val (g, vecs) =
+        Genetics.sparseGramian(normRows.select(col("__norm")), n.toLong)
+      val bs = g.rowsPerBlock
       val pairRows = g.blocks.flatMap { case ((bi, bj), blk) =>
         val out = List.newBuilder[Row]
         val arr = blk.toArray // column-major

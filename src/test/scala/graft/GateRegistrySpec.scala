@@ -52,12 +52,13 @@ class GateRegistrySpec extends AnyFunSuite {
     assert((Bench.headline -- SparkEntry.queries.keySet) === Set.empty)
   }
 
-  test("no run of 8 code lines repeats in the gate families") {
-    // every non-blank, non-comment line of graft/gates, leading whitespace
-    // dropped; a run of 8 such lines written twice is copy-paste that
-    // belongs in one builder (the family file's or Support's)
+  test("no run of 8 code lines repeats in the gate families or methods") {
+    // every non-blank, non-comment line of graft/gates and graft/methods,
+    // leading whitespace dropped; a run of 8 such lines written twice is
+    // copy-paste that belongs in one builder or helper
     val run = 8
-    val code = scalaSources("src/main/scala/graft/gates").sortBy(_.toString)
+    val code = scalaSources("src/main/scala/graft/gates",
+        "src/main/scala/graft/methods").sortBy(_.toString)
       .map { p =>
         p.getFileName.toString -> Files.readAllLines(p).asScala.toIndexedSeq
           .zipWithIndex.collect {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * surface `functions/IntervalFunctions.scala` — interval(), contains,
   * overlaps, is_empty). Pure codegen'd Column expressions for any
   * ordered point type; the interval JOINS live in
-  * `operators/IntervalJoin` (broadcast + binned scale path). */
+  * `operators/IntervalJoin` (broadcast point-in-interval). */
 object Intervals {
 
   def interval(start: Column, end: Column,

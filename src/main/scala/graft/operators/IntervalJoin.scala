@@ -6,20 +6,11 @@ import org.apache.spark.sql.functions._
 /** Point-in-interval joins (reference `TableIntervalJoin`,
   * `expr/ir/TableIR.scala:2264`; lowering `LowerTableIR.scala:1591`).
   *
-  * Two physical strategies, chosen by the caller by interval-table size:
-  *
-  *  - `pointInInterval`: broadcast the interval table and let Catalyst run a
-  *    BroadcastNestedLoopJoin with the range predicate. Right for the common
-  *    annotation case (interval tables are small: gene lists, target panels).
-  *    At 100 TB of points this is still a single narrow pass — each point
-  *    partition probes the broadcast intervals; no shuffle of the big side.
-  *
-  *  - `binnedIntervalJoin`: when intervals are too many to broadcast, bin
-  *    both sides to a fixed grid and equi-join on the bin id (the
-  *    "bin-and-filter" range-join rewrite), so Spark uses a shuffled hash /
-  *    sort-merge join instead of a quadratic nested loop. Intervals spanning
-  *    k bins are replicated k times (`sequence` + `explode`), then the exact
-  *    predicate filters false positives.
+  * `pointInInterval` broadcasts the interval table and lets Catalyst run a
+  * BroadcastNestedLoopJoin with the range predicate. Right for the common
+  * annotation case (interval tables are small: gene lists, target panels).
+  * At 100 TB of points this is still a single narrow pass — each point
+  * partition probes the broadcast intervals; no shuffle of the big side.
   */
 object IntervalJoin {
 
@@ -29,22 +20,4 @@ object IntervalJoin {
   def pointInInterval(points: DataFrame, point: Column,
       intervals: DataFrame, lo: Column, hi: Column): DataFrame =
     points.join(broadcast(intervals), point >= lo && point < hi, "inner")
-
-  /** Scale path: equi-join on bin id, for non-broadcastable interval sets.
-    * `binWidth` should be ~the median interval width. */
-  def binnedIntervalJoin(points: DataFrame, pointCol: String,
-      intervals: DataFrame, loCol: String, hiCol: String,
-      binWidth: Double): DataFrame = {
-    val binnedPoints = points
-      .withColumn("__bin", floor(col(pointCol) / binWidth).cast("long"))
-    val binnedIvs = intervals
-      .withColumn("__bin", explode(sequence(
-        floor(col(loCol) / binWidth).cast("long"),
-        // hi is exclusive: an interval ending exactly on a bin edge does not
-        // occupy the next bin
-        floor((col(hiCol) - lit(1e-9)) / binWidth).cast("long"))))
-    binnedPoints.join(binnedIvs, Seq("__bin"))
-      .filter(col(pointCol) >= col(loCol) && col(pointCol) < col(hiCol))
-      .drop("__bin")
-  }
 }

@@ -131,8 +131,8 @@ object Dedup {
     * pairs, and a degenerate bucket (boilerplate text shared by k docs)
     * makes the self-join O(k²). Oversized buckets are dropped — at corpus
     * scale those are near-identical boilerplate the caller should collapse
-    * with `exact`/`byFingerprint` first; count them with
-    * `oversizedBuckets` when tuning. */
+    * with `exact`/`byFingerprint` first; `bucketCapStats` / `capReport`
+    * count what a cap drops. */
   private def capBuckets(banded: DataFrame, byCols: Seq[String],
       maxBucketSize: Int): DataFrame = {
     val buckets = banded.groupBy(byCols.map(col): _*)
@@ -227,15 +227,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Diagnostic: LSH band buckets larger than `maxBucketSize` (dropped by
-    * `minhashPairs`); returns (band, bsig, n) for cap tuning. */
-  def oversizedBuckets(df: DataFrame, id: String, text: String,
-      numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    bandSignatures(shingleSets(df, id, text, shingleSize), numHashes, bands)
-      .groupBy(col("band"), col("bsig")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucketSize)
-
   /** One audit row for a bucketed pair family: bucket counts split into
     * pairable (2..max), singleton, and CAPPED (dropped by `capBuckets`),
     * plus the row mass the cap silently discards. Every pair family in
@@ -259,8 +250,9 @@ object Dedup {
         col("rows_capped"))
 
   /** Cap audit across the text pair families (default parameters of
-    * each): what would `minhashPairs` / `simhashPairs` / `winnowPairs`
-    * — and `charNgramJaccardPairs` when `blockCols` is given — drop at
+    * each): what would `minhashPairs` / `simhashPairs` / the winnow
+    * fingerprint buckets (k = 12, w = 8) — and `charNgramJaccardPairs`
+    * when `blockCols` is given — drop at
     * their bucket caps on THIS corpus. Run it before a production dedup
     * pass: a large `rows_capped` says boilerplate should be collapsed
     * with `exact`/`byFingerprint` first (or the cap raised), a zero
@@ -319,44 +311,12 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
 
-  /** Winnowing-fingerprint near-dup pairs (MOSS-style): each doc is
-    * reduced to its winnowing fingerprint set (rolling-hash k-grams,
-    * rightmost-min-per-window selection — `Text.winnowFingerprints`);
-    * two docs sharing >= `minShared` fingerprints are a pair, scored by
-    * containment overlap = shared / min(|fp_a|, |fp_b|). Winnowing's
-    * guarantee makes this the substring-copy detector (contamination,
-    * quotation, boilerplate spans): ANY shared normalized substring of
-    * w + k - 1 chars forces a shared fingerprint, while MinHash/SimHash
-    * only see whole-document similarity.
-    *
-    * Scale shape: one narrow fingerprint scan (fused per-row kernel, no
-    * explode of raw text), explode of the ~2n/(w+1)-dense fingerprint
-    * sets, then ONE equi-join on uniform 64-bit fingerprint keys with
-    * the same bucket caps as the LSH pipelines — no cross product, no
-    * skew (hot boilerplate fingerprints are exactly what the cap
-    * drops). Pair counts aggregate map-side before the join output
-    * shuffles on (id_a, id_b). */
-  def winnowPairs(df: DataFrame, id: String, text: String, k: Int = 12,
-      w: Int = 8, minShared: Int = 2, maxBucketSize: Int = 10000)
-      : DataFrame = {
-    val fps = winnowFpsFrame(df, id, text, k, w)
-    val cand = winnowCandidates(fps, minShared, maxBucketSize)
-    val counts = fps.select(col("doc"), size(col("fps")).as("nfp"))
-    cand
-      .join(counts.select(col("doc").as("id_a"), col("nfp").as("nfp_a")),
-        "id_a")
-      .join(counts.select(col("doc").as("id_b"), col("nfp").as("nfp_b")),
-        "id_b")
-      .withColumn("overlap", round(col("shared").cast("double") /
-        least(col("nfp_a"), col("nfp_b")).cast("double"), 4))
-      .select("id_a", "id_b", "shared", "overlap")
-  }
-
   /** Substring-copy pairs via winnowing, verified exactly: candidate
-    * pairs come from shared winnowing fingerprints (`winnowPairs`,
-    * minShared = 1), then each candidate is verified by intersecting the
-    * docs' full normalized (k + w - 1)-char-gram sets — `n_shared` is
-    * the number of distinct shared runs. Winnowing's guarantee theorem
+    * pairs are docs sharing a winnowing fingerprint (rolling-hash
+    * k-grams, rightmost-min-per-window selection —
+    * `Text.winnowFingerprints`), then each candidate is verified by
+    * intersecting the docs' full normalized (k + w - 1)-char-gram sets —
+    * `n_shared` is the number of distinct shared runs. Winnowing's guarantee theorem
     * (any normalized substring match of length >= k + w - 1 forces a
     * shared selected fingerprint) makes candidate RECALL exact, so this
     * output EQUALS the full all-pairs substring join — computed without
@@ -916,7 +876,7 @@ object Dedup {
     * length bucket) would otherwise go quadratic silently at corpus
     * scale. Oversized blocks are dropped — collapse boilerplate with
     * `exact`/`byFingerprint` first, or generate candidates with
-    * `minhashPairs` / `winnowPairs` and verify with
+    * `minhashPairs` / `winnowSubstringPairs` and verify with
     * `charNgramJaccardVerify` semantics instead. The block equi-join
     * shuffles on the block key only; n-gram sets travel once per side. */
   def charNgramJaccardPairs(df: DataFrame, id: String, text: String,
@@ -1025,7 +985,7 @@ object Dedup {
     * and no LSH misses — the exact-at-scale member of the
     * n-gram-Jaccard family ([[charNgramJaccardPairs]] bounds its
     * quadratic inside hard-capped blocks; [[minhashPairs]] /
-    * [[winnowPairs]] are probabilistic candidate generators).
+    * [[simhashPairs]] are probabilistic candidate generators).
     *
     * Why this avoids the all-pairs quadratic: order the gram universe
     * by ascending global document frequency, ties by the gram value
@@ -1368,41 +1328,13 @@ object Dedup {
   }
 
   /** Embedding-cosine near-duplicate pairs, exact: all pairs with cosine
-    * similarity >= `threshold`. Brute-force over a bounded id range —
-    * the verification baseline for `embeddingPairsLsh` (O(n²) by
-    * definition; cap the input). */
+    * similarity >= `threshold`. Brute-force over a bounded id range
+    * (O(n²) by definition; cap the input). */
   def embeddingPairsExact(df: DataFrame, id: String, vec: String,
       threshold: Double): DataFrame = {
     val l = df.select(col(id).as("id_a"), col(vec).as("__va"))
     val r = df.select(col(id).as("id_b"), col(vec).as("__vb"))
     l.crossJoin(r).filter(col("id_a") < col("id_b"))
-      .withColumn("cos", Similarity.cosine(col("__va"), col("__vb")))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-  }
-
-  /** Embedding-cosine near-dup at scale: sign-bit LSH bucketing (equal
-    * bucket → candidate) then exact cosine verification — same shape as
-    * `minhashPairs`, trading recall for a ~2^nPlanes candidate cut.
-    * Bucket sizes capped like the text pipelines. */
-  def embeddingPairsLsh(df: DataFrame, id: String, vec: String,
-      threshold: Double, nPlanes: Int = 8, seed: Long = 42L,
-      maxBucketSize: Int = 10000, dim: Int = -1): DataFrame = {
-    // hyperplane literals need the vector width on the driver; pass `dim`
-    // to keep the plan job-free (the probe is a LIMIT-1 scan fallback)
-    val d = if (dim > 0) dim else df.select(size(col(vec))).head().getInt(0)
-    val planes = Similarity.hyperplanes(d, nPlanes, seed)
-    val bucketed = df.select(col(id).as("doc"), col(vec).as("__v"))
-      .withColumn("bucket", Similarity.lshBucket(col("__v"), planes))
-      .repartition(col("doc"))
-      // one materialization for the four consumers (see simhashPairs)
-      .transform(Materialize.fanout)
-    val pruned = capBuckets(bucketed, Seq("bucket"), maxBucketSize)
-    val l = pruned.select(col("bucket"), col("doc").as("id_a"),
-      col("__v").as("__va"))
-    val r = pruned.select(col("bucket"), col("doc").as("id_b"),
-      col("__v").as("__vb"))
-    l.join(r, Seq("bucket")).filter(col("id_a") < col("id_b"))
       .withColumn("cos", Similarity.cosine(col("__va"), col("__vb")))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
@@ -1452,8 +1384,6 @@ object Dedup {
         not(coalesce(col("__drop"), lit(false))).as("kept"))
   }
 
-  /** n-gram Jaccard verification for an arbitrary candidate-pair set:
-    * join shingle sets back and compute exact similarity. */
   /** Connected components over near-dup pairs: every doc in a pair gets
     * a `cluster` id = the minimum doc id reachable through the pair
     * graph. Dedup policy is then "keep the canonical doc per cluster"

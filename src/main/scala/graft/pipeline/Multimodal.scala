@@ -435,7 +435,7 @@ object Multimodal {
   /** Feature-extract: `grid`×`grid` grayscale intensities normalized to
     * [0,1], as a dense Float vector — a real pixel-space embedding that
     * feeds the ANN / embedding-dedup operators (`Similarity.cosine`,
-    * `Dedup.embeddingPairsLsh`) directly. */
+    * `Dedup.embeddingPairsExact`, `Dedup.semDedup`) directly. */
   def imageFeatures(df: DataFrame, payload: String, grid: Int = 8,
       out: String = "features"): DataFrame = {
     val feats = udf { bytes: Array[Byte] =>

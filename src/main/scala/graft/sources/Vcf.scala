@@ -184,32 +184,19 @@ object Vcf {
     c.as(d.id)
   }
 
-  /** Typed value of one FORMAT declaration from the per-entry `:`-split
-    * values, located positionally via the row's FORMAT keys. */
-  private def formatField(vals: Column, keys: Column, d: FieldDecl): Column = {
-    val pos = array_position(keys, d.id) // 0 when absent
-    // null index (not a 0 index guarded by `when`) — element_at null-skips
-    // via nullSafeEval, so this can never throw even when evaluated
-    // speculatively on a non-matching row
-    val raw = try_element_at(vals, when(pos > 0, pos.cast("int")))
-    val c =
-      if (d.isScalar || d.isFlag) scalarCast(raw, d.typ)
-      else when(raw.isNotNull && raw =!= ".",
-        transform(split(raw, ","), v => scalarCast(v, d.typ)))
-    c.as(d.id)
-  }
-
   /** Fused per-row VCF entries parser: one imperative pass over the
     * sample strings (eval-based — string parsing gains nothing from
     * Janino, but losing the per-sample interpreted expression TREES
     * does: the higher-order formulation re-evaluated `array_position`
     * over the FORMAT keys and a try_element_at/scalarCast chain per
     * declaration per sample; here key positions hoist to once per row
-    * and each sample is a tight Scala loop). Semantics are the
-    * formatField/parseGt/scalarCast columns verbatim: "."/"" samples →
-    * null entry; non-numeric → null; second GT allele absent or
-    * non-numeric → haploid; per-field "." → null; short sample strings
-    * null-pad; array fields split on "," with per-element casts. */
+    * and each sample is a tight Scala loop). Semantics: each FORMAT
+    * field is located positionally via the row's FORMAT keys (absent
+    * key → null); "."/"" samples → null entry; GT parses like
+    * `parseGt` (non-numeric → null; second allele absent or non-numeric
+    * → haploid); scalar fields cast like `scalarCast` (non-numeric →
+    * null, per-field "." → null); short sample strings null-pad; array
+    * fields split on "," with per-element casts. */
   private case class VcfEntriesExpr(
       left: org.apache.spark.sql.catalyst.expressions.Expression,
       right: org.apache.spark.sql.catalyst.expressions.Expression,

@@ -121,7 +121,8 @@ object StreamDedup {
   }
 
   /** Streaming winnowing contamination detector — the live form of
-    * `pipeline.Dedup.winnowPairs`: each arriving document projects to
+    * `pipeline.Dedup.winnowSubstringPairs`' candidate step (docs
+    * sharing a winnowing fingerprint): each arriving document projects to
     * its winnowing fingerprint set (one fused per-row kernel pass —
     * streaming-safe, no aggregation), and a per-fingerprint bucket
     * state emits a candidate pair the moment two documents share a

@@ -108,7 +108,7 @@ object Regression {
   /** A canonical GLM link of the local fitter: the mean mu(eta) and the
     * IRLS weight w(mu), which for a canonical link is the variance. */
   private[methods] sealed abstract class Link(val mean: Double => Double,
-      val weight: Double => Double) extends Serializable
+      val weight: Double => Double)
   private[methods] case object Logit
       extends Link(e => 1.0 / (1.0 + math.exp(-e)), m => m * (1.0 - m))
   private[methods] case object LogLink extends Link(math.exp, m => m)
@@ -225,7 +225,8 @@ object Regression {
       import breeze.linalg._
       val X = DenseMatrix(xs.map(_.toArray): _*)
       val y = DenseVector(ys.toArray)
-      val Xn = X(::, (0 until X.cols).filter(_ != 1)).toDenseMatrix
+      // the null design: every column but x (wald never fits it)
+      lazy val Xn = X(::, (0 until X.cols).filter(_ != 1)).toDenseMatrix
       def se(info: DenseMatrix[Double]): Double =
         try math.sqrt(inv(info).apply(1, 1))
         catch { case _: Exception => Double.NaN }

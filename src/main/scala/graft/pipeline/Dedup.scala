@@ -252,9 +252,9 @@ object Dedup {
   /** Cap audit across the text pair families (default parameters of
     * each): what would `minhashPairs` / `simhashPairs` / the winnow
     * fingerprint buckets (k = 12, w = 8) — and `charNgramJaccardPairs`
-    * when `blockCols` is given — drop at
-    * their bucket caps on THIS corpus. Run it before a production dedup
-    * pass: a large `rows_capped` says boilerplate should be collapsed
+    * when `blockCols` is given — drop at their bucket caps on THIS
+    * corpus. Run it before a production dedup pass: a large
+    * `rows_capped` says boilerplate should be collapsed
     * with `exact`/`byFingerprint` first (or the cap raised), a zero
     * says the caps are free. Families aggregate independently and
     * union; each is one bucket-key shuffle. */
@@ -316,9 +316,10 @@ object Dedup {
     * k-grams, rightmost-min-per-window selection —
     * `Text.winnowFingerprints`), then each candidate is verified by
     * intersecting the docs' full normalized (k + w - 1)-char-gram sets —
-    * `n_shared` is the number of distinct shared runs. Winnowing's guarantee theorem
-    * (any normalized substring match of length >= k + w - 1 forces a
-    * shared selected fingerprint) makes candidate RECALL exact, so this
+    * `n_shared` is the number of distinct shared runs. Winnowing's
+    * guarantee theorem (any normalized substring match of length
+    * >= k + w - 1 forces a shared selected fingerprint) makes candidate
+    * RECALL exact, so this
     * output EQUALS the full all-pairs substring join — computed without
     * ever shuffling the quadratic gram self-join: the gram verify only
     * runs on the (linear) candidate set. That equality is what the

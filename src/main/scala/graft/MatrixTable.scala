@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,7 +34,7 @@ final case class MatrixTable(
   def nCols: Int = colValues.length
   def entries: Column = col(MatrixTable.EntriesField)
 
-  private def entrySchema: StructType =
+  private[graft] def entrySchema: StructType =
     rows.schema(MatrixTable.EntriesField).dataType
       .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
 
@@ -407,12 +409,11 @@ final case class MatrixTable(
   def rowsTable: Table =
     Table(rows.drop(MatrixTable.EntriesField), rowKey, globals)
 
-  /** MatrixColsTable (`TableIR.scala:2436`). */
-  def colsTable: Table = {
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(colValues.toSeq, 1), colSchema)
-    Table(df, colKey, globals)
-  }
+  /** MatrixColsTable (`TableIR.scala:2436`): a local relation over the
+    * driver-side `colValues`, so collecting it, or a projection of it,
+    * runs no Spark job. */
+  def colsTable: Table =
+    Table(spark.createDataFrame(colValues.asJava, colSchema), colKey, globals)
 
   /** MatrixEntriesTable (`TableIR.scala:2447`) — the coordinate
     * representation: one row per (row, col) with non-missing entry, row

@@ -79,38 +79,30 @@ object Genetics {
       .when(Calls.isHet(gt), 3)
       .otherwise(4) // hom var
 
-  /** One row per (sample, trio-role): the broadcast side of the single-scan
-    * trio assembly shared by mendel_errors and tdt. A sample appearing in
-    * several trios (e.g. a parent of siblings) fans out to several rows —
-    * the entries table is still scanned exactly once. */
-  private def trioRoles(mt: MatrixTable,
-      trios: Seq[(String, String, String, Boolean)]): DataFrame = {
-    val rows = trios.zipWithIndex.flatMap {
-      case ((kid, dad, mom, isF), i) =>
-        Seq((kid, i, "kid", kid, isF), (dad, i, "dad", kid, isF),
-          (mom, i, "mom", kid, isF))
-    }
-    mt.spark.createDataFrame(rows)
-      .toDF("s", "__trio", "__role", "__s_kid", "__kid_female")
-  }
-
-  /** Single scan of the entries table joined against the broadcast
-    * (sample → trio, role) map, pivoted to one row per (variant, trio)
-    * with the kid/dad/mom GTs side by side. One shuffle on
-    * (variant key, trio); T trios cost T broadcast-joined output rows per
-    * variant, not 3·T scans of the table. */
+  /** The trio pivot, read off a row's own entries: an array with one
+    * struct per trio where at least one member's entry is present — the
+    * kid/dad/mom GTs side by side (`__gt_kid`, `__gt_dad`, `__gt_mom`; a
+    * member absent from the matrix reads as a null GT), `__s_kid` and
+    * `__kid_female`. The members resolve to col indices on the driver, so
+    * the pivot is a narrow map of the rows: no entry explode, no join, no
+    * shuffle. mendel_errors inlines it; tdt folds it in the row. */
   private def trioPivot(mt: MatrixTable,
-      trios: Seq[(String, String, String, Boolean)]): DataFrame = {
-    val keyCols = mt.rowKey
-    val e = mt.entriesTable.df
-      .select((keyCols.map(col) :+ col("s") :+ col("GT")): _*)
-    def gtOf(role: String) =
-      max(when(col("__role") === role, col("GT"))).as(s"__gt_$role")
-    e.join(broadcast(trioRoles(mt, trios)), Seq("s"))
-      .groupBy((keyCols.map(col) :+ col("__trio")): _*)
-      .agg(gtOf("kid"), gtOf("dad"), gtOf("mom"),
-        first(col("__s_kid")).as("__s_kid"),
-        first(col("__kid_female")).as("__kid_female"))
+      trios: Seq[(String, String, String, Boolean)]): Column = {
+    val si = mt.colSchema.fieldIndex("s")
+    val idx = mt.colValues.map(_.get(si)).zipWithIndex.toMap[Any, Int]
+    val gtType = mt.entrySchema("GT").dataType
+    // an empty trio list still needs a typed array: one all-absent trio,
+    // never emitted
+    val ts = if (trios.nonEmpty) trios else Seq((null, null, null, false))
+    filter(array(ts.map { case (kid, dad, mom, isF) =>
+      val es = Seq(kid, dad, mom).map(s =>
+        idx.get(s).map(j => element_at(mt.entries, j + 1)))
+      val gts = es.map(_.fold(lit(null).cast(gtType))(_("GT")))
+      when(es.flatten.map(_.isNotNull).foldLeft(lit(false))(_ || _),
+        struct(gts(0).as("__gt_kid"), gts(1).as("__gt_dad"),
+          gts(2).as("__gt_mom"), lit(kid).cast("string").as("__s_kid"),
+          lit(isF).as("__kid_female")))
+    }: _*), _.isNotNull)
   }
 
   /** mendel_errors (reference `family_methods.py:130`; code table
@@ -130,9 +122,18 @@ object Genetics {
       trios: Seq[(String, String, String, Boolean)])
       (implicit rg: ReferenceGenome): Table = {
     val keyCols = mt.rowKey
-    val fn = Calls.nNonRefAlleles(col("__gt_dad"))
-    val mn = Calls.nNonRefAlleles(col("__gt_mom"))
-    val cn = Calls.nNonRefAlleles(col("__gt_kid"))
+    // one row per (variant, trio), each role's n_alt staged as a column
+    // so the CASE chain below reads three attributes, not ~30 copies of
+    // the n_alt expression
+    val pivot = mt.rows
+      .select(keyCols.map(col) :+ inline(trioPivot(mt, trios)): _*)
+      .withColumns(Map(
+        "__n_kid" -> Calls.nNonRefAlleles(col("__gt_kid")),
+        "__n_dad" -> Calls.nNonRefAlleles(col("__gt_dad")),
+        "__n_mom" -> Calls.nNonRefAlleles(col("__gt_mom"))))
+    val fn = col("__n_dad")
+    val mn = col("__n_mom")
+    val cn = col("__n_kid")
     val inPar = rg.par.map { case (c, s0, e0) =>
       col("contig") === c && col("position") >= s0 && col("position") < e0
     }.foldLeft(lit(false))(_ || _)
@@ -155,7 +156,7 @@ object Genetics {
       when((!inX && !inY) || inPar || col("__kid_female"), autoCode)
         .when(inX && !inPar && !col("__kid_female"), hemiXCode)
         .when(inY && !inPar && !col("__kid_female"), hemiYCode)
-    Table(trioPivot(mt, trios)
+    Table(pivot
       .withColumn("mendel_code", code)
       .filter(col("mendel_code").isNotNull)
       .select((keyCols.map(col) :+ col("__s_kid").as("s") :+
@@ -175,8 +176,7 @@ object Genetics {
       kidIsFemale: Map[String, Boolean] = Map.empty)
       (implicit rg: ReferenceGenome): Table = {
     val keyCols = mt.rowKey
-    // one entries scan + broadcast role map (vs 3 scans per trio)
-    val joined = trioPivot(mt,
+    val pivot = trioPivot(mt,
       trios.map { case (k, d, m) =>
         (k, d, m, kidIsFemale.getOrElse(k, false)) })
     val inPar = rg.par.map { case (c, s0, e0) =>
@@ -190,18 +190,8 @@ object Genetics {
       .foldLeft(lit(false))(_ || _)
     // reference scope: autosome ∪ X-PAR ∪ X-non-PAR (Y/MT excluded)
     val autoOrXPar = (!inX && !inY && !inMt) || (inX && inPar)
-    val scoped = joined.filter(autoOrXPar || (inX && !inPar))
-      .filter(col("__gt_kid").isNotNull && col("__gt_dad").isNotNull &&
-        col("__gt_mom").isNotNull)
     def nAlt(c: Column) = Calls.nNonRefAlleles(c)
     def isHet(c: Column) = Calls.isHet(c)
-    // reference gate: het father counts only on auto/X-PAR; otherwise a
-    // het mother with a non-het father
-    val dadHet = isHet(col("__gt_dad"))
-    val validHet = (dadHet && autoOrXPar) ||
-      (isHet(col("__gt_mom")) && !dadHet)
-    val copyState = when(autoOrXPar || col("__kid_female"), 2)
-      .otherwise(1)
     // the reference's (kid, dad, mom, copy) -> (t, u) config table
     // (family_methods.py:377)
     val configs: Seq[(Int, Int, Int, Int, Int, Int)] = Seq(
@@ -211,32 +201,39 @@ object Genetics {
       (2, 1, 2, 2, 1, 0), (2, 2, 1, 2, 1, 0),
       (0, 0, 1, 1, 0, 1), (0, 2, 1, 1, 0, 1), (2, 0, 1, 1, 1, 0),
       (2, 2, 1, 1, 1, 0))
-    // stage the genotype counts + copy state as attributes BEFORE the
+    // stage the genotype counts + copy state as struct fields BEFORE the
     // 15-branch config CASE: inlined, each branch re-evaluated the
     // nNonRefAlleles trees (x15 configs x2 lookups), and the analyzed
     // plan carried ~8k expression nodes for a 15-row decision table
-    def lookup(kn: Column, dn: Column, mn: Column, cs: Column,
+    def lookup(p: Column,
         sel: ((Int, Int, Int, Int, Int, Int)) => Int): Column =
       configs.foldLeft(lit(null).cast("int")) {
         case (acc, cfg @ (k, d, m, c, _, _)) =>
-          when(kn === k && dn === d && mn === m && cs === c,
-            sel(cfg)).otherwise(acc)
+          when(p("kn") === k && p("dn") === d && p("mn") === m &&
+            p("cs") === c, sel(cfg)).otherwise(acc)
       }
-    val counted = scoped
-      .withColumns(Map(
-        "__kn" -> nAlt(col("__gt_kid")),
-        "__dn" -> nAlt(col("__gt_dad")),
-        "__mn" -> nAlt(col("__gt_mom")),
-        "__cs" -> copyState,
-        "__vh" -> validHet))
-      .withColumns(Map(
-        "__t" -> when(col("__vh"), lookup(col("__kn"), col("__dn"),
-          col("__mn"), col("__cs"), _._5)),
-        "__u" -> when(col("__vh"), lookup(col("__kn"), col("__dn"),
-          col("__mn"), col("__cs"), _._6))))
-      .filter(col("__t").isNotNull) // unlisted config = uninformative
-    val perVariant = counted.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__t")).as("t"), sum(col("__u")).as("u"))
+    // complete trios only; the reference's het gate: a het father counts
+    // only on auto/X-PAR, otherwise a het mother with a non-het father
+    val staged = transform(pivot, p => struct(
+      nAlt(p("__gt_kid")).as("kn"), nAlt(p("__gt_dad")).as("dn"),
+      nAlt(p("__gt_mom")).as("mn"),
+      when(autoOrXPar || p("__kid_female"), 2).otherwise(1).as("cs"),
+      (p("__gt_kid").isNotNull && p("__gt_dad").isNotNull &&
+        p("__gt_mom").isNotNull &&
+        ((isHet(p("__gt_dad")) && autoOrXPar) ||
+          (isHet(p("__gt_mom")) && !isHet(p("__gt_dad"))))).as("vh")))
+    // an unlisted config is uninformative; a variant gets a row iff one
+    // trio is informative, and sums its trios in place
+    val counted = filter(transform(staged, p => when(p("vh"), struct(
+      lookup(p, _._5).as("t"), lookup(p, _._6).as("u")))),
+      c => c("t").isNotNull)
+    def total(f: String): Column =
+      aggregate(col("__tu"), lit(0L), (a, c) => a + c(f))
+    val perVariant = Regression.rowsWhere(mt, counted, c => size(c) > 0,
+      "__tu")
+      .filter(autoOrXPar || (inX && !inPar))
+      .select(keyCols.map(col) ++ Seq(total("t").as("t"),
+        total("u").as("u")): _*)
       .withColumn("chi_sq",
         pow(col("t") - col("u"), 2).cast("double") /
           (col("t") + col("u")).cast("double"))

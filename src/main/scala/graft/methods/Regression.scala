@@ -1,7 +1,6 @@
 package graft.methods
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -14,15 +13,91 @@ import graft.operators.Aggs
   * `linear_regression_rows`; Scala kernel
   * `is/hail/methods/LinearRegression.scala`).
   *
-  * Spark shape: the per-variant regression is a grouped aggregation over
-  * the coordinate representation — `groupBy(variant)` with the custom
-  * X'X/X'y/y'y `Aggregator` (constant-size buffer, partial/final hash agg,
-  * no driver funnel). Missing genotypes are mean-imputed per variant via a
-  * window over the same variant partitioning, which Catalyst satisfies
-  * with the SAME hash exchange as the groupBy — one shuffle total, at any
-  * number of variants × samples. Phenotypes/covariates arrive as a small
-  * per-sample table broadcast onto the coordinate rows. */
+  * Spark shape: each per-variant fit is a narrow map over the rows. The
+  * col data lives on the driver (`colValues`), so `pheno` is collected
+  * once into arrays aligned with the col index (`colPheno`; col-sized
+  * under the MatrixTable contract, like `colValues`), and each variant
+  * reads its own `entries` array in place — the reference's
+  * entries-scoped aggregation streams over the row the same way. No
+  * entry explode, no join back of the col data, no window and no
+  * shuffle: one pass over the rows at any number of variants × samples.
+  * Linear rows fold X'X/X'y/y'y per row and solve with
+  * `Aggs.linregSolve`; the logistic and Poisson rows pass each variant's
+  * design to one local Newton fitter. */
 object Regression {
+
+  /** `pheno` on the driver, aligned with `mt`'s col index: `has(j)` when
+    * col j has a pheno row; `ys(i)(j)`, phenotype i of col j as a double
+    * (null when missing or when col j has no pheno row); `covs(j)`, its
+    * covariates (empty when it has no pheno row). */
+  private final case class ColPheno(has: Array[Boolean],
+      ys: Array[Array[java.lang.Double]], covs: Array[Array[Double]])
+
+  /** The col prologue of every per-variant method: one collect of
+    * `pheno`, keyed like the matrix cols. A col key that appears twice in
+    * `pheno` is an error that names it (an inner join would count the
+    * sample twice), and so is a null covariate of a matrix col. Pheno
+    * rows whose key the matrix lacks, or whose key is null, are ignored. */
+  private def colPheno(mt: MatrixTable, pheno: DataFrame,
+      yCols: Seq[String], covCols: Seq[String]): ColPheno = {
+    val nk = mt.colKey.length
+    def keyOf(r: Row, idx: Seq[Int]): Seq[Any] = idx.map(r.get)
+    val byKey = collection.mutable.HashMap.empty[Seq[Any], Row]
+    for (r <- pheno.select(
+        mt.colKey.map(k => col(k).cast(mt.colSchema(k).dataType)) ++
+          (yCols ++ covCols).map(c => col(c).cast("double")): _*).collect();
+        key = keyOf(r, 0 until nk) if !key.contains(null))
+      require(byKey.put(key, r).isEmpty,
+        s"pheno has more than one row for col key ${key.mkString(", ")}")
+    val colIdx = mt.colKey.map(mt.colSchema.fieldIndex)
+    val matched = mt.colValues.map(cv => byKey.get(keyOf(cv, colIdx)))
+    val covAt = covCols.indices.map(nk + yCols.length + _)
+    ColPheno(
+      matched.map(_.isDefined).toArray,
+      yCols.indices.map(i => matched.map(_.map(r =>
+        r.get(nk + i).asInstanceOf[java.lang.Double]).orNull).toArray).toArray,
+      matched.map(_.fold(Array.empty[Double])(r => covAt.map { c =>
+        require(!r.isNullAt(c), s"pheno has a null covariate for col key " +
+          keyOf(r, 0 until nk).mkString(", "))
+        r.getDouble(c)
+      }.toArray)).toArray)
+  }
+
+  /** `mt`'s row keys beside `c` as column `name`, on the rows where
+    * `keep(c)` holds. A generator evaluates `c` once; a Filter above the
+    * projection would be pushed below it and evaluate `c` twice. */
+  private[methods] def rowsWhere(mt: MatrixTable, c: Column,
+      keep: Column => Column, name: String): DataFrame =
+    mt.rows.select(mt.rowKey.map(col) :+
+      explode(filter(array(c), keep)).as(name): _*)
+
+  /** Per-variant OLS fits of each of `cp`'s phenotypes on the `k` terms
+    * [1, dosage, covariates], one `Aggs.LinregOut` per phenotype, read
+    * off the row's entries. The dosage (n alt alleles) of a present entry
+    * with a missing GT is the mean over the called entries of the samples
+    * with a pheno row, whatever their y (the reference's mean
+    * imputation); each fit covers the samples with a pheno row, a present
+    * entry and a non-null y. Null — no row — when no sample with a pheno
+    * row has a present entry. */
+  private def linearFits(mt: MatrixTable, cp: ColPheno, k: Int): Column = {
+    val fit = udf { (present: Seq[Boolean], dosage: Seq[java.lang.Double]) =>
+      val cols = cp.has.indices.filter(j => cp.has(j) && present(j))
+      if (cols.isEmpty) null
+      else {
+        val called = cols.flatMap(j => Option(dosage(j)).map(_.doubleValue))
+        val mean = called.sum / called.length
+        cp.ys.toSeq.map { y =>
+          Aggs.linregSolve(cols.filter(y(_) != null).foldLeft(
+            Aggs.linregZero(k)) { (b, j) =>
+            val x = Option(dosage(j)).fold(mean)(_.doubleValue)
+            Aggs.linregAdd(b, 1.0 +: x +: cp.covs(j).toSeq, y(j))
+          })
+        }
+      }
+    }
+    fit(transform(mt.entries, _.isNotNull),
+      transform(mt.entries, e => Calls.nNonRefAlleles(e("GT")).cast("double")))
+  }
 
   /** Per-variant OLS of `yCol` on genotype dosage (n alt alleles) plus
     * `covCols`, with intercept. Returns the variant-keyed Table with
@@ -31,77 +106,45 @@ object Regression {
   def linearRegressionRows(mt: MatrixTable, pheno: DataFrame,
       yCol: String, covCols: Seq[String] = Nil): Table = {
     val k = 2 + covCols.length // intercept + genotype + covariates
-    val e = mt.entriesTable.df
-      .join(broadcast(pheno), mt.colKey, "inner")
-    val keyCols = mt.rowKey.map(col)
-    // mean-impute missing genotype dosage per variant (reference behavior);
-    // the window's hash partitioning is reused by the groupBy below
-    val w = Window.partitionBy(keyCols: _*)
-    val rawX = Calls.nNonRefAlleles(col("GT")).cast("double")
-    val x = coalesce(rawX, avg(rawX).over(w))
-    val xs = array((lit(1.0) +: x +: covCols.map(c => col(c).cast("double")))
-      : _*)
-    val fit = e
-      .withColumn("__xs", xs)
-      .groupBy(keyCols: _*)
-      .agg(Aggs.linreg(col(yCol).cast("double"), col("__xs"), k).as("__fit"))
-    val beta = element_at(col("__fit")("beta"), 2)
-    val se = element_at(col("__fit")("standard_error"), 2)
-    val n = col("__fit")("n")
+    val fits = linearFits(mt, colPheno(mt, pheno, Seq(yCol), covCols), k)
+    val fit = element_at(col("__fits"), 1)
+    val beta = element_at(fit("beta"), 2)
+    val se = element_at(fit("standard_error"), 2)
+    val n = fit("n")
     val t = beta / se
-    val out = fit
-      .withColumn("n", n)
-      .withColumn("beta", beta)
-      .withColumn("standard_error", se)
-      .withColumn("t_stat", t)
-      .withColumn("p_value", StatTests.pT(t, (n - k).cast("double")))
-      .drop("__fit")
+    val out = rowsWhere(mt, fits, _.isNotNull, "__fits").select(
+      mt.rowKey.map(col) ++ Seq(n.as("n"), beta.as("beta"),
+        se.as("standard_error"), t.as("t_stat"),
+        StatTests.pT(t, (n - k).cast("double")).as("p_value")): _*)
     Table(out, mt.rowKey, mt.globals)
   }
 
   /** Multi-phenotype linear_regression_rows (the reference's list-of-y
-    * mode, `statgen.py linear_regression_rows` with `y=[..]`): one scan
-    * and one shuffle fit ALL phenotypes — the per-variant design matrix
-    * is shared, each y adds only an extra aggregation buffer. Mirrors
-    * the reference's complete-case rule for the multi-y mode: samples
-    * missing ANY phenotype are dropped for all of them, so `n` is one
-    * number per variant. Returns arrays indexed like `yCols` for
-    * beta / standard_error / t_stat / p_value. */
+    * mode, `statgen.py linear_regression_rows` with `y=[..]`): one pass
+    * fits ALL phenotypes — the per-variant design is shared, each y adds
+    * only its own moments. Mirrors the reference's complete-case rule for
+    * the multi-y mode: samples missing ANY phenotype are dropped for all
+    * of them, so `n` is one number per variant. Returns arrays indexed
+    * like `yCols` for beta / standard_error / t_stat / p_value. */
   def linearRegressionRowsMulti(mt: MatrixTable, pheno: DataFrame,
       yCols: Seq[String], covCols: Seq[String] = Nil): Table = {
     require(yCols.nonEmpty)
     val k = 2 + covCols.length
     val completeCase = yCols.map(c => col(c).isNotNull)
       .reduce(_ && _)
-    val e = mt.entriesTable.df
-      .join(broadcast(pheno.filter(completeCase)), mt.colKey, "inner")
-    val keyCols = mt.rowKey.map(col)
-    val w = Window.partitionBy(keyCols: _*)
-    val rawX = Calls.nNonRefAlleles(col("GT")).cast("double")
-    val x = coalesce(rawX, avg(rawX).over(w))
-    val xs = array((lit(1.0) +: x +: covCols.map(c =>
-      col(c).cast("double"))): _*)
-    val fits = yCols.zipWithIndex.map { case (y, i) =>
-      Aggs.linreg(col(y).cast("double"), col("__xs"), k).as(s"__fit$i")
-    }
-    val fit = e.withColumn("__xs", xs)
-      .groupBy(keyCols: _*)
-      .agg(fits.head, fits.tail: _*)
-    def over(f: Column => Column): Column =
-      array(yCols.indices.map(i => f(col(s"__fit$i"))): _*)
+    val fits = linearFits(mt,
+      colPheno(mt, pheno.filter(completeCase), yCols, covCols), k)
+    def over(f: Column => Column): Column = transform(col("__fits"), f)
     val beta = over(f => element_at(f("beta"), 2))
     val se = over(f => element_at(f("standard_error"), 2))
-    val n = col("__fit0")("n")
-    val out = fit
-      .withColumn("n", n)
-      .withColumn("beta", beta)
-      .withColumn("standard_error", se)
+    val n = element_at(col("__fits"), 1)("n")
+    val out = rowsWhere(mt, fits, _.isNotNull, "__fits")
+      .select(mt.rowKey.map(col) ++ Seq(n.as("n"), beta.as("beta"),
+        se.as("standard_error")): _*)
       .withColumn("t_stat",
-        zip_with(beta, se, (b, s) => b / s))
-      .withColumn("p_value", transform(
-        zip_with(beta, se, (b, s) => b / s),
-        t => StatTests.pT(t, (n - k).cast("double"))))
-      .drop(yCols.indices.map(i => s"__fit$i"): _*)
+        zip_with(col("beta"), col("standard_error"), (b, s) => b / s))
+      .withColumn("p_value", transform(col("t_stat"),
+        t => StatTests.pT(t, (col("n") - k).cast("double"))))
     Table(out, mt.rowKey, mt.globals)
   }
 
@@ -271,26 +314,28 @@ object Regression {
       }
     }
 
-  /** The rows methods fitted locally per variant: `pheno` joined onto the
-    * entries, rows with missing GT or y dropped (complete-case), the
-    * per-variant design [1, xOf(GT), covariates] collected into the
-    * group and fitted by `glmTestUdf` — bounded by sample count,
-    * distributed across variants. Keeps n and the test's columns. */
+  /** The rows methods fitted locally per variant: each row's design is
+    * read off its entries — one observation [1, xOf(GT), covariates] and
+    * y per sample whose entry is present with a called GT, that has a
+    * pheno row and a non-null y (complete-case) — and fitted by
+    * `glmTestUdf`, bounded by sample count, distributed across variants.
+    * A variant gets a row iff n >= 1. Keeps n and the test's columns. */
   private def glmRows(mt: MatrixTable, pheno: DataFrame, yCol: String,
       covCols: Seq[String], xOf: Column => Column, link: Link,
       test: String): Table = {
-    val e = mt.entriesTable.df
-      .join(broadcast(pheno), mt.colKey, "inner")
-      .filter(col("GT").isNotNull && col(yCol).isNotNull)
-    val xs = array((lit(1.0) +: xOf(col("GT")) +: covCols.map(c =>
-      col(c).cast("double"))): _*)
-    val fit = e
-      .withColumn("__xs", xs)
-      .groupBy(mt.rowKey.map(col): _*)
-      .agg(
-        glmTestUdf(link, test)(collect_list(col("__xs")),
-          collect_list(col(yCol).cast("double"))).as("__fit"),
-        count(lit(1)).as("n"))
+    val cp = colPheno(mt, pheno, Seq(yCol), covCols)
+    val ys = typedLit(cp.ys.head.toSeq)
+    val covs = typedLit(cp.covs.toSeq.map(_.toSeq))
+    val obs = filter(transform(mt.entries, (e, j) => {
+      val y = element_at(ys, j + 1)
+      when(e("GT").isNotNull && y.isNotNull, struct(
+        concat(array(lit(1.0), xOf(e("GT"))), element_at(covs, j + 1))
+          .as("x"), y.as("y")))
+    }), _.isNotNull)
+    val fit = rowsWhere(mt, obs, o => size(o) > 0, "__obs")
+      .select(mt.rowKey.map(col) ++ Seq(size(col("__obs")).cast("long")
+        .as("n"), glmTestUdf(link, test)(transform(col("__obs"), _("x")),
+        transform(col("__obs"), _("y"))).as("__fit")): _*)
     val stat = if (test == "wald") "z_stat" else "chi_sq_stat"
     val fields =
       (if (test == "score") Nil

@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions.udaf
   * All are `Aggregator[IN, BUF, OUT]` registered through `functions.udaf`,
   * so they run inside Spark's partial → shuffle → final aggregation exactly
   * like built-ins: constant-size buffers, map-side combine, no driver
-  * funnel. */
+  * funnel. Each holds its encoders in `val`s: Spark resolves an
+  * aggregator's `outputEncoder` once per deserialized instance, that is
+  * once per task, and building an encoder runs Scala reflection. */
 object Aggs {
 
   // ---- product (exact, not exp-log) --------------------------------------
@@ -23,8 +25,8 @@ object Aggs {
       def reduce(b: Double, a: Double): Double = b * a
       def merge(b1: Double, b2: Double): Double = b1 * b2
       def finish(b: Double): Double = b
-      def bufferEncoder: Encoder[Double] = Encoders.scalaDouble
-      def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+      val bufferEncoder: Encoder[Double] = Encoders.scalaDouble
+      val outputEncoder: Encoder[Double] = Encoders.scalaDouble
     }
   def product(c: Column): Column = udaf(productAgg).apply(c)
 
@@ -65,8 +67,8 @@ object Aggs {
         CallStatsOut(b.ac.toSeq,
           b.ac.map(c => if (b.an == 0) 0.0 else c.toDouble / b.an).toSeq,
           b.an, b.hom.toSeq)
-      def bufferEncoder: Encoder[CallStatsBuf] = Encoders.product
-      def outputEncoder: Encoder[CallStatsOut] = Encoders.product
+      val bufferEncoder: Encoder[CallStatsBuf] = Encoders.product
+      val outputEncoder: Encoder[CallStatsOut] = Encoders.product
     }
   def callStats(call: Column, nAlleles: Int): Column =
     udaf(callStatsAgg(nAlleles)).apply(call)
@@ -88,49 +90,61 @@ object Aggs {
     * and n — enough for t/p downstream. */
   def linregAgg(k: Int): Aggregator[LinregIn, LinregBuf, LinregOut] =
     new Aggregator[LinregIn, LinregBuf, LinregOut] {
-      def zero: LinregBuf = LinregBuf(0L, new Array[Double](k * k),
-        new Array[Double](k), 0.0)
-      def reduce(b: LinregBuf, in: LinregIn): LinregBuf = {
+      def zero: LinregBuf = linregZero(k)
+      def reduce(b: LinregBuf, in: LinregIn): LinregBuf =
         if (in.y == null || in.x == null || in.x.length != k) b
-        else {
-          val x = in.x
-          var i = 0
-          while (i < k) {
-            var j = 0
-            while (j < k) {
-              b.xtx(i * k + j) += x(i) * x(j); j += 1
-            }
-            b.xty(i) += x(i) * in.y; i += 1
-          }
-          LinregBuf(b.n + 1, b.xtx, b.xty, b.yty + in.y * in.y)
-        }
-      }
+        else linregAdd(b, in.x, in.y)
       def merge(a: LinregBuf, c: LinregBuf): LinregBuf =
         LinregBuf(a.n + c.n,
           a.xtx.zip(c.xtx).map(t => t._1 + t._2),
           a.xty.zip(c.xty).map(t => t._1 + t._2),
           a.yty + c.yty)
-      def finish(b: LinregBuf): LinregOut = {
-        val nan = Seq.fill(k)(Double.NaN)
-        if (b.n <= k) LinregOut(nan, nan, Double.NaN, b.n)
-        else {
-          try {
-            val m = breeze.linalg.DenseMatrix.create(k, k, b.xtx)
-            val v = breeze.linalg.DenseVector(b.xty)
-            val beta = m \ v
-            val rss = b.yty - (beta dot v)
-            val sigmaSq = rss / (b.n - k)
-            val inv = breeze.linalg.inv(m)
-            val se = (0 until k).map(j =>
-              math.sqrt(math.max(sigmaSq * inv(j, j), 0.0)))
-            LinregOut(beta.toArray.toSeq, se, sigmaSq, b.n)
-          } catch { case _: Exception =>
-            LinregOut(nan, nan, Double.NaN, b.n) }
-        }
-      }
-      def bufferEncoder: Encoder[LinregBuf] = Encoders.product
-      def outputEncoder: Encoder[LinregOut] = Encoders.product
+      def finish(b: LinregBuf): LinregOut = linregSolve(b)
+      val bufferEncoder: Encoder[LinregBuf] = Encoders.product
+      val outputEncoder: Encoder[LinregOut] = Encoders.product
     }
+
+  /** The empty OLS moments of a `k`-term design. */
+  def linregZero(k: Int): LinregBuf =
+    LinregBuf(0L, new Array[Double](k * k), new Array[Double](k), 0.0)
+
+  /** `b` plus one observation (x, y); X'X and X'y grow in place. The
+    * reduce step of `linregAgg` and of `Regression`'s row-local fits. */
+  def linregAdd(b: LinregBuf, x: Seq[Double], y: Double): LinregBuf = {
+    val k = b.xty.length
+    var i = 0
+    while (i < k) {
+      var j = 0
+      while (j < k) {
+        b.xtx(i * k + j) += x(i) * x(j); j += 1
+      }
+      b.xty(i) += x(i) * y; i += 1
+    }
+    LinregBuf(b.n + 1, b.xtx, b.xty, b.yty + y * y)
+  }
+
+  /** The OLS solve of accumulated moments: betas, standard errors,
+    * residual variance and n; NaN fields when n <= k or X'X is
+    * singular. `linregAgg`'s finish and `Regression`'s row-local fits. */
+  def linregSolve(b: LinregBuf): LinregOut = {
+    val k = b.xty.length
+    val nan = Seq.fill(k)(Double.NaN)
+    if (b.n <= k) LinregOut(nan, nan, Double.NaN, b.n)
+    else {
+      try {
+        val m = breeze.linalg.DenseMatrix.create(k, k, b.xtx)
+        val v = breeze.linalg.DenseVector(b.xty)
+        val beta = m \ v
+        val rss = b.yty - (beta dot v)
+        val sigmaSq = rss / (b.n - k)
+        val inv = breeze.linalg.inv(m)
+        val se = (0 until k).map(j =>
+          math.sqrt(math.max(sigmaSq * inv(j, j), 0.0)))
+        LinregOut(beta.toArray.toSeq, se, sigmaSq, b.n)
+      } catch { case _: Exception =>
+        LinregOut(nan, nan, Double.NaN, b.n) }
+    }
+  }
   def linreg(y: Column, xs: Column, k: Int): Column =
     udaf(linregAgg(k)).apply(y, xs)
 
@@ -160,8 +174,8 @@ object Aggs {
       def merge(a: SampleBuf, b: SampleBuf): SampleBuf =
         SampleBuf(trim(a.items ++ b.items))
       def finish(b: SampleBuf): Seq[String] = b.items.map(_._2)
-      def bufferEncoder: Encoder[SampleBuf] = Encoders.product
-      def outputEncoder: Encoder[Seq[String]] =
+      val bufferEncoder: Encoder[SampleBuf] = Encoders.product
+      val outputEncoder: Encoder[Seq[String]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
     }
   def sample(c: Column, k: Int, seed: Long = 42L): Column =
@@ -192,8 +206,8 @@ object Aggs {
           .groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).min(ord) })
       def finish(b: DownsampleBuf): Seq[(Double, Double)] =
         b.cells.values.toSeq.sorted(ord)
-      def bufferEncoder: Encoder[DownsampleBuf] = Encoders.kryo
-      def outputEncoder: Encoder[Seq[(Double, Double)]] =
+      val bufferEncoder: Encoder[DownsampleBuf] = Encoders.kryo
+      val outputEncoder: Encoder[Seq[(Double, Double)]] =
         org.apache.spark.sql.catalyst.encoders
           .ExpressionEncoder[Seq[(Double, Double)]]()
     }
@@ -224,8 +238,8 @@ object Aggs {
       def merge(a: TakeByBuf, b: TakeByBuf): TakeByBuf =
         TakeByBuf(better(a.items ++ b.items))
       def finish(b: TakeByBuf): Seq[Long] = b.items.map(_._2)
-      def bufferEncoder: Encoder[TakeByBuf] = Encoders.product
-      def outputEncoder: Encoder[Seq[Long]] =
+      val bufferEncoder: Encoder[TakeByBuf] = Encoders.product
+      val outputEncoder: Encoder[Seq[Long]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
     }
   def takeBy(v: Column, key: Column, n: Int, asc: Boolean = true): Column =
@@ -242,8 +256,8 @@ object Aggs {
       def reduce(b: T, a: T): T = seq(b, a)
       def merge(a: T, b: T): T = comb(a, b)
       def finish(b: T): T = b
-      def bufferEncoder: Encoder[T] = implicitly[Encoder[T]]
-      def outputEncoder: Encoder[T] = implicitly[Encoder[T]]
+      val bufferEncoder: Encoder[T] = implicitly[Encoder[T]]
+      val outputEncoder: Encoder[T] = implicitly[Encoder[T]]
     }
   def foldDouble(c: Column, z: Double, seq: (Double, Double) => Double,
       comb: (Double, Double) => Double): Column = {
@@ -323,9 +337,9 @@ object Aggs {
         // flatten to [v1, w1, v2, w2, ...] for a stable wire shape
         pairs.flatMap(p => Seq(p._1, p._2))
       }
-      def bufferEncoder: Encoder[CdfBuf] =
+      val bufferEncoder: Encoder[CdfBuf] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[CdfBuf]()
-      def outputEncoder: Encoder[Seq[Double]] =
+      val outputEncoder: Encoder[Seq[Double]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
     }
   def approxCdf(c: Column, k: Int = 1024): Column =
@@ -387,8 +401,8 @@ object Aggs {
         else if (b.allInt) "int64"
         else if (b.allFloat) "float64"
         else "string")
-      def bufferEncoder: Encoder[ImputeTypeBuf] = Encoders.product
-      def outputEncoder: Encoder[ImputeTypeOut] = Encoders.product
+      val bufferEncoder: Encoder[ImputeTypeBuf] = Encoders.product
+      val outputEncoder: Encoder[ImputeTypeOut] = Encoders.product
     }
   def imputeType(c: Column): Column = udaf(imputeTypeAgg).apply(c)
 
@@ -420,8 +434,8 @@ object Aggs {
       def finish(b: HistBuf): HistOut = HistOut(
         (0 to bins).map(i => lo + i * w), b.counts.toSeq, b.nLess,
         b.nGreater)
-      def bufferEncoder: Encoder[HistBuf] = Encoders.product
-      def outputEncoder: Encoder[HistOut] = Encoders.product
+      val bufferEncoder: Encoder[HistBuf] = Encoders.product
+      val outputEncoder: Encoder[HistOut] = Encoders.product
     }
   def hist(c: Column, lo: Double, hi: Double, bins: Int): Column =
     udaf(histAgg(lo, hi, bins)).apply(c)
@@ -447,8 +461,8 @@ object Aggs {
       def reduce(b: NdBuf, v: NdBuf): NdBuf = add(b, v)
       def merge(a: NdBuf, b: NdBuf): NdBuf = add(a, b)
       def finish(b: NdBuf): NdBuf = b
-      def bufferEncoder: Encoder[NdBuf] = Encoders.product
-      def outputEncoder: Encoder[NdBuf] = Encoders.product
+      val bufferEncoder: Encoder[NdBuf] = Encoders.product
+      val outputEncoder: Encoder[NdBuf] = Encoders.product
     }
   def ndarraySum(nd: Column): Column =
     udaf(ndarraySumAgg).apply(nd("shape"), nd("data"))
@@ -525,9 +539,9 @@ object Aggs {
         }
       }
       def finish(b: MgBuf): Seq[String] = b.items.keys.toSeq.sorted
-      def bufferEncoder: Encoder[MgBuf] =
+      val bufferEncoder: Encoder[MgBuf] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[MgBuf]()
-      def outputEncoder: Encoder[Seq[String]] =
+      val outputEncoder: Encoder[Seq[String]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
     }
   }

@@ -226,6 +226,25 @@ class FunctionsSpec extends SparkSpec {
     assert(s1.size === 10)
   }
 
+  test("Aggs: every Aggregator keeps its encoders across serialization") {
+    import org.apache.spark.sql.Encoders
+    val ser = new org.apache.spark.serializer.JavaSerializer(
+      spark.sparkContext.getConf).newInstance()
+    val aggs = Seq(Aggs.productAgg, Aggs.callStatsAgg(2), Aggs.linregAgg(2),
+      Aggs.sampleAgg(3, 1L), Aggs.downsampleAgg(2), Aggs.takeByAgg(2, true),
+      Aggs.foldAgg[Double](0.0, _ + _, _ + _)(Encoders.scalaDouble),
+      Aggs.approxCdfAgg(8), Aggs.imputeTypeAgg, Aggs.histAgg(0.0, 1.0, 2),
+      Aggs.ndarraySumAgg, Aggs.misraGriesAgg(2))
+    for (a <- aggs) {
+      // a task holds a deserialized copy; Spark resolves its encoders
+      // there, once per copy
+      val copy = ser.deserialize[org.apache.spark.sql.expressions
+        .Aggregator[_, _, _]](ser.serialize(a), getClass.getClassLoader)
+      assert(copy.outputEncoder eq copy.outputEncoder, a.getClass)
+      assert(copy.bufferEncoder eq copy.bufferEncoder, a.getClass)
+    }
+  }
+
   test("Util: triangle, format, valuesSimilar") {
     import graft.functions.Util
     val r = spark.range(1).select(

@@ -96,6 +96,26 @@ class MatrixTableSpec extends SparkSpec {
     assert(mt.rowsTable.df.columns.toSeq === Seq("r"))
   }
 
+  test("colsTable is a local relation: collecting it runs no job") {
+    val mt = toyMatrix()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      jobs.set(0)
+      val got = mt.colsTable.df.withColumn("n", length(col("sample")))
+        .collect()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      assert(got.length == 3)
+      assert(jobs.get == 0, s"${jobs.get} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("sampleRows/sampleCols are deterministic per seed") {
     val mt = toyMatrix()
     val a = mt.sampleRows(0.5, seed = 3).rows.collect().map(_.toSeq)

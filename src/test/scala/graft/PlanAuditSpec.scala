@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Liftover, ReferenceGenome}
-import graft.methods.{Genetics, Ld}
+import graft.methods.{Genetics, Ld, Regression}
 import graft.sources.Vcf
 
 /** 100×-scale plan audits: these assert the SHAPE of the physical plan
@@ -61,16 +61,32 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("__bin"), plan.take(2000))
   }
 
-  test("mendel/tdt trio assembly scans the entries source once") {
-    implicit val rg: ReferenceGenome = ReferenceGenome.GRCh38
-    val plan = Genetics.mendelErrors(fixtureMt(), Seq(
-      ("S1", "S2", "S3", true), ("S4", "S2", "S3", false)))
-      .df.queryExecution.executedPlan.toString
-    // one text scan of the VCF (the 3-scans-per-trio shape had 6 here)
+  /** The row-local shape of a per-variant method's plan: one text scan of
+    * the VCF (the 3-scans-per-trio shape had 6 for two trios), and no
+    * Exchange, join or Window — each row's entries are read in place. */
+  private def assertRowLocal(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
     val scans = "Scan text".r.findAllIn(plan).length
     assert(scans == 1, s"$scans source scans\n${plan.take(2000)}")
-    // the trio role map arrives broadcast
-    assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
+    for (op <- Seq("Exchange", "Join", "CartesianProduct", "Window"))
+      assert(!plan.contains(op), s"$op in\n${plan.take(2000)}")
+  }
+
+  test("mendel/tdt trio assembly scans the entries source once") {
+    implicit val rg: ReferenceGenome = ReferenceGenome.GRCh38
+    val mt = fixtureMt()
+    assertRowLocal(Genetics.mendelErrors(mt, Seq(
+      ("S1", "S2", "S3", true), ("S4", "S2", "S3", false))).df)
+    assertRowLocal(Genetics.tdt(mt, Seq(("S1", "S2", "S3"),
+      ("S4", "S2", "S3"))).df)
+  }
+
+  test("linear/logistic rows fit each row's entries in place") {
+    val mt = fixtureMt()
+    val pheno = mt.colsTable.df.withColumn("y",
+      (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
+    assertRowLocal(Regression.linearRegressionRows(mt, pheno, "y").df)
+    assertRowLocal(Regression.logisticRegressionRows(mt, pheno, "y").df)
   }
 
   test("liftover is a broadcast join on the chain blocks") {

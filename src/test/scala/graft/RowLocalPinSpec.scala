@@ -83,14 +83,20 @@ object RowLocalPins {
     case x => x.toString
   }
 
+  /** The fixture matrix and its phenotypes (`s`, y, y2, b, cnt, c1). */
+  def fixture(spark: org.apache.spark.sql.SparkSession)
+      : (MatrixTable, DataFrame) = {
+    val f = Files.createTempDirectory("graft_pins").resolve("pins.vcf")
+    Files.writeString(f, vcfText)
+    (Vcf.read(spark, f.toString),
+      spark.createDataFrame(phenoRows.asJava, phenoSchema))
+  }
+
   /** Every pinned method's output rows as `method\tcol=value\t...`,
     * sorted. */
   def current(spark: org.apache.spark.sql.SparkSession): Seq[String] = {
     implicit val rg: ReferenceGenome = ReferenceGenome.GRCh38
-    val f = Files.createTempDirectory("graft_pins").resolve("pins.vcf")
-    Files.writeString(f, vcfText)
-    val mt = Vcf.read(spark, f.toString)
-    val pheno = spark.createDataFrame(phenoRows.asJava, phenoSchema)
+    val (mt, pheno) = fixture(spark)
     val cov = Seq("c1")
     val outputs: Seq[(String, DataFrame)] = Seq(
       "linear" -> Regression.linearRegressionRows(mt, pheno, "y").df,
@@ -160,5 +166,21 @@ class RowLocalPinSpec extends AnyFunSuite {
         gc.zip(wc).forall { case (a, b) => close(a, b) },
         s"\n got: $g\npinned: $w")
     }
+  }
+
+  test("a pheno key given twice, or a null covariate, is an error naming it") {
+    val (mt, pheno) = RowLocalPins.fixture(TestSpark.spark)
+    val twice = pheno.unionByName(pheno.filter(col("s") === "S4"))
+    for (run <- Seq[() => Any](
+        () => Regression.linearRegressionRows(mt, twice, "y"),
+        () => Regression.logisticRegressionRows(mt, twice, "b"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("more than one row for col key S4"))
+    }
+    val nullCov = pheno.withColumn("c1",
+      when(col("s") =!= "S7", col("c1")))
+    val e = intercept[IllegalArgumentException](
+      Regression.poissonRegressionRows(mt, nullCov, "cnt", Seq("c1")))
+    assert(e.getMessage.contains("null covariate for col key S7"))
   }
 }

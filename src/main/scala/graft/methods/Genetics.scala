@@ -229,9 +229,9 @@ object Genetics {
       c => c("t").isNotNull)
     def total(f: String): Column =
       aggregate(col("__tu"), lit(0L), (a, c) => a + c(f))
-    val perVariant = Regression.rowsWhere(mt, counted, c => size(c) > 0,
-      "__tu")
-      .filter(autoOrXPar || (inX && !inPar))
+    val perVariant = Regression.rowsWhere(
+        mt.filterRows(autoOrXPar || (inX && !inPar)), counted,
+        c => size(c) > 0, "__tu")
       .select(keyCols.map(col) ++ Seq(total("t").as("t"),
         total("u").as("u")): _*)
       .withColumn("chi_sq",

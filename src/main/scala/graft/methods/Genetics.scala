@@ -83,26 +83,24 @@ object Genetics {
     * struct per trio where at least one member's entry is present — the
     * kid/dad/mom GTs side by side (`__gt_kid`, `__gt_dad`, `__gt_mom`; a
     * member absent from the matrix reads as a null GT), `__s_kid` and
-    * `__kid_female`. The members resolve to col indices on the driver, so
-    * the pivot is a narrow map of the rows: no entry explode, no join, no
-    * shuffle. mendel_errors inlines it; tdt folds it in the row. */
+    * `__kid_female`. It projects `Trios.trioMatrix`'s entries, so it is a
+    * narrow map of the rows: no entry explode, no join, no shuffle.
+    * mendel_errors inlines it; tdt folds it in the row. */
   private def trioPivot(mt: MatrixTable,
       trios: Seq[(String, String, String, Boolean)]): Column = {
-    val si = mt.colSchema.fieldIndex("s")
-    val idx = mt.colValues.map(_.get(si)).zipWithIndex.toMap[Any, Int]
-    val gtType = mt.entrySchema("GT").dataType
     // an empty trio list still needs a typed array: one all-absent trio,
     // never emitted
     val ts = if (trios.nonEmpty) trios else Seq((null, null, null, false))
-    filter(array(ts.map { case (kid, dad, mom, isF) =>
-      val es = Seq(kid, dad, mom).map(s =>
-        idx.get(s).map(j => element_at(mt.entries, j + 1)))
-      val gts = es.map(_.fold(lit(null).cast(gtType))(_("GT")))
-      when(es.flatten.map(_.isNotNull).foldLeft(lit(false))(_ || _),
-        struct(gts(0).as("__gt_kid"), gts(1).as("__gt_dad"),
-          gts(2).as("__gt_mom"), lit(kid).cast("string").as("__s_kid"),
-          lit(isF).as("__kid_female")))
-    }: _*), _.isNotNull)
+    val kids = array(ts.map { case (kid, _, _, isF) =>
+      struct(lit(kid).cast("string"), lit(isF)) }: _*)
+    filter(zip_with(Trios.trioEntries(mt, ts), kids, (e, k) => {
+      val members = Seq("proband_entry", "father_entry", "mother_entry")
+        .map(e(_))
+      when(members.map(_.isNotNull).reduce(_ || _), struct(
+        members(0)("GT").as("__gt_kid"), members(1)("GT").as("__gt_dad"),
+        members(2)("GT").as("__gt_mom"), k("col1").as("__s_kid"),
+        k("col2").as("__kid_female")))
+    }), _.isNotNull)
   }
 
   /** mendel_errors (reference `family_methods.py:130`; code table

@@ -3,8 +3,6 @@ package graft.methods
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.expressions.UserDefinedFunction
-
 import graft.{MatrixTable, Table}
 import graft.functions.{Calls, StatTests}
 import graft.operators.Aggs
@@ -29,15 +27,17 @@ object Regression {
   /** `pheno` on the driver, aligned with `mt`'s col index: `has(j)` when
     * col j has a pheno row; `ys(i)(j)`, phenotype i of col j as a double
     * (null when missing or when col j has no pheno row); `covs(j)`, its
-    * covariates (empty when it has no pheno row). */
+    * covariates when all its phenotypes are present (empty otherwise: no
+    * fit reads them). */
   private final case class ColPheno(has: Array[Boolean],
       ys: Array[Array[java.lang.Double]], covs: Array[Array[Double]])
 
   /** The col prologue of every per-variant method: one collect of
     * `pheno`, keyed like the matrix cols. A col key that appears twice in
     * `pheno` is an error that names it (an inner join would count the
-    * sample twice), and so is a null covariate of a matrix col. Pheno
-    * rows whose key the matrix lacks, or whose key is null, are ignored. */
+    * sample twice), and so is a null covariate of a matrix col whose
+    * phenotypes are present — a col the fits read. Pheno rows whose key
+    * the matrix lacks, or whose key is null, are ignored. */
   private def colPheno(mt: MatrixTable, pheno: DataFrame,
       yCols: Seq[String], covCols: Seq[String]): ColPheno = {
     val nk = mt.colKey.length
@@ -51,16 +51,18 @@ object Regression {
         s"pheno has more than one row for col key ${key.mkString(", ")}")
     val colIdx = mt.colKey.map(mt.colSchema.fieldIndex)
     val matched = mt.colValues.map(cv => byKey.get(keyOf(cv, colIdx)))
+    val yAt = yCols.indices.map(nk + _)
     val covAt = covCols.indices.map(nk + yCols.length + _)
     ColPheno(
       matched.map(_.isDefined).toArray,
-      yCols.indices.map(i => matched.map(_.map(r =>
-        r.get(nk + i).asInstanceOf[java.lang.Double]).orNull).toArray).toArray,
-      matched.map(_.fold(Array.empty[Double])(r => covAt.map { c =>
-        require(!r.isNullAt(c), s"pheno has a null covariate for col key " +
-          keyOf(r, 0 until nk).mkString(", "))
-        r.getDouble(c)
-      }.toArray)).toArray)
+      yAt.map(i => matched.map(_.map(r =>
+        r.get(i).asInstanceOf[java.lang.Double]).orNull).toArray).toArray,
+      matched.map(_.filter(r => yAt.forall(!r.isNullAt(_)))
+        .fold(Array.empty[Double])(r => covAt.map { c =>
+          require(!r.isNullAt(c), s"pheno has a null covariate for col " +
+            s"key ${keyOf(r, 0 until nk).mkString(", ")}")
+          r.getDouble(c)
+        }.toArray)).toArray)
   }
 
   /** `mt`'s row keys beside `c` as column `name`, on the rows where
@@ -81,7 +83,7 @@ object Regression {
     * row has a present entry. */
   private def linearFits(mt: MatrixTable, cp: ColPheno, k: Int): Column = {
     val fit = udf { (present: Seq[Boolean], dosage: Seq[java.lang.Double]) =>
-      val cols = cp.has.indices.filter(j => cp.has(j) && present(j))
+      val cols = present.indices.filter(j => cp.has(j) && present(j))
       if (cols.isEmpty) null
       else {
         val called = cols.flatMap(j => Option(dosage(j)).map(_.doubleValue))
@@ -256,15 +258,17 @@ object Regression {
     else 1.0 - org.apache.commons.math3.special.Gamma
       .regularizedGammaP(0.5, x / 2.0)
 
-  /** The per-variant test UDF (reference `LogisticRegression.scala`
+  /** The per-variant test (reference `LogisticRegression.scala`
     * wald/lrt/score/firth kernels, `PoissonRegression.scala` wald;
     * per-variant complete-case, so the null model refits on each
     * variant's called samples). Column 1 of the design is the tested x
     * term. Returns (beta, se, statistic, p, converged) for x, the
     * statistic z for wald and chi-square otherwise, score with a null
     * beta and se; every field is null when a fit does not converge. */
-  private def glmTestUdf(link: Link, test: String): UserDefinedFunction =
-    udf { (xs: Seq[Seq[Double]], ys: Seq[Double]) =>
+  private def glmTest(link: Link, test: String)
+      : (Seq[Seq[Double]], Seq[Double]) => (java.lang.Double,
+        java.lang.Double, java.lang.Double, java.lang.Double, Boolean) =
+    (xs, ys) => {
       import breeze.linalg._
       val X = DenseMatrix(xs.map(_.toArray): _*)
       val y = DenseVector(ys.toArray)
@@ -316,34 +320,36 @@ object Regression {
 
   /** The rows methods fitted locally per variant: each row's design is
     * read off its entries — one observation [1, xOf(GT), covariates] and
-    * y per sample whose entry is present with a called GT, that has a
-    * pheno row and a non-null y (complete-case) — and fitted by
-    * `glmTestUdf`, bounded by sample count, distributed across variants.
-    * A variant gets a row iff n >= 1. Keeps n and the test's columns. */
+    * y per sample whose entry is present with a called GT and a non-null
+    * xOf(GT), that has a pheno row and a non-null y (complete-case) — and
+    * fitted by `glmTest`, bounded by sample count, distributed across
+    * variants. A variant gets a row iff n >= 1. Keeps n and the test's
+    * columns. */
   private def glmRows(mt: MatrixTable, pheno: DataFrame, yCol: String,
       covCols: Seq[String], xOf: Column => Column, link: Link,
       test: String): Table = {
     val cp = colPheno(mt, pheno, Seq(yCol), covCols)
-    val ys = typedLit(cp.ys.head.toSeq)
-    val covs = typedLit(cp.covs.toSeq.map(_.toSeq))
-    val obs = filter(transform(mt.entries, (e, j) => {
-      val y = element_at(ys, j + 1)
-      when(e("GT").isNotNull && y.isNotNull, struct(
-        concat(array(lit(1.0), xOf(e("GT"))), element_at(covs, j + 1))
-          .as("x"), y.as("y")))
-    }), _.isNotNull)
-    val fit = rowsWhere(mt, obs, o => size(o) > 0, "__obs")
-      .select(mt.rowKey.map(col) ++ Seq(size(col("__obs")).cast("long")
-        .as("n"), glmTestUdf(link, test)(transform(col("__obs"), _("x")),
-        transform(col("__obs"), _("y"))).as("__fit")): _*)
+    val y = cp.ys.head
+    val fitOf = glmTest(link, test)
+    val fit = udf { (xs: Seq[java.lang.Double]) =>
+      val obs = xs.indices.filter(j => xs(j) != null && y(j) != null)
+      if (obs.isEmpty) null
+      else (obs.length.toLong, fitOf(
+        obs.map(j => 1.0 +: xs(j).doubleValue +: cp.covs(j).toSeq),
+        obs.map(y(_).doubleValue)))
+    }
+    // x of each entry with a called GT, null otherwise
+    val fits = fit(transform(mt.entries,
+      e => when(e("GT").isNotNull, xOf(e("GT")).cast("double"))))
     val stat = if (test == "wald") "z_stat" else "chi_sq_stat"
     val fields =
       (if (test == "score") Nil
        else Seq("beta" -> "_1", "standard_error" -> "_2")) ++
         Seq(stat -> "_3", "p_value" -> "_4", "converged" -> "_5")
-    val out = fit.select(col("*") +: fields.map { case (name, f) =>
-      col("__fit")(f).as(name) }: _*)
-    Table(out.drop("__fit"), mt.rowKey, mt.globals)
+    val out = rowsWhere(mt, fits, _.isNotNull, "__fit").select(
+      mt.rowKey.map(col) ++ (col("__fit._1").as("n") +: fields.map {
+        case (name, f) => col("__fit._2")(f).as(name) }): _*)
+    Table(out, mt.rowKey, mt.globals)
   }
 
   /** poisson_regression_rows, Wald (reference `statgen.py:1650`): per-

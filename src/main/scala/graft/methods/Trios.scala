@@ -1,6 +1,6 @@
 package graft.methods
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,26 +30,15 @@ object Trios {
     }
   }
 
-  /** `trios`: (proband, father, mother, probandIsFemale). Samples must
-    * exist in the matrix col key (first col field). */
+  /** `trios`: (proband, father, mother, probandIsFemale). A sample absent
+    * from the matrix col key (first col field) reads as a null entry, like
+    * a missing member of the reference's `trio_matrix` with
+    * `complete_trios=False`. */
   def trioMatrix(mt: MatrixTable,
-      trios: Seq[(String, String, String, Boolean)]): MatrixTable = {
-    val keyIdx = mt.colSchema.fieldIndex(mt.colKey.head)
-    val sIdx = mt.colValues.zipWithIndex
-      .map { case (r, i) => r.get(keyIdx).toString -> i }.toMap
-    // try_element_at, not element_at: Catalyst can merge this projection
-    // ahead of an upstream row filter (e.g. the VCF header filter) where
-    // the entries array is empty — ANSI element_at would throw there
-    def entryAt(id: String) =
-      try_element_at(col(MatrixTable.EntriesField), lit(sIdx(id) + 1))
-    val newEntries = array(trios.map { case (kid, dad, mom, _) =>
-      struct(
-        entryAt(kid).as("proband_entry"),
-        entryAt(dad).as("father_entry"),
-        entryAt(mom).as("mother_entry"))
-    }: _*)
+      trios: Seq[(String, String, String, Boolean)]): MatrixTable =
     MatrixTable(
-      rows = mt.rows.withColumn(MatrixTable.EntriesField, newEntries),
+      rows = mt.rows.withColumn(MatrixTable.EntriesField,
+        trioEntries(mt, trios)),
       rowKey = mt.rowKey,
       colValues = trios.map(t => Row(t._1, t._2, t._3, t._4)).toIndexedSeq,
       colSchema = StructType(Seq(
@@ -59,5 +48,25 @@ object Trios {
         StructField("is_female", BooleanType))),
       colKey = Seq("id"),
       globals = mt.globals)
+
+  /** `trioMatrix`'s entries over `mt`'s rows: per row, one
+    * struct(proband_entry, father_entry, mother_entry) per trio. */
+  private[methods] def trioEntries(mt: MatrixTable,
+      trios: Seq[(String, String, String, Boolean)]): Column = {
+    val keyIdx = mt.colSchema.fieldIndex(mt.colKey.head)
+    val sIdx = mt.colValues.zipWithIndex
+      .map { case (r, i) => r.get(keyIdx).toString -> i }.toMap
+    // try_element_at, not element_at: Catalyst can merge this projection
+    // ahead of an upstream row filter (e.g. the VCF header filter) where
+    // the entries array is empty — ANSI element_at would throw there
+    def entryAt(id: String) = sIdx.get(id).fold(
+      lit(null).cast(mt.entrySchema))(i =>
+      try_element_at(col(MatrixTable.EntriesField), lit(i + 1)))
+    array(trios.map { case (kid, dad, mom, _) =>
+      struct(
+        entryAt(kid).as("proband_entry"),
+        entryAt(dad).as("father_entry"),
+        entryAt(mom).as("mother_entry"))
+    }: _*)
   }
 }

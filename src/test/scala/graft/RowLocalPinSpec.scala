@@ -17,9 +17,9 @@ import graft.sources.Vcf
 /** Pinned outputs of the per-variant association and trio methods on a
   * fixture that covers their sample rules: a missing entry (`.`), a
   * present entry with a missing GT (`./.:3`), a sample with no pheno row,
-  * a pheno row with a null y, one covariate (k = 3), a variant where no
-  * sample qualifies, a trio member absent from the matrix and a trio whose
-  * three entries are all missing. `src/test/resources/row_local_pins.tsv`
+  * a pheno row with a null y and a null covariate, one covariate (k = 3),
+  * a variant where no sample qualifies, a trio member absent from the
+  * matrix and a trio whose three entries are all missing. `src/test/resources/row_local_pins.tsv`
   * holds one line per output row (method, then every column as
   * `name=value`); regenerate it with
   * `sbt "Test/runMain graft.RowLocalPins"` only after a deliberate change
@@ -27,7 +27,8 @@ import graft.sources.Vcf
 object RowLocalPins {
   val golden = Paths.get("src/test/resources/row_local_pins.tsv")
 
-  // S12 has no pheno row; S10's phenotypes are all null; S9 lacks y2
+  // S12 has no pheno row; S10's phenotypes and covariate are all null
+  // (no fit reads its covariate, so it is no error); S9 lacks y2
   // only, so the multi-y complete-case rule drops it; SX is not in the
   // matrix. Row 400 has no present entry of a pheno sample, row 500 no
   // called one with a y (S10 is called), row 550 no called one at all.
@@ -65,7 +66,7 @@ object RowLocalPins {
       Row("S7", d(5.0), d(1.7), d(1), d(2), d(0.0)),
       Row("S8", d(2.9), d(0.2), d(0), d(6), d(-0.4)),
       Row("S9", d(3.3), n, d(1), d(5), d(0.9)),
-      Row("S10", n, n, n, n, d(1.5)),
+      Row("S10", n, n, n, n, n),
       Row("S11", d(0.8), d(1.4), d(0), d(3), d(-1.0)),
       Row("SX", d(9.0), d(9.0), d(1), d(9), d(9.0)))
   }
@@ -168,7 +169,8 @@ class RowLocalPinSpec extends AnyFunSuite {
     }
   }
 
-  test("a pheno key given twice, or a null covariate, is an error naming it") {
+  test("a pheno key given twice, or a null covariate of a fitted sample, " +
+      "is an error naming it") {
     val (mt, pheno) = RowLocalPins.fixture(TestSpark.spark)
     val twice = pheno.unionByName(pheno.filter(col("s") === "S4"))
     for (run <- Seq[() => Any](
@@ -177,10 +179,18 @@ class RowLocalPinSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](run())
       assert(e.getMessage.contains("more than one row for col key S4"))
     }
+    // S7's phenotypes are all present, so every fit reads its covariate
     val nullCov = pheno.withColumn("c1",
       when(col("s") =!= "S7", col("c1")))
-    val e = intercept[IllegalArgumentException](
-      Regression.poissonRegressionRows(mt, nullCov, "cnt", Seq("c1")))
-    assert(e.getMessage.contains("null covariate for col key S7"))
+    val cov = Seq("c1")
+    for (run <- Seq[() => Any](
+        () => Regression.linearRegressionRows(mt, nullCov, "y", cov),
+        () => Regression.linearRegressionRowsMulti(mt, nullCov,
+          Seq("y", "y2"), cov),
+        () => Regression.logisticRegressionRows(mt, nullCov, "b", cov),
+        () => Regression.poissonRegressionRows(mt, nullCov, "cnt", cov))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("null covariate for col key S7"))
+    }
   }
 }

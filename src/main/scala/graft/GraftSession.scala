@@ -47,14 +47,10 @@ object GraftSession {
     * localCheckpoint blocks accumulate across the ~280-gate fleet
     * (every pair family materializes its fan-out point); at sf1 the
     * leftover storage filled the old gen and unrelated queries later in
-    * the fleet spiked 10-30x over their isolated times. Under
-    * persistDisk `Materialize.release` also empties the pin registry
-    * (the clearCache would drop the cache entries anyway, but the
-    * registry would keep growing across the fleet). */
+    * the fleet spiked 10-30x over their isolated times. */
   def reset(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    pipeline.Materialize.release(spark)
     spark.sharedState.cacheManager.clearCache()
   }
 }

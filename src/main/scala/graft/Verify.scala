@@ -27,11 +27,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the write above is each gate's terminal action: under
-      // persistDisk, release the operator's fan-out pins here or a
-      // full run accumulates one pinned disk frame per gate
-      // (no-op under the default localCheckpoint mode)
-      finally pipeline.Materialize.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -102,12 +102,24 @@ object AssocGates {
   private def carrier(gt: Column): Column =
     (Calls.nNonRefAlleles(gt) > 0).cast("double")
 
-  /** The fixture's called entries joined to `pheno`, with the integer
-    * carrier indicator `x`. */
-  private def carrierEntries(mt: MatrixTable, pheno: DataFrame): DataFrame =
-    mt.entriesTable.df.join(broadcast(pheno), Seq("s"))
-      .filter(col("GT").isNotNull)
-      .withColumn("x", (Calls.nNonRefAlleles(col("GT")) > 0).cast("int"))
+  /** Each variant's (contig, position, ref) and `__xy`, the (x, y) pair
+    * of each called entry, read off the row's own `entries`: x is the
+    * carrier indicator and y the entry's col's `y` in `pheno`, collected
+    * once in col order. */
+  private def carrierPairs(mt: MatrixTable, pheno: DataFrame): DataFrame = {
+    val yOf = pheno.select("s", "y").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val si = mt.colSchema.fieldIndex("s")
+    val ys = typedLit(mt.colValues.map(c => yOf(c.getString(si))))
+    mt.rows.select(col("contig"), col("position"), col("ref"),
+      filter(zip_with(mt.entries, ys, (e, y) => when(e("GT").isNotNull,
+        struct(carrier(e("GT")).as("x"), y.as("y")))), _.isNotNull)
+        .as("__xy"))
+  }
+
+  /** The sum of `f(x, y)` over a `carrierPairs` row's pairs. */
+  private def pairSum(f: (Column, Column) => Column): Column =
+    aggregate(col("__xy"), lit(0.0), (acc, e) => acc + f(e("x"), e("y")))
 
   /** A logistic gate's fit of the binary phenotype y (odd sample number)
     * on `carrier` with `test`, joined with each variant's 2x2 cell counts
@@ -119,14 +131,11 @@ object AssocGates {
       (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
     val fit = methods.Regression.logisticRegressionRows(mt, pheno, "y",
       xOf = carrier, test = test).df
-    val cells = carrierEntries(mt, pheno)
-      .groupBy(col("contig"), col("position"), col("ref"))
-      .agg(
-        sum(col("x") * col("y")).cast("long").as("n11"),
-        sum(col("x") * (lit(1.0) - col("y"))).cast("long").as("n10"),
-        sum((lit(1) - col("x")) * col("y")).cast("long").as("n01"),
-        sum((lit(1) - col("x")) * (lit(1.0) - col("y"))).cast("long")
-          .as("n00"))
+    val cells = carrierPairs(mt, pheno).select(col("*"),
+      pairSum(_ * _).as("n11"),
+      pairSum((x, y) => x * (lit(1.0) - y)).as("n10"),
+      pairSum((x, y) => (lit(1.0) - x) * y).as("n01"),
+      pairSum((x, y) => (lit(1.0) - x) * (lit(1.0) - y)).as("n00"))
     fit.join(cells, Seq("contig", "position", "ref"))
   }
 
@@ -783,12 +792,11 @@ object AssocGates {
         (substring(col("s"), 2, 10).cast("int") + 1).cast("double"))
       val fit = methods.Regression.poissonRegressionRows(mt, pheno, "y",
         xOf = carrier).df
-      val cells = carrierEntries(mt, pheno).groupBy(col("contig"), col("position"), col("ref"))
-        .agg(
-          sum(col("x") * col("y")).cast("double").as("sy1"),
-          sum((lit(1) - col("x")) * col("y")).cast("double").as("sy0"),
-          sum(col("x")).cast("long").as("n1"),
-          sum(lit(1) - col("x")).cast("long").as("n0"))
+      val cells = carrierPairs(mt, pheno).select(col("*"),
+        pairSum(_ * _).as("sy1"),
+        pairSum((x, y) => (lit(1.0) - x) * y).as("sy0"),
+        pairSum((x, _) => x).as("n1"),
+        pairSum((x, _) => lit(1.0) - x).as("n0"))
       fit.join(cells, Seq("contig", "position", "ref"))
         .filter(col("n1") > 0 && col("n0") > 0 && col("sy1") > 0 &&
           col("sy0") > 0)

@@ -683,7 +683,7 @@ object GeneticsGates {
     // test_genetics_pipeline): import VCF → split_multi →
     // variant_qc + sample_qc → filter cols/rows/entries on the QC
     // fields → write native → read back → aggregate. The split rows
-    // are pinned ONCE (Materialize.fanout) and feed BOTH QC consumers
+    // are pinned ONCE (a lazy localCheckpoint) and feed BOTH QC consumers
     // — the sample aggregate and the annotated row pipeline into the
     // write — so the source parses once (composition plan-audited).
     // DP stands in for GQ in the entry filter (the fixture carries
@@ -691,7 +691,7 @@ object GeneticsGates {
     // drops something real -------------------------------------------------
     Gate("genetics_pipeline", (s, _) => {
       val sp0 = methods.SplitMulti(sources.Vcf.read(s, vcfMultiFixture))
-      val sp = sp0.copy(rows = pipeline.Materialize.fanout(sp0.rows))
+      val sp = sp0.copy(rows = sp0.rows.localCheckpoint(false))
       val ann = methods.Qc.annotateVariantQc(sp)
         .annotateColsTable(methods.Qc.sampleQc(sp), Seq("call_rate"))
       val crIdx = ann.colSchema.fieldIndex("call_rate")

@@ -723,7 +723,7 @@ object PipeTextGates {
     // near-dup clusters → representative dedup → integer-exact Gopher-
     // style quality gates → deterministic split assign → export
     // (write partitioned parquet, read back) → per-(split, lang)
-    // summary. The deduped corpus is pinned ONCE (Materialize.fanout)
+    // summary. The deduped corpus is pinned ONCE (a lazy localCheckpoint)
     // where BOTH the minhash pair chain and the representative-dedup
     // join consume it; the quality filter + split assign are narrow
     // projections that add NO exchange over the dedup join
@@ -734,9 +734,8 @@ object PipeTextGates {
       val docs = t(s, dir, "documents")
       val cleaned = docs.filter(length(col("text")) >= lit(100) &&
         pipeline.Text.symbolToWordRatio(col("text")) < lit(0.3))
-      val ex = pipeline.Materialize.fanout(
-        pipeline.Dedup.exact(cleaned, "doc_id", "text")
-          .drop("content_hash"))
+      val ex = pipeline.Dedup.exact(cleaned, "doc_id", "text")
+        .drop("content_hash").localCheckpoint(false)
       val clusters = pipeline.Dedup.nearDupClusters(
         pipeline.Dedup.minhashPairs(ex, "doc_id", "text"))
       val ded = pipeline.Dedup.dedupByClusters(ex, "doc_id", clusters)

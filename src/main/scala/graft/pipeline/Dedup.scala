@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines, exact and near-exact.
   * All stages are DataFrame-declarative: the heavy lifting (hash groupBys,
@@ -9,13 +10,12 @@ import org.apache.spark.sql.functions._
   * hash-partition, so every stage scales horizontally; no driver-side state.
   *
   * Storage contract: multi-consumer intermediates (shingle sets, band /
-  * simhash signatures, embedding buckets) are materialized once via
-  * [[Materialize.fanout]] at the fan-out point. The strategy is the
-  * `spark.graft.materialize` config: `localCheckpoint` (default —
-  * self-reclaiming blocks, lineage truncated, a lost block fails the
-  * job) or `persistDisk` (lineage retained — survives preemptible
-  * executors at the cost of CacheManager-pinned disk); the trade is
-  * documented on [[Materialize]]. */
+  * simhash signatures, embedding buckets) are pinned once at the fan-out
+  * point with a lazy `localCheckpoint(false)`: the first action stores
+  * the blocks MEMORY_AND_DISK in the executors' block managers, lineage
+  * truncated, and the ContextCleaner drops them once the result frame is
+  * unreachable. Without the pin each consumer re-runs the upstream
+  * pipeline: their exchanges do not canonicalize to a ReusedExchange. */
 object Dedup {
 
   /** Exact dedup: keep the row with the smallest `id` per identical content
@@ -66,12 +66,9 @@ object Dedup {
           col("__para")))), s => s("__para"))).as(text))
   }
 
-  /** Shingle sets per doc, behind a forced exchange: the set is consumed
-    * multiple times (minhash pass + verify joins) and Catalyst's
-    * ReuseExchange computes one shared shuffle instead of re-deriving the
-    * md5/shingle subtree per consumer. Disk-backed shuffle, not executor
-    * memory — the round-1 version persisted the full shingle sets
-    * (O(corpus) memory, leaked un-unpersisted). */
+  /** Shingle sets per doc, behind a forced exchange and pinned once: the
+    * set is consumed multiple times (minhash pass + verify joins), and the
+    * pin keeps each consumer from re-deriving the md5/shingle subtree. */
   private def shingleSets(df: DataFrame, id: String, text: String,
       shingleSize: Int): DataFrame =
     df.select(col(id).as("doc"), Text.shingles(col(text), shingleSize)
@@ -80,9 +77,8 @@ object Dedup {
       .repartition(col("doc"))
       // lazy checkpoint: three consumers (band signatures + both verify
       // joins) would otherwise each re-scan the corpus and re-shingle;
-      // the first action materializes the sets once, disk-backed
-      // (strategy: spark.graft.materialize — see Materialize.fanout)
-      .transform(Materialize.fanout)
+      // the first action materializes the sets once
+      .localCheckpoint(false)
 
   /** (doc, band, bsig) band signatures — relational minhash: explode
     * shingles and compute the hash family as plain codegen'd columns +
@@ -159,7 +155,7 @@ object Dedup {
     // materialize signatures once: capBuckets consumes them twice
     // (bucket count + join back) and the pair join twice more
     val banded = bandSignatures(sh, numHashes, bands, family)
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     val pruned = capBuckets(banded, Seq("band", "bsig"), maxBucketSize)
     val cand = docPairs(pruned, "band", "bsig")
       .select("id_a", "id_b")
@@ -297,7 +293,7 @@ object Dedup {
       Text.winnowFingerprints(col(text), k, w).as("fps"))
     .filter(size(col("fps")) > 0)
     .repartition(col("doc"))
-    .transform(Materialize.fanout)
+    .localCheckpoint(false)
 
   /** The (doc, fp) fingerprint stream of a (doc, fps) frame. */
   private def fpStream(fps: DataFrame): DataFrame =
@@ -518,7 +514,7 @@ object Dedup {
     * cross-check (a kernel bug undershoots here, not silently passes). */
   private[graft] def verifySharedRuns(cand: DataFrame, docs: DataFrame,
       id: String, text: String, t: Int): DataFrame = {
-    val candM = Materialize.fanout(cand)
+    val candM = cand.localCheckpoint(false)
     val candDocs = candM.select(col("id_a").as("doc"))
       .union(candM.select(col("id_b").as("doc"))).distinct()
     sharedRunCounts(docs, id, text, t, candDocs, slices = 1)
@@ -561,7 +557,7 @@ object Dedup {
         .withColumnRenamed("doc", "bdoc"), Seq("fp"))
       .select(col("doc").as("corpus_id"), col("bdoc").as("bench_id"))
       .dropDuplicates("corpus_id", "bench_id")
-      .transform(Materialize.fanoutDisk)
+      .localCheckpoint(false, StorageLevel.DISK_ONLY)
     // exact verify: shared t-grams, BOTH gram streams restricted to docs
     // appearing in some candidate pair (recall exact by the winnowing
     // guarantee — see verifySharedRuns; the final semi-join is the same
@@ -725,8 +721,8 @@ object Dedup {
       k: Int = 1, maxBucketSize: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // both union branches consume the pair pipeline: materialize once
-    val pairs = Materialize.fanout(
-      editDistancePairs(df, id, key, maxBucketSize))
+    val pairs = editDistancePairs(df, id, key, maxBucketSize)
+      .localCheckpoint(false)
     val sym = pairs
       .select(col("id_a").as("doc"), col("id_b").as("match_id"),
         col("dist"))
@@ -806,8 +802,8 @@ object Dedup {
         posexplode(graft.functions.TextKernels.gramHashes(col(text),
           minLen)).as(Seq("pos", "h")))
       // consumed twice (dup-gram agg + mark join): materialize the
-      // rolling-hash pass once, disk-backed, not re-derived per branch
-      .transform(Materialize.fanout)
+      // rolling-hash pass once, not re-derived per branch
+      .localCheckpoint(false)
     val dupGrams = pos.groupBy("h")
       .agg(count(lit(1)).as("occ"),
         min(struct(col("doc"), col("pos"))).as("first"))
@@ -892,7 +888,7 @@ object Dedup {
       .withColumn("__ng", size(col("__g")))
       .repartition(col("doc"))
       // both join sides consume the n-gram projection: materialize once
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     // bound the quadratic: singleton blocks pair with nothing, and a
     // block past maxBlockSize is a scale hazard, not a dedup candidate
     val g = capBuckets(g0, blockCols, maxBlockSize)
@@ -1135,7 +1131,7 @@ object Dedup {
       .withColumn("__n", size(col("__g")))
       // consumed by the prefix build, BOTH verify sides, both
       // expansion joins and the stats row: materialize once
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     val docs = groups.select("doc", "__g", "__n")
     val grams = docs.select(col("doc"), col("__n"),
       explode(col("__g")).as("g"))
@@ -1154,7 +1150,7 @@ object Dedup {
       // Prefix rows are ~11% of gram rows at tau=0.8; one lazy
       // materialization is far cheaper than the recompute at every
       // scale measured (500k docs: ~1 GB stored vs ~20 s re-run)
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     def pside(a: String) = prefix.select(col("g"),
       col("doc").as(s"id_$a"), col("__n").as(s"__s$a"),
       col("__rk").as(s"__rk$a"))
@@ -1316,7 +1312,7 @@ object Dedup {
     val sigs = sigDf
       .withColumn("bucket",
         shiftrightunsigned(col("sig"), sigBits - prefixBits))
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     val pruned = capBuckets(sigs, Seq("bucket"), maxBucketSize)
     val l = pruned.select(col("bucket"), col("doc").as("id_a"),
       col("sig").as("sig_a"))
@@ -1369,7 +1365,7 @@ object Dedup {
       .join(assigned, Seq("id"))
       .repartition(col("id"))
       // consumed by both join sides + the output
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     val pruned = capBuckets(withVec, Seq("cluster"), maxClusterSize)
     val l = pruned.select(col("cluster"), col("id").as("id_a"),
       col("__v").as("__va"))

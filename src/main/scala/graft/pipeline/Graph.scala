@@ -62,7 +62,7 @@ object Graph {
     val edges = edgesRaw.select(col(src).as("src"), col(dst).as("dst"))
       .distinct()
       // consumed every sweep (join + outdeg) and for the node set:
-      // materialize the dedup once, disk-backed
+      // materialize the dedup once
       .localCheckpoint(false)
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()

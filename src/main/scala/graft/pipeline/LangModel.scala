@@ -63,7 +63,7 @@ object LangModel {
       alpha: Double = 0.5): DataFrame = {
     // the bigram stream feeds the count tables AND the score join:
     // materialize once
-    val bg = Materialize.fanout(bigrams(df, id, text))
+    val bg = bigrams(df, id, text).localCheckpoint(false)
     val big = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val uni = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     // V = conditioning vocabulary (distinct first words) — one scalar
@@ -99,7 +99,7 @@ object LangModel {
     val scored = bigramNll(df, id, text, alpha)
       .withColumn("nll_r",
         expr("(sum_nll_units * CAST(1000000 AS BIGINT)) div n_bigrams"))
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     val n = scored.count()
     val keep = math.max(1L, math.floor(n * q).toLong)
     graft.operators.Scans

@@ -1,122 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.SparkSession
 
-/** Fan-out materialization strategy for the dedup/similarity pipelines
-  * (`spark.graft.materialize`), round-16 verdict ask #3.
-  *
-  * Multi-consumer intermediates (gram groups, the ppjoin prefix frame,
-  * band/simhash signatures, LSH buckets) are computed once and read by
-  * 2-4 downstream subtrees whose exchanges do NOT canonicalize to a
-  * ReusedExchange (measured, round 15) — without a materialization the
-  * whole upstream pipeline runs once per consumer. Two ways to pin it,
-  * with a real trade:
-  *
-  *  - `localCheckpoint` (default, the behavior every measured number
-  *    in SCALING_r* was taken under): blocks in the executors' block
-  *    managers, lineage TRUNCATED. Space self-reclaims (the
-  *    ContextCleaner releases blocks once the result frame is
-  *    unreachable) and downstream plans are flat — but a LOST block
-  *    (executor death, preemptible/spot node) fails the job, because
-  *    there is no lineage left to recompute from.
-  *  - `persistDisk`: `persist(DISK_ONLY)` — blocks on executor disk,
-  *    lineage RETAINED, so a lost block recomputes from source and the
-  *    job survives preemption. The costs: cached plans are pinned in
-  *    the session's CacheManager until RELEASED (below) or session
-  *    end, and physical plans carry the cached subtree under
-  *    InMemoryTableScan nodes (the plan audits strip those before
-  *    asserting).
-  *
-  * Pin lifecycle (round-17 ask #2): the long-lived preemptible-cluster
-  * session is exactly persistDisk's target scenario, and there N
-  * operator calls would otherwise accumulate N pinned disk frames.
-  * Every persistDisk pin is therefore registered per-session;
-  * `release(spark)` unpersists them all (the caller's terminal action
-  * — write/collect/count on the operator's RESULT — is the natural
-  * release point), and `withFanouts(spark) { ... }` scopes a block so
-  * its pins release on exit even on failure. Release cannot live
-  * inside the operators themselves: the pinned frame's second consumer
-  * is usually the lazy result frame handed back to the caller, so only
-  * the caller knows when the last action ran. Under the default
-  * localCheckpoint mode nothing registers (the ContextCleaner
-  * self-reclaims blocks) and `release` is a no-op.
-  *
-  * Scope: every LAZY, non-iterative fan-out point in the pipeline
-  * package (`Dedup`, `Similarity`, `Sampling`, `Retrieval`,
-  * `LangModel`, `QualityClassifier`). Exempt, deliberately:
-  *  - the EAGER `localCheckpoint(true, DISK_ONLY)` calls in the
-  *    winnow slicing family — disk-footprint SEQUENCING barriers
-  *    (compute slice, release, next slice) whose bounded-disk
-  *    contract needs blocks dropped at precise points, which a
-  *    pinned cache defeats;
-  *  - iterative operators (`Graph.pageRank`, label propagation,
-  *    PCA's NIPALS loop) — they checkpoint to TRUNCATE LINEAGE, and
-  *    under `persistDisk` a deep loop would rebuild the very plan
-  *    explosion the checkpoint exists to stop;
-  *  - the streaming parity harnesses (`StreamText`) — their batch
-  *    side frames live for a stream's lifetime, a different
-  *    lifecycle from a one-job fan-out. */
-object Materialize { // public: `release`/`withFanouts` are caller surface
-  private def mode(df: DataFrame): String = df.sparkSession.conf
-    .get("spark.graft.materialize", "localCheckpoint")
-
-  // persistDisk pins by session, released by `release`/`withFanouts`.
-  // Strong refs are correct here: the CacheManager already pins the
-  // plan until unpersist, so the registry adds no retention of its own
-  // — it's the handle that makes the unpersist possible.
-  private val pinned = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, java.util.List[DataFrame]]()
-
-  private def at(df: DataFrame, level: StorageLevel): DataFrame =
-    mode(df) match {
-      case "localCheckpoint" => df.localCheckpoint(eager = false, level)
-      case "persistDisk" =>
-        val p = df.persist(StorageLevel.DISK_ONLY)
-        pinned.computeIfAbsent(df.sparkSession,
-          _ => java.util.Collections.synchronizedList(
-            new java.util.ArrayList[DataFrame]())).add(p)
-        p
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize=$other; expected localCheckpoint " +
-          "(lineage truncated, self-reclaiming — the default) or " +
-          "persistDisk (lineage retained, survives executor loss)")
-    }
-
-  /** Number of persistDisk frames currently pinned for `spark` —
-    * always 0 under the default localCheckpoint mode. */
-  def pinnedCount(spark: org.apache.spark.sql.SparkSession): Int = {
-    val l = pinned.get(spark)
-    if (l == null) 0 else l.size
-  }
-
-  /** Unpersist every persistDisk frame pinned for `spark` since the
-    * last release. Call after the terminal action on an operator's
-    * result (the result is already materialized/written — dropping the
-    * intermediate's blocks costs nothing). No-op under the default
-    * localCheckpoint mode. Non-blocking: executors drop the disk
-    * blocks asynchronously. */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val l = pinned.remove(spark)
-    if (l != null) l.forEach(_.unpersist(blocking = false))
-  }
-
-  /** Scope a block of pipeline-operator calls: the session's
-    * persistDisk pins release on exit, success or failure — the
-    * long-lived-session usage that keeps executor disk bounded at
-    * one block's working set. (Session-wide, same as `release`: pins
-    * are not nested per-scope, because concurrent operator calls on
-    * one session would interleave their registrations.) */
-  def withFanouts[T](spark: org.apache.spark.sql.SparkSession)
-      (body: => T): T =
-    try body finally release(spark)
-
-  /** Default fan-out pin: memory-first blocks under `localCheckpoint`,
-    * executor disk under `persistDisk`. */
-  def fanout(df: DataFrame): DataFrame = at(df, StorageLevel.MEMORY_AND_DISK)
-
-  /** Disk-backed fan-out pin for similarity-scaled intermediates whose
-    * memory-first materialization OOM'd the 48g single-JVM fleet at
-    * sf10 (candidate pair sets — see winnowContamination). */
-  def fanoutDisk(df: DataFrame): DataFrame = at(df, StorageLevel.DISK_ONLY)
+/** Every fan-out point in the pipeline package is pinned with a lazy
+  * `localCheckpoint`, whose blocks the ContextCleaner drops once the
+  * result frame is unreachable, so there is no pin to release. `release`
+  * stays as a no-op because perfbench's harness calls it after each op. */
+object Materialize {
+  def release(spark: SparkSession): Unit = ()
 }

@@ -44,7 +44,7 @@ object QualityClassifier {
     val featDf = df.select(
       (label.cast("double").as("__y") +:
         xCols.zipWithIndex.map { case (c, i) => c.as(s"__x$i") }): _*)
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     var beta = Array.fill(d)(0.0)
     var it = 0
     // β enters each iteration as a broadcast ONE-ROW frame, not as

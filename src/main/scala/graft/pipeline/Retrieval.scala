@@ -49,7 +49,7 @@ object Retrieval {
           sum(when(col("t") === t, 1L).otherwise(0L)).as(tfCol(i))
         }: _*)
       // consumed by the stats agg AND the score projection
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     // q + 2 scalars to the driver — bounded by the query, not the corpus
     val aggs = Seq(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")) ++
       terms.indices.map(i =>

@@ -440,8 +440,8 @@ object Sampling {
     require(batchSize > 0, "batchSize must be positive")
     val n = tokenCount.cast("long")
     val bucket = bounds.map(b => (n >= b).cast("long")).reduce(_ + _)
-    // consumed by the count agg AND the scan — a knob-routed fan-out
-    val withB = Materialize.fanout(df.withColumn("bucket", bucket))
+    // consumed by the count agg AND the scan: pin once
+    val withB = df.withColumn("bucket", bucket).localCheckpoint(false)
     val counts = withB.groupBy("bucket")
       .agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -552,7 +552,7 @@ object Sampling {
     val counts = bucketed.groupBy("b")
       .agg(sum(when(col("__t"), 1L).otherwise(0L)).as("ct"),
         count(lit(1)).as("cr"))
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     val totRow = counts
       .agg(sum("ct").as("t"), sum("cr").as("r")).head()
     require(!totRow.isNullAt(0) && !totRow.isNullAt(1),

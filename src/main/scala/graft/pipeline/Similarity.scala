@@ -124,7 +124,7 @@ object Similarity {
     val bucketed = df
       .select(col(idCol).as("id"), col(vecCol).as("__v"),
         lshBucket(col(vecCol), planes).as("bucket"))
-      .transform(Materialize.fanout)
+      .localCheckpoint(false)
     // cap on the RIGHT side: a degenerate bucket stops fanning out
     val counts = bucketed.groupBy(col("bucket"))
       .agg(count(lit(1)).as("__bn"))
@@ -224,7 +224,7 @@ object Similarity {
         transform(col(vecCol), x =>
           round(x.cast("double") * 1000).cast("long")).as("__v"))
       .repartition(col("id"))
-      .transform(Materialize.fanout) // consumed once per iteration
+      .localCheckpoint(false) // consumed once per iteration
     // centroid state: (per-dim coordinate sums, member count) — exact
     var cents: Seq[(Seq[Long], Long)] = grid.orderBy(col("id").asc)
       .limit(k).collect()
@@ -284,7 +284,7 @@ object Similarity {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val subDim = dim / m
     val base = df.select(col(idCol).as("id"), col(vecCol).as("__v"))
-      .transform(Materialize.fanout) // sliced m times + reranked
+      .localCheckpoint(false) // sliced m times + reranked
     // per-subspace codebooks + assignments
     val subs = (0 until m).map { s =>
       val sliced = base.select(col("id"),

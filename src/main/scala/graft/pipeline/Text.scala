@@ -327,7 +327,7 @@ object Text {
       .filter(length(col("token")) > 0)
       .groupBy("doc", "token").agg(count(lit(1)).as("tf"))
     val tfPinned = // consumed by idf derivation AND the join
-      Materialize.fanout(tf)
+      tf.localCheckpoint(false)
     val v = tfPinned.groupBy("token")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocFreq)

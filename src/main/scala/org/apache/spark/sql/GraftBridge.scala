@@ -16,15 +16,6 @@ object GraftBridge {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Entry count of the session's CacheManager (`private[sql]`
-    * sharedState) — lets the persistDisk-lifecycle spec assert pins
-    * return to baseline after `Materialize.release`. */
-  def cachedPlanCount(spark: SparkSession): Int = spark match {
-    case c: classic.SparkSession =>
-      c.sharedState.cacheManager.numCachedEntries
-    case _ => 0
-  }
-
   /** Block until every event posted so far has reached the listeners
     * (the bus is `private[spark]`), so counters read after a query are
     * complete without a guessed sleep. */

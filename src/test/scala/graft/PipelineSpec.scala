@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Dedup, Materialize, Multimodal, Similarity, Text}
+import org.apache.spark.storage.StorageLevel
+import graft.pipeline.{Dedup, Multimodal, Similarity, Text}
 
 class PipelineSpec extends SparkSpec {
 
@@ -56,99 +57,41 @@ class PipelineSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b, _) => b == 3L || a == 3L })
   }
 
-  test("materialize knob rejects unknown modes with guidance") {
-    val prev = spark.conf.get("spark.graft.materialize",
-      "localCheckpoint")
-    try {
-      spark.conf.set("spark.graft.materialize", "replicate3")
-      val e = intercept[IllegalArgumentException] {
-        // any fan-out operator exercises the knob at construction
-        Dedup.minhashPairs(docs(1L -> "alpha beta gamma delta"),
-          "doc_id", "text").count()
-      }
-      assert(e.getMessage.contains("replicate3") &&
-        e.getMessage.contains("localCheckpoint") &&
-        e.getMessage.contains("persistDisk"),
-        s"error must name the bad value and both valid modes: $e")
-    } finally spark.conf.set("spark.graft.materialize", prev)
-  }
-
-  test("persistDisk pins release via Materialize.release") {
-    val prev = spark.conf.get("spark.graft.materialize",
-      "localCheckpoint")
-    Materialize.release(spark) // drain pins earlier tests may hold
-    val baseCache = org.apache.spark.sql.GraftBridge
-      .cachedPlanCount(spark)
-    assert(Materialize.pinnedCount(spark) === 0)
-    try {
-      spark.conf.set("spark.graft.materialize", "persistDisk")
-      val df = Dedup.minhashPairs(
-        docs((1L, "alpha beta gamma delta"),
-          (2L, "alpha beta gamma delta")), "doc_id", "text")
-      val n = df.count() // the caller's terminal action
-      assert(Materialize.pinnedCount(spark) > 0,
-        "persistDisk fan-outs must register for release")
-      assert(org.apache.spark.sql.GraftBridge.cachedPlanCount(spark)
-        > baseCache)
-      Materialize.release(spark)
-      assert(Materialize.pinnedCount(spark) === 0)
-      // CacheManager returns to baseline: no pinned frames accumulate
-      // across operator calls in a long-lived session
-      assert(org.apache.spark.sql.GraftBridge.cachedPlanCount(spark)
-        === baseCache)
-      // lineage was retained, so the released frame still recomputes
-      assert(df.count() === n)
-    } finally spark.conf.set("spark.graft.materialize", prev)
-  }
-
-  test("withFanouts releases persistDisk pins even on failure") {
-    val prev = spark.conf.get("spark.graft.materialize",
-      "localCheckpoint")
-    Materialize.release(spark)
-    try {
-      spark.conf.set("spark.graft.materialize", "persistDisk")
-      intercept[RuntimeException] {
-        Materialize.withFanouts(spark) {
-          Dedup.minhashPairs(docs(7L -> "one two three four"),
-            "doc_id", "text").count()
-          assert(Materialize.pinnedCount(spark) > 0)
-          throw new RuntimeException("operator downstream failed")
-        }
-      }
-      assert(Materialize.pinnedCount(spark) === 0,
-        "scoped pins must release on the failure path")
-    } finally spark.conf.set("spark.graft.materialize", prev)
-  }
-
-  test("localCheckpoint mode registers no pins; release is a no-op") {
-    val prev = spark.conf.get("spark.graft.materialize",
-      "localCheckpoint")
-    Materialize.release(spark)
-    try {
-      spark.conf.set("spark.graft.materialize", "localCheckpoint")
-      Dedup.minhashPairs(docs(3L -> "a b c d e"), "doc_id", "text")
-        .count()
-      assert(Materialize.pinnedCount(spark) === 0,
-        "the self-reclaiming default must not register pins")
-      Materialize.release(spark) // no-op, must not throw
-    } finally spark.conf.set("spark.graft.materialize", prev)
-  }
-
   test("minhashPairs plan shares the shingle exchange (no persist)") {
     val base = (1 to 30).map(i => s"w$i").mkString(" ")
     val df = Dedup.minhashPairs(
       docs((1L, base), (2L, base), (3L, base + " x")), "doc_id", "text")
     df.collect() // AQE reuses identical shuffle stages at runtime
     val plan = df.queryExecution.executedPlan.toString
-    // the work-sharing mechanism is mode-specific: under the default
-    // localCheckpoint strategy AQE reuses the identical shuffle stages
-    // above the checkpoint boundary; under persistDisk the sharing IS
-    // the CacheManager entry (consumers read InMemoryTableScan)
-    if (spark.conf.get("spark.graft.materialize",
-        "localCheckpoint") == "persistDisk")
-      assert(plan.contains("InMemoryTableScan"), plan.take(2000))
-    else assert(plan.contains("ReusedExchange") ||
+    // the identical shuffle stages above the checkpoint boundary
+    assert(plan.contains("ReusedExchange") ||
       plan.contains("ReusedQueryStage"), plan.take(2000))
+  }
+
+  test("fan-out pins store at their levels: winnow candidates disk only") {
+    val sc = spark.sparkContext
+    // the pins that building `df` registers, after one action on it
+    def pinsOf(df: => org.apache.spark.sql.DataFrame) = {
+      val before = sc.getPersistentRDDs.keySet
+      df.collect()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      sc.getRDDStorageInfo.filterNot(i => before.contains(i.id)).toSeq
+    }
+    val run = "a verbatim benchmark passage that is long enough to " +
+      "share several winnowing fingerprints with the corpus"
+    val df = docs(1L -> s"corpus text: $run", 17L -> s"bench item: $run")
+    val winnow = pinsOf(Dedup.winnowContamination(
+      df.filter(col("doc_id") =!= 17L), "doc_id", "text",
+      df.filter(col("doc_id") === 17L), "doc_id", "text"))
+    // the candidate pair set: a memory-first pin of it OOM'd sf10
+    assert(winnow.map(_.storageLevel) === Seq(StorageLevel.DISK_ONLY),
+      winnow)
+    assert(winnow.forall(i => i.memSize == 0 && i.diskSize > 0), winnow)
+    // shingle sets and band signatures: memory first
+    val minhash = pinsOf(Dedup.minhashPairs(docs(1L -> run, 2L -> run),
+      "doc_id", "text"))
+    assert(minhash.map(_.storageLevel) ===
+      Seq.fill(2)(StorageLevel.MEMORY_AND_DISK), minhash)
   }
 
   test("minhashPairs bucket cap drops oversized buckets") {

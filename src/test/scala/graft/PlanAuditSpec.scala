@@ -14,44 +14,6 @@ class PlanAuditSpec extends SparkSpec {
   private def fixtureMt(): MatrixTable = Vcf.read(spark,
     Fixtures.path("oracle_sample.vcf"))
 
-  /** executedPlan treeString with InMemoryRelation cached subtrees
-    * removed. Under `spark.graft.materialize=persistDisk` the fan-out
-    * pins are CacheManager entries whose BUILD plan prints nested under
-    * every InMemoryTableScan; the audits assert the VISIBLE final pass
-    * — what re-executes per consumer — which is the tree outside the
-    * cache, exactly as the default mode's checkpoint boundary leaves an
-    * ExistingRDD scan. Under the default this is the plain treeString
-    * (no InMemoryRelation exists). */
-  private def strippedPlan(df: org.apache.spark.sql.DataFrame): String = {
-    val out = new StringBuilder
-    var skip = -1
-    for (l <- df.queryExecution.executedPlan.toString.linesIterator) {
-      val ind = l.indexWhere(c => !" :+-".contains(c))
-      if (!(skip >= 0 && (ind > skip || ind < 0))) {
-        skip = -1
-        if (ind >= 0 && l.substring(ind).startsWith("InMemoryRelation"))
-          skip = ind
-        else { out.append(l); out.append('\n') }
-      }
-    }
-    out.toString
-  }
-
-  /** Run `body` under both fan-out materialization strategies (the
-    * round-16 knob contract: every shape invariant holds under both),
-    * clearing the CacheManager after the persist pass so pinned plans
-    * can't leak into later audits. */
-  private def eachMaterializeMode(body: => Unit): Unit =
-    for (m <- Seq("localCheckpoint", "persistDisk")) {
-      spark.conf.set("spark.graft.materialize", m)
-      try withClue(s"[materialize=$m] ")(body)
-      finally {
-        spark.conf.set("spark.graft.materialize",
-          sys.env.getOrElse("GRAFT_MATERIALIZE", "localCheckpoint"))
-        spark.catalog.clearCache()
-      }
-    }
-
   test("ldMatrix joins on window bins — no per-contig cross product") {
     val plan = Ld.ldMatrix(fixtureMt(), window = 1500)
       .queryExecution.executedPlan.toString
@@ -87,6 +49,10 @@ class PlanAuditSpec extends SparkSpec {
       (substring(col("s"), 2, 10).cast("int") % 2).cast("double"))
     assertRowLocal(Regression.linearRegressionRows(mt, pheno, "y").df)
     assertRowLocal(Regression.logisticRegressionRows(mt, pheno, "y").df)
+    // the logistic gates count their 2x2 cells off the same entries
+    val gate = SparkEntry.queries("logistic_rows")(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert(!gate.contains("posexplode"), gate.take(2000))
   }
 
   test("liftover is a broadcast join on the chain blocks") {
@@ -174,7 +140,7 @@ class PlanAuditSpec extends SparkSpec {
   test("minhash pairs scan the corpus once and hash-aggregate minima") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val df = graft.pipeline.Dedup.minhashPairs(docs, "doc_id", "text")
-    val plan = strippedPlan(df)
+    val plan = df.queryExecution.executedPlan.toString
     // the shingle sets and band signatures are checkpoint-materialized,
     // so the downstream pair/verify pipeline never re-reads the corpus
     val scans = "Scan parquet".r.findAllIn(plan).length
@@ -426,15 +392,17 @@ class PlanAuditSpec extends SparkSpec {
     // the sorted-array kernel must be GONE from the plan (its per-pair
     // merge-walk was the sf10 super-linear term), replaced by the
     // codegen'd AND+popcount fold, still outside the join condition
-    val plan = strippedPlan(pipeline.Dedup.charNgramJaccardPairs(docs,
-      "doc_id", "text", Seq("source", "lang")))
+    val plan = pipeline.Dedup.charNgramJaccardPairs(docs,
+      "doc_id", "text", Seq("source", "lang"))
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(!plan.contains("intersect_count"), plan.take(2500))
     assert(plan.contains("bit_count"), plan.take(2500))
     // fallback path (dictionary over budget): the one-kernel-site
     // barrier discipline of rounds 8-10 still holds
-    val fb = strippedPlan(pipeline.Dedup.charNgramJaccardPairs(docs,
-      "doc_id", "text", Seq("source", "lang"), maxDictSize = 0))
+    val fb = pipeline.Dedup.charNgramJaccardPairs(docs,
+      "doc_id", "text", Seq("source", "lang"), maxDictSize = 0)
+      .queryExecution.executedPlan.toString
     assert(!fb.contains("CartesianProduct"), fb.take(2000))
     val kernels = "intersect_count".r.findAllIn(fb).length
     assert(kernels == 1, s"$kernels intersect sites\n${fb.take(2500)}")
@@ -442,8 +410,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("prefixFilterJaccard: no cartesian, one intersect kernel site") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val plan = strippedPlan(pipeline.Dedup.prefixFilterJaccardPairs(
-      docs, "doc_id", "text", n = 8, threshold = 0.8))
+    val plan = pipeline.Dedup.prefixFilterJaccardPairs(
+      docs, "doc_id", "text", n = 8, threshold = 0.8)
+      .queryExecution.executedPlan.toString
     // completeness comes from prefix-gram EQUI-joins — an accidental
     // cartesian would mean the candidate join degenerated to all-pairs
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
@@ -462,18 +431,14 @@ class PlanAuditSpec extends SparkSpec {
     // vocab-rich corpus takes)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try eachMaterializeMode {
+    try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val df = pipeline.Dedup.prefixFilterJaccardPairs(docs, "doc_id",
         "text", n = 8, threshold = 0.8, maxVerifyBroadcastBytes = 0L)
-      val plan = strippedPlan(df)
+      val plan = df.queryExecution.executedPlan.toString
       // the fan-out pin boundary both consumers read from: the
-      // checkpoint's ExistingRDD under the default, the CacheManager's
-      // InMemoryTableScan under persistDisk (lineage retained)
-      val full = df.queryExecution.executedPlan.toString
-      if (spark.conf.get("spark.graft.materialize") == "persistDisk")
-        assert(full.contains("InMemoryTableScan"), full.take(3000))
-      else assert(full.contains("ExistingRDD"), full.take(3000))
+      // checkpoint's ExistingRDD
+      assert(plan.contains("ExistingRDD"), plan.take(3000))
       // candidate join: hash-partitioned shuffled hash join on the
       // composite (gram, size-bucket) key — never a broadcast of the
       // prefix index
@@ -538,7 +503,7 @@ class PlanAuditSpec extends SparkSpec {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val assigned = pipeline.Similarity.kmeansLloydExact(
       e, "vec_id", "embedding", k = 2, iters = 1)
-    val plan = strippedPlan(assigned)
+    val plan = assigned.queryExecution.executedPlan.toString
     // centroids are literals: the final assignment is a pure projection
     // over the checkpointed grid — no join, no exchange
     assert(!plan.contains("Join"), plan.take(2000))
@@ -614,7 +579,7 @@ class PlanAuditSpec extends SparkSpec {
     for (df <- Seq(
         Similarity.sqTopK(rest, "vec_id", "embedding", q, 5),
         Similarity.pqTopK(rest, "vec_id", "embedding", q, 5))) {
-      val plan = strippedPlan(df)
+      val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))
       assert(!plan.contains("CartesianProduct"), plan.take(2000))
     }
@@ -644,8 +609,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("semDedup pairs are a cluster equi-join — no cross product") {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val plan = strippedPlan(pipeline.Dedup.semDedup(e, "vec_id",
-      "embedding", threshold = 0.2, k = 2, iters = 1))
+    val plan = pipeline.Dedup.semDedup(e, "vec_id",
+      "embedding", threshold = 0.2, k = 2, iters = 1)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }
@@ -676,7 +642,7 @@ class PlanAuditSpec extends SparkSpec {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
     val df = pipeline.Dedup.duplicatedSpans(d, "doc_id", "text")
     df.count() // materialize the fan-out pin so the final plan shows
-    val plan = strippedPlan(df)
+    val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.take(2500))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2500))
     // the islands window partitions by doc — a global (empty-key)
@@ -755,8 +721,9 @@ class PlanAuditSpec extends SparkSpec {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"),
         lower(substring(col("text"), 1, 12)).as("k"))
-    val plan = strippedPlan(pipeline.Dedup.bestFuzzyMatchPerDoc(
-      d, "doc_id", "k", k = 2))
+    val plan = pipeline.Dedup.bestFuzzyMatchPerDoc(
+      d, "doc_id", "k", k = 2)
+      .queryExecution.executedPlan.toString
     // the linear-output contract rests on this: each map task keeps
     // only its 2 best rows per doc before the window exchange, so the
     // shuffle carries O(k·docs), never the quadratic pair mass
@@ -849,75 +816,64 @@ class PlanAuditSpec extends SparkSpec {
 
   test("genetics_pipeline composition: split rows pinned once feed " +
       "both QC consumers; the write-side row pass is one narrow stage") {
-    eachMaterializeMode {
-      val sp0 = methods.SplitMulti(Vcf.read(spark,
-        Fixtures.path("oracle_multi.vcf")))
-      val sp = sp0.copy(rows = pipeline.Materialize.fanout(sp0.rows))
-      val ann = methods.Qc.annotateVariantQc(sp)
-        .annotateColsTable(methods.Qc.sampleQc(sp), Seq("call_rate"))
-      val crIdx = ann.colSchema.fieldIndex("call_rate")
-      val filtered = ann
-        .filterCols(_.getDouble(crIdx) > 0.8)
-        .filterRows(element_at(col("AC"), 2) > 2)
-        .filterEntries(e => e("GT").isNotNull &&
-          when(length(col("ref")) =!= length(element_at(col("alt"), 1)),
-            e("DP") > 20).otherwise(e("DP") > 10))
-      val full = filtered.rows.queryExecution.executedPlan.toString
-      // both QC consumers read the one pin: the checkpoint's
-      // ExistingRDD under the default, the CacheManager entry under
-      // persistDisk — the VCF parses once, not once per consumer
-      if (spark.conf.get("spark.graft.materialize") == "persistDisk")
-        assert(full.contains("InMemoryTableScan"), full.take(3000))
-      else assert(full.contains("ExistingRDD"), full.take(3000))
-      val plan = strippedPlan(filtered.rows)
-      // no source re-scan above the pin
-      assert(!plan.contains("FileScan"), plan.take(3000))
-      // variant QC + row/entry filters compose into ONE narrow stage
-      // over the pinned split rows: no join, no exchange anywhere in
-      // the write-side row pass (sample QC already folded into the
-      // driver-resident col values)
-      assert(exchangeCount(plan) === 0, plan.take(3000))
-      assert(!plan.contains("Join"), plan.take(3000))
-    }
+    val sp0 = methods.SplitMulti(Vcf.read(spark,
+      Fixtures.path("oracle_multi.vcf")))
+    val sp = sp0.copy(rows = sp0.rows.localCheckpoint(false))
+    val ann = methods.Qc.annotateVariantQc(sp)
+      .annotateColsTable(methods.Qc.sampleQc(sp), Seq("call_rate"))
+    val crIdx = ann.colSchema.fieldIndex("call_rate")
+    val filtered = ann
+      .filterCols(_.getDouble(crIdx) > 0.8)
+      .filterRows(element_at(col("AC"), 2) > 2)
+      .filterEntries(e => e("GT").isNotNull &&
+        when(length(col("ref")) =!= length(element_at(col("alt"), 1)),
+          e("DP") > 20).otherwise(e("DP") > 10))
+    val plan = filtered.rows.queryExecution.executedPlan.toString
+    // both QC consumers read the one pin, the checkpoint's ExistingRDD:
+    // the VCF parses once, not once per consumer
+    assert(plan.contains("ExistingRDD"), plan.take(3000))
+    // no source re-scan above the pin
+    assert(!plan.contains("FileScan"), plan.take(3000))
+    // variant QC + row/entry filters compose into ONE narrow stage
+    // over the pinned split rows: no join, no exchange anywhere in
+    // the write-side row pass (sample QC already folded into the
+    // driver-resident col values)
+    assert(exchangeCount(plan) === 0, plan.take(3000))
+    assert(!plan.contains("Join"), plan.take(3000))
   }
 
   test("pipe_curation_e2e composition: deduped corpus pinned once; " +
       "quality filter + split assign add no exchange over the dedup") {
-    eachMaterializeMode {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val cleaned = docs.filter(length(col("text")) >= lit(100) &&
-        pipeline.Text.symbolToWordRatio(col("text")) < lit(0.3))
-      val ex = pipeline.Materialize.fanout(
-        pipeline.Dedup.exact(cleaned, "doc_id", "text")
-          .drop("content_hash"))
-      val clusters = pipeline.Dedup.nearDupClusters(
-        pipeline.Dedup.minhashPairs(ex, "doc_id", "text"))
-      val ded = pipeline.Dedup.dedupByClusters(ex, "doc_id", clusters)
-      val toks = pipeline.Text.tokenCount(col("text")).cast("long")
-      val chars = length(regexp_replace(col("text"), "\\s", ""))
-        .cast("long")
-      val q = ded
-        .withColumn("n_tokens", toks)
-        .withColumn("n_chars", chars)
-        .filter(col("n_tokens") >= 20L && col("n_tokens") <= 2000L &&
-          col("n_chars") > col("n_tokens") * 2L &&
-          col("n_chars") < col("n_tokens") * 12L)
-      val split = pipeline.Sampling.assignSplit(
-        q.select("doc_id", "lang", "n_tokens"), "doc_id",
-        Seq("train" -> 980, "val" -> 10, "test" -> 10))
-      // every path to documents.parquet sits below a fan-out pin (the
-      // exact-dedup pin here, minhashPairs' signature pin inside): the
-      // corpus cleans + dedups ONCE, not once per consumer
-      val plan = strippedPlan(split)
-      assert(!plan.contains("FileScan"), plan.take(3000))
-      val full = split.queryExecution.executedPlan.toString
-      if (spark.conf.get("spark.graft.materialize") == "persistDisk")
-        assert(full.contains("InMemoryTableScan"), full.take(3000))
-      else assert(full.contains("ExistingRDD"), full.take(3000))
-      // the quality gates and split assignment are pure projections:
-      // zero exchanges beyond what the representative-dedup join needs
-      assert(exchangeCount(strippedPlan(split)) ===
-        exchangeCount(strippedPlan(ded)), plan.take(3000))
-    }
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val cleaned = docs.filter(length(col("text")) >= lit(100) &&
+      pipeline.Text.symbolToWordRatio(col("text")) < lit(0.3))
+    val ex = pipeline.Dedup.exact(cleaned, "doc_id", "text")
+      .drop("content_hash").localCheckpoint(false)
+    val clusters = pipeline.Dedup.nearDupClusters(
+      pipeline.Dedup.minhashPairs(ex, "doc_id", "text"))
+    val ded = pipeline.Dedup.dedupByClusters(ex, "doc_id", clusters)
+    val toks = pipeline.Text.tokenCount(col("text")).cast("long")
+    val chars = length(regexp_replace(col("text"), "\\s", ""))
+      .cast("long")
+    val q = ded
+      .withColumn("n_tokens", toks)
+      .withColumn("n_chars", chars)
+      .filter(col("n_tokens") >= 20L && col("n_tokens") <= 2000L &&
+        col("n_chars") > col("n_tokens") * 2L &&
+        col("n_chars") < col("n_tokens") * 12L)
+    val split = pipeline.Sampling.assignSplit(
+      q.select("doc_id", "lang", "n_tokens"), "doc_id",
+      Seq("train" -> 980, "val" -> 10, "test" -> 10))
+    // every path to documents.parquet sits below a fan-out pin (the
+    // exact-dedup pin here, minhashPairs' signature pin inside): the
+    // corpus cleans + dedups ONCE, not once per consumer
+    val plan = split.queryExecution.executedPlan.toString
+    assert(!plan.contains("FileScan"), plan.take(3000))
+    assert(plan.contains("ExistingRDD"), plan.take(3000))
+    // the quality gates and split assignment are pure projections:
+    // zero exchanges beyond what the representative-dedup join needs
+    assert(exchangeCount(plan) ===
+      exchangeCount(ded.queryExecution.executedPlan.toString),
+      plan.take(3000))
   }
 }

@@ -6,14 +6,19 @@ import scala.jdk.CollectionConverters._
 /** Every session graft runs under comes from `GraftSession`. */
 class SessionSpec extends SparkSpec {
 
-  test("GraftSession.scala is the only session builder in main code") {
+  /** (path, text) of every Scala source under src/main. */
+  private def mainSources: Seq[(Path, String)] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
-    val builders =
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map((p: Path) => p.getFileName.toString).toSeq
-      finally walk.close()
+    try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map((p: Path) => p -> Files.readString(p)).toSeq
+    finally walk.close()
+  }
+
+  test("GraftSession.scala is the only session builder in main code") {
+    val builders = mainSources
+      .collect { case (p, s) if s.contains("SparkSession.builder") =>
+        p.getFileName.toString }
     assert(builders === Seq("GraftSession.scala"))
   }
 
@@ -28,15 +33,19 @@ class SessionSpec extends SparkSpec {
     // every read names its option as a literal; a computed name shows up
     // as the read's source text
     val read = """(?:sys\.env|System\.getenv)(?:\.\w+)?(?:\(\s*"(\w+)")?""".r
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val reads =
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap((p: Path) => read.findAllMatchIn(Files.readString(p))
-          .map(m => Option(m.group(1)).getOrElse(s"${m.matched} in $p")))
-        .toSet
-      finally walk.close()
+    val reads = mainSources.flatMap { case (p, s) =>
+      read.findAllMatchIn(s)
+        .map(m => Option(m.group(1)).getOrElse(s"${m.matched} in $p"))
+    }.toSet
     assert(reads -- allowed === Set.empty[String])
+  }
+
+  test("src/main reads no spark.graft session conf") {
+    // graft's options are the env names above; a session conf of its
+    // own would be one more option that no list pins
+    val hits = mainSources
+      .collect { case (p, s) if s.contains("spark.graft.") => p.toString }
+    assert(hits.isEmpty, hits)
   }
 
   test("the test session carries every GraftSession conf") {

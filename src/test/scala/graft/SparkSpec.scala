@@ -7,11 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = GraftSession.build(cpus = 4)
-    // fan-out materialization strategy under test (pipeline operators
-    // read it per call): GRAFT_MATERIALIZE=persistDisk re-runs every
-    // spec under the lineage-retaining mode
-    s.conf.set("spark.graft.materialize",
-      sys.env.getOrElse("GRAFT_MATERIALIZE", "localCheckpoint"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -582,7 +582,8 @@ object Table {
     * (splits re-pack by size, not offset — a multi-split file loses
     * intra-file order). Returns None when any condition fails. */
   private def orderedRead(spark: SparkSession, rowsDir: String,
-      files: Seq[(String, Any, Any)]): Option[DataFrame] = {
+      files: Seq[(String, Any, Any)],
+      scan: Seq[String] => DataFrame): Option[DataFrame] = {
     val rangesOk = files.nonEmpty &&
       files.lengthCompare(OrderedReadMaxFiles) <= 0 &&
       files.forall(f => f._2 != null && f._3 != null) &&
@@ -615,8 +616,7 @@ object Table {
           math.max(openCost, bytesPerCore))
       }
       if (!files.forall(f => sizes.get(f._1).exists(unsplit))) None
-      else Some(files.map(f => spark.read.parquet(s"$rowsDir/${f._1}"))
-        .reduce(_.unionByName(_)))
+      else Some(files.map(f => scan(Seq(f._1))).reduce(_.unionByName(_)))
     }
   }
 
@@ -631,15 +631,24 @@ object Table {
     * because each file covers a tight key range. */
   def read(spark: SparkSession, path: String): Table = {
     val (key, globals, files) = NativeFormat.readManifestFull(spark, path)
+    val scan = rowsScan(spark, s"$path/rows")
     val ordered =
       if (key.isEmpty) None
-      else orderedRead(spark, s"$path/rows", files)
+      else orderedRead(spark, s"$path/rows", files, scan)
     ordered match {
       case Some(df) => Table(df, key, globals, keySorted = true)
-      case None =>
-        Table(spark.read.parquet(s"$path/rows"), key, globals,
-          keySorted = false)
+      case None => Table(scan(Nil), key, globals, keySorted = false)
     }
+  }
+
+  /** Scans of the parquet files under `rowsDir` (all of them for Nil)
+    * with the schema `NativeFormat.footerSchema` reads on the driver: a
+    * scan that infers its schema runs a Spark job. */
+  private def rowsScan(spark: SparkSession, rowsDir: String)
+      : Seq[String] => DataFrame = {
+    val schema = NativeFormat.footerSchema(spark, rowsDir)
+    files => spark.read.schema(schema).parquet(
+      (if (files.isEmpty) Seq(rowsDir) else files.map(f => s"$rowsDir/$f")): _*)
   }
 
   /** query_table (reference `functions.py` `query_table`,
@@ -677,15 +686,13 @@ object Table {
       val matching = files.filter {
         case (_, lo, hi) => lo == null || hi == null || keep(lo, hi)
       }
+      val scan = rowsScan(spark, s"$path/rows")
       if (matching.isEmpty)
-        Table(spark.read.parquet(s"$path/rows").filter(lit(false)),
-          key, globals, keySorted = false)
-      else orderedRead(spark, s"$path/rows", matching) match {
+        Table(scan(Nil).filter(lit(false)), key, globals, keySorted = false)
+      else orderedRead(spark, s"$path/rows", matching, scan) match {
         case Some(df) => Table(df, key, globals, keySorted = true)
         case None =>
-          Table(spark.read.parquet(
-              matching.map(f => s"$path/rows/${f._1}"): _*),
-            key, globals, keySorted = false)
+          Table(scan(matching.map(_._1)), key, globals, keySorted = false)
       }
     }
   }
@@ -732,20 +739,32 @@ object Table {
 }
 
 private[graft] object NativeFormat {
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods
+
+  /** A manifest scalar as JSON; a value of another type is written as
+    * its string. */
+  private def toJson(v: Any): JValue = v match {
+    case null => JNull
+    case s: String => JString(s)
+    case b: Boolean => JBool(b)
+    case n: Int => JInt(n)
+    case n: Long => JInt(n)
+    case n: Double => JDouble(n)
+    case n: Float => JDouble(n.toDouble)
+    case other => JString(other.toString)
   }
 
-  private def jval(v: Any): String = v match {
-    case null => "null"
-    case s: String => "\"" + esc(s) + "\""
-    case b: Boolean => b.toString
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case n: Double => n.toString
-    case n: Float => n.toString
-    case other => "\"" + esc(other.toString) + "\""
+  /** A manifest scalar read back: ints as Long, floats as Double. */
+  private def fromJson(v: JValue): Any = v match {
+    case JNull | JNothing => null
+    case JString(s) => s
+    case JBool(b) => b
+    case JInt(n) => n.toLong
+    case JLong(n) => n
+    case JDouble(d) => d
+    case JDecimal(d) => d.toDouble
+    case other => sys.error(s"manifest value is not a scalar: $other")
   }
 
   /** Per-file (name, keyMin, keyMax) from the parquet FOOTERS of every
@@ -820,16 +839,37 @@ private[graft] object NativeFormat {
     }.toOption
   }
 
-  def manifestJson(key: Seq[String], globals: Map[String, Any],
-      fileRanges: Seq[(String, Any, Any)] = Nil): String = {
-    val ks = key.map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
-    val gs = globals.map { case (k, v) => "\"" + esc(k) + "\":" + jval(v) }
-      .mkString("{", ",", "}")
-    val fr = fileRanges.map { case (f, lo, hi) =>
-      s"""{"file":${jval(f)},"lo":${jval(lo)},"hi":${jval(hi)}}"""
-    }.mkString("[", ",", "]")
-    s"""{"format":"graft-native","version":1,"key":$ks,"globals":$gs,"files":$fr}"""
+  /** The schema a batch read of `path` (a parquet file or directory)
+    * infers, taken on the driver from the footer of its first data file:
+    * the batch read's inference reads that same footer in a Spark job. */
+  def footerSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val first = if (fs.getFileStatus(p).isFile) p
+      else fs.listStatus(p).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .minBy(_.getName)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
+    val footer = try reader.getFooter finally reader.close()
+    org.apache.spark.sql.GraftBridge.parquetSchema(
+      new Footer(first, footer), spark)
   }
+
+  def manifestJson(key: Seq[String], globals: Map[String, Any],
+      fileRanges: Seq[(String, Any, Any)] = Nil): String =
+    JsonMethods.compact(JObject(
+      "format" -> JString("graft-native"), "version" -> JInt(1),
+      "key" -> JArray(key.map(JString(_)).toList),
+      "globals" -> JObject(globals.map { case (k, v) => k -> toJson(v) }
+        .toList),
+      "files" -> JArray(fileRanges.map { case (f, lo, hi) =>
+        JObject("file" -> JString(f), "lo" -> toJson(lo), "hi" -> toJson(hi))
+      }.toList)))
 
   /** Order comparator across the scalar key types the manifest can
     * carry (JSON read-back widens ints to Long, floats to Double). */
@@ -847,31 +887,24 @@ private[graft] object NativeFormat {
     (k, g)
   }
 
+  /** The manifest of the table at `path`: key, globals and per-file key
+    * ranges. A driver-side file read: no Spark job. */
   def readManifestFull(spark: SparkSession, path: String)
       : (Seq[String], Map[String, Any], Seq[(String, Any, Any)]) = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/metadata.json"))
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    // parse with the JSON reader Spark ships (jackson via DataFrameReader)
-    import spark.implicits._
-    val row = spark.read.json(Seq(txt).toDS).head()
-    val key = row.getAs[scala.collection.Seq[String]]("key").toSeq
-    val gRow = row.schema.fieldNames.contains("globals") match {
-      case true => Option(row.getAs[Row]("globals"))
-      case false => None
+    val m = try JsonMethods.parse(new java.io.InputStreamReader(in, "UTF-8"))
+      finally in.close()
+    val key = (m \ "key").children.map(k => fromJson(k).asInstanceOf[String])
+    val globals = (m \ "globals") match {
+      case JObject(fields) => fields.map { case (k, v) => k -> fromJson(v) }.toMap
+      case _ => Map.empty[String, Any]
     }
-    val globals = gRow.map(g =>
-      g.schema.fieldNames.map(f => f -> g.getAs[Any](f)).toMap)
-      .getOrElse(Map.empty[String, Any])
-    val files =
-      if (!row.schema.fieldNames.contains("files")) Nil
-      else Option(row.getAs[scala.collection.Seq[Row]]("files"))
-        .getOrElse(Nil).map { fr =>
-          (fr.getAs[String]("file"), fr.getAs[Any]("lo"),
-            fr.getAs[Any]("hi"))
-        }.toSeq
+    val files = (m \ "files").children.map { f =>
+      (fromJson(f \ "file").asInstanceOf[String], fromJson(f \ "lo"),
+        fromJson(f \ "hi"))
+    }
     (key, globals, files)
   }
 }

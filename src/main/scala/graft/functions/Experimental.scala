@@ -11,10 +11,16 @@ import org.apache.spark.sql.functions._
   * per-row scalars — UDFs, off the aggregation hot path. */
 object Experimental {
 
-  /** Smallest k with P(Pois(lambda) <= k) >= p (R qpois). */
-  private def qpoisLocal(p: Double, lambda: Double): Int =
-    new org.apache.commons.math3.distribution.PoissonDistribution(lambda)
+  /** Smallest k with P(Pois(lambda) <= k) >= p (R qpois). The quantile
+    * search never samples, so the distribution gets no random generator
+    * (the one-argument constructor seeds a Well19937c per call). */
+  private def qpoisLocal(p: Double, lambda: Double): Int = {
+    import org.apache.commons.math3.distribution.PoissonDistribution
+    new PoissonDistribution(null, lambda,
+      PoissonDistribution.DEFAULT_EPSILON,
+      PoissonDistribution.DEFAULT_MAX_ITERATIONS)
       .inverseCumulativeProbability(p)
+  }
 
   /** Highest AC consistent with population AF `af` at confidence `ci`
     * (reference `findMaxAC`). */
@@ -25,8 +31,12 @@ object Experimental {
     * the highest true population AF whose `ci` upper bound on allele
     * count stays below the observed `ac`. Zero for singletons. The
     * root of `ac - 1 - qpois(ci, an·af)` is found by bisection (the
-    * function is monotone step-decreasing in af), then snapped to the
-    * reference's 1e-6 lattice by the same climb-and-back-off loop. */
+    * function is monotone step-decreasing in af); rounded, it is the
+    * origin `start` of the reference's `precision` lattice. The
+    * reference then climbs the lattice one step at a time while
+    * `findMaxAC < ac`, one quantile per step; here the first index j
+    * with `findMaxAC(start + j·precision) >= ac` (monotone in j) is found
+    * by doubling and bisection, and the answer is the point before it. */
   def calcFilterAlleleFreq(ac: Int, an: Int, ci: Double = 0.95,
       lower: Double = 1e-10, upper: Double = 2.0, tol: Double = 1e-7,
       precision: Double = 1e-6): Double = {
@@ -38,8 +48,8 @@ object Experimental {
       var hi = upper
       if (f(lo) <= 0) return 0.0
       // no sign change on [lower, upper] -> the reference's uniroot
-      // yields None -> 0.0, and the lattice climb below does the work
-      var root =
+      // yields None -> 0.0, and the lattice search below does the work
+      val root =
         if (f(hi) > 0) 0.0
         else {
           while (hi - lo > tol) {
@@ -49,10 +59,23 @@ object Experimental {
           (lo + hi) / 2
         }
       val rounder = 1d / (precision / 100d)
-      var maxAf = math.round(root * rounder) / rounder
-      while (findMaxAC(maxAf, an, ci) < ac)
-        maxAf += precision
-      maxAf - precision
+      val start = math.round(root * rounder) / rounder
+      def reaches(j: Long): Boolean =
+        findMaxAC(start + j * precision, an, ci) >= ac
+      // invariant: index `below` does not reach ac (-1 stands for the
+      // point before `start`), index `at` does
+      var below = -1L
+      var at = 0L
+      while (!reaches(at)) { below = at; at = 2 * at + 1 }
+      while (at - below > 1) {
+        val mid = below + (at - below) / 2
+        if (reaches(mid)) at = mid else below = mid
+      }
+      // the answer as the reference's running sum (start, plus precision
+      // `at` times, minus precision): its last bits differ from
+      // start + (at - 1)·precision, and a 6-digit rounding of a value on
+      // a ...5 boundary sees them
+      (0L until at).foldLeft(start)((af, _) => af + precision) - precision
     }
   }
 

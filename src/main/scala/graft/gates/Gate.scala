@@ -32,4 +32,17 @@ object Gate {
       s"gate names defined more than once: ${repeated.toSeq.sorted.mkString(", ")}")
     gates
   }
+
+  /** The registered gates named in `names`, a comma-separated list, in
+    * registry order; an empty list selects every gate. A name that is not
+    * a registered gate is an error that names it, so a typo cannot run an
+    * empty or partial fleet. `from` is the registry. */
+  def select(names: String, from: Seq[Gate] = graft.SparkEntry.gates)
+      : Seq[Gate] = {
+    val wanted = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- from.map(_.name)
+    require(unknown.isEmpty,
+      s"not a registered gate: ${unknown.toSeq.sorted.mkString(", ")}")
+    if (wanted.isEmpty) from else from.filter(g => wanted(g.name))
+  }
 }

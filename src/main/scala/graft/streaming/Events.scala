@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge,
+import org.apache.spark.sql.{Column, DataFrame, Dataset,
   SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -22,15 +20,8 @@ import org.apache.spark.sql.types.{DataType, DecimalType, LongType,
   * state per user at any stream length. */
 object Events {
 
-  final case class Event(event_id: Long, ts: Long, user_id: Long,
-      event_type: String, value: Double)
-
   final case class Session(user_id: Long, start_ts: Long, end_ts: Long,
       n_events: Long, sum_value: Double)
-
-  // public: the state encoder's generated code must reach the fields
-  final case class SessionState(startTs: Long, endTs: Long,
-      cnt: Long, total: Double)
 
   /** Normalize an event-time column to nanoseconds-since-epoch (LONG),
     * whatever dtype the source delivered. Real event data arrives any of
@@ -76,17 +67,6 @@ object Events {
     case _ => timestamp_micros(
       floor(tsNanos(c, dt).cast(DecimalType(38, 0)) / lit(1000L))
         .cast(LongType))
-  }
-
-  /** Typed ingestion for the sessionize kernel: project any events-shaped
-    * frame (ts as LONG ns / TIMESTAMP / TIMESTAMP_NTZ) to `Dataset[Event]`
-    * with ns-normalized `ts`. */
-  def toEvents(df: DataFrame): Dataset[Event] = {
-    val ss = df.sparkSession
-    import ss.implicits._
-    df.select(col("event_id"),
-      tsNanos(col("ts"), df.schema("ts").dataType).as("ts"),
-      col("user_id"), col("event_type"), col("value")).as[Event]
   }
 
   /** File-source stream with the batch schema (`ts` in any dtype
@@ -168,7 +148,7 @@ object Events {
       oneBatch: Boolean = false, sentinel: Option[DataFrame] = None)
       (query: DataFrame => Dataset[_]): DataFrame = {
     val dir = stageAsDir(path, tag, fresh = sentinel.isDefined)
-    val schema = footerSchema(spark, dir)
+    val schema = graft.NativeFormat.footerSchema(spark, dir)
     val root = if (drain)
       java.nio.file.Files.createTempDirectory(tag).toString else ""
     val sinkName = s"${tag}_${System.nanoTime()}"
@@ -192,23 +172,6 @@ object Events {
     }
     if (drain) takeParquetDrain(spark, root, outSchema)
     else takeMemorySink(spark, sinkName)
-  }
-
-  /** The schema a batch read of `path` (a parquet file or directory)
-    * infers, taken on the driver from the footer of its first data file:
-    * the batch read's inference reads that same footer in a Spark job. */
-  private[graft] def footerSchema(spark: SparkSession, path: String)
-      : StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val first = if (fs.getFileStatus(p).isFile) p
-      else fs.listStatus(p).map(_.getPath)
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .minBy(_.getName)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
-    val footer = try reader.getFooter finally reader.close()
-    GraftBridge.parquetSchema(new Footer(first, footer), spark)
   }
 
   /** Scope session confs around `body`: `key -> Some(v)` sets a key,
@@ -587,47 +550,16 @@ object Events {
       statePartitions(dedupStatePartitions) ++ noTrailingBatch,
       oneBatch = true)(dedupStream(_, idCols))
 
-  /** Gap-based sessionization: consecutive events of a user belong to
-    * one session while gaps stay under `gapNs`. Streaming kernel:
-    * flatMapGroupsWithState with event-time timeout — state is one
-    * (start, end, n, sum) tuple per live user. */
-  def sessionize(events: Dataset[Event], gapNs: Long)
-      : Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[Event],
-            state: GroupState[SessionState]) =>
-          val sorted = it.toSeq.sortBy(_.ts)
-          val out = Seq.newBuilder[Session]
-          var cur = state.getOption
-          sorted.foreach { e =>
-            cur match {
-              case Some(s) if e.ts - s.endTs <= gapNs =>
-                cur = Some(SessionState(s.startTs, e.ts, s.cnt + 1,
-                  s.total + e.value))
-              case Some(s) =>
-                out += Session(user, s.startTs, s.endTs, s.cnt, s.total)
-                cur = Some(SessionState(e.ts, e.ts, 1, e.value))
-              case None =>
-                cur = Some(SessionState(e.ts, e.ts, 1, e.value))
-            }
-          }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
   // typed row for the watermarked streaming kernel: `et` carries the
   // watermark column through groupByKey
   final case class EventW(event_id: Long, ts: Long, user_id: Long,
       event_type: String, value: Double, et: java.sql.Timestamp)
 
-  // state with the value sum in EXACT 1e-4 units (the DECIMAL(18,4)
+  // public: the state encoder's generated code must reach the fields.
+  // State with the value sum in EXACT 1e-4 units (the DECIMAL(18,4)
   // semantics both engines' batch formulations use): doubles would
   // accumulate in arrival order and drift an ulp from the oracle
-  final case class SessionStateX(startTs: Long, endTs: Long,
+  final case class SessionState(startTs: Long, endTs: Long,
       cnt: Long, units: Long)
 
   private def valueUnits(v: Double): Long =
@@ -635,11 +567,11 @@ object Events {
       .setScale(4, java.math.RoundingMode.HALF_UP)
       .unscaledValue().longValueExact()
 
-  /** Gap sessionization with EVENT-TIME timeouts — the full streaming
-    * semantics: a session closes either when a later event of its user
-    * exceeds the gap, or when the WATERMARK passes the session's gap
-    * horizon and the state times out (so open sessions FLUSH — the
-    * NoTimeout kernel above can never emit a user's last session).
+  /** Gap sessionization: consecutive events of a user belong to one
+    * session while gaps stay under `gapNs`. A session closes either when
+    * a later event of its user exceeds the gap, or when the WATERMARK
+    * passes the session's gap horizon and the state times out (so open
+    * sessions FLUSH).
     * State per live user is one (start, end, n, sum) tuple, removed on
     * flush; value sums accumulate in exact 1e-4 units so the emitted
     * `sum_value` is bit-identical to a DECIMAL(18,4) batch aggregate. */
@@ -655,10 +587,10 @@ object Events {
         col("user_id"), col("event_type"), col("value"), col("et"))
       .as[EventW]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionStateX, Session](
+      .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (user: Long, it: Iterator[EventW],
-            state: GroupState[SessionStateX]) =>
+            state: GroupState[SessionState]) =>
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
@@ -671,15 +603,15 @@ object Events {
             sorted.foreach { e =>
               cur match {
                 case Some(s) if e.ts - s.endTs <= gapNs =>
-                  cur = Some(SessionStateX(s.startTs, e.ts, s.cnt + 1,
+                  cur = Some(SessionState(s.startTs, e.ts, s.cnt + 1,
                     s.units + valueUnits(e.value)))
                 case Some(s) =>
                   out += Session(user, s.startTs, s.endTs, s.cnt,
                     java.math.BigDecimal.valueOf(s.units, 4).doubleValue())
-                  cur = Some(SessionStateX(e.ts, e.ts, 1,
+                  cur = Some(SessionState(e.ts, e.ts, 1,
                     valueUnits(e.value)))
                 case None =>
-                  cur = Some(SessionStateX(e.ts, e.ts, 1,
+                  cur = Some(SessionState(e.ts, e.ts, 1,
                     valueUnits(e.value)))
               }
             }

@@ -356,6 +356,43 @@ class FunctionsSpec extends SparkSpec {
     assert(Experimental.findMaxAC(f50 + 1e-6, 1000) >= 50)
   }
 
+  test("filteringAlleleFrequency's lattice search equals the reference climb") {
+    import graft.functions.Experimental.{calcFilterAlleleFreq, findMaxAC}
+    import org.apache.commons.math3.distribution.PoissonDistribution
+    // without a random generator the quantiles are the seeded ones
+    for (i <- 0 until 400; p <- Seq(0.95, 0.99)) {
+      val lambda = 1e-4 * math.pow(1.05, i)
+      assert(new PoissonDistribution(lambda).inverseCumulativeProbability(p) ===
+        FafReference.qpois(p, lambda))
+    }
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    val fixture = Seq((1, 6), (2, 10), (3, 8), (3, 10), (4, 6), (4, 8),
+      (4, 10), (5, 8), (5, 10), (6, 8), (6, 10), (7, 10))
+    val grid = for (ac <- 0 to 60; an <- Seq(0, 2, 6, 8, 10, 100, 1000))
+      yield (ac, an)
+    val cases = (for ((ac, an) <- fixture ++ grid; ci <- Seq(0.95, 0.99))
+      yield (ac, an, ci, 2.0)) ++
+      // no sign change on [lower, upper]: both climb from 0
+      Seq((3, 10, 0.95, 0.01), (4, 100, 0.99, 0.001), (10, 2, 0.95, 2.0))
+    var compared = 0
+    cases.foreach { case (ac, an, ci, upper) =>
+      val got = calcFilterAlleleFreq(ac, an, ci, upper = upper)
+      FafReference.climb(ac, an, ci, upper, got, maxSteps = 200000) match {
+        case Some(want) =>
+          compared += 1
+          assert(math.abs(got - want) <= 1e-9, (ac, an, ci, upper, got, want))
+          assert(r6(got) === r6(want), (ac, an, ci, upper, got, want))
+        case None =>
+          // a climb over the step budget (an of 2, or ac far above an so
+          // that it starts at 0): the answer is still the last lattice
+          // point below ac
+          assert(findMaxAC(got, an, ci) < ac, (ac, an, ci, got))
+          assert(findMaxAC(got + 1e-6, an, ci) >= ac, (ac, an, ci, got))
+      }
+    }
+    assert(compared > cases.size / 2, compared)
+  }
+
   test("haplotypeFreqEm conserves haplotype mass and detects coupling") {
     import graft.functions.Experimental
     val df = spark.createDataFrame(Seq(
@@ -366,5 +403,48 @@ class FunctionsSpec extends SparkSpec {
     // symmetric input: AB==ab and Ab==aB; double-hets favor coupling
     assert(math.abs(h(0) - h(3)) < 1e-9 && math.abs(h(1) - h(2)) < 1e-9)
     assert(h(0) > h(1))
+  }
+}
+
+/** The filtering allele frequency as the reference
+  * (`calcFilterAlleleFreq`) computes it, climbing the lattice one
+  * `precision` at a time from the rounded root: the pin for
+  * `Experimental.calcFilterAlleleFreq`. None, without climbing, when the
+  * climb to `expected` would take more than `maxSteps` quantiles. */
+private object FafReference {
+  def qpois(p: Double, lambda: Double): Int =
+    new org.apache.commons.math3.distribution.PoissonDistribution(null,
+      lambda, 1e-12, 10000000).inverseCumulativeProbability(p)
+
+  def findMaxAC(af: Double, an: Int, ci: Double): Int =
+    if (af == 0) 0 else qpois(ci, an * af)
+
+  def climb(ac: Int, an: Int, ci: Double, upper: Double, expected: Double,
+      maxSteps: Long, lower: Double = 1e-10, tol: Double = 1e-7,
+      precision: Double = 1e-6): Option[Double] = {
+    if (ac <= 1 || an == 0) Some(0.0)
+    else {
+      def f(af: Double): Double = ac.toDouble - 1 - qpois(ci, an.toDouble * af)
+      var lo = lower
+      var hi = upper
+      if (f(lo) <= 0) return Some(0.0)
+      val root =
+        if (f(hi) > 0) 0.0
+        else {
+          while (hi - lo > tol) {
+            val mid = (lo + hi) / 2
+            if (f(mid) > 0) lo = mid else hi = mid
+          }
+          (lo + hi) / 2
+        }
+      val rounder = 1d / (precision / 100d)
+      var maxAf = math.round(root * rounder) / rounder
+      if ((expected - maxAf) / precision > maxSteps) None
+      else {
+        while (findMaxAC(maxAf, an, ci) < ac)
+          maxAf += precision
+        Some(maxAf - precision)
+      }
+    }
   }
 }

@@ -18,14 +18,27 @@ class GateRegistrySpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  private def g(name: String) = Gate(name,
+    (s, _) => s.range(1).select(lit(1)), "SELECT 1")
+
   test("a gate name defined twice fails the registry") {
-    def g(name: String) = Gate(name, (s, _) => s.range(1).select(lit(1)),
-      "SELECT 1")
     assert(Gate.registry(Seq(g("a")), Seq(g("b"))).map(_.name) ===
       Seq("a", "b"))
     val e = intercept[IllegalArgumentException](
       Gate.registry(Seq(g("a"), g("b")), Seq(g("a"))))
     assert(e.getMessage.contains("a"))
+  }
+
+  test("Gate.select keeps the named gates in registry order; an unknown name fails") {
+    val reg = Seq(g("a"), g("b"), g("c"))
+    assert(Gate.select("", reg) === reg)
+    assert(Gate.select(" c, a ,", reg).map(_.name) === Seq("a", "c"))
+    val e = intercept[IllegalArgumentException](Gate.select("a,zz,bogus", reg))
+    assert(e.getMessage === "requirement failed: not a registered gate: bogus, zz")
+    // the default is SparkEntry's registry
+    assert(Gate.select("fn_faf").map(_.name) === Seq("fn_faf"))
+    assert(Gate.select("").size === 283)
+    intercept[IllegalArgumentException](Gate.select("fn_fa"))
   }
 
   test("every gate has an oracle; queries and oracleSql share 283 keys") {

@@ -24,12 +24,12 @@ class SessionSpec extends SparkSpec {
 
   test("src/main reads only the listed env options") {
     val allowed = Set(
-      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_ONLY",
       "SPARK_GRAFT_BENCH_ITERS", "SPARK_GRAFT_BENCH_DEADLINE_SEC",
-      "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_SPREAD_OUT",
-      "SPARK_GRAFT_VERIFY_ONLY", "SPARK_GRAFT_VERIFY_RESUME",
+      "SPARK_GRAFT_BENCH_SPREAD_OUT", "SPARK_GRAFT_VERIFY_RESUME",
       "SPARK_GRAFT_GEN_IN", "SPARK_GRAFT_GEN_OUT", "SPARK_GRAFT_GEN_REPS",
       "SPARK_GRAFT_GEN_DOCS", "SPARK_GRAFT_GEN_VOCAB")
+    assert(allowed.size === 12)
     // every read names its option as a literal; a computed name shows up
     // as the read's source text
     val read = """(?:sys\.env|System\.getenv)(?:\.\w+)?(?:\(\s*"(\w+)")?""".r
@@ -37,7 +37,8 @@ class SessionSpec extends SparkSpec {
       read.findAllMatchIn(s)
         .map(m => Option(m.group(1)).getOrElse(s"${m.matched} in $p"))
     }.toSet
-    assert(reads -- allowed === Set.empty[String])
+    // both ways: no unlisted read, and no listed option that nothing reads
+    assert(reads === allowed)
   }
 
   test("src/main reads no spark.graft session conf") {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.streaming.Events
-import graft.streaming.Events.{Event, Session}
+import graft.streaming.Events.Session
 
 // top-level: MemoryStream needs a derivable Encoder
 final case class DocT(doc_id: Long, text: String,
@@ -78,7 +78,7 @@ class StreamingSpec extends SparkSpec {
           copies.resolve(f"part-$i%02d.parquet"), Paths.get(single)))
         for (p <- Seq(single, split, copies.toString)) {
           var schema: StructType = null
-          assert(jobsOf { schema = Events.footerSchema(spark, p) } == Nil, p)
+          assert(jobsOf { schema = NativeFormat.footerSchema(spark, p) } == Nil, p)
           assert(schema == spark.read.parquet(p).schema, p)
         }
       }
@@ -135,30 +135,6 @@ class StreamingSpec extends SparkSpec {
         .map((p: Path) => root.relativize(p).toString).toSeq
       finally walk.close()
     assert(users === Seq("graft/streaming/Events.scala"))
-  }
-
-  test("sessionize emits gap-separated sessions incrementally") {
-    val ss = spark
-    import ss.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val input = MemoryStream[Event]
-    val sessions = Events.sessionize(input.toDS(), gapNs = 100L)
-    val q = sessions.writeStream.format("memory")
-      .queryName("spec_sessions").outputMode(OutputMode.Append()).start()
-    // user 1: two events 50ns apart (one session), then a 1000ns gap
-    // closes it when the third event arrives in a later batch
-    input.addData(
-      Event(1, 1000, 1, "a", 1.0), Event(2, 1050, 1, "a", 2.0))
-    q.processAllAvailable()
-    input.addData(Event(3, 5000, 1, "a", 4.0))
-    q.processAllAvailable()
-    input.addData(Event(4, 9000, 1, "a", 8.0))
-    q.processAllAvailable()
-    q.stop()
-    val emitted = spark.table("spec_sessions").as[Session].collect()
-    // two closed sessions: [1000,1050] and [5000,5000]
-    assert(emitted.toSet == Set(
-      Session(1, 1000, 1050, 2, 3.0), Session(1, 5000, 5000, 1, 4.0)))
   }
 
   test("batch sessionizer matches the streaming kernel on closed sessions") {
@@ -221,8 +197,9 @@ class StreamingSpec extends SparkSpec {
     assert(hourly(ns) == hourly(asTs) && hourly(ns) == hourly(asNtz))
     assert(sess(ns) == sess(asTs) && sess(ns) == sess(asNtz))
     assert(hourly(ns).map(_.head) == Set(1L, 2L)) // epoch hours 1 and 2
-    // typed ingestion path normalizes any dtype to ns longs
-    assert(Events.toEvents(asNtz).collect().map(_.ts).sorted.toSeq ==
+    // every dtype normalizes to ns longs
+    assert(asNtz.select(Events.tsNanos(col("ts"), asNtz.schema("ts").dataType))
+      .collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(3600000000000L, 3605000000000L, 7201000000000L))
     // unsupported dtype fails loudly at plan time
     intercept[IllegalArgumentException] {
@@ -655,3 +632,7 @@ class StreamingSpec extends SparkSpec {
     assert(dirs.forall(_.isDirectory))
   }
 }
+
+/** One row of the events table, for hand-built stream input. */
+final case class Event(event_id: Long, ts: Long, user_id: Long,
+    event_type: String, value: Double)

@@ -86,6 +86,30 @@ class TableSpec extends SparkSpec {
     assert(back.count() === 20)
   }
 
+  test("native read parses the manifest on the driver: Table.read runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nojob").toString
+    rangeTable(1000, 4).annotateGlobals("n" -> 7, "x" -> 0.5,
+      "s" -> "a\"b\n\u0001", "b" -> true, "z" -> null).write(s"$dir/t")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      jobs.set(0)
+      val back = Table.read(spark, s"$dir/t")
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      assert(jobs.get == 0, s"${jobs.get} jobs")
+      assert(back.keySorted)
+      // read-back types: ints as Long, floats as Double, JSON null as null
+      assert(back.globals === Map("n" -> 7L, "x" -> 0.5,
+        "s" -> "a\"b\n\u0001", "b" -> true, "z" -> null))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("aggregateByKey groups on current key") {
     val df = spark.createDataFrame(Seq((1, 2.0), (1, 3.0), (2, 5.0)))
       .toDF("k", "v")

@@ -1,10 +1,13 @@
 #!/bin/bash
-# Direct-JVM runner for graft mains (Bench / Verify / ProfileQuery /
-# ExplainDump / GenScale / GenZipf): same JVM options as build.sbt's
-# forked run, without the ~90 s sbt startup per invocation. It runs from
-# the checkout root, where the gates resolve their fixtures.
+# Direct-JVM runner for graft mains (Bench / Verify / ExplainDump /
+# GenScale / GenZipf): same JVM options as build.sbt's forked run,
+# without the ~90 s sbt startup per invocation. It runs from the checkout
+# root, where the gates resolve their fixtures.
 # Session confs live in graft.GraftSession, not here. Usage:
 #   tools/run_graft.sh graft.Bench [args...]
+# Profile one gate (a warm-up run, then one measured run with its
+# listener counters and, for a stream gate, its micro-batches on stderr):
+#   SPARK_GRAFT_ONLY=q SPARK_GRAFT_BENCH_ITERS=1 tools/run_graft.sh graft.Bench
 # Env contract identical to the sbt path (SPARK_GRAFT_*; SPARK_DRIVER_MEM
 # overrides the heap, which defaults to half of RAM clamped to 2-8 GiB).
 # Requires a prior `sbt -batch compile` (classes under
